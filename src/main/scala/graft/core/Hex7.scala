@@ -42,7 +42,10 @@ object Hex7 {
   final val S1 = 0.35
 
   // ---- icosahedron, derived deterministically ----
-  private val (faceCenters, faceE1, faceE2): (Array[Array[Double]], Array[Array[Double]], Array[Array[Double]]) = {
+  /** Per face f, 9 doubles from f * 9: the unit face centre, then the local
+    * orthonormal basis e1 and e2 of its tangent plane; and the angle from a
+    * face centre to its vertices (all faces are congruent). */
+  private val (faceBasis, faceCircumAngle): (Array[Double], Double) = {
     val phi = (1.0 + math.sqrt(5.0)) / 2.0
     val raw = Array.newBuilder[Array[Double]]
     for (a <- Seq(-1.0, 1.0); b <- Seq(-phi, phi)) {
@@ -89,7 +92,32 @@ object Hex7 {
       val n = oc(f); val a = e1(f)
       Array(n(1) * a(2) - n(2) * a(1), n(2) * a(0) - n(0) * a(2), n(0) * a(1) - n(1) * a(0))
     }.toArray
-    (oc, e1, e2)
+    val (v0, _, _) = ofaces(0)
+    val circum = math.acos((0 until 3).map(a => oc(0)(a) * verts(v0)(a)).sum)
+    (oc.indices.flatMap(f => oc(f) ++ e1(f) ++ e2(f)).toArray, circum)
+  }
+
+  /** The faces `faceOf` can return for a point in each octant, ascending:
+    * `octantFaces(octantFrom(o) until octantFrom(o + 1))` for octant
+    * o = sign bit of x | y's << 1 | z's << 2. The max-dot region of a face is
+    * its spherical triangle (the bisector of two adjacent centres holds their
+    * shared edge), which lies in the cap of radius `faceCircumAngle` around
+    * its centre; a face is listed when that cap, widened by 0.01 rad against
+    * rounding, reaches the closed octant. Every face tied for the max is
+    * listed, so the first max in ascending order is `faceOf`'s. */
+  private val (octantFaces, octantFrom): (Array[Int], Array[Int]) = {
+    val lists = (0 until 8).map { o =>
+      (0 until 20).filter { f =>
+        // the largest cosine to a point of the octant is the norm of the
+        // centre clamped into it
+        val clamped = (0 until 3).map { a =>
+          val sign = if (((o >> a) & 1) == 1) -1.0 else 1.0
+          math.max(0.0, faceBasis(f * 9 + a) * sign)
+        }
+        math.sqrt(clamped.map(c => c * c).sum) >= math.cos(faceCircumAngle + 0.01)
+      }
+    }
+    (lists.flatten.toArray, lists.scanLeft(0)(_ + _.length).toArray)
   }
 
   private def dist(a: Array[Double], b: Array[Double]): Double = {
@@ -97,15 +125,16 @@ object Hex7 {
     math.sqrt(dx * dx + dy * dy + dz * dz)
   }
 
-  def numFaces: Int = faceCenters.length
+  def numFaces: Int = faceBasis.length / 9
 
   def faceOf(x: Double, y: Double, z: Double): Int = {
+    val fb = faceBasis
     var best = 0
     var bestDot = -2.0
     var f = 0
     while (f < 20) {
-      val c = faceCenters(f)
-      val d = x * c(0) + y * c(1) + z * c(2)
+      val o = f * 9
+      val d = x * fb(o) + y * fb(o + 1) + z * fb(o + 2)
       if (d > bestDot) { bestDot = d; best = f }
       f += 1
     }
@@ -114,30 +143,42 @@ object Hex7 {
 
   /** Gnomonic projection of a unit vector onto face f's tangent plane. */
   def project(f: Int, x: Double, y: Double, z: Double): (Double, Double) = {
-    val n = faceCenters(f)
-    val d = x * n(0) + y * n(1) + z * n(2)
+    val fb = faceBasis; val o = f * 9
+    val d = x * fb(o) + y * fb(o + 1) + z * fb(o + 2)
     val px = x / d; val py = y / d; val pz = z / d
-    val e1 = faceE1(f); val e2 = faceE2(f)
-    (px * e1(0) + py * e1(1) + pz * e1(2), px * e2(0) + py * e2(1) + pz * e2(2))
+    (px * fb(o + 3) + py * fb(o + 4) + pz * fb(o + 5),
+      px * fb(o + 6) + py * fb(o + 7) + pz * fb(o + 8))
   }
 
   /** Inverse: face-plane (u,v) -> unit vector. */
   def unproject(f: Int, u: Double, v: Double): Array[Double] = {
-    val n = faceCenters(f); val e1 = faceE1(f); val e2 = faceE2(f)
-    val p = Array(n(0) + u * e1(0) + v * e2(0),
-      n(1) + u * e1(1) + v * e2(1),
-      n(2) + u * e1(2) + v * e2(2))
+    val fb = faceBasis; val o = f * 9
+    val p = Array(fb(o) + u * fb(o + 3) + v * fb(o + 6),
+      fb(o + 1) + u * fb(o + 4) + v * fb(o + 7),
+      fb(o + 2) + u * fb(o + 5) + v * fb(o + 8))
     val pn = math.sqrt(p(0) * p(0) + p(1) * p(1) + p(2) * p(2))
     Array(p(0) / pn, p(1) / pn, p(2) / pn)
   }
 
   // ---- hex lattice (pointy-top axial coords) ----
-  private def hexSize(res: Int): Double = S1 / math.pow(math.sqrt(7.0), res - 1)
   private def gridRot(res: Int): Double = if ((res & 1) == 0) Ap7Rot else 0.0
+
+  // Per-resolution constants of the encode, indexed by res 0..MaxRes and
+  // built with the same IEEE expressions the per-row code would evaluate,
+  // so reading them is bit-identical to recomputing them.
+  private val edgeLens: Array[Double] =
+    Array.tabulate(MaxRes + 1)(res => S1 / math.pow(math.sqrt(7.0), res - 1))
+  private val unrotCos: Array[Double] = Array.tabulate(MaxRes + 1)(res => math.cos(-gridRot(res)))
+  private val unrotSin: Array[Double] = Array.tabulate(MaxRes + 1)(res => math.sin(-gridRot(res)))
+  private val Sqrt3Over3: Double = math.sqrt(3.0) / 3.0
+
+  /** Hex edge length (= circumradius) at `res` (0..MaxRes) in face-plane
+    * units (gnomonic). */
+  def edgeLen(res: Int): Double = edgeLens(res)
 
   /** Axial center of hex (q,r) at `res` in face coords. */
   def hexCenter(res: Int, q: Int, r: Int): (Double, Double) = {
-    val s = hexSize(res)
+    val s = edgeLen(res)
     val x0 = s * math.sqrt(3.0) * (q + r / 2.0)
     val y0 = s * 1.5 * r
     val th = gridRot(res)
@@ -149,7 +190,7 @@ object Hex7 {
     val th = -gridRot(res)
     val x = u * math.cos(th) - v * math.sin(th)
     val y = u * math.sin(th) + v * math.cos(th)
-    val s = hexSize(res)
+    val s = edgeLen(res)
     val qf = (math.sqrt(3.0) / 3.0 * x - y / 3.0) / s
     val rf = (2.0 / 3.0 * y) / s
     var q = math.round(qf).toInt
@@ -166,6 +207,25 @@ object Hex7 {
     * in the child grid (public H3 child enumeration). */
   private val childOffsets: Array[(Int, Int)] =
     Array((0, 0), (1, 0), (0, 1), (-1, 1), (-1, 0), (0, -1), (1, -1))
+
+  /** Digit of a child hex by its remainder t - 7 * parent in -3..3 (stored
+    * at +3), where t is the first row of 7 * the up-transform: 2q - r under
+    * an odd parent res, 3q + r under an even one. */
+  private val digitOfOddRem: Array[Int] = {
+    val t = new Array[Int](7)
+    childOffsets.zipWithIndex.foreach { case ((dq, dr), d) => t(2 * dq - dr + 3) = d }
+    t
+  }
+  private val digitOfEvenRem: Array[Int] = {
+    val t = new Array[Int](7)
+    childOffsets.zipWithIndex.foreach { case ((dq, dr), d) => t(3 * dq + dr + 3) = d }
+    t
+  }
+
+  /** Digit bits of an id at `res`: digit 7 (unused) for every k > res. */
+  private val unusedDigitBits: Array[Long] = Array.tabulate(MaxRes + 1) { res =>
+    (math.max(2, res + 1) to MaxRes).foldLeft(0L)((b, k) => b | 7L << (3 * (MaxRes - k)))
+  }
 
   /** Exact integer aperture-7 down-transform: axial coords of a parent
     * lattice point (res `parentRes`) in the child grid (res parentRes+1).
@@ -252,8 +312,9 @@ object Hex7 {
       val (cq, cr) = downAp7(k - 1, qp, rp) // parent's center child
       val off = (q - cq, r - cr)
       val d = childOffsets.indexOf(off)
-      // upAp7 rounding guarantees the child is one of the parent's 7
-      // children; fall back to the center child on pathological FP ties
+      // upAp7 rounds to the nearest parent centre: a child centre is 1
+      // child edge from its own parent's and at least sqrt(7) - 1 from any
+      // other, so `off` is always a child offset and the 0 is unreachable
       digits(k - 2) = if (d >= 0) d else 0
       q = qp; r = rp
       k -= 1
@@ -277,7 +338,10 @@ object Hex7 {
 
   /** Allocation-free variant of fromLatLngDegrees (no tuples/arrays on the
     * per-row path) — the kernel behind the Hex7CellAt codegen expression.
-    * Identical results (Hex7Spec equality test). */
+    * Same arithmetic on the same values, reached faster: the face search
+    * scans only the point's octant's candidates, per-resolution constants
+    * come from tables, and the up-walk is `fromFaceHexExact`. Identical
+    * results (Hex7FastSpec differential test). */
   def fromLatLngDegreesFast(latDeg: Double, lngDeg: Double, res: Int): Long = {
     val lat = math.toRadians(latDeg)
     val lng = math.toRadians(lngDeg)
@@ -285,20 +349,33 @@ object Hex7 {
     val px = cosLat * math.cos(lng)
     val py = cosLat * math.sin(lng)
     val pz = math.sin(lat)
-    val f = faceOf(px, py, pz)
+    // faceOf over the point's octant's candidate faces
+    val fb = faceBasis
+    val oct = ((java.lang.Double.doubleToRawLongBits(px) >>> 63) |
+      ((java.lang.Double.doubleToRawLongBits(py) >>> 63) << 1) |
+      ((java.lang.Double.doubleToRawLongBits(pz) >>> 63) << 2)).toInt
+    var f = 0
+    var bestDot = -2.0
+    var c = octantFrom(oct)
+    val cEnd = octantFrom(oct + 1)
+    while (c < cEnd) {
+      val cf = octantFaces(c); val co = cf * 9
+      val cd = px * fb(co) + py * fb(co + 1) + pz * fb(co + 2)
+      if (cd > bestDot) { bestDot = cd; f = cf }
+      c += 1
+    }
     // inline gnomonic projection
-    val n = faceCenters(f); val e1 = faceE1(f); val e2 = faceE2(f)
-    val d = px * n(0) + py * n(1) + pz * n(2)
+    val o = f * 9
+    val d = px * fb(o) + py * fb(o + 1) + pz * fb(o + 2)
     val gx = px / d; val gy = py / d; val gz = pz / d
-    val u = gx * e1(0) + gy * e1(1) + gz * e1(2)
-    val v = gx * e2(0) + gy * e2(1) + gz * e2(2)
+    val u = gx * fb(o + 3) + gy * fb(o + 4) + gz * fb(o + 5)
+    val v = gx * fb(o + 6) + gy * fb(o + 7) + gz * fb(o + 8)
     // inline hexRound at res
-    val th = -gridRot(res)
-    val cs = math.cos(th); val sn = math.sin(th)
+    val cs = unrotCos(res); val sn = unrotSin(res)
     val rx = u * cs - v * sn
     val ry = u * sn + v * cs
-    val s = hexSize(res)
-    val qf = (math.sqrt(3.0) / 3.0 * rx - ry / 3.0) / s
+    val s = edgeLens(res)
+    val qf = (Sqrt3Over3 * rx - ry / 3.0) / s
     val rf = (2.0 / 3.0 * ry) / s
     var q = math.round(qf).toInt
     var r = math.round(rf).toInt
@@ -307,46 +384,44 @@ object Hex7 {
     val dq = math.abs(q - qf); val dr = math.abs(r - rf); val ds = math.abs(sI - sF)
     if (dq > dr && dq > ds) q = -r - sI
     else if (dr > ds) r = -q - sI
-    // integer up-walk accumulating digits directly into the id bits
-    var digitsBits = 0L
-    var k = 2
-    while (k <= MaxRes) { digitsBits |= 7L << (3 * (MaxRes - k)); k += 1 }
-    k = res
+    fromFaceHexExact(f, res, q, r)
+  }
+
+  /** `fromFaceHex` as an exact integer walk. Under the up-transform's
+    * rows (2q - r, q + 3r for an odd parent res; 3q + r, -q + 2r for an
+    * even one) the 7 child offsets map to exactly the residues -3..3 mod 7,
+    * so each parent coordinate is that row divided by 7 and rounded to the
+    * nearest integer, and the first row's remainder names the digit. Equal
+    * to `fromFaceHex` wherever that one's base coords fit the id
+    * (Hex7FastSpec). Like the rest of the per-row path it checks no range:
+    * it needs |q|, |r| < 2^26, and a hex whose base coords fit the id has
+    * |q|, |r| < 2^25 even at res 15. */
+  private[graft] def fromFaceHexExact(f: Int, res: Int, hexQ: Int, hexR: Int): Long = {
+    var q = hexQ; var r = hexR
+    var bits = unusedDigitBits(res)
+    var k = res
     while (k >= 2) {
-      val pr = k - 1
-      // upAp7 inline
-      var qpf = 0.0; var rpf = 0.0
-      if ((pr & 1) == 1) { qpf = (2.0 * q - r) / 7.0; rpf = (q + 3.0 * r) / 7.0 }
-      else { qpf = (3.0 * q + r) / 7.0; rpf = (-q + 2.0 * r) / 7.0 }
-      var qp = math.round(qpf).toInt
-      var rp = math.round(rpf).toInt
-      val spF = -qpf - rpf
-      val spI = math.round(spF).toInt
-      val dq2 = math.abs(qp - qpf); val dr2 = math.abs(rp - rpf); val ds2 = math.abs(spI - spF)
-      if (dq2 > dr2 && dq2 > ds2) qp = -rp - spI
-      else if (dr2 > ds2) rp = -qp - spI
-      // center child (downAp7 inline)
-      var cq = 0; var cr = 0
-      if ((pr & 1) == 1) { cq = 3 * qp + rp; cr = -qp + 2 * rp }
-      else { cq = 2 * qp - rp; cr = qp + 3 * rp }
-      val oq = q - cq; val or = r - cr
-      val digit =
-        if (oq == 0 && or == 0) 0
-        else if (oq == 1 && or == 0) 1
-        else if (oq == 0 && or == 1) 2
-        else if (oq == -1 && or == 1) 3
-        else if (oq == -1 && or == 0) 4
-        else if (oq == 0 && or == -1) 5
-        else if (oq == 1 && or == -1) 6
-        else 0
-      digitsBits = (digitsBits & ~(7L << (3 * (MaxRes - k)))) |
-        (digit.toLong << (3 * (MaxRes - k)))
-      q = qp; r = rp
+      // parent res k - 1 is odd exactly when k is even
+      val odd = (k & 1) == 0
+      val t = if (odd) 2 * q - r else 3 * q + r
+      val u = if (odd) q + 3 * r else -q + 2 * r
+      q = nearestDiv7(t)
+      r = nearestDiv7(u)
+      val digit = (if (odd) digitOfOddRem else digitOfEvenRem)(t - 7 * q + 3)
+      bits |= digit.toLong << (3 * (MaxRes - k))
       k -= 1
     }
     (res.toLong << 60) | (f.toLong << 55) |
-      ((q + 15).toLong << 50) | ((r + 15).toLong << 45) | digitsBits
+      ((q + 15).toLong << 50) | ((r + 15).toLong << 45) | bits
   }
+
+  private final val Div7Bias = 1 << 26
+
+  /** floorDiv(x + 3, 7) for |x| < 7 * 2^26 - 3: shifted non-negative by
+    * 7 * 2^26, then divided by multiply and shift (2454267027 =
+    * ceil(2^34 / 7), exact for every numerator below 2^31). */
+  @inline private def nearestDiv7(x: Int): Int =
+    (((x + (3 + 7 * Div7Bias)).toLong * 2454267027L) >>> 34).toInt - Div7Bias
 
   /** Cell center as (lat, lng) degrees. */
   def centerLatLng(id: Long): (Double, Double) = {
@@ -389,9 +464,6 @@ object Hex7 {
     }
     dist.iterator.map { case (c, dd) => (c, dd) }.toArray
   }
-
-  /** Hex edge length at `res` in face-plane units (gnomonic). */
-  def edgeLen(res: Int): Double = S1 / math.pow(math.sqrt(7.0), res - 1)
 
   /** Sound-by-construction covering of a polygon at `res`: scan the ring
     * bounding box at half the hex INRADIUS so every hex that intersects the

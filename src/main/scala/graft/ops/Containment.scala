@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Geo, S2}
+import graft.core.S2
 import graft.functions.Udfs
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -199,84 +199,5 @@ object Containment {
         col("hex7_img"), col("lat"), col("lng"), index)))
       .withColumn("region_id", element_at(lit(index.regionIds), col("ridx") + 1))
       .drop("ridx", "hex7_img")
-  }
-
-  /** The pre-native-expression UDF variant, kept for plan comparison. */
-  def containmentProbeUdf(images: DataFrame,
-                          regions: Array[graft.model.Synth.Region]): DataFrame = {
-    // driver-built index: covering cell -> region ordinals, plus the levels
-    // present (probe cost = |levels| hash lookups per image)
-    val cellIndex = new java.util.HashMap[java.lang.Long, Array[Int]]()
-    regions.zipWithIndex.foreach { case (r, i) =>
-      r.cells.foreach { c =>
-        val prev = cellIndex.get(c)
-        cellIndex.put(c, if (prev == null) Array(i) else prev :+ i)
-      }
-    }
-    val levels: Array[Int] =
-      regions.flatMap(_.cells.map(S2.level)).distinct.sorted
-    val ringsLat: Array[Array[Array[Double]]] = regions.map(_.rings.map(_._1))
-    val ringsLng: Array[Array[Array[Double]]] = regions.map(_.rings.map(_._2))
-    val regionIds: Array[String] = regions.map(_.regionId)
-
-    val empty = Array.empty[Int]
-    val probe = udf((cell16: Long, lat: Double, lng: Double) => {
-      // allocation-free no-match fast path (the overwhelmingly common case
-      // at scale); small exact-size array otherwise
-      var n = 0
-      var first = -1
-      var li = 0
-      while (li < levels.length) {
-        val cand = cellIndex.get(S2.parent(cell16, levels(li)))
-        if (cand != null) {
-          var c = 0
-          while (c < cand.length) {
-            val ri = cand(c)
-            var odd = false
-            val rl = ringsLat(ri); val rg = ringsLng(ri)
-            var k = 0
-            while (k < rl.length) {
-              if (Geo.containsPlanar(lat, lng, rl(k), rg(k))) odd = !odd
-              k += 1
-            }
-            if (odd) { n += 1; if (first < 0) first = ri }
-            c += 1
-          }
-        }
-        li += 1
-      }
-      if (n == 0) empty
-      else if (n == 1) Array(first)
-      else {
-        val out = new Array[Int](n)
-        var w = 0
-        li = 0
-        while (li < levels.length) {
-          val cand = cellIndex.get(S2.parent(cell16, levels(li)))
-          if (cand != null) {
-            var c = 0
-            while (c < cand.length) {
-              val ri = cand(c)
-              var odd = false
-              val rl = ringsLat(ri); val rg = ringsLng(ri)
-              var k = 0
-              while (k < rl.length) {
-                if (Geo.containsPlanar(lat, lng, rl(k), rg(k))) odd = !odd
-                k += 1
-              }
-              if (odd) { out(w) = ri; w += 1 }
-              c += 1
-            }
-          }
-          li += 1
-        }
-        out
-      }
-    })
-
-    images
-      .withColumn("ridx", explode(probe(col("cell16"), col("lat"), col("lng"))))
-      .withColumn("region_id", element_at(lit(regionIds), col("ridx") + 1))
-      .drop("ridx")
   }
 }

@@ -13,33 +13,61 @@ trait PointProbe extends Serializable {
 /** Serializable, allocation-free containment probe index: the b6 per-point
   * index probe (api/functions/features.go:96-113) as flat primitive arrays.
   *
-  * Layout: covering cells sorted in `cells`; `offsets(i)..offsets(i+1)` in
-  * `cands` are the region ordinals whose covering contains `cells(i)`.
-  * Probing does |levels| binary searches and exact ray-casts — zero boxing,
-  * zero allocation on the (overwhelmingly common) no-match path. Ships to
-  * executors inside the expression's reference array. */
+  * Layout: the covering cells' leaf ranges `[rangeMin, rangeMax]` cut the
+  * id line into disjoint elementary ranges; `starts` holds their first ids,
+  * sorted, and `offsets(i)..offsets(i+1)` in `cands` are the region
+  * ordinals of every covering cell that holds range i: level ascending,
+  * then region ordinal (a region listed by two of its cells appears
+  * twice). A probe is ONE binary search plus exact ray-casts over that
+  * list — zero boxing, zero allocation on the (overwhelmingly common)
+  * no-match path. Covering levels must be <= 16: the probe key is the
+  * point's level-16 cell, which lies in a coarser cell's leaf range exactly
+  * when that cell is its ancestor. Ships to executors inside the
+  * expression's reference array. */
 final class ProbeIndex(regions: Array[graft.model.Synth.Region])
     extends PointProbe {
 
-  val levels: Array[Int] = regions.flatMap(_.cells.map(S2.level)).distinct.sorted
+  regions.foreach { r =>
+    r.cells.foreach { c =>
+      require(S2.level(c) <= 16,
+        s"ProbeIndex: region ${r.regionId} has a covering cell at level " +
+          s"${S2.level(c)}; the probe keys on level-16 cells, so covering " +
+          "levels must be <= 16")
+    }
+  }
+
   val regionIds: Array[String] = regions.map(_.regionId)
 
-  private val (cells, offsets, cands): (Array[Long], Array[Int], Array[Int]) = {
+  private val (starts, offsets, cands): (Array[Long], Array[Int], Array[Int]) = {
     val byCell = scala.collection.mutable.TreeMap.empty[Long, List[Int]]
     regions.zipWithIndex.foreach { case (r, i) =>
       r.cells.foreach(c => byCell(c) = i :: byCell.getOrElse(c, Nil))
     }
-    val cs = byCell.keys.toArray
-    val off = new Array[Int](cs.length + 1)
+    val levels = byCell.keys.map(S2.level).toArray.distinct.sorted
+    // Long.MinValue opens the (empty) range below every cell, so every id
+    // has a range; a range ending at Long.MaxValue has no successor (cell
+    // ranges never cross the signed wrap, which sits between faces 3 and 4)
+    val bounds = scala.collection.mutable.TreeSet(Long.MinValue)
+    byCell.keys.foreach { c =>
+      bounds += S2.rangeMin(c)
+      if (S2.rangeMax(c) != Long.MaxValue) bounds += S2.rangeMax(c) + 1
+    }
+    val st = bounds.toArray
+    val off = new Array[Int](st.length + 1)
     val buf = scala.collection.mutable.ArrayBuffer.empty[Int]
     var i = 0
-    while (i < cs.length) {
+    while (i < st.length) {
       off(i) = buf.length
-      byCell(cs(i)).reverse.foreach(buf += _)
+      val x = st(i)
+      levels.foreach { l =>
+        val c = S2.parent(x, l)
+        if (S2.rangeMin(c) <= x && x <= S2.rangeMax(c))
+          byCell.get(c).foreach(_.reverse.foreach(buf += _))
+      }
       i += 1
     }
-    off(cs.length) = buf.length
-    (cs, off, buf.toArray)
+    off(st.length) = buf.length
+    (st, off, buf.toArray)
   }
 
   private val ringsLat: Array[Array[Array[Double]]] = regions.map(_.rings.map(_._1))
@@ -60,40 +88,27 @@ final class ProbeIndex(regions: Array[graft.model.Synth.Region])
 
   /** Region ordinals containing the point; EmptyInts when none. */
   def probe(cell16: Long, lat: Double, lng: Double): Array[Int] = {
+    val idx = java.util.Arrays.binarySearch(starts, cell16)
+    val range = if (idx >= 0) idx else -idx - 2
+    val from = offsets(range); val to = offsets(range + 1)
     var n = 0
     var first = -1
-    var li = 0
-    while (li < levels.length) {
-      val p = S2.parent(cell16, levels(li))
-      val idx = java.util.Arrays.binarySearch(cells, p)
-      if (idx >= 0) {
-        var c = offsets(idx)
-        while (c < offsets(idx + 1)) {
-          val ri = cands(c)
-          if (contains(ri, lat, lng)) { n += 1; if (first < 0) first = ri }
-          c += 1
-        }
-      }
-      li += 1
+    var c = from
+    while (c < to) {
+      val ri = cands(c)
+      if (contains(ri, lat, lng)) { n += 1; if (first < 0) first = ri }
+      c += 1
     }
     if (n == 0) EmptyInts
     else if (n == 1) Array(first)
     else {
       val out = new Array[Int](n)
       var w = 0
-      li = 0
-      while (li < levels.length) {
-        val p = S2.parent(cell16, levels(li))
-        val idx = java.util.Arrays.binarySearch(cells, p)
-        if (idx >= 0) {
-          var c = offsets(idx)
-          while (c < offsets(idx + 1)) {
-            val ri = cands(c)
-            if (contains(ri, lat, lng)) { out(w) = ri; w += 1 }
-            c += 1
-          }
-        }
-        li += 1
+      c = from
+      while (c < to) {
+        val ri = cands(c)
+        if (contains(ri, lat, lng)) { out(w) = ri; w += 1 }
+        c += 1
       }
       out
     }

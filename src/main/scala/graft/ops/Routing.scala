@@ -78,11 +78,14 @@ object Routing {
     val b = snapped.where(col("id") % 2 === 1)
       .select((col("id") / 2).cast("long").as("route_id"),
         col("node").as("node_b"), col("snap_m").as("snap_b_m"))
-    val origins = a.select("node_a").distinct().as[Long].collect().toSeq.sorted
+    // bounded origin collect (the MapMatch distinct+limit contract)
+    val origins = a.select("node_a").distinct().limit(maxNetworkNodes + 1)
+      .as[Long].collect().toSeq.sorted
     if (origins.size > maxNetworkNodes)
       throw new IllegalStateException(
-        s"routeDistance: ${origins.size} distinct origin nodes > " +
-          s"maxNetworkNodes=$maxNetworkNodes; shard the request batch by region")
+        "routeDistance: MORE THAN maxNetworkNodes=" +
+          s"$maxNetworkNodes distinct origin nodes (count truncated at the " +
+          "bound); shard the request batch by region")
     val dist =
       if (origins.isEmpty)
         Seq.empty[(Long, Long, Double)].toDF("origin", "node", "dist")

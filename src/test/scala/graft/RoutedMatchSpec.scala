@@ -209,6 +209,28 @@ class RoutedMatchSpec extends AnyFunSuite with BeforeAndAfterAll {
     graft.ops.EngineCaches.releaseIterationSnapshots()
   }
 
+  test("routing: origin-node bound fails loudly from a bounded collect") {
+    import spark.implicits._
+    import graft.ops.Routing
+    // three pairs whose origins sit exactly on three distinct nodes
+    val pairs = (0 until 3).map { c =>
+      (c.toLong, Synth.gridNodeLat(0), Synth.gridNodeLng(c),
+        Synth.gridNodeLat(0), Synth.gridNodeLng(c + 1))
+    }.toDF("route_id", "a_lat", "a_lng", "b_lat", "b_lng")
+    val e = intercept[IllegalStateException] {
+      Routing.routeDistance(spark, pairs, Tables.gridSegments(spark),
+        Tables.gridEdges(spark), snapRadiusMeters = 300.0,
+        maxRouteMeters = 12000.0, maxNetworkNodes = 2)
+    }
+    assert(e.getMessage.contains("MORE THAN maxNetworkNodes=2"))
+    assert(e.getMessage.contains("count truncated at the bound"))
+    // at the bound the same request routes
+    assert(Routing.routeDistance(spark, pairs, Tables.gridSegments(spark),
+      Tables.gridEdges(spark), snapRadiusMeters = 300.0,
+      maxRouteMeters = 12000.0, maxNetworkNodes = 3).count() == 3)
+    graft.ops.EngineCaches.releaseIterationSnapshots()
+  }
+
   test("network-node bound fails loudly") {
     val e = intercept[IllegalStateException] {
       MapMatch.viterbiMatchRouted(pts(fixes), segs, edges,

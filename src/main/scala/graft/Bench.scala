@@ -126,7 +126,7 @@ object Bench {
     // query's number measures the query, not cold start
     val spark = session(cpus)
     try {
-      SparkEntry.queries("q_containment")(spark, sfDir).count()
+      SparkEntry.gate("q_containment").run(spark, sfDir).count()
       // warm the batch-kNN plan family too (UDAF + covering-UDF codegen,
       // round-loop shapes): a 200-query run pays the one-time costs so the
       // measured 10^4-query number reflects the query, not cold start —
@@ -143,7 +143,7 @@ object Bench {
       // number measures the JIT, not the query. Two full-scale warm passes
       // reach steady state (the warm-session protocol's stated intent).
       for (_ <- 1 to 2) {
-        SparkEntry.queries("q_knn_batch")(spark, sfDir).count()
+        SparkEntry.gate("q_knn_batch").run(spark, sfDir).count()
         graft.ops.EngineCaches.releaseIterationSnapshots()
       }
     } catch { case e: Throwable => System.err.println(s"[bench] warmup: $e") }
@@ -157,7 +157,7 @@ object Bench {
     val qDeadline = System.currentTimeMillis() +
       sys.env.getOrElse("SPARK_GRAFT_QUERY_RETRY_BUDGET_MS", "120000").toLong
     val results = headline.map { name =>
-      val fn = SparkEntry.queries(name)
+      val fn = SparkEntry.gate(name).run
       // a rep that THROWS reports ok=false and its elapsed time is never a
       // candidate timing (review r03e: the old form returned
       // elapsed-to-failure, and the min-of-retries below could publish a
@@ -211,9 +211,9 @@ object Bench {
     // the retry adds samples, never selects on the efficiency value.
     val cleanSoFar = primaryPairs.count(BenchProtocol.isClean(_, primaryN, primary4N))
     if (cleanSoFar < 3) {
-      // floor scales with the budget (2/5) so a small driver budget cannot
-      // be overshot by a fixed 2-minute constant
-      val retryBudget = math.max(budgetMs * 4 / 5 - spentPrimaryMs, budgetMs * 2 / 5)
+      // floor scales with the budget (the reserved 1/5) so a small driver
+      // budget cannot be overshot by a fixed 2-minute constant
+      val retryBudget = BenchProtocol.outerRetryBudgetMs(budgetMs, spentPrimaryMs)
       System.err.println(s"[bench] outer retry: primary block closed with " +
         s"clean_pairs=$cleanSoFar < 3; re-entering the scaling block after the " +
         s"headline interlude (budget ${retryBudget / 1000}s)")

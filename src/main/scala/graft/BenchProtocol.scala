@@ -23,6 +23,11 @@ private[graft] object BenchProtocol {
   def isClean(p: Pair, n: Int, m: Int, effCap: Double = 1.2): Boolean =
     p.stealClean && effOf(p, n, m) <= effCap
 
+  /** Budget of Bench's outer retry of the scaling block: what the primary
+    * pair left of its 4/5 share, floored at the 1/5 reserved for it. */
+  def outerRetryBudgetMs(budgetMs: Long, spentPrimaryMs: Long): Long =
+    math.max(budgetMs * 4 / 5 - spentPrimaryMs, budgetMs / 5)
+
   /** Cumulative hypervisor-steal centiseconds (8th field of /proc/stat). */
   def stealCs(): Long = {
     try {

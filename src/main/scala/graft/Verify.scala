@@ -1,16 +1,18 @@
 package graft
+import graft.oracle.Golden
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare.
+/** Driver-run correctness dump: each [[SparkEntry.gates]] result → parquet,
+  * plus oracle_sql.json (gate name → oracle SQL), for the driver's DuckDB
+  * compare. Every golden-oracle gate's golden is written first.
   *
   * Optional THIRD arg (gate tiering, VERDICT r03 #8): a comma-separated
   * gate-name list restricts the dump (and oracle_sql.json) to that subset,
   * so an iteration loop can re-check just the gates it touched — e.g.
   * `runMain graft.Verify <sf> <out> q_knn_batch,q_poly_bool`. The driver's
   * two-arg invocation is unchanged and always sweeps the FULL set; subset
-  * runs still pay the full golden pass (Golden.writeAll is one shared
-  * artifact), so the fast tier saves query time, not golden time. */
+  * runs still write every golden (SQL oracles read other gates' goldens),
+  * so the fast tier saves query time, not golden time. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, only) = args match {
@@ -18,6 +20,10 @@ object Verify {
       case Array(s, o, f) =>
         (s, o, Some(f.split(",").map(_.trim).filter(_.nonEmpty).toSet))
       case _ => sys.error("usage: Verify <sfDir> <outDir> [gate1,gate2,...]")
+    }
+    only.foreach { names =>
+      val unknown = names -- SparkEntry.gates.map(_.name)
+      require(unknown.isEmpty, s"Verify: unknown gate names ${unknown.mkString(", ")}")
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
@@ -28,22 +34,19 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // independent driver-side goldens for the non-SQL-expressible queries;
-    // their oracle SQL reads these back via read_parquet (Golden.Dir)
-    graft.oracle.Golden.writeAll(spark, sfDir)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty, s"Verify: unknown gate names ${unknown.mkString(", ")}")
+    val inputs = new Golden.Inputs(spark, sfDir)
+    SparkEntry.gates.foreach {
+      case Gate(name, _, Gate.Golden(_, build)) => Golden.write(name)(build(inputs))
+      case _ =>
     }
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
+    val selected = SparkEntry.gates.filter(g => only.forall(_.contains(g.name)))
+    selected.foreach { g =>
+      try g.run(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${g.name}")
+      catch { case e: Throwable =>
+        System.err.println(s"[verify] ${g.name} failed: ${e.getMessage}")
       }
+    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -56,9 +59,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = selected.map(g => s"${q(g.name)}: ${q(g.oracleSql)}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

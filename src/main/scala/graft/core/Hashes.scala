@@ -36,15 +36,6 @@ object Hashes {
     h
   }
 
-  /** TileFeatureIDForPolygon (api/tiles.go:22-32): id bytes then the
-    * polygon index as little-endian uint64. */
-  def tileFeatureIdForPolygon(typeCode: Long, namespace: String, value: Long, polygon: Long): Long = {
-    var h = tileFeatureId(typeCode, namespace, value)
-    var k = 0
-    while (k < 8) { h = h * FnvPrime; h ^= ((polygon >>> (8 * k)) & 0xffL); k += 1 }
-    h
-  }
-
   // ---- splitmix64: the fixture phash generator (FIXTURES.md §1) ----
   def splitmix64(seed: Long): Long = {
     var z = seed + 0x9E3779B97F4A7C15L
@@ -52,8 +43,6 @@ object Hashes {
     z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
     z ^ (z >>> 31)
   }
-
-  def bitreverse64(v: Long): Long = java.lang.Long.reverse(v)
 
   // ---- 64-bit string hash (FNV-1a) for dedup/minhash token hashing ----
   def fnv1a(s: String): Long = {

@@ -286,16 +286,6 @@ object S2 {
     m
   }
 
-  /** All ancestors of `id` from level `fromLevel` down to `id`'s own level
-    * (inclusive), ordered coarse->fine. */
-  def ancestors(id: Long, fromLevel: Int): Array[Long] = {
-    val l = level(id)
-    val out = new Array[Long](l - fromLevel + 1)
-    var k = fromLevel
-    while (k <= l) { out(k - fromLevel) = parent(id, k); k += 1 }
-    out
-  }
-
   // =====================================================================
   // Region coverer
   // =====================================================================
@@ -311,22 +301,6 @@ object S2 {
   final case class Cap(center: Array[Double], angle: Double) extends Region {
     def mayIntersectCell(cellId: Long): Boolean =
       Geo.angleBetween(center, centerXYZ(cellId)) <= angle + circumAngle(cellId) + 1e-12
-  }
-
-  /** Lat/lng rectangle (degrees); assumes lngLo <= lngHi (no antimeridian wrap). */
-  final case class Rect(latLo: Double, latHi: Double, lngLo: Double, lngHi: Double) extends Region {
-    def mayIntersectCell(cellId: Long): Boolean = {
-      val c = centerXYZ(cellId)
-      val lat = math.toDegrees(math.asin(c(2)))
-      val lng = math.toDegrees(math.atan2(c(1), c(0)))
-      val marginDeg = math.toDegrees(circumAngle(cellId))
-      val latOk = lat >= latLo - marginDeg && lat <= latHi + marginDeg
-      // conservative longitude margin scaled by the least-shrunk parallel
-      val maxAbsLat = math.min(89.9, math.max(math.abs(latLo), math.abs(latHi)) + marginDeg)
-      val lngMargin = marginDeg / math.cos(math.toRadians(maxAbsLat))
-      val lngOk = lng >= lngLo - lngMargin && lng <= lngHi + lngMargin
-      latOk && lngOk
-    }
   }
 
   /** Polygon region given as rings of (lat, lng) degrees; first ring is the

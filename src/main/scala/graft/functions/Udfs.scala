@@ -22,9 +22,6 @@ object Udfs {
   val cellAtLevel: UserDefinedFunction =
     udf((lat: Double, lng: Double, level: Int) => S2.cellAt(lat, lng, level))
 
-  val leafCell: UserDefinedFunction =
-    udf((lat: Double, lng: Double) => S2.fromLatLngDegrees(lat, lng))
-
   val cellToken: UserDefinedFunction = udf((cell: Long) => S2.token(cell))
 
   /** Cell id -> center (lat, lng) degrees — the s2-center / s2-points
@@ -41,14 +38,6 @@ object Udfs {
     val ls = levels.toArray
     udf((cell: Long) => ls.map(l => S2.parent(cell, l)))
   }
-
-  /** Does any covering cell contain this (level<=30) cell? Sound prune test
-    * used by the kNN cap probe. */
-  val inCovering: UserDefinedFunction =
-    udf((cell: Long, covering: Seq[Long]) => {
-      val lo = S2.rangeMin(cell); val hi = S2.rangeMax(cell)
-      covering.exists(c => S2.rangeMin(c) <= lo && hi <= S2.rangeMax(c))
-    })
 
   /** Exact even-odd ray-cast refine over polygon rings — the b6 refine step
     * (api/functions/features.go:46-56) with planar semantics shared
@@ -170,23 +159,6 @@ object Udfs {
     val out = new Array[String](s.length - n + 1)
     var i = 0
     while (i + n <= s.length) { out(i) = s.substring(i, i + n); i += 1 }
-    out
-  }
-
-  /** Word n-gram shingles — the dedup substrate. Word-level (not char-level)
-    * so that small-vocabulary corpora don't make every document pair
-    * near-identical at the shingle level (which would defeat the LSH prune
-    * and degenerate to the quadratic all-pairs join). */
-  def wordShingles(s: String, n: Int): Array[String] = {
-    val w = tokenize(s)
-    val sep = "\u0001" // unambiguous joiner (never appears in tokens)
-    if (w.length < n) return if (w.isEmpty) Array.empty else Array(w.mkString(sep))
-    val out = new Array[String](w.length - n + 1)
-    var i = 0
-    while (i + n <= w.length) {
-      out(i) = w.slice(i, i + n).mkString(sep)
-      i += 1
-    }
     out
   }
 

@@ -261,15 +261,30 @@ object SnapshotStore {
   /** Release the debris of a CRASHED half-commit of `version`: verifies the
     * table never reached it (HEAD < version — a committed version must
     * never be released), then deletes the orphan claim, any partial
-    * manifest, and the attempt's data directory. */
+    * manifest, and the attempt's data directory. A table with no HEAD and
+    * no HEAD.tmp (a crashed create) is at head 0. */
   def releaseFailedCommit(spark: SparkSession, dir: String, version: Int): Unit = {
-    val head = headVersion(spark, dir)
+    val head = recoveryHead(spark, dir)
     require(head < version,
       s"releaseFailedCommit: v$version is committed (HEAD=$head); refusing")
     val (fs, _) = fsOf(spark, dir)
     fs.delete(new Path(s"$dir/_snaps/v$version.claim"), false)
     fs.delete(manifestPath(dir, version), false)
     fs.delete(new Path(s"$dir/data_v$version"), true)
+  }
+
+  /** HEAD as recovery sees it: inside [[commit]]'s delete-then-rename swap
+    * HEAD is missing and HEAD.tmp holds the version being committed, so
+    * that value counts; HEAD is read once more in case the rename landed
+    * between the two reads. Neither file: nothing was ever committed. */
+  private def recoveryHead(spark: SparkSession, dir: String): Int = {
+    val (fs, _) = fsOf(spark, dir)
+    def read(name: String): Option[Int] =
+      try {
+        val in = fs.open(new Path(s"$dir/_snaps/$name"))
+        try Some(scala.io.Source.fromInputStream(in).mkString.trim.toInt) finally in.close()
+      } catch { case _: java.io.FileNotFoundException => None }
+    read("HEAD").orElse(read("HEAD.tmp")).orElse(read("HEAD")).getOrElse(0)
   }
 
   def headVersion(spark: SparkSession, dir: String): Int = {

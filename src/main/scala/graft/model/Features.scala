@@ -69,9 +69,6 @@ object Features {
     * over the (type, ns, value)-ordered index. */
   def typed(df: DataFrame, ftype: Int): DataFrame = df.where(col("ftype") === ftype)
 
-  /** b6 `take` over the heterogeneous world: first n in FeatureID order. */
-  def takeOrdered(df: DataFrame, n: Int): DataFrame = df.orderBy(idOrder: _*).limit(n)
-
   /** Relation member dereference (world.go:605-616 + the id-lookup join of
     * SURVEY §2.4): explode members and resolve each against the world.
     * @return (rel_fid, role, mtype, mns, mfid, resolved). */

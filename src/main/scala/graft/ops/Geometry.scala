@@ -8,23 +8,18 @@ import org.apache.spark.sql.functions._
 /** The b6 scalar/geometry function surface (SURVEY.md §2.3) as Column
   * expressions and batched UDFs over the pure Geo kernel:
   *
-  *   distance-meters            geometry.go:15-17   -> haversine Column math
+  *   distance-meters            geometry.go:15-17   -> Udfs.haversineMeters
   *   centroid                   geometry.go:30-45   -> UDF over vertex arrays
   *   interpolate                geometry.go:47-51   -> UDF
   *   area (m^2)                 geometry.go:65-74   -> spherical-excess UDF
   *   length (meters)            features.go:225-227 -> UDF over vertex arrays
-  *   sample-points              features.go:379-427 -> explode of interp UDF
+  *   sample-points              features.go:379-427 -> Polyline.samplePointsAlongPaths
   *   convex-hull                geometry.go:169-193 -> Aggregator (hull of a
   *                                                     grouped point set)
   *   rectangle-polygon/cap-pgon geometry.go:76-88   -> generator functions
   *   ll / distance accessors    geometry.go:11-17   -> struct(lat,lng)
   */
 object Geometry {
-
-  /** Great-circle meters between two (lat,lng) column pairs — pure Column
-    * arithmetic (codegen'd), earth radius 6371.01 km as the reference. */
-  def distanceMeters(lat1: Column, lng1: Column, lat2: Column, lng2: Column): Column =
-    graft.functions.Udfs.haversineMeters(lat1, lng1, lat2, lng2)
 
   /** Centroid of a polyline given parallel lat/lng arrays. */
   val centroid = udf((lats: Seq[Double], lngs: Seq[Double]) =>
@@ -41,13 +36,6 @@ object Geometry {
   /** Spherical polygon area in m^2 (shell ring). */
   val areaM2 = udf((lats: Seq[Double], lngs: Seq[Double]) =>
     Geo.sphericalAreaM2(lats.toArray, lngs.toArray))
-
-  /** n equidistant samples along a polyline (b6 sample-points) — an
-    * array-returning function meant for explode(). */
-  def samplePoints(n: Int) = udf((lats: Seq[Double], lngs: Seq[Double]) => {
-    val la = lats.toArray; val lo = lngs.toArray
-    (0 until n).map(i => Geo.interpolate(la, lo, i.toDouble / math.max(1, n - 1)))
-  })
 
   /** Convex-hull area as a typed Aggregator over grouped (lat, lng) points —
     * the reachable-area shape (SURVEY.md §2.5, api/functions/graph.go:202-216).
@@ -131,19 +119,4 @@ object Geometry {
     * (e.g. [[Reachability.isochrone]]'s count + hull in one aggregation). */
   def hullAreaAgg(latCol: Column, lngCol: Column): Column =
     hullAreaUdaf(latCol, lngCol)
-
-  /** collect_list reference form of hullAreaM2 — test-only cross-check for
-    * the bounded aggregator (kept OUT of gated query paths: the unbounded
-    * per-group collect is exactly the scale-killer the aggregator avoids). */
-  def hullAreaM2Collect(df: DataFrame, groupCol: String, latCol: String, lngCol: String): DataFrame = {
-    val hullArea = udf((lats: Seq[Double], lngs: Seq[Double]) => {
-      val idx = Geo.convexHull(lats.toArray, lngs.toArray)
-      if (idx.length < 3) 0.0
-      else Geo.sphericalAreaM2(idx.map(lats(_)), idx.map(lngs(_)))
-    })
-    df.groupBy(col(groupCol))
-      .agg(collect_list(col(latCol)).as("lats"), collect_list(col(lngCol)).as("lngs"))
-      .withColumn("hull_area_m2", hullArea(col("lats"), col("lngs")))
-      .drop("lats", "lngs")
-  }
 }

@@ -61,28 +61,6 @@ object Polyline {
     false
   }
 
-  val crosses = udf((aLat: Seq[Double], aLng: Seq[Double],
-                     bLat: Seq[Double], bLng: Seq[Double]) =>
-    polylinesCross(aLat.toArray, aLng.toArray, bLat.toArray, bLng.toArray))
-
-  /** Covering of a polyline for the prune side: union of per-vertex cell
-    * ancestors at `level` plus segment-sampled cells (sound for segments
-    * shorter than ~the cell size at `level`; callers densify long paths). */
-  def pathCoveringAtLevel(lats: Array[Double], lngs: Array[Double], level: Int): Array[Long] = {
-    val out = scala.collection.mutable.LinkedHashSet.empty[Long]
-    var i = 0
-    while (i < lats.length) {
-      out += S2.cellAt(lats(i), lngs(i), level)
-      if (i > 0) { // midpoint sample per segment
-        val (mLat, mLng) = Geo.interpolate(
-          Array(lats(i - 1), lats(i)), Array(lngs(i - 1), lngs(i)), 0.5)
-        out += S2.cellAt(mLat, mLng, level)
-      }
-      i += 1
-    }
-    out.toArray
-  }
-
   /** sample-points-along-paths (features.go:379-427): n equidistant samples
     * per path, deduped on the emitted point — an explode-shaped generator. */
   def samplePointsAlongPaths(paths: DataFrame, n: Int): DataFrame = {

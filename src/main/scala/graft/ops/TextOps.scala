@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * fingerprint (a pure-kernel UDF, graft.core.Hashes.fingerprint).
   *
   * The Column-expression forms are shared textually with the DuckDB oracle
-  * (SparkEntry.oracleSql), so outputs are bit-exact across engines. */
+  * (the gates' oracle SQL in SparkEntry), so outputs are bit-exact across engines. */
 object TextOps {
 
   /** Whitespace token count: split on single spaces, drop empties — matches

@@ -88,18 +88,6 @@ object Tiling {
       .select(col("region_id"),
         col("t._1").as("z"), col("t._2").as("x"), col("t._3").as("y"))
 
-  /** Per-tile feature counts with the reference's 10k cap semantics
-    * (renderer/query.go:34,104-106): rank features in deterministic id order
-    * within each tile, cap, then count. */
-  def tileCounts(manifest: DataFrame, idCol: String, cap: Int = 10000): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    manifest
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("z", "x", "y").orderBy(col(idCol))))
-      .where(col("rn") <= cap)
-      .groupBy("z", "x", "y").agg(count(lit(1)).as("n_features"))
-  }
-
   /** EXACT per-tile rasterized polygon area — the raster side of the
     * raster<->vector surface as a zonal-statistics operator: for every
     * (region, tile) the spherical area (m²) of region ∩ tile, the weight

@@ -3,7 +3,8 @@ package graft.oracle
 import graft.core.{Geo, Hashes, Hex7, S2, Tiles}
 import graft.functions.Udfs
 import graft.model.{Synth, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
 
 /** Independent single-threaded recomputation of every gated query whose math
   * is not ANSI-SQL-expressible, written as golden parquet that the driver's
@@ -63,17 +64,53 @@ object Golden {
       .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
   }
 
-  /** documents plus the "+1000000 / ' mutato'" mutated twin set used by the
-    * near-dup gate queries. */
-  def loadDocsWithMutants(spark: SparkSession, sfDir: String): Array[(Long, String)] = {
-    val d = loadDocs(spark, sfDir)
-    d ++ d.map { case (id, t) => (id + 1000000L, t + " mutato") }
-  }
-
   def loadEmbeddings(spark: SparkSession, sfDir: String): Array[(Long, Array[Float])] = {
     Tables.registerBase(spark, sfDir)
     spark.table("embeddings").select("vec_id", "embedding")
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
+  }
+
+  /** The inputs golden builders read for one sf directory, each loaded
+    * lazily and at most once. */
+  final class Inputs(val spark: SparkSession, sfDir: String) {
+    lazy val images: Array[Img] = loadImages(spark, sfDir)
+    lazy val docs: Array[(Long, String)] = loadDocs(spark, sfDir)
+    /** documents plus the "+1000000 / ' mutato'" mutated twin set used by
+      * the near-dup gate queries. */
+    lazy val docsWithMutants: Array[(Long, String)] =
+      docs ++ docs.map { case (id, t) => (id + 1000000L, t + " mutato") }
+    lazy val embeddings: Array[(Long, Array[Float])] = loadEmbeddings(spark, sfDir)
+    lazy val events: Array[Ev] = loadEvents(spark, sfDir)
+    lazy val orderKeys: Array[Long] = images.map(_.id) // image_id IS o_orderkey
+    /** (doc_id, lang, n_chars + 1): the q_sample_reservoir weights. */
+    lazy val docWeights: Array[(Long, String, Long)] = {
+      Tables.registerBase(spark, sfDir)
+      spark.table("documents").select("doc_id", "lang", "n_chars")
+        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2) + 1L))
+    }
+
+    /** `rows` as a DataFrame with columns `cols`. */
+    def df[T <: Product : TypeTag](rows: Seq[T], cols: String*): DataFrame =
+      spark.createDataset(rows)(Encoders.product[T]).toDF(cols: _*)
+  }
+
+  /** Writes golden `name`; a build that fails is logged and any stale
+    * parquet of that name deleted, so its oracle fails loudly instead of
+    * comparing against outdated data. */
+  def write(name: String)(df: => DataFrame): Unit = {
+    val t0 = System.nanoTime()
+    try {
+      df.coalesce(1).write.mode("overwrite").parquet(s"$Dir/$name.parquet")
+      System.err.println(f"[golden] $name ok (${(System.nanoTime() - t0) / 1e9}%.1f s)")
+    } catch {
+      case e: Throwable =>
+        System.err.println(s"[golden] $name FAILED: $e")
+        def rm(f: java.io.File): Unit = {
+          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
+          f.delete(): Unit
+        }
+        rm(new java.io.File(s"$Dir/$name.parquet"))
+    }
   }
 
   // =====================================================================
@@ -1937,161 +1974,4 @@ object Golden {
       Tiles.coverCellUnionAcrossZooms(r.cells, 6, 10, robust = true)
         .map { case (x, y, z) => (r.regionId, z, x, y) }
     }
-
-  // =====================================================================
-  // orchestration
-  // =====================================================================
-
-  def writeAll(spark: SparkSession, sfDir: String): Unit = {
-    import spark.implicits._
-    val images = loadImages(spark, sfDir)
-    val docs = loadDocs(spark, sfDir)
-    val docsM = loadDocsWithMutants(spark, sfDir)
-    val emb = loadEmbeddings(spark, sfDir)
-    val orderKeys = images.map(_.id) // image_id IS o_orderkey
-
-    def write(name: String)(df: => DataFrame): Unit = {
-      val t0 = System.nanoTime()
-      try {
-        df.coalesce(1).write.mode("overwrite").parquet(s"$Dir/$name.parquet")
-        System.err.println(f"[golden] $name ok (${(System.nanoTime() - t0) / 1e9}%.1f s)")
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[golden] $name FAILED: $e")
-          // delete any STALE golden from a previous run so the oracle fails
-          // loudly instead of silently comparing against outdated data
-          def rm(f: java.io.File): Unit = {
-            if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-            f.delete(): Unit
-          }
-          rm(new java.io.File(s"$Dir/$name.parquet"))
-      }
-    }
-
-    write("q_ann_lsh")(annLsh(emb).toDF("id_a", "id_b"))
-    write("q_ann_ivf")(annIvf(emb).toDF("query_id", "result_id", "rank"))
-    write("q_semdedup")(semDedup(emb, 0.45).toDF("id_a", "id_b"))
-    write("q_connect")(connect(images, 500.0).toDF("id", "path_id"))
-    write("q_dist_pairs")({
-      val d = graft.ops.DistanceJoin
-      distPairsG(images, d.GateLatLo, d.GateLatHi, d.GateLngLo, d.GateLngHi,
-        d.GateRadiusMeters).toDF("id_a", "id_b", "dist_m")
-    })
-    write("q_zonal_area")(spark.createDataFrame(rasterizeAreaG(8))
-      .toDF("region_id", "z", "x", "y", "area_m2"))
-    write("q_bm25")(bm25G(docs, graft.SparkEntry.Bm25Terms, 25)
-      .toDF("doc_id", "score", "rank"))
-    write("q_ngram_lm")(ngramLmG(docs)
-      .toDF("doc_id", "n_bigrams", "n_backoff", "lp_fp_sum", "avg_logp"))
-    write("q_tfidf")(tfidfG(docs)
-      .toDF("doc_id", "nnz", "norm", "pos", "bucket", "weight"))
-    write("q_image_quality")(imageQualityG(images)
-      .toDF("image_id", "n_px", "lum_sum", "lum_sq", "entropy", "contrast", "keep"))
-    write("q_map_match")(
-      mapMatchG(loadEvents(spark, sfDir), 500.0, 50.0, 2.0)
-        .toDF("user_id", "event_id", "path_id"))
-    write("q_map_match_routed")(
-      mapMatchRoutedG(loadEvents(spark, sfDir), 250.0, 50.0, 200.0, 12000.0)
-        .toDF("user_id", "event_id", "path_id"))
-    write("q_route")(routeG(60, 300.0, 12000.0).toDF(
-      "route_id", "node_a", "node_b", "snap_a_m", "snap_b_m", "route_m", "total_m"))
-    write("q_route_proj")(routeProjG(60, 300.0, 12000.0).toDF(
-      "route_id", "path_a", "path_b", "frac_a", "frac_b",
-      "snap_a_m", "snap_b_m", "route_m", "total_m"))
-    write("q_traj_hausdorff")(
-      trajHausdorffG(loadEvents(spark, sfDir).filter(_.userId % 3 == 0), 2500.0)
-        .toDF("user_a", "user_b", "hausdorff_m"))
-    write("q_traj_legs")(
-      trajLegsG(loadEvents(spark, sfDir)).toDF("user_id", "event_id", "sec",
-        "dt_s", "dist_m", "speed_mps", "bearing_deg", "turn_deg"))
-    write("q_geohash")(geohashG(images, 7, 5).toDF("gh5", "n"))
-    write("q_dist_join")({
-      val d = graft.ops.DistanceJoin
-      distJoinG(images, d.GateLatLo, d.GateLatHi, d.GateLngLo, d.GateLngHi,
-        d.GateRadiusMeters, d.GateJoinMod).toDF("id_a", "id_b", "dist_m")
-    })
-    write("q_odometer")(
-      trackStatsG(loadEvents(spark, sfDir))
-        .toDF("user_id", "n_points", "total_m", "max_leg_m", "net_m"))
-    write("q_geofence_trans")(
-      geofenceTransG(loadEvents(spark, sfDir))
-        .toDF("user_id", "event_id", "sec", "region_id", "kind"))
-    write("q_staypoints")({
-      val t = graft.ops.Trajectory
-      stayPointsG(loadEvents(spark, sfDir), t.GateRadiusMeters,
-        t.GateMinDurationSeconds)
-        .toDF("user_id", "start_s", "end_s", "n_points", "c_lat", "c_lng")
-    })
-    write("q_covisit")({
-      val c = graft.ops.CoVisit
-      val d = graft.ops.DistanceJoin
-      covisitG(images, d.GateLatLo, d.GateLatHi, d.GateLngLo, d.GateLngHi,
-        c.GateRadiusMeters, c.GateWindowSeconds)
-        .toDF("id_a", "id_b", "dist_m", "dt_s")
-    })
-    write("q_dbscan")({
-      val c = graft.ops.Cluster
-      dbscanG(images, c.GateLatLo, c.GateLatHi, c.GateLngLo, c.GateLngHi,
-        c.GateEpsMeters, c.GateMinPts).toDF("id", "cluster", "role")
-    })
-    write("q_crossing")(crossingG().toDF("path_id", "region_id"))
-    write("q_elevation")(elevation(images, 3000.0).toDF("id", "elevation"))
-    write("q_fingerprint")(fingerprints(docs).toDF("doc_id", "fingerprint"))
-    write("q_geojson")(geojson().toDF("feature_id", "geom_type", "n_rings", "n_vertices"))
-    write("q_geometry")(geometry().toDF("region_id", "c_lat", "c_lng", "perimeter_m", "area_m2"))
-    write("q_hex7_cells")(hex7Cells(images).toDF("hex7_5", "n"))
-    write("q_hex_smooth")(hexSmooth(images, 8, 2).toDF("cell", "density"))
-    write("q_hull_area")(hullArea(images).toDF("region_id", "hull_area_m2"))
-    write("q_knn_meters")(knnMeters(images, 10).toDF("query_id", "image_id", "rank"))
-    write("q_knn_batch")(knnBatchG(images, 10000, 3).toDF("query_id", "image_id", "rank"))
-    write("q_store_knn_batch")(
-      knnBatchG(images, 2000, 5, Synth.regionalQueryLat, Synth.regionalQueryLng)
-        .toDF("query_id", "image_id", "rank"))
-    write("q_knn_batch_meters")(
-      knnBatchMetersG(images, 10000, 3).toDF("query_id", "image_id", "rank"))
-    write("q_shell_cap")(shellCapG(images).toDF("image_id", "lat", "lng"))
-    write("q_snap_edges")(snapEdgesG().toDF("region_id", "n_vertices", "n_snapped", "checksum"))
-    write("q_poly_bool")(polyBoolG().toDF("id_a", "id_b", "n_inter_rings",
-      "area_a", "area_b", "area_inter", "area_union", "area_diff"))
-    write("q_poly_rings")(polyRingsG().toDF("id_a", "id_b", "op",
-      "n_outer", "n_hole", "area_q"))
-    write("q_media_psnr")(mediaPsnr(images).toDF("image_id", "fmt", "pass"))
-    write("q_phash_dct")(phashDct(images).toDF("image_id", "phash_dct"))
-    write("q_mosaic")(mosaicG(images, 10, 12)
-      .toDF("z", "x", "y", "n_images", "sum_r", "sum_g", "sum_b"))
-    write("q_minhash_lsh")(minhashLsh(docsM).toDF("id_a", "id_b", "jaccard"))
-    write("q_winnow")(winnowG(docs, 20, 8).toDF("doc_id", "pos", "fp"))
-    write("q_winnow_pairs")(
-      winnowPairs(docsM, 20, 8, minShared = 3, maxDocFreq = 4)
-        .toDF("id_a", "id_b", "n_shared"))
-    write("q_ngram_jaccard")(ngramJaccard(docsM, 0.5).toDF("id_a", "id_b", "jaccard"))
-    write("q_mvt_tiles")(mvtTiles(images, 10, 10000).toDF("z", "x", "y", "n_features", "mvt_bytes"))
-    write("q_reachable")(reachable(orderKeys, Seq(1L, 8L), 20.0).toDF("node", "dist"))
-    write("q_closest")(closestG(orderKeys, Seq(1L, 8L, 15L), 16.0).toDF("origin", "node", "dist"))
-    write("q_isochrone")(
-      isochroneG(images, Seq(1L, 8L, 15L), 18.0).toDF("origin", "n_nodes", "hull_area_m2"))
-    write("q_sample_reservoir")({
-      val rows = spark.table("documents").select("doc_id", "lang", "n_chars")
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2) + 1L))
-      sampleReservoirG(rows, 7).toDF("lang", "doc_id", "rank")
-    })
-    write("q_building_access")(
-      buildingAccessG(orderKeys, Seq(1L, 8L, 15L), 14.0).toDF("origin", "building_id", "dist"))
-    write("q_paths_to_reach")(
-      pathsToReachG(orderKeys, 1L, 20.0).toDF("src", "dst", "uses"))
-    write("q_s2_covering")(s2Covering().toDF("region_id", "token"))
-    write("q_clip")(clipG().toDF("region_id", "n_vertices", "clip_area_m2"))
-    write("q_typed_take")(typedTakeG(images).toDF("ftype", "ns", "fid", "rn"))
-    write("q_relation_members")(relationMembersG().toDF(
-      "rel_fid", "role", "mtype", "mns", "mfid", "resolved"))
-    write("q_path_join")(pathJoinG().toDF(
-      "path_id", "n_vertices", "first_lat", "first_lng", "last_lat", "last_lng"))
-    write("q_geojson_full")(geojsonFullG().toDF(
-      "feature_id", "geom_type", "member_idx", "n_parts", "n_points", "inverted"))
-    write("q_mvt_paths")(mvtPathsG().toDF(
-      "layer", "z", "x", "y", "n_features", "mvt_bytes"))
-    write("q_sightline")(sightline(5000.0).toDF("origin_id", "n_vertices", "r_checksum"))
-    write("q_simhash")(simhash(docsM).toDF("id_a", "id_b", "hamming"))
-    write("q_tiles_regions")(tilesRegions().toDF("region_id", "z", "x", "y"))
-  }
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -198,14 +198,6 @@ object GeoJson {
     }
   }
 
-  /** Render point rows as a GeoJSON Feature per row (to-geojson). */
-  def pointsToGeoJson(df: DataFrame, idCol: String, latCol: String, lngCol: String): DataFrame =
-    df.withColumn("geojson", to_json(struct(
-      lit("Feature").as("type"),
-      col(idCol).cast("string").as("id"),
-      struct(lit("Point").as("type"),
-        array(col(lngCol), col(latCol)).as("coordinates")).as("geometry"))))
-
   /** Render a regions table (rings_lat/rings_lng arrays) as Polygon
     * features. */
   def regionsToGeoJson(regions: DataFrame): DataFrame =
@@ -216,9 +208,4 @@ object GeoJson {
         zip_with(col("rings_lng"), col("rings_lat"),
           (lngs, lats) => zip_with(lngs, lats, (x, y) => array(x, y)))
           .as("coordinates")).as("geometry"))))
-
-  /** Load a GeoJSON file as features (parse-geojson-file). */
-  def readFile(spark: SparkSession, path: String): DataFrame =
-    parseFeatureCollection(
-      spark.read.option("wholetext", "true").text(path).toDF("json"), "json")
 }

@@ -34,7 +34,7 @@ object ClusterSmoke {
         case "q_knn_batch_small" =>
           graft.ops.Knn.knnBatch(s, graft.model.Tables.images(s, sfDir),
             graft.model.Synth.batchQueryDf(s, 200), k = 5)
-        case n => graft.SparkEntry.queries(n)(s, sfDir)
+        case n => graft.SparkEntry.gate(n).run(s, sfDir)
       }
       // canonical form: sorted rows rendered to strings (schema order fixed
       // by the query itself)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   *
   *   sbt -batch "runMain graft.tools.ExplainQuery q_docs_pipeline"
   *
-  * Args: query names (from SparkEntry.queries); env SPARK_GRAFT_SF_DIR
+  * Args: gate names (from SparkEntry.gates); env SPARK_GRAFT_SF_DIR
   * selects the input (default sf0.001 — plan shapes are SF-invariant except
   * where AQE collapses tiny exchanges, noted per-plan in PLANS.md). */
 object ExplainQuery {
@@ -20,7 +20,7 @@ object ExplainQuery {
     spark.sparkContext.setLogLevel("WARN")
     try args.foreach { name =>
       println(s"\n===== $name =====")
-      graft.SparkEntry.queries(name)(spark, sfDir).explain("formatted")
+      graft.SparkEntry.gate(name).run(spark, sfDir).explain("formatted")
     } finally spark.stop()
   }
 }

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 /** Ad-hoc per-gate timing harness (not the driver bench): times any subset
-  * of `SparkEntry.queries` at a given sf dir with the noop sink, so plans
+  * of `SparkEntry.gates` at a given sf dir with the noop sink, so plans
   * outside the headline bench still get scale-checked before they ship.
   *
   * Usage: runMain graft.tools.TimeQueries <sfDir> [query ...]
@@ -23,10 +23,9 @@ object TimeQueries {
     spark.sparkContext.setLogLevel("WARN")
     val names =
       if (args.length > 1) args.drop(1).toSeq
-      else graft.SparkEntry.queries.keys.toSeq.sorted
+      else graft.SparkEntry.gates.map(_.name).sorted
     for (n <- names) {
-      val fn = graft.SparkEntry.queries.getOrElse(n,
-        sys.error(s"unknown query $n"))
+      val fn = graft.SparkEntry.gate(n).run
       def once(): Double = {
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()

@@ -179,4 +179,17 @@ class BenchProtocolSpec extends AnyFunSuite {
     // rep follows the previous iteration's 4-core rep
     assert(keys.toSeq == Seq(1 << 20, 16, 4, 16))
   }
+
+  test("outer retry budget: primary's unused 4/5 share, floored at the reserved 1/5") {
+    val budget = 300000L
+    // a fast primary block leaves the retry most of its share
+    assert(BenchProtocol.outerRetryBudgetMs(budget, 60000L) == 180000L)
+    // a primary block that used its whole share gets exactly the reserve
+    assert(BenchProtocol.outerRetryBudgetMs(budget, 180000L) == 60000L)
+    assert(BenchProtocol.outerRetryBudgetMs(budget, 290000L) == 60000L)
+    // primary 3/5 + retry + full-machine pair 1/5 stays inside the budget
+    // whenever the primary stays inside its own 3/5
+    for (spent <- 0L to budget * 3 / 5 by 1000L)
+      assert(spent + BenchProtocol.outerRetryBudgetMs(budget, spent) + budget / 5 <= budget)
+  }
 }

@@ -20,7 +20,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   private def plan(q: String): String =
-    SparkEntry.queries(q)(spark, sfDir).queryExecution.executedPlan.toString
+    SparkEntry.gate(q).run(spark, sfDir).queryExecution.executedPlan.toString
 
   test("hull area aggregates partially — no per-group collect") {
     val p = plan("q_hull_area")
@@ -138,8 +138,8 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the plan, so swapping the broadcast side for real data trips the
     // guard.
     val statsAttach = Set("q_hotspot", "q_bm25", "q_ngram_lm", "q_ngram_merge", "q_tfidf")
-    val offenders = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
-      val p = SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan.toString
+    val offenders = SparkEntry.gates.map(_.name).sorted.flatMap { name =>
+      val p = SparkEntry.gate(name).run(spark, sfDir).queryExecution.executedPlan.toString
       val allPairs = p.contains("CartesianProduct") || p.contains("BroadcastNestedLoopJoin")
       if (statsAttach.contains(name)) {
         val ok = !p.contains("CartesianProduct") && p.contains("HashAggregate(keys=[], ")
@@ -233,7 +233,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // dedup keys can be massively hot). These gates must rank via the
     // bounded partial aggregate instead.
     Seq("q_ann_topk", "q_ann_ivf", "q_dedup_exact").foreach { name =>
-      val p = SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan.toString
+      val p = SparkEntry.gate(name).run(spark, sfDir).queryExecution.executedPlan.toString
       assert(!p.contains("Window"),
         s"$name regressed to a window plan:\n${p.take(1200)}")
     }
@@ -284,7 +284,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("dup-span gram side carries no document bodies through the shuffle") {
-    val q = SparkEntry.queries("q_dup_spans")(spark, sfDir)
+    val q = SparkEntry.gate("q_dup_spans").run(spark, sfDir)
     val ex = q.queryExecution.executedPlan.toString
     // the gram count + semi join shuffle on the gram key; the text column
     // must only appear in map-side projections (scan/project), never in an
@@ -296,7 +296,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("boilerplate strike is a hash anti-join, reassembly an aggregate — no window") {
-    val ex = SparkEntry.queries("q_boilerplate")(spark, sfDir)
+    val ex = SparkEntry.gate("q_boilerplate").run(spark, sfDir)
       .queryExecution.executedPlan.toString
     assert(ex.contains("LeftAnti"), "line strike must be a LEFT ANTI join:\n" + ex)
     assert(!ex.contains("Window"),
@@ -307,7 +307,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the only non-scan work before the sampleExact cap window is the
     // when-chain projection: any Join in the plan means the bucket list
     // regressed to a table join
-    val ex = SparkEntry.queries("q_aspect_bucket")(spark, sfDir)
+    val ex = SparkEntry.gate("q_aspect_bucket").run(spark, sfDir)
       .queryExecution.executedPlan.toString
     assert(!ex.contains("Join"), "bucket assignment must be join-free:\n" + ex)
   }

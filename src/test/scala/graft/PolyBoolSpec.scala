@@ -239,6 +239,25 @@ class PolyBoolSpec extends AnyFunSuite {
     assert(math.abs(PolyBool.totalArea(dif) - 4.0) < 1e-12)
   }
 
+  test("degenerate: party wall whose shared vertices are -0.0 on one side") {
+    // junction keys are (Double, Double) tuples; tuple == and ## treat -0.0
+    // and 0.0 as equal, so a signed zero must not split a junction
+    val pos = Seq(rect(0, 2, -2, 0))
+    val neg = Seq((Array(-0.0, -0.0, 2.0, 2.0), Array(-2.0, -0.0, -0.0, -2.0)))
+    val b = Seq(rect(0, 2, 0, 2))
+    def shape(rings: Seq[PolyBool.Ring]) = (
+      rings.count(r => PolyBool.signedArea(r.lat, r.lng) > 0),
+      rings.count(r => PolyBool.signedArea(r.lat, r.lng) < 0),
+      PolyBool.totalArea(rings))
+    for (op <- 0 to 2) {
+      val want = shape(PolyBool.booleanRings(pos, b, op))
+      assert(shape(PolyBool.booleanRings(neg, b, op)) == want, s"op $op, -0.0 in A")
+      val wantBA = shape(PolyBool.booleanRings(b, pos, op))
+      assert(shape(PolyBool.booleanRings(b, neg, op)) == wantBA, s"op $op, -0.0 in B")
+    }
+    assert(shape(PolyBool.booleanRings(neg, b, 1)) == ((1, 0, 8.0)))
+  }
+
   test("degenerate: partial party wall + vertex-on-edge endpoints") {
     val (aLat, aLng) = rect(0, 2, 0, 2)   // area 4
     val (bLat, bLng) = rect(1, 3, 2, 4)   // area 4; shares lng=2 for lat [1,2];

@@ -301,6 +301,39 @@ class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(g.getMessage.contains("refusing"))
   }
 
+  test("a crashed create's claim is releasable; create then succeeds") {
+    val dir = freshDir("crashcreate")
+    // v1 claimed, then the data job fails: no HEAD was ever written
+    val crashing = rows(Seq(1L, 2L), "a").withColumn("cell16",
+      when(col("image_id") > 0, raise_error(lit("simulated crash")))
+        .otherwise(col("cell16")))
+    intercept[Exception](SnapshotStore.create(spark, crashing, dir))
+    intercept[SnapshotStore.CommitConflictException] {
+      SnapshotStore.create(spark, rows(Seq(1L, 2L), "a"), dir)
+    }
+    SnapshotStore.releaseFailedCommit(spark, dir, 1)
+    assert(SnapshotStore.create(spark, rows(Seq(1L, 2L), "a"), dir) == 1)
+    assert(content(SnapshotStore.read(spark, dir)) == Set((1L, "a"), (2L, "a")))
+  }
+
+  test("release inside the HEAD swap window reads HEAD.tmp: committed stays refused") {
+    val dir = freshDir("swapwindow")
+    SnapshotStore.create(spark, rows(Seq(1L, 2L), "a"), dir)
+    SnapshotStore.append(spark, rows(Seq(3L), "b"), dir)
+    // commit deletes HEAD, then renames HEAD.tmp over it: stop in between
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    assert(fs.rename(new org.apache.hadoop.fs.Path(s"$dir/_snaps/HEAD"),
+      new org.apache.hadoop.fs.Path(s"$dir/_snaps/HEAD.tmp")))
+    val g = intercept[IllegalArgumentException](
+      SnapshotStore.releaseFailedCommit(spark, dir, 2))
+    assert(g.getMessage.contains("HEAD=2"))
+    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_snaps/v2.claim")))
+    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/data_v2")))
+    // a version past HEAD.tmp's is still releasable
+    SnapshotStore.releaseFailedCommit(spark, dir, 3)
+  }
+
   test("withCommitRetries: lost races retry; exhaustion rethrows") {
     var calls = 0
     val got = SnapshotStore.withCommitRetries(maxRetries = 3) {

@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
 """Local pre-validation of the driver's correctness gate: run graft.Verify
-output dirs against DuckDB executing SparkEntry.oracleSql on the same parquet
-tables, comparing row sets exactly (columns sorted by name, rows sorted)."""
+output dirs against DuckDB executing each gate's oracle SQL (SparkEntry.gates,
+dumped by Verify as oracle_sql.json) on the same parquet tables, comparing
+row sets exactly (columns sorted by name, rows sorted)."""
 import json, sys, glob, os
 import duckdb
 import pyarrow.parquet as pq

@@ -34,20 +34,30 @@ object SparkEntry {
   private def images(s: SparkSession, dir: String): DataFrame =
     Tables.images(s, dir)
 
-  /** The gate cell store for `dir`, written at most once per JVM: both
-    * store gates (q_store_knn, q_store_knn_batch) share the identical
-    * content, and a shared memo also removes the write-write race a
-    * parallel gate execution would otherwise have on the directory. */
-  private val storesWritten = scala.collection.mutable.Set.empty[String]
-  private def cellStoreFor(s: SparkSession, dir: String): String = synchronized {
+  /** A store directory under target/ for `dir`, emptied. */
+  private def freshStoreDir(s: SparkSession, dir: String, tag: String): String = {
     val store = new java.io.File(
-      s"target/cellstore_gate_${dir.replaceAll("[^a-zA-Z0-9]", "_")}").getAbsolutePath
-    if (!storesWritten.contains(store)) {
-      graft.lineage.CellStore.write(
-        images(s, dir).select("image_id", "lat", "lng", "cell16"), store)
-      storesWritten += store
-    }
+      s"target/${tag}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}").getAbsolutePath
+    val p = new org.apache.hadoop.fs.Path(store)
+    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
+    if (fs.exists(p)) fs.delete(p, true)
     store
+  }
+
+  /** The gate cell store for `dir`, written at most once per Spark
+    * application: both store gates (q_store_knn, q_store_knn_batch) share
+    * the identical content, and a shared memo also removes the write-write
+    * race a parallel gate execution would otherwise have on the directory.
+    * The memo is keyed by application id, so a later session in the same
+    * JVM writes its own store instead of reusing another session's. */
+  private val storesWritten = scala.collection.mutable.Map.empty[(String, String), String]
+  private def cellStoreFor(s: SparkSession, dir: String): String = synchronized {
+    storesWritten.getOrElseUpdate((s.sparkContext.applicationId, dir), {
+      val store = freshStoreDir(s, dir, "cellstore_gate")
+      graft.lineage.SnapshotStore.create(s,
+        images(s, dir).select("image_id", "lat", "lng", "cell16"), store)
+      store
+    })
   }
 
   /** The images CTE prefix shared by every oracle query. */
@@ -66,10 +76,6 @@ object SparkEntry {
       "AND NOT isnan(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])))" +
       ") t WHERE rank <= 10"
 
-  private def snapStoreDir(dir: String, tag: String): String =
-    new java.io.File(
-      s"target/snapstore_${tag}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}").getAbsolutePath
-
   /** Snapshot-store upsert fixture shared by q_store_upsert and
     * q_store_timetravel: v1 = images with image_id % 4 == 1; v2 = ONE CoW
     * MERGE commit — updates (% 5 == 0 and not % 7 == 0: status 'U',
@@ -78,11 +84,9 @@ object SparkEntry {
     * pairwise disjoint by construction; the dir is rebuilt from scratch
     * every call (gates are re-entrant). */
   private def snapshotUpsertFixture(s: SparkSession, dir: String,
-                                    store: String): Unit = {
+                                    tag: String): String = {
     import graft.lineage.SnapshotStore
-    val p = new org.apache.hadoop.fs.Path(store)
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    if (fs.exists(p)) fs.delete(p, true)
+    val store = freshStoreDir(s, dir, s"snapstore_$tag")
     val imgs = images(s, dir).select("image_id", "status", "lat", "lng", "cell16")
     val base = imgs.where(col("image_id") % 4 === 1)
     SnapshotStore.create(s, base, store)
@@ -98,6 +102,7 @@ object SparkEntry {
       .withColumn("_deleted", lit(false))
     SnapshotStore.upsert(s, upd.unionByName(del).unionByName(ins), store,
       deletedCol = Some("_deleted"))
+    store
   }
 
   /** Leakage-free split fractions (q_split_leakfree) — the oracle CASE is
@@ -420,15 +425,16 @@ object SparkEntry {
     //     kNN queries THROUGH the store — same oracle as q_knn ---
     Gate("q_store_knn", (s, dir) => {
       import graft.core.{Geo, S2}
-      import graft.lineage.CellStore
+      import graft.lineage.SnapshotStore
       val store = cellStoreFor(s, dir)
-      val nBuckets = CellStore.stats(s, store).size
+      val head = SnapshotStore.headManifest(s, store)
+      val nBuckets = head.stats.size
       val ranges = Synth.knnQueries.toSeq.flatMap { q =>
         S2.covering(S2.Cap(Geo.toXYZ(q.lat, q.lng), math.toRadians(2.0)),
             maxCells = 12, maxLevel = 16)
           .map(c => (S2.rangeMin(c), S2.rangeMax(c))).toSeq
       }
-      val read = CellStore.readRanges(s, store, ranges)._2
+      val read = SnapshotStore.readRanges(s, store, head.version, ranges)._2
       require(read < nBuckets,
         s"cell-store prune ineffective: read $read of $nBuckets buckets")
       Knn.knnFromStore(s, store, Synth.knnQueries.toSeq, k = 10)
@@ -441,9 +447,8 @@ object SparkEntry {
     //     read strictly fewer buckets than the store holds (telemetry
     //     asserted below), and the result matches the brute-force golden ---
     Gate("q_store_knn_batch", (s, dir) => {
-      import graft.lineage.CellStore
       val store = cellStoreFor(s, dir)
-      val nBuckets = CellStore.stats(s, store).size
+      val nBuckets = graft.lineage.SnapshotStore.headManifest(s, store).stats.size
       val reads = scala.collection.mutable.Buffer.empty[Int]
       Knn.storeReadTelemetry.set(reads)
       val out =
@@ -465,19 +470,18 @@ object SparkEntry {
     // --- §1.4 store MAINTENANCE: ingest-append (monoid stats merge, no
     //     store re-read) + small-file compaction (Iceberg
     //     rewrite_data_files analogue: one cell-sorted file per bucket,
-    //     validated against stats before the swap). The gate builds the
-    //     store as write + 2 appends, compacts (telemetry must show debt
+    //     validated against HEAD's stats before it commits). The gate builds
+    //     the store as create + 2 appends, compacts (telemetry must show debt
     //     paid), then answers the SAME pruned kNN as q_store_knn — the
     //     oracle proves append+compact preserved content exactly ---
     Gate("q_store_compact", (s, dir) => {
-      import graft.lineage.CellStore
-      val store = new java.io.File(
-        s"target/cellstore_compact_${dir.replaceAll("[^a-zA-Z0-9]", "_")}").getAbsolutePath
+      import graft.lineage.SnapshotStore
+      val store = freshStoreDir(s, dir, "cellstore_compact")
       val imgs = images(s, dir).select("image_id", "lat", "lng", "cell16")
-      CellStore.write(imgs.where(col("image_id") % 3 === 0), store)
-      CellStore.append(s, imgs.where(col("image_id") % 3 === 1), store)
-      CellStore.append(s, imgs.where(col("image_id") % 3 === 2), store)
-      val sm = CellStore.compact(s, store).agg(
+      SnapshotStore.create(s, imgs.where(col("image_id") % 3 === 0), store)
+      SnapshotStore.append(s, imgs.where(col("image_id") % 3 === 1), store)
+      SnapshotStore.append(s, imgs.where(col("image_id") % 3 === 2), store)
+      val sm = SnapshotStore.compact(s, store).agg(
         sum("files_before").as("fb"), sum("files_after").as("fa")).collect().head
       require(sm.getLong(1) < sm.getLong(0),
         s"compact gate: no small-file debt paid (before=${sm.getLong(0)} after=${sm.getLong(1)})")
@@ -492,8 +496,7 @@ object SparkEntry {
     //     a new cell (lat + 0.5 re-geotag), deletes, and inserts; read HEAD.
     //     Oracle = the merge semantics recomputed in pure SQL. ---
     Gate("q_store_upsert", (s, dir) => {
-      val store = snapStoreDir(dir, "upsert")
-      snapshotUpsertFixture(s, dir, store)
+      val store = snapshotUpsertFixture(s, dir, "upsert")
       graft.lineage.SnapshotStore.read(s, store)
         .select(col("image_id"), col("status"), col("lat"))
         .orderBy("image_id")
@@ -514,8 +517,7 @@ object SparkEntry {
     //     files + manifest-pinned reads (the north rule's resume-from-
     //     committed-snapshot read contract). Oracle = the base SQL. ---
     Gate("q_store_timetravel", (s, dir) => {
-      val store = snapStoreDir(dir, "tt")
-      snapshotUpsertFixture(s, dir, store)
+      val store = snapshotUpsertFixture(s, dir, "tt")
       graft.lineage.SnapshotStore.readVersion(s, store, 1)
         .select(col("image_id"), col("status"), col("lat"))
         .orderBy("image_id")
@@ -570,8 +572,7 @@ object SparkEntry {
     //     whole table. Only changed buckets are read; rewritten-but-
     //     unchanged rows are filtered by the null-safe row compare. ---
     Gate("q_store_changelog", (s, dir) => {
-      val store = snapStoreDir(dir, "cdc")
-      snapshotUpsertFixture(s, dir, store)
+      val store = snapshotUpsertFixture(s, dir, "cdc")
       graft.lineage.SnapshotStore.changelog(s, store, 1, 2)
         .select(col("image_id"), col("op"), col("status"))
         .orderBy("image_id")

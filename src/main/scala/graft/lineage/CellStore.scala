@@ -1,22 +1,16 @@
 package graft.lineage
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Cell-clustered storage with file-level pruning — the SURVEY §1.4 "index"
-  * made concrete on plain parquet: the compact-index role of the reference's
-  * mmap file (cell-ordered feature blocks,
+/** The cell store's bucket layout — the SURVEY §1.4 "index" on plain
+  * parquet: the compact-index role of the reference's mmap file
+  * (cell-ordered feature blocks,
   * /root/reference/src/diagonal.works/b6/ingest/compact/build.go:150-628)
-  * maps to (a) bucketing rows by their S2 cell-id PREFIX (spatially
-  * contiguous ranges — an id prefix is exactly a cell-range predicate) and
-  * (b) per-bucket min/max stats consulted before listing files. With an
-  * Iceberg catalog this is `WRITE ORDERED BY cell16` + metadata pruning;
-  * the read contract is identical.
-  *
-  * A spatial query (cap/rect/polygon covering) becomes cell ranges; `read`
-  * scans only buckets whose [min,max] overlaps a range. At 10^12 rows this
-  * is the difference between touching ~everything and touching the files
-  * under the query's cells.
+  * maps to bucketing rows by their S2 cell-id PREFIX (an id prefix is
+  * exactly a cell-range predicate, so a spatial query's covering ranges
+  * become a bucket set) plus per-bucket [min, max] stats consulted before
+  * any file is opened. Storage, commits, stats and pruned reads live in
+  * [[SnapshotStore]]; the two members below forward to its HEAD.
   */
 object CellStore {
 
@@ -24,146 +18,13 @@ object CellStore {
 
   def bucketOf(cell: Long): Long = cell >>> (64 - PrefixBits)
 
-  def write(df: DataFrame, dir: String, cellCol: String = "cell16"): Unit = {
-    val bucketed = df.withColumn("_bucket",
-      shiftrightunsigned(col(cellCol), 64 - PrefixBits))
-    bucketed.write.mode(SaveMode.Overwrite)
-      .partitionBy("_bucket").parquet(s"$dir/data")
-    bucketed.groupBy("_bucket")
-      .agg(min(col(cellCol)).as("cell_min"), max(col(cellCol)).as("cell_max"),
-        count(lit(1)).as("rows"))
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/_stats")
-  }
-
   final case class BucketStat(bucket: Long, cellMin: Long, cellMax: Long, rows: Long)
 
+  /** [[SnapshotStore.overwrite]]: the next version holds exactly `df`. */
+  def write(df: DataFrame, dir: String, cellCol: String = "cell16"): Int =
+    SnapshotStore.overwrite(df.sparkSession, df, dir, cellCol)
+
+  /** HEAD's per-bucket stats, from its manifest. */
   def stats(spark: SparkSession, dir: String): Seq[BucketStat] =
-    spark.read.parquet(s"$dir/_stats").collect().map(r =>
-      BucketStat(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-
-  /** One reader for every prune strategy: scan exactly the `keep` buckets
-    * (empty -> an empty frame with the store's schema). */
-  private def readKept(spark: SparkSession, dir: String,
-                       keep: Seq[BucketStat]): (DataFrame, Int) = {
-    val paths = keep.map(b => s"$dir/data/_bucket=${b.bucket}")
-    val df =
-      if (paths.isEmpty)
-        spark.read.parquet(s"$dir/data").where(lit(false))
-      else
-        spark.read.option("basePath", s"$dir/data").parquet(paths: _*)
-    (df.drop("_bucket"), keep.size)
-  }
-
-  /** Read only the buckets whose stats overlap any of the [lo, hi] cell
-    * ranges (e.g. S2.rangeMin/rangeMax of a covering's cells). Returns the
-    * pruned DataFrame and the number of buckets actually read. */
-  def readRanges(spark: SparkSession, dir: String,
-                 ranges: Seq[(Long, Long)]): (DataFrame, Int) =
-    readKept(spark, dir, stats(spark, dir).filter(b =>
-      ranges.exists { case (lo, hi) => b.cellMin <= hi && lo <= b.cellMax }))
-
-  /** Read exactly the listed buckets (intersected with those that exist).
-    * The batch-kNN store probe derives its bucket set distributively from
-    * the round's covering cells (a fixed-size bucket-mask accumulator) —
-    * bounded by the store's bucket count (2^PrefixBits), never by the query
-    * count. `preloaded` lets an iterative caller read the _stats file once
-    * per call instead of once per round. */
-  def readBuckets(spark: SparkSession, dir: String, buckets: Set[Long],
-                  preloaded: Option[Seq[BucketStat]] = None): (DataFrame, Int) =
-    readKept(spark, dir,
-      preloaded.getOrElse(stats(spark, dir)).filter(b => buckets.contains(b.bucket)))
-
-  def readAll(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/data").drop("_bucket")
-
-  /** Continuous-ingest append: a new batch lands as additional files under
-    * the existing bucket partitions, and the per-bucket stats MERGE with the
-    * batch's own (min/max/rows form a monoid) — the store is never re-read
-    * to admit a batch, the property that makes the stats viable at 10^12
-    * rows. The flip side is small-file debt: every appended batch adds one
-    * file per touched bucket, which `compact` pays down. */
-  def append(spark: SparkSession, df: DataFrame, dir: String,
-             cellCol: String = "cell16"): Unit = {
-    val bucketed = df.withColumn("_bucket",
-      shiftrightunsigned(col(cellCol), 64 - PrefixBits))
-    bucketed.write.mode(SaveMode.Append)
-      .partitionBy("_bucket").parquet(s"$dir/data")
-    val batchStats = bucketed.groupBy("_bucket")
-      .agg(min(col(cellCol)).as("cell_min"), max(col(cellCol)).as("cell_max"),
-        count(lit(1)).as("rows"))
-    // merged stats are <= 2^PrefixBits rows — materialize on the driver
-    // BEFORE overwriting the directory the plan reads from
-    val merged = spark.read.parquet(s"$dir/_stats")
-      .unionByName(batchStats)
-      .groupBy("_bucket")
-      .agg(min("cell_min").as("cell_min"), max("cell_max").as("cell_max"),
-        sum("rows").as("rows"))
-      .collect().toSeq
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(merged, 1),
-        spark.read.parquet(s"$dir/_stats").schema)
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/_stats")
-  }
-
-  /** Small-file compaction — the Iceberg `rewrite_data_files` + sort-order
-    * maintenance pass on this layout: rewrite every bucket's accumulated
-    * files into one cell-SORTED file per bucket (sorted data also gives
-    * parquet row-group min/max stats that support pruning FINER than the
-    * bucket grain). Content is untouched, so `_stats` stays valid by
-    * construction; instead of trusting that, the rewrite is VALIDATED
-    * against it (per-bucket row counts must match — a loud failure, not a
-    * silent swap, if the rewrite lost rows). Crash safety: the rewrite
-    * lands in `data_rewrite`, the swap is two directory renames (atomic on
-    * local FS / HDFS; an object store wants the Iceberg metadata-pointer
-    * form of the same move), and a crash before the swap leaves the live
-    * data untouched (the orphaned rewrite dir is overwritten by the next
-    * compact). Returns per-bucket telemetry
-    * (bucket, files_before, files_after, rows). */
-  def compact(spark: SparkSession, dir: String,
-              cellCol: String = "cell16"): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    // project the file name first: a nondeterministic expression may not sit
-    // directly inside an aggregate function
-    // (_bucket rides a partition directory, so the read-back type is the
-    // inferred INT — cast back to the stats' long)
-    def fileCounts(df: DataFrame) = df
-      .select(col("_bucket").cast("long").as("_bucket"), input_file_name().as("_f"))
-      .groupBy("_bucket")
-      .agg(countDistinct(col("_f")).as("files"), count(lit(1)).as("rows"))
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val before = fileCounts(spark.read.parquet(s"$dir/data"))
-    val nBuckets = math.max(1, before.size)
-    spark.read.parquet(s"$dir/data")
-      .repartition(nBuckets, col("_bucket"))
-      .sortWithinPartitions(col(cellCol))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("_bucket").parquet(s"$dir/data_rewrite")
-    val rewritten = fileCounts(spark.read.parquet(s"$dir/data_rewrite"))
-    val statRows = stats(spark, dir).map(b => b.bucket -> b.rows).toMap
-    (before.keySet ++ rewritten.keySet ++ statRows.keySet).foreach { b =>
-      val n0 = before.get(b).map(_._2)
-      val n1 = rewritten.get(b).map(_._2)
-      val ns = statRows.get(b)
-      require(n0 == n1 && (ns.isEmpty || ns == n1),
-        s"compact: bucket $b row mismatch (live=$n0 rewrite=$n1 stats=$ns); " +
-          "rewrite NOT swapped in")
-    }
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dataP = new Path(s"$dir/data")
-    val oldP = new Path(s"$dir/data_old")
-    if (fs.exists(oldP)) fs.delete(oldP, true)
-    require(fs.rename(dataP, oldP), s"compact: rename $dataP -> $oldP failed")
-    require(fs.rename(new Path(s"$dir/data_rewrite"), dataP),
-      s"compact: rename data_rewrite -> $dataP failed")
-    fs.delete(oldP, true)
-    val summary = (before.keySet ++ rewritten.keySet).toSeq.sorted.map { b =>
-      (b, before.get(b).map(_._1).getOrElse(0L),
-        rewritten.get(b).map(_._1).getOrElse(0L),
-        rewritten.get(b).map(_._2).getOrElse(0L))
-    }
-    import spark.implicits._
-    summary.toDF("bucket", "files_before", "files_after", "rows")
-  }
+    SnapshotStore.headManifest(spark, dir).stats
 }

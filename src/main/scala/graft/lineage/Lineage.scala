@@ -153,7 +153,7 @@ object Lineage {
       else todo.map(unitFilter).reduce(_ || _) ||
         (if (rangeBuckets) col(cellCol).isNull else lit(false))
     val inCounts: Map[Int, Long] =
-      input.where(todoFilter).groupBy(bucketExpr.as("_b")).count().collect()
+      input.where(todoFilter).groupBy(bucketExpr.as("_b")).agg(count(lit(1))).collect()
         .map(r => r.getInt(0) -> r.getLong(1)).toMap
     if (inCounts.contains(-1))
       throw new IllegalArgumentException(

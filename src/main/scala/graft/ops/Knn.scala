@@ -133,7 +133,7 @@ object Knn {
   /** Shared expansion loop for BOTH metrics (review r03: the haversine path
     * now runs through the same loop as the d2 forms — one loop, no drift).
     * `meters` selects metric, stop rule and growth; `imagesForRound` selects
-    * where each round's probe rows come from (cached projection vs CellStore
+    * where each round's probe rows come from (cached projection vs cell-store
     * range read). */
   private def knnRounds(spark: SparkSession, queries: Seq[KnnQuery], k: Int,
                         initialRadius: Double, meters: Boolean,
@@ -251,18 +251,20 @@ object Knn {
     finally imgs.unpersist()
   }
 
-  /** CellStore-backed kNN: identical semantics and results to `knn`, but
+  /** Cell-store-backed kNN: identical semantics and results to `knn`, but
     * each expansion round READS ONLY the store buckets overlapping the
-    * round's cap coverings (`CellStore.readRanges`) instead of re-scanning
-    * the full projection — the design-scale shape (VERDICT r01 hazard):
-    * early rounds touch only the files under the query caps, so a 10^12-row
-    * table costs IO proportional to the caps, not the table. */
+    * round's cap coverings instead of re-scanning the full projection — the
+    * design-scale shape (VERDICT r01 hazard): early rounds touch only the
+    * files under the query caps, so a 10^12-row table costs IO proportional
+    * to the caps, not the table. Every round reads through the ONE HEAD
+    * manifest taken at the call's start. */
   def knnFromStore(spark: SparkSession, storeDir: String, queries: Seq[KnnQuery],
                    k: Int = 10, initialRadiusDeg: Double = 2.0): DataFrame = {
-    import graft.lineage.CellStore
+    import graft.lineage.SnapshotStore
+    val m = SnapshotStore.headManifest(spark, storeDir)
     knnRounds(spark, queries, k, initialRadiusDeg, meters = false, (full, ranges) =>
-      if (full) CellStore.readAll(spark, storeDir)
-      else CellStore.readRanges(spark, storeDir, ranges)._1)
+      SnapshotStore.readBuckets(spark, storeDir, m,
+        if (full) m.buckets else m.bucketsOverlapping(ranges))._1)
       .select("query_id", "image_id", "rank")
   }
 
@@ -329,11 +331,12 @@ object Knn {
       broadcastQueryRowLimit, meters = true)
 
   /** `knnBatch` THROUGH the cell-bucketed store: each round reads ONLY the
-    * buckets under the remaining queries' coverings (CellStore.readBuckets),
-    * so a regional query batch touches a fraction of the table's files — the
-    * IO half of the store story for the DISTRIBUTED query side (the Seq form
-    * is `knnFromStore`). The auto radius derives from the store's bucket
-    * stats, a pure metadata read. Same adaptive loop, same results as
+    * buckets under the remaining queries' coverings
+    * (SnapshotStore.readBuckets), so a regional query batch touches a
+    * fraction of the table's files — the IO half of the store story for the
+    * DISTRIBUTED query side (the Seq form is `knnFromStore`). One HEAD
+    * manifest, read at the call's start, gives the auto radius's row count
+    * and every round's files. Same adaptive loop, same results as
     * `knnBatch` over the store's content (OpsSpec-asserted). */
   def knnBatchFromStore(spark: SparkSession, storeDir: String, queries: DataFrame,
                         k: Int = 10, initialRadiusDeg: Double = 2.0,
@@ -357,9 +360,10 @@ object Knn {
     val absEps = if (meters) 1e-6 else 1e-12
     // store-backed probes read only the buckets under the round's coverings
     // (no global projection to cache); the direct form caches the projected
-    // image side once for all rounds. Bucket stats are read ONCE per call.
+    // image side once for all rounds. The store's HEAD manifest is read
+    // ONCE per call and pins every round to that version.
     val imgs = images.map(probeProjection)
-    val storeStats = storeDir.map(d => graft.lineage.CellStore.stats(spark, d))
+    val storeHead = storeDir.map(d => graft.lineage.SnapshotStore.headManifest(spark, d))
     // initialRadius <= 0 -> auto from density: aim for ~48*k candidates per
     // round-1 cap so virtually every query resolves immediately — the d2
     // stop rule needs kth * (1 + 1/cos) <= r, i.e. ~(1+1/cos)^2 * k ~ 6-8k
@@ -377,8 +381,8 @@ object Knn {
     val initialRadius =
       if (initialRadius0 > 0) initialRadius0
       else {
-        val n = math.max(1L, storeStats match {
-          case Some(st) => st.map(_.rows).sum
+        val n = math.max(1L, storeHead match {
+          case Some(m) => m.stats.map(_.rows).sum
           case None => imgs.get.count()
         })
         val deg = math.min(60.0, math.sqrt(48.0 * k * 41253.0 / (math.Pi * n)))
@@ -396,7 +400,7 @@ object Knn {
       // executor time)
       val levelsAcc = new LevelMaskAcc
       spark.sparkContext.register(levelsAcc, "knnBatchLevels")
-      // store mode: the initial snapshot job ALSO reports which CellStore
+      // store mode: the initial snapshot job ALSO reports which store
       // buckets the round-1 coverings touch, so the COMMON single-round
       // path needs no distinct+collect job. The accumulator keeps updating
       // on straggler rounds (a per-cell shift+OR — negligible) but is only
@@ -491,7 +495,7 @@ object Knn {
         // distinct-collect over the remaining snapshot instead of reusing
         // the cumulative mask — the mask only grows, and a 95%-resolved
         // round must not re-read every bucket round 1 touched (review
-        // r03d). Stats were loaded once before the loop.
+        // r03d). The manifest was read once before the loop.
         val probe = storeDir match {
           case None => imgs.get
           case Some(d) =>
@@ -511,8 +515,8 @@ object Knn {
                   .distinct().collect()
                   .flatMap(r => r.getLong(0) to r.getLong(1)).toSet
               }
-            val (df, nRead) = graft.lineage.CellStore.readBuckets(
-              spark, d, bucketSet, storeStats)
+            val (df, nRead) = graft.lineage.SnapshotStore.readBuckets(
+              spark, d, storeHead.get, bucketSet)
             val t = storeReadTelemetry.get()
             if (t != null) t += nRead
             if (verbose)

@@ -286,7 +286,7 @@ class GeoStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ms = MemoryStream[GeoPing]
     val q = ms.toDF().writeStream
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        CellStore.append(spark, withCell(b), streamDir)
+        graft.lineage.SnapshotStore.append(spark, withCell(b), streamDir); ()
       }
       .option("checkpointLocation", s"$base/ckpt").start()
     try {
@@ -301,7 +301,7 @@ class GeoStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     val bStats = CellStore.stats(spark, batchDir).toSet
     assert(sStats == bStats && sStats.nonEmpty, s"$sStats != $bStats")
     // ... and the identical content multiset
-    def content(d: String) = spark.read.parquet(s"$d/data")
+    def content(d: String) = graft.lineage.SnapshotStore.read(spark, d)
       .select("image_id", "cell16").as[(Long, Long)].collect().sorted.toSeq
     assert(content(streamDir) == content(batchDir))
   }

@@ -705,7 +705,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("cell store: range read prunes buckets yet returns exactly the covered rows") {
     import graft.core.{Geo, S2}
-    import graft.lineage.CellStore
+    import graft.lineage.{CellStore, SnapshotStore}
     val dir = java.nio.file.Files.createTempDirectory("cellstore").toString
     val images = Tables.images(spark, sfDir).select("image_id", "lat", "lng", "cell16")
     CellStore.write(images, dir)
@@ -715,7 +715,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (cLat, cLng) = Synth.hotCenters(0)
     val cov = S2.covering(S2.Cap(Geo.toXYZ(cLat, cLng), 100000.0 / Geo.EarthRadiusMeters))
     val ranges = cov.map(c => (S2.rangeMin(c), S2.rangeMax(c))).toSeq
-    val (pruned, read) = CellStore.readRanges(spark, dir, ranges)
+    val (pruned, read) = SnapshotStore.readRanges(spark, dir, SnapshotStore.headVersion(spark, dir), ranges)
     assert(read < total, s"pruning must skip buckets ($read of $total)")
 
     // correctness: pruned scan + exact filter == full scan + exact filter
@@ -728,24 +728,24 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("cell store: append merges stats; compact pays file debt, preserves content + pruning") {
     import graft.core.{Geo, S2}
-    import graft.lineage.CellStore
+    import graft.lineage.{CellStore, SnapshotStore}
     val dir = java.nio.file.Files.createTempDirectory("cellstore_c").toString
     val images = Tables.images(spark, sfDir).select("image_id", "lat", "lng", "cell16")
     CellStore.write(images.where(col("image_id") % 3 === 0), dir)
-    CellStore.append(spark, images.where(col("image_id") % 3 === 1), dir)
-    CellStore.append(spark, images.where(col("image_id") % 3 === 2), dir)
+    SnapshotStore.append(spark, images.where(col("image_id") % 3 === 1), dir)
+    SnapshotStore.append(spark, images.where(col("image_id") % 3 === 2), dir)
     // merged stats equal a from-scratch recomputation (the monoid claim)
     val refDir = java.nio.file.Files.createTempDirectory("cellstore_r").toString
     CellStore.write(images, refDir)
     assert(CellStore.stats(spark, dir).toSet == CellStore.stats(spark, refDir).toSet)
 
-    val summary = CellStore.compact(spark, dir).collect()
+    val summary = SnapshotStore.compact(spark, dir).collect()
     assert(summary.map(_.getLong(1)).sum > summary.map(_.getLong(2)).sum,
       "compaction must reduce file count after 3 ingests")
     assert(summary.forall(r => r.getLong(2) == 1L),
       "one cell-sorted file per bucket after compaction")
     // content preserved exactly (multiset by id)
-    val got = CellStore.readAll(spark, dir).select("image_id")
+    val got = SnapshotStore.read(spark, dir).select("image_id")
       .collect().map(_.getLong(0)).sorted.toSeq
     val want = images.select("image_id").collect().map(_.getLong(0)).sorted.toSeq
     assert(got == want)
@@ -753,7 +753,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (cLat, cLng) = Synth.hotCenters(0)
     val cov = S2.covering(S2.Cap(Geo.toXYZ(cLat, cLng), 100000.0 / Geo.EarthRadiusMeters))
     val ranges = cov.map(c => (S2.rangeMin(c), S2.rangeMax(c))).toSeq
-    val (pruned, read) = CellStore.readRanges(spark, dir, ranges)
+    val (pruned, read) = SnapshotStore.readRanges(spark, dir, SnapshotStore.headVersion(spark, dir), ranges)
     assert(read < CellStore.stats(spark, dir).size)
     assert(pruned.count() > 0)
   }

@@ -209,21 +209,26 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("no gate closure collects an unbounded table (source lint)") {
-    // VERDICT r03 #2 guard: a `.collect()` inside SparkEntry must be one of
-    // the bounded shapes — a keyless aggregate (1 row), the 24-row regions
-    // fixture serialization, or a helper that bounds internally
-    // (Similarity.quantizerSample = orderBy+limit). Anything else is a
-    // driver OOM at 10^12 rows and must go through a bounded helper.
-    val src = scala.io.Source.fromFile("src/main/scala/graft/SparkEntry.scala", "UTF-8")
-    val lines = try src.getLines().toVector finally src.close()
-    val offenders = lines.zipWithIndex.filter(_._1.contains(".collect()")).filterNot {
-      case (_, i) =>
-        val ctx = lines.slice(math.max(0, i - 3), i + 1).mkString(" ")
-        ctx.contains(".agg(") || ctx.contains("regionsToGeoJson")
+    // VERDICT r03 #2 guard: a `.collect()` inside SparkEntry or the
+    // lineage stores must be one of the bounded shapes — an aggregate (one
+    // row per key of a bounded key set, e.g. <= 2^PrefixBits buckets), the
+    // 24-row regions fixture serialization, or a helper that bounds
+    // internally (Similarity.quantizerSample = orderBy+limit). Anything
+    // else is a driver OOM at 10^12 rows and must go through a bounded
+    // helper.
+    val lineage = new java.io.File("src/main/scala/graft/lineage").listFiles()
+      .filter(_.getName.endsWith(".scala")).map(_.getPath).sorted.toSeq
+    val offenders = ("src/main/scala/graft/SparkEntry.scala" +: lineage).flatMap { path =>
+      val src = scala.io.Source.fromFile(path, "UTF-8")
+      val lines = try src.getLines().toVector finally src.close()
+      lines.zipWithIndex.filter(_._1.contains(".collect()")).filterNot {
+        case (_, i) =>
+          val ctx = lines.slice(math.max(0, i - 3), i + 1).mkString(" ")
+          ctx.contains(".agg(") || ctx.contains("regionsToGeoJson")
+      }.map { case (l, i) => s"$path:${i + 1}: $l" }
     }
-    assert(offenders.isEmpty,
-      offenders.map { case (l, i) => s"SparkEntry.scala:${i + 1}: $l" }
-        .mkString("unbounded collect in a gate closure:\n", "\n", ""))
+    assert(lineage.nonEmpty)
+    assert(offenders.isEmpty, offenders.mkString("unbounded collect:\n", "\n", ""))
   }
 
   test("per-group top-k and dedup grouping aggregate — no data-sized window") {

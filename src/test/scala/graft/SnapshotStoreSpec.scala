@@ -1,6 +1,6 @@
 package graft
 
-import graft.lineage.SnapshotStore
+import graft.lineage.{CellStore, SnapshotStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -42,6 +42,45 @@ class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def content(df: DataFrame): Set[(Long, String)] =
     df.select("image_id", "status").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
+
+  /** Spark jobs started while `body` runs. The listener bus is
+    * asynchronous, so a marker job closes the window: once its start event
+    * arrives, every earlier job's start has been delivered. */
+  private def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val marker = "snapspec-marker"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.job.description") == marker))
+          markerSeen.countDown()
+        else { jobs.incrementAndGet(); () }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(l)
+    jobs.get()
+  }
+
+  /** A snapshot read, planned: the frame, its physical plan and its files. */
+  private def planRead(dir: String, v: Int): Seq[String] = {
+    val df = SnapshotStore.readVersion(spark, dir, v)
+    df.queryExecution.executedPlan
+    df.inputFiles.toSeq
+  }
+
+  private def relative(dir: String, files: Seq[String]): Set[String] = {
+    val base = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+      .makeQualified(new org.apache.hadoop.fs.Path(dir)).toString + "/"
+    files.map(_.stripPrefix(base)).toSet
+  }
 
   test("time travel: v1 unchanged across append and upsert commits") {
     val dir = freshDir("tt")
@@ -332,6 +371,96 @@ class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/data_v2")))
     // a version past HEAD.tmp's is still releasable
     SnapshotStore.releaseFailedCommit(spark, dir, 3)
+  }
+
+  test("backoff doubles from its base and is capped") {
+    assert((1 to 4).map(SnapshotStore.backoffMs(_, 250L)) == Seq(250L, 500L, 1000L, 2000L))
+    assert((1 to 5).map(SnapshotStore.backoffMs(_, 10L)) == Seq(10L, 20L, 40L, 80L, 160L))
+    assert(SnapshotStore.backoffMs(7, 250L) == 16000L)
+    assert(SnapshotStore.backoffMs(50, 250L) == 16000L, "capped at 64 x base")
+    assert(SnapshotStore.backoffMs(0, 250L) == 250L)
+  }
+
+  test("headVersion of a table with no HEAD fails naming the directory") {
+    val dir = freshDir("nohead")
+    val e = intercept[java.io.FileNotFoundException](SnapshotStore.headVersion(spark, dir))
+    assert(e.getMessage.contains(dir))
+  }
+
+  test("a read of more than 32 files runs as many jobs as a 1-file read") {
+    // Spark lists explicit paths past spark.sql.sources.parallelPartition
+    // Discovery.threshold (32) with a job of one task per path; a manifest
+    // read must plan from the manifest alone at any file count
+    val many = freshDir("manyfiles")
+    SnapshotStore.create(spark, rows(1L to 200L, "a").repartition(24), many)
+    val m = SnapshotStore.manifest(spark, many, 1)
+    assert(m.files.size > 32, s"fixture must exceed 32 files, has ${m.files.size}")
+    val one = freshDir("onefile")
+    SnapshotStore.create(spark, rows(Seq(2L), "a").coalesce(1), one)
+    assert(SnapshotStore.manifest(spark, one, 1).files.size == 1)
+    var manyFiles = Seq.empty[String]
+    val jobsMany = jobsDuring { manyFiles = planRead(many, 1) }
+    val jobsOne = jobsDuring(planRead(one, 1))
+    assert(jobsMany == jobsOne, s"$jobsMany jobs for ${m.files.size} files vs $jobsOne for 1")
+    assert(relative(many, manyFiles) == m.files.toSet)
+    assert(content(SnapshotStore.readVersion(spark, many, 1)) == (1L to 200L).map(i => (i, "a")).toSet)
+  }
+
+  test("CellStore.write over an existing table replaces HEAD; the old version still reads") {
+    val dir = freshDir("overwrite")
+    assert(CellStore.write(rows(1L to 6L, "a"), dir) == 1)
+    assert(CellStore.write(rows(Seq(7L, 8L), "b"), dir) == 2)
+    assert(content(SnapshotStore.read(spark, dir)) == Set((7L, "b"), (8L, "b")))
+    assert(content(SnapshotStore.readVersion(spark, dir, 1)) == (1L to 6L).map(i => (i, "a")).toSet)
+    assert(CellStore.stats(spark, dir).map(_.rows).sum == 2L)
+  }
+
+  test("compact commits one file per bucket; the pre-compact version keeps its files") {
+    val dir = freshDir("compact")
+    SnapshotStore.create(spark, rows(1L to 20L, "a").repartition(4), dir)
+    SnapshotStore.append(spark, rows(21L to 30L, "b").repartition(3), dir)
+    val pre = SnapshotStore.headManifest(spark, dir)
+    val want = content(SnapshotStore.read(spark, dir))
+    val summary = SnapshotStore.compact(spark, dir).collect()
+    val post = SnapshotStore.headManifest(spark, dir)
+    assert(post.version == pre.version + 1)
+    assert(post.files.groupBy(_.split("/")(1)).values.forall(_.size == 1))
+    assert(post.files.size == post.stats.size && post.stats.toSet == pre.stats.toSet)
+    assert(summary.map(_.getLong(1)).sum == pre.files.size.toLong)
+    assert(summary.forall(_.getLong(2) == 1L))
+    assert(content(SnapshotStore.read(spark, dir)) == want)
+    // the pre-compact snapshot still reads exactly its own files
+    val old = SnapshotStore.readVersion(spark, dir, pre.version)
+    assert(relative(dir, old.inputFiles.toSeq) == pre.files.toSet)
+    assert(content(old) == want)
+  }
+
+  test("compact whose rewrite disagrees with HEAD's stats fails and leaves HEAD") {
+    val dir = freshDir("compactbad")
+    SnapshotStore.create(spark, rows(1L to 10L, "a"), dir)
+    val m1 = SnapshotStore.manifest(spark, dir, 1)
+    // a v2 whose stats claim one row more per bucket than its files hold
+    SnapshotStore.commit(spark, dir,
+      m1.copy(version = 2, stats = m1.stats.map(b => b.copy(rows = b.rows + 1))))
+    val e = intercept[IllegalStateException](SnapshotStore.compact(spark, dir))
+    assert(e.getMessage.contains("HEAD left at v2"))
+    assert(SnapshotStore.headVersion(spark, dir) == 2)
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_snaps/v3.claim")))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/data_v3")))
+  }
+
+  test("a legacy manifest (no file sizes, no schema) reads the same rows") {
+    val dir = freshDir("legacyread")
+    SnapshotStore.create(spark, rows(1L to 10L, "a"), dir)
+    val m1 = SnapshotStore.manifest(spark, dir, 1)
+    assert(m1.sizes.keySet == m1.files.toSet && m1.schema.isDefined)
+    SnapshotStore.commit(spark, dir, m1.copy(version = 2, sizes = Map.empty, schema = None))
+    val m2 = SnapshotStore.manifest(spark, dir, 2)
+    assert(m2.sizes.isEmpty && m2.schema.isEmpty)
+    assert(content(SnapshotStore.readVersion(spark, dir, 2)) ==
+      content(SnapshotStore.readVersion(spark, dir, 1)))
+    assert(SnapshotStore.readVersion(spark, dir, 2).count() == 10L)
   }
 
   test("withCommitRetries: lost races retry; exhaustion rethrows") {

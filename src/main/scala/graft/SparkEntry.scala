@@ -34,6 +34,13 @@ object SparkEntry {
   private def images(s: SparkSession, dir: String): DataFrame =
     Tables.images(s, dir)
 
+  /** The containment join on its shuffle route (a zero broadcast budget),
+    * salted when a covering level is at or below `coarseLevelMax`. */
+  private def forcedShuffle(s: SparkSession, dir: String, coarseLevelMax: Int): DataFrame =
+    Containment.joinBy(images(s, dir).select("image_id", "lat", "lng", "cell16"),
+        Tables.regions(s), broadcastBytesLimit = 0L, coarseLevelMax = coarseLevelMax)
+      .select("image_id", "region_id").orderBy("image_id", "region_id")
+
   /** A store directory under target/ for `dir`, emptied. */
   private def freshStoreDir(s: SparkSession, dir: String, tag: String): String = {
     val store = new java.io.File(
@@ -372,24 +379,17 @@ object SparkEntry {
         .select("image_id", "region_id").orderBy("image_id", "region_id"),
       Sql(s"$W SELECT * FROM ($containmentUnion) u ORDER BY image_id, region_id")),
 
-    // --- same join, forced shuffle + salted (north-rule skew path) ---
+    // --- same join, forced salted shuffle route (north-rule skew path):
+    //     no budget, and every covering level counts as coarse ---
     Gate("q_containment_salted", (s, dir) =>
-      Containment.containmentJoin(
-          images(s, dir).select("image_id", "lat", "lng", "cell16"),
-          Tables.regions(s), broadcastRegions = false, saltBuckets = 8)
-        .select("image_id", "region_id").orderBy("image_id", "region_id"),
+      forcedShuffle(s, dir, coarseLevelMax = graft.core.S2.MaxLevel),
       Sql(s"$W SELECT * FROM ($containmentUnion) u ORDER BY image_id, region_id")),
 
-    // --- same join behind the broadcast-vs-shuffle AUTO-PLANNER (north
-    //     star: "coverings materialized ... for broadcast-vs-shuffle join
-    //     planning"): strategy picked from the exploded-covering byte
-    //     estimate + coarsest covering level, one tiny region-side job;
-    //     results are strategy-independent, so it shares the oracle ---
+    // --- same join, forced unsalted shuffle-hash route: no budget, and no
+    //     covering level counts as coarse. Routes are result-independent,
+    //     so it shares the oracle ---
     Gate("q_containment_auto", (s, dir) =>
-      Containment.containmentAuto(
-          images(s, dir).select("image_id", "lat", "lng", "cell16"),
-          Tables.regions(s))
-        .select("image_id", "region_id").orderBy("image_id", "region_id"),
+      forcedShuffle(s, dir, coarseLevelMax = -1),
       Sql(s"$W SELECT * FROM ($containmentUnion) u ORDER BY image_id, region_id")),
 
     // --- §2.4 kNN via S2 cell-ring expansion ---

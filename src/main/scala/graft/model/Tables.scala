@@ -85,9 +85,6 @@ object Tables {
         graft.functions.S2Expressions.s2Cell16(col("lat"), col("lng")))
   }
 
-  /** The polygon side: 24 literal regions with rings + S2 coverings
-    * (FIXTURES.md §2). Always broadcast-sized here; the shuffle/salting path
-    * is exercised by forcing broadcastRegions=false. */
   /** The polyline table (path_id, lats, lngs) from the seeded fixtures. */
   def paths(spark: SparkSession): DataFrame =
     spark.createDataFrame(Synth.paths.toSeq.map(p =>
@@ -106,6 +103,9 @@ object Tables {
   def gridEdges(spark: SparkSession): DataFrame =
     spark.createDataFrame(Synth.gridEdges.toSeq).toDF("src", "dst", "cost")
 
+  /** The polygon side: 24 literal regions with rings + S2 coverings
+    * (FIXTURES.md §2). Within the containment probe's budget here; the
+    * shuffle routes are exercised by forcing a zero budget. */
   def regions(spark: SparkSession): DataFrame = regionDf(spark, Synth.regions)
 
   /** The courtyard pair (hole-bearing squares) — q_poly_bool's hole

@@ -4,10 +4,30 @@ import graft.core.{Geo, S2}
 
 /** A point-containment probe usable from the native codegen expression
   * (`ContainmentProbeExpr`): cell + exact coordinates -> region ordinals.
-  * Implementations ship to executors via the expression's reference array. */
-trait PointProbe extends Serializable {
+  * Holds the regions' rings and the one exact even-odd ray cast every
+  * index refines with. Implementations ship to executors via the
+  * expression's reference array. */
+abstract class PointProbe(regions: Array[graft.model.Synth.Region])
+    extends Serializable {
   def probe(cell: Long, lat: Double, lng: Double): Array[Int]
-  def regionIds: Array[String]
+
+  val regionIds: Array[String] = regions.map(_.regionId)
+
+  private val ringsLat: Array[Array[Array[Double]]] = regions.map(_.rings.map(_._1))
+  private val ringsLng: Array[Array[Array[Double]]] = regions.map(_.rings.map(_._2))
+
+  protected final val EmptyInts = Array.empty[Int]
+
+  final def contains(ri: Int, lat: Double, lng: Double): Boolean = {
+    var odd = false
+    val rl = ringsLat(ri); val rg = ringsLng(ri)
+    var k = 0
+    while (k < rl.length) {
+      if (Geo.containsPlanar(lat, lng, rl(k), rg(k))) odd = !odd
+      k += 1
+    }
+    odd
+  }
 }
 
 /** Serializable, allocation-free containment probe index: the b6 per-point
@@ -25,7 +45,7 @@ trait PointProbe extends Serializable {
   * when that cell is its ancestor. Ships to executors inside the
   * expression's reference array. */
 final class ProbeIndex(regions: Array[graft.model.Synth.Region])
-    extends PointProbe {
+    extends PointProbe(regions) {
 
   regions.foreach { r =>
     r.cells.foreach { c =>
@@ -35,8 +55,6 @@ final class ProbeIndex(regions: Array[graft.model.Synth.Region])
           "levels must be <= 16")
     }
   }
-
-  val regionIds: Array[String] = regions.map(_.regionId)
 
   private val (starts, offsets, cands): (Array[Long], Array[Int], Array[Int]) = {
     val byCell = scala.collection.mutable.TreeMap.empty[Long, List[Int]]
@@ -68,22 +86,6 @@ final class ProbeIndex(regions: Array[graft.model.Synth.Region])
     }
     off(st.length) = buf.length
     (st, off, buf.toArray)
-  }
-
-  private val ringsLat: Array[Array[Array[Double]]] = regions.map(_.rings.map(_._1))
-  private val ringsLng: Array[Array[Array[Double]]] = regions.map(_.rings.map(_._2))
-
-  private val EmptyInts = Array.empty[Int]
-
-  def contains(ri: Int, lat: Double, lng: Double): Boolean = {
-    var odd = false
-    val rl = ringsLat(ri); val rg = ringsLng(ri)
-    var k = 0
-    while (k < rl.length) {
-      if (Geo.containsPlanar(lat, lng, rl(k), rg(k))) odd = !odd
-      k += 1
-    }
-    odd
   }
 
   /** Region ordinals containing the point; EmptyInts when none. */
@@ -122,7 +124,7 @@ final class ProbeIndex(regions: Array[graft.model.Synth.Region])
   * resolution, so a region is only ever discovered at its own covering
   * resolution — no cross-resolution dedup needed. */
 final class Hex7ProbeIndex(regions: Array[graft.model.Synth.Region], imageRes: Int)
-    extends PointProbe {
+    extends PointProbe(regions) {
   import graft.core.Hex7
 
   private def resFor(r: graft.model.Synth.Region): Int = {
@@ -135,7 +137,6 @@ final class Hex7ProbeIndex(regions: Array[graft.model.Synth.Region], imageRes: I
     res
   }
 
-  val regionIds: Array[String] = regions.map(_.regionId)
   // one resolution derivation per region, shared by the level set and the
   // covering build (review r03e: resFor re-scans ring extents)
   private val regionRes: Array[Int] = regions.map(resFor)
@@ -158,21 +159,6 @@ final class Hex7ProbeIndex(regions: Array[graft.model.Synth.Region], imageRes: I
     }
     off(cs.length) = buf.length
     (cs, off, buf.toArray)
-  }
-
-  private val ringsLat: Array[Array[Array[Double]]] = regions.map(_.rings.map(_._1))
-  private val ringsLng: Array[Array[Array[Double]]] = regions.map(_.rings.map(_._2))
-  private val EmptyInts = Array.empty[Int]
-
-  private def contains(ri: Int, lat: Double, lng: Double): Boolean = {
-    var odd = false
-    val rl = ringsLat(ri); val rg = ringsLng(ri)
-    var k = 0
-    while (k < rl.length) {
-      if (Geo.containsPlanar(lat, lng, rl(k), rg(k))) odd = !odd
-      k += 1
-    }
-    odd
   }
 
   def probe(hex: Long, lat: Double, lng: Double): Array[Int] = {

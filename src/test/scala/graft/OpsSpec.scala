@@ -23,6 +23,14 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
+  /** `dir` as an absolute path, emptied: a store written there starts from
+    * nothing instead of stacking one more snapshot per suite run. */
+  private def freshDir(dir: String): String = {
+    val p = new org.apache.hadoop.fs.Path(new java.io.File(dir).getAbsolutePath)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+    p.toString
+  }
+
   private def imagePoints(): Array[(Long, Double, Double)] =
     Tables.images(spark, sfDir).select("image_id", "lat", "lng")
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
@@ -44,7 +52,8 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("containment broadcast-probe fast path equals the join path") {
     val images = Tables.images(spark, sfDir).select("image_id", "lat", "lng", "cell16")
-    val a = Containment.containmentJoin(images, Tables.regions(spark))
+    val regions = Tables.regions(spark)
+    val a = Containment.joinBy(images, regions, broadcastBytesLimit = 0L, coarseLevelMax = -1)
       .select("image_id", "region_id").collect().map(r => (r.getLong(0), r.getString(1))).toSet
     val b = Containment.containmentProbe(images, Synth.regions)
       .select("image_id", "region_id").collect().map(r => (r.getLong(0), r.getString(1))).toSet
@@ -87,10 +96,11 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("containment join: shuffle+salted path equals broadcast path") {
     val images = Tables.images(spark, sfDir).select("image_id", "lat", "lng", "cell16")
-    val a = Containment.containmentJoin(images, Tables.regions(spark))
+    val regions = Tables.regions(spark)
+    val a = Containment.containmentJoin(images, regions)
       .select("image_id", "region_id").collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    val b = Containment.containmentJoin(images, Tables.regions(spark),
-        broadcastRegions = false, saltBuckets = 4)
+    val b = Containment.joinBy(images, regions,
+        broadcastBytesLimit = 0L, coarseLevelMax = graft.core.S2.MaxLevel)
       .select("image_id", "region_id").collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(a == b)
   }
@@ -126,23 +136,51 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // an empty region frame plans harmlessly (broadcast of nothing)
     val ce = Containment.chooseStrategy(regions.limit(0))
     assert(ce.broadcast && ce.estBroadcastBytes == 0L && ce.levels.isEmpty)
-    // the returned level set (fed straight to containmentJoin so the auto
-    // path costs one region-side job) is sorted and consistent with the
-    // coarsest level and the real distinct set
+    // the returned level set (the shuffle route's ancestor levels) is
+    // sorted and consistent with the coarsest level and the real distinct set
     assert(c.levels.headOption.contains(c.minCoverLevel) &&
       c.levels == c.levels.sorted &&
       c.levels.toSet == regions.select(explode(col("cells")).as("c"))
         .select(col("c")).collect()
         .map(r => graft.core.S2.level(r.getLong(0))).toSet)
-    // and the auto path returns exactly the fixed-path rows on both routes
+    // and the chosen routes return exactly the fixed-path rows
     val images = Tables.images(spark, sfDir).select("image_id", "lat", "lng", "cell16")
-    val want = Containment.containmentJoin(images, regions)
+    val want = Containment.containmentProbe(images, Synth.regions)
       .select("image_id", "region_id").collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    val auto = Containment.containmentAuto(images, regions)
+    val auto = Containment.containmentJoin(images, regions)
       .select("image_id", "region_id").collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    val autoShuffle = Containment.containmentAuto(images, regions, broadcastBytesLimit = 0L)
+    val autoShuffle = Containment.joinBy(images, regions, broadcastBytesLimit = 0L)
       .select("image_id", "region_id").collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(auto == want && autoShuffle == want && want.nonEmpty)
+    // coverless regions add nothing to the estimate, are not collected and
+    // match nothing; a null ring array matches nothing on either route
+    val bare = regions.withColumn("region_id", concat(col("region_id"), lit("_bare")))
+      .withColumn("cells", array().cast("array<bigint>"))
+    assert(Containment.chooseStrategy(bare).estBroadcastBytes == 0L)
+    val withBare = Containment.containmentJoin(images, regions.unionByName(bare))
+      .select("image_id", "region_id").collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    assert(withBare == want)
+    val ringless = regions.withColumn("rings_lat", lit(null).cast("array<array<double>>"))
+    assert(Containment.containmentJoin(images, ringless).isEmpty &&
+      Containment.joinBy(images, ringless, broadcastBytesLimit = 0L).isEmpty)
+  }
+
+  test("containment rejects a covering cell finer than level 16 on both routes") {
+    import org.apache.spark.sql.functions._
+    // a level-16 image cell has no level-17 ancestor: the shuffle route
+    // would compare it with a fixed child of itself and drop the match
+    val regions = Tables.regions(spark).limit(1)
+      .withColumn("cells", array(lit(graft.core.S2.cellAt(
+        Synth.regions(0).rings(0)._1(0), Synth.regions(0).rings(0)._2(0), 17))))
+    val images = Tables.images(spark, sfDir).select("image_id", "lat", "lng", "cell16")
+    Seq[() => Any](
+      () => Containment.containmentJoin(images, regions),
+      () => Containment.joinBy(images, regions, broadcastBytesLimit = 0L)
+    ).foreach { run =>
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains("level 17") &&
+        e.getMessage.contains(Synth.regions(0).regionId), e.getMessage)
+    }
   }
 
   test("PII/URL redaction: masks and counts; email-inside-URL order pinned") {
@@ -339,7 +377,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("store-backed batch kNN equals the direct batch AND prunes buckets") {
     import graft.lineage.CellStore
     val images = Tables.images(spark, sfDir)
-    val store = new java.io.File("target/opsspec_store_batch").getAbsolutePath
+    val store = freshDir("target/opsspec_store_batch")
     CellStore.write(images.select("image_id", "lat", "lng", "cell16"), store)
     val nBuckets = CellStore.stats(spark, store).size
     val qdf = Synth.regionalBatchQueryDf(spark, 100)
@@ -365,7 +403,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // full-sphere escalation THROUGH the store: the straggler-round span
     // expression must survive the face-3 range-end cell (c + lsb overflows
     // its intermediate; ANSI mode would abort the job — review r03d2)
-    val store2 = new java.io.File("target/opsspec_store_batch_tiny").getAbsolutePath
+    val store2 = freshDir("target/opsspec_store_batch_tiny")
     CellStore.write(images.limit(5).select("image_id", "lat", "lng", "cell16"), store2)
     val qdf1 = {
       import spark.implicits._

@@ -57,24 +57,29 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("auto-planner choices land on the intended physical joins") {
     // the decision is driver-side, so the STATIC plan already shows the
-    // chosen join operator; a regression that routes the auto path into a
-    // sort-merge (shuffling the 10^12-row image side into sorts) or a
-    // nested-loop must fail here
+    // chosen route; a regression that routes the join into a sort-merge
+    // (shuffling the 10^12-row image side into sorts) or a nested-loop must
+    // fail here
+    import graft.ops.Containment
     val images = graft.model.Tables.images(spark, sfDir)
       .select("image_id", "lat", "lng", "cell16")
     val regions = graft.model.Tables.regions(spark)
-    val pBcast = graft.ops.Containment.containmentAuto(images, regions)
+    val pBcast = Containment.containmentJoin(images, regions)
       .queryExecution.executedPlan.toString
-    assert(pBcast.contains("BroadcastHashJoin"),
-      s"small region set must broadcast:\n${pBcast.take(1500)}")
-    val pShuffle = graft.ops.Containment.containmentAuto(images, regions,
+    assert(!pBcast.contains("Exchange") && pBcast.contains("containment_probe"),
+      s"small region set must take the map-side probe:\n${pBcast.take(1500)}")
+    val pShuffle = Containment.joinBy(images, regions,
         broadcastBytesLimit = 0L, coarseLevelMax = -1) // no salt: pure SHJ
       .queryExecution.executedPlan.toString
     assert(pShuffle.contains("ShuffledHashJoin"),
       s"over-budget region set must shuffle-hash, not sort-merge:\n${pShuffle.take(1500)}")
-    Seq(pBcast, pShuffle).foreach(p =>
-      assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoop"),
-        s"containment must stay an equi-join:\n${p.take(1500)}"))
+    val pSalted = Containment.joinBy(images, regions,
+        broadcastBytesLimit = 0L, coarseLevelMax = graft.core.S2.MaxLevel)
+      .queryExecution.executedPlan.toString
+    Seq(pBcast, pShuffle, pSalted).foreach(p =>
+      assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct") &&
+        !p.contains("BroadcastNestedLoop"),
+        s"containment must stay a hash equi-join:\n${p.take(1500)}"))
   }
 
   test("containment family plans carry NO ScalaUDF on the image side") {
@@ -87,6 +92,8 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select("image_id", "lat", "lng", "cell16")
     val plans = Seq(
       plan("q_containment"),
+      plan("q_containment_salted"),
+      plan("q_containment_auto"),
       graft.ops.Containment.containmentProbe(images, graft.model.Synth.regions)
         .queryExecution.executedPlan.toString,
       graft.ops.Containment.containmentProbeHex7(images, graft.model.Synth.regions)
@@ -209,16 +216,18 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("no gate closure collects an unbounded table (source lint)") {
-    // VERDICT r03 #2 guard: a `.collect()` inside SparkEntry or the
-    // lineage stores must be one of the bounded shapes — an aggregate (one
-    // row per key of a bounded key set, e.g. <= 2^PrefixBits buckets), the
-    // 24-row regions fixture serialization, or a helper that bounds
-    // internally (Similarity.quantizerSample = orderBy+limit). Anything
-    // else is a driver OOM at 10^12 rows and must go through a bounded
-    // helper.
+    // VERDICT r03 #2 guard: a `.collect()` inside SparkEntry, Containment
+    // or the lineage stores must be one of the bounded shapes — an
+    // aggregate (one row per key of a bounded key set, e.g. <=
+    // 2^PrefixBits buckets, or Containment's one-row region list, collected
+    // only once its size estimate fits the probe budget), the 24-row
+    // regions fixture serialization, or a helper that bounds internally
+    // (Similarity.quantizerSample = orderBy+limit). Anything else is a
+    // driver OOM at 10^12 rows and must go through a bounded helper.
     val lineage = new java.io.File("src/main/scala/graft/lineage").listFiles()
       .filter(_.getName.endsWith(".scala")).map(_.getPath).sorted.toSeq
-    val offenders = ("src/main/scala/graft/SparkEntry.scala" +: lineage).flatMap { path =>
+    val offenders = (Seq("src/main/scala/graft/SparkEntry.scala",
+        "src/main/scala/graft/ops/Containment.scala") ++ lineage).flatMap { path =>
       val src = scala.io.Source.fromFile(path, "UTF-8")
       val lines = try src.getLines().toVector finally src.close()
       lines.zipWithIndex.filter(_._1.contains(".collect()")).filterNot {

@@ -32,9 +32,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * MERGE ([[upsert]]) is copy-on-write at BUCKET granularity: buckets that
   * may hold a matched key are found from the manifest's per-bucket key
   * BLOOMS alone (the Iceberg file-bloom role), only the touched buckets'
-  * files are read for the rewrite ([[lastUpsertScan]] reports scanned vs
-  * total files), and every untouched bucket's files carry over by
-  * reference — merge cost scales with touched buckets, not table size.
+  * files are read for the rewrite (they are exactly the previous
+  * version's files missing from the new manifest), and every untouched
+  * bucket's files carry over by reference — merge cost scales with touched buckets, not table size.
   * Deletes ride the delta as a boolean column; an update that MOVES a row
   * to another cell is correct by construction (the old bucket is a victim
   * by id, the new row lands in its own cell's bucket).
@@ -172,12 +172,6 @@ object SnapshotStore {
 
   private def dataSchema(df: DataFrame): Option[StructType] =
     Some(nullable(df.schema).asInstanceOf[StructType])
-
-  /** Upsert I/O telemetry of the LAST [[upsert]] on this JVM: head data
-    * files read for the rewrite vs the snapshot's total — the bloom
-    * prune's observable effect. */
-  final case class UpsertScan(filesScanned: Int, filesTotal: Int)
-  @volatile var lastUpsertScan: UpsertScan = UpsertScan(0, 0)
 
   private def manifestPath(dir: String, v: Int) = new Path(s"$dir/_snaps/v$v.txt")
 
@@ -522,10 +516,9 @@ object SnapshotStore {
     val targets = statsOf(survivors, cellCol).map(_.bucket).toSet
     val touched = victims ++ targets
     // the rewrite reads ONLY the touched buckets' FILES (manifest-level
-    // pruning — the head scan the blooms exist to avoid); telemetry below
-    // is what SnapshotStoreSpec asserts
+    // pruning — the head scan the blooms exist to avoid); they are the
+    // files of `prev` that the new manifest drops
     val touchedFiles = prev.files.filter(f => touched.contains(bucketOfFile(f)))
-    lastUpsertScan = UpsertScan(touchedFiles.size, prev.files.size)
     val keptOld = readFiles(spark, dir, prev, touchedFiles)
       .join(broadcast(deltaKeys), Seq(idCol), "left_anti")
     val (newFiles, newSizes) =

@@ -392,7 +392,6 @@ object Knn {
     import tracker.materialize
     try {
       var results: DataFrame = null
-      val verbose = sys.env.contains("GRAFT_KNN_VERBOSE")
       // round-invariant expressions hoisted OUT of the loop: re-creating a
       // udf/udaf per round gives each round distinct closure identities, so
       // Catalyst's codegen cache misses and every round pays full
@@ -456,7 +455,6 @@ object Knn {
       var nRemaining = n0
       var round = 0
       while (nRemaining > 0) {
-        val tRound = System.nanoTime()
         // levels come from the accumulator the SNAPSHOT job already filled —
         // across rounds the mask only accumulates (radii grow -> coarser
         // levels join the set), so it is exact for round 1 and a sound
@@ -519,8 +517,6 @@ object Knn {
               spark, d, storeHead.get, bucketSet)
             val t = storeReadTelemetry.get()
             if (t != null) t += nRead
-            if (verbose)
-              System.err.println(s"[knnBatch]   store read $nRead buckets")
             df.select(col("image_id"), col("lat"), col("lng"), col("cell16"))
         }
         // one row per PROBED query: bounded top-k via PARTIAL aggregation —
@@ -585,9 +581,6 @@ object Knn {
         // snapshot — plan depth stays constant (scan -> filter -> project)
         val rem = status.where(!col("resolved"))
           .select("query_id", "qlat", "qlng", "qcos", "qradius", "cov")
-        if (verbose)
-          System.err.println(f"[knnBatch] round: remaining_out=$nRem levels=${levels.length} " +
-            f"t=${(System.nanoTime() - tRound) / 1e9}%.2f s")
         remaining = rem
         nRemaining = nRem
         round += 1

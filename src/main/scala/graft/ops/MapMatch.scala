@@ -1,7 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import graft.core.Geo
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import scala.reflect.ClassTag
 
 /** HMM map matching: snap each user's geotagged fix sequence onto the path
   * network — the operator that turns raw GPS/EXIF points into road-aligned
@@ -28,34 +30,48 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: candidate generation is the SOUND shared-cell equi-join of
   * [[Polyline.pathCandidates]] (the point side never shuffles for it —
-  * broadcast network; or shuffle_hash for a huge network), then ONE
-  * groupBy-user shuffle and an in-memory DP per user — the
+  * broadcast network), then ONE groupBy-user shuffle and an in-memory DP
+  * per user (one DP loop, generic over the transition cost) — the
   * Trajectory/EventStream per-user memory contract: a user's candidate rows
   * fit in MBs (fix count × candidates within radius); a pathological key
   * fails loudly (`maxCandidatesPerUser`) rather than OOMing the task.
   */
 object MapMatch {
 
+  /** One candidate of the per-user DP: a path within radius of one fix. */
+  sealed trait Cand {
+    def user_id: Long; def event_id: Long; def sec: Long
+    def path_id: String; def dist_m: Double
+  }
+
   /** public: Dataset encoders fail codegen on private case classes. */
   final case class CandRow(user_id: Long, event_id: Long, sec: Long,
-                           path_id: String, dist_m: Double)
+                           path_id: String, dist_m: Double) extends Cand
 
   /** @param points (user_id, event_id, sec, lat, lng, cell16)
     * @param paths  (path_id, lats ARRAY<DOUBLE>, lngs ARRAY<DOUBLE>)
     * @return (user_id, event_id, path_id) one row per fix with >=1 candidate. */
   def viterbiMatch(points: DataFrame, paths: DataFrame, radiusMeters: Double,
                    sigmaMeters: Double = 50.0, switchCost: Double = 2.0,
-                   level: Int = 12, broadcastPaths: Boolean = true,
                    maxCandidatesPerUser: Int = 2000000): DataFrame = {
     require(radiusMeters > 0 && sigmaMeters > 0 && switchCost >= 0,
       "radius/sigma must be positive, switchCost non-negative")
     import points.sparkSession.implicits._
-    val cands = Polyline.pathCandidates(points, paths, radiusMeters, level,
-        broadcastPaths)
+    val cands = Polyline.pathCandidates(points, paths, radiusMeters)
       .select(col("user_id").cast("long"), col("event_id").cast("long"),
         col("sec").cast("long"), col("path_id"), col("dist_m"))
       .as[CandRow]
-    cands.groupByKey(_.user_id).flatMapGroups { (uid: Long, it: Iterator[CandRow]) =>
+    matchPerUser(cands, maxCandidatesPerUser)(viterbi(_, sigmaMeters, switchCost))
+  }
+
+  /** ONE groupBy-user shuffle, then `solve` over each user's fixes in
+    * (sec, event_id) order; a user over `maxCandidatesPerUser` candidate
+    * rows fails loudly instead of OOMing the task. */
+  private def matchPerUser[C <: Cand : ClassTag](cands: Dataset[C],
+                                                 maxCandidatesPerUser: Int)
+      (solve: Array[(Long, Array[C])] => Seq[(Long, String)]): DataFrame = {
+    import cands.sparkSession.implicits._
+    cands.groupByKey(_.user_id).flatMapGroups { (uid: Long, it: Iterator[C]) =>
       val rows = it.toArray
       if (rows.length > maxCandidatesPerUser)
         throw new IllegalStateException(
@@ -64,16 +80,27 @@ object MapMatch {
             "or raise the bound")
       val steps = rows.groupBy(r => (r.sec, r.event_id)).toArray.sortBy(_._1)
         .map { case (k, cs) => (k._2, cs) }
-      viterbi(steps, sigmaMeters, switchCost)
-        .map { case (eid, pid) => (uid, eid, pid) }.iterator
+      solve(steps).map { case (eid, pid) => (uid, eid, pid) }.iterator
     }.toDF("user_id", "event_id", "path_id")
   }
 
-  /** The per-user DP: steps in time order; candidates are sorted into
-    * path_id order HERE (the determinism anchor), and argmin is
-    * strictly-less, so ties break to the smallest path_id. */
+  /** The constant-switch-cost DP: [[dp]] with transition 0 on the same path
+    * and `switchCost` otherwise. */
   private[graft] def viterbi(rawSteps: Array[(Long, Array[CandRow])],
                              sigmaMeters: Double, switchCost: Double)
+      : Seq[(Long, String)] =
+    dp(rawSteps, sigmaMeters) { (prev, cur) => (p, j) =>
+      if (prev(p).path_id == cur(j).path_id) 0.0 else switchCost
+    }
+
+  /** The per-user Viterbi DP: steps in time order; candidates are sorted
+    * into path_id order HERE (the determinism anchor), and argmin is
+    * strictly-less, so ties break to the smallest path_id. `transition`
+    * is called once per step with (previous, current) candidates and
+    * returns the cost of moving from previous index p to current index j;
+    * each cell adds `cost(p) + transition`, then the emission. */
+  private def dp[C <: Cand](rawSteps: Array[(Long, Array[C])], sigmaMeters: Double)
+      (transition: (Array[C], Array[C]) => (Int, Int) => Double)
       : Seq[(Long, String)] = {
     val steps = rawSteps.map { case (eid, cs) => (eid, cs.sortBy(_.path_id)) }
     if (steps.isEmpty) return Nil
@@ -84,6 +111,7 @@ object MapMatch {
     while (i < steps.length) {
       val cur = steps(i)._2
       val prev = steps(i - 1)._2
+      val trans = transition(prev, cur)
       val nc = new Array[Double](cur.length)
       val nb = new Array[Int](cur.length)
       var j = 0
@@ -91,8 +119,7 @@ object MapMatch {
         var best = Double.MaxValue; var bestP = -1
         var p = 0
         while (p < prev.length) {
-          val t = cost(p) +
-            (if (prev(p).path_id == cur(j).path_id) 0.0 else switchCost)
+          val t = cost(p) + trans(p, j)
           if (t < best) { best = t; bestP = p }
           p += 1
         }
@@ -132,7 +159,7 @@ object MapMatch {
                               path_id: String, dist_m: Double,
                               node_a: Long, node_b: Long,
                               a_lat: Double, a_lng: Double,
-                              b_lat: Double, b_lng: Double)
+                              b_lat: Double, b_lng: Double) extends Cand
 
   /** HMM map matching with ROUTE-DISTANCE transitions (Newson & Krakauer
     * GIS'09 §transition): for consecutive fixes a -> b matched to segments
@@ -160,10 +187,12 @@ object MapMatch {
     * precompute (standard for HMM matching: one bounded-radius one-to-many
     * flood per node), evaluated here as ONE [[Reachability.reachableMulti]]
     * call and broadcast to the DP — both driver-bounded with LOUD failures
-    * (`maxNetworkNodes`, `maxDistTableRows`); a planetary network pre-shards
-    * by region and materializes the table once, not per query. Candidate
-    * generation and the per-user DP keep [[viterbiMatch]]'s shape: sound
-    * covering equi-join, one groupBy-user shuffle.
+    * (`maxNetworkNodes`, `maxDistTableRows`: each collect is limited to the
+    * bound + 1 rows); a planetary network pre-shards by region and
+    * materializes the table once, not per query. Candidate generation and
+    * the per-user DP are [[viterbiMatch]]'s: sound covering equi-join, one
+    * groupBy-user shuffle, the same DP loop with the routed transition
+    * (its fix-to-fix great circle computed once per step).
     *
     * @param points   (user_id, event_id, sec, lat, lng, cell16)
     * @param segments (path_id, lats ARRAY<DOUBLE>, lngs ARRAY<DOUBLE>,
@@ -174,10 +203,9 @@ object MapMatch {
   def viterbiMatchRouted(points: DataFrame, segments: DataFrame, edges: DataFrame,
                          radiusMeters: Double, maxRouteMeters: Double,
                          sigmaMeters: Double = 50.0, betaMeters: Double = 200.0,
-                         level: Int = 12, broadcastPaths: Boolean = true,
                          maxCandidatesPerUser: Int = 2000000,
                          maxNetworkNodes: Int = 200000,
-                         maxDistTableRows: Long = 5000000L): DataFrame = {
+                         maxDistTableRows: Int = 5000000): DataFrame = {
     require(radiusMeters > 0 && sigmaMeters > 0 && betaMeters > 0 &&
       maxRouteMeters > 0, "radius/sigma/beta/maxRoute must be positive")
     val spark = points.sparkSession
@@ -195,22 +223,21 @@ object MapMatch {
         s"viterbiMatchRouted: network has MORE THAN maxNetworkNodes=" +
           s"$maxNetworkNodes nodes (count truncated at the bound); pre-shard " +
           "the network by region or raise the bound")
-    // the per-network distance precompute: one multi-origin bounded flood
-    val distDf = Reachability.reachableMulti(spark, edges, origins,
-      cutoff = maxRouteMeters)
-    val nDist = distDf.count()
-    if (nDist > maxDistTableRows)
-      throw new IllegalStateException(
-        s"viterbiMatchRouted: distance table has $nDist rows > " +
-          s"maxDistTableRows=$maxDistTableRows (maxRouteMeters=$maxRouteMeters " +
-          "reaches too much of the network); shrink the route cutoff or " +
-          "pre-shard the network")
-    val distMap: Map[(Long, Long), Double] = distDf
+    // the per-network distance precompute: one multi-origin bounded flood,
+    // collected under the same bound+1 limit
+    val distRows = Reachability.reachableMulti(spark, edges, origins,
+        cutoff = maxRouteMeters)
       .select(col("origin").cast("long"), col("node").cast("long"),
         col("dist").cast("double"))
-      .as[(Long, Long, Double)].collect()
-      .iterator.map { case (o, n, d) => ((o, n), d) }.toMap
-    val distB = spark.sparkContext.broadcast(distMap)
+      .limit(maxDistTableRows + 1).as[(Long, Long, Double)].collect()
+    if (distRows.length > maxDistTableRows)
+      throw new IllegalStateException(
+        s"viterbiMatchRouted: distance table has MORE THAN maxDistTableRows=" +
+          s"$maxDistTableRows rows (count truncated at the bound; " +
+          s"maxRouteMeters=$maxRouteMeters reaches too much of the network); " +
+          "shrink the route cutoff or pre-shard the network")
+    val distB = spark.sparkContext.broadcast(
+      distRows.iterator.map { case (o, n, d) => ((o, n), d) }.toMap)
     // endpoint coordinates ride the candidate join as plain columns (the
     // covering join drops only lats/lngs/pcell)
     val segs = segments
@@ -218,8 +245,7 @@ object MapMatch {
       .withColumn("a_lng", col("lngs").getItem(0))
       .withColumn("b_lat", element_at(col("lats"), -1))
       .withColumn("b_lng", element_at(col("lngs"), -1))
-    val cands = Polyline.pathCandidates(points, segs, radiusMeters, level,
-        broadcastPaths)
+    val cands = Polyline.pathCandidates(points, segs, radiusMeters)
       .select(col("user_id").cast("long"), col("event_id").cast("long"),
         col("sec").cast("long"), col("lat").cast("double"),
         col("lng").cast("double"), col("path_id"), col("dist_m"),
@@ -227,96 +253,46 @@ object MapMatch {
         col("a_lat").cast("double"), col("a_lng").cast("double"),
         col("b_lat").cast("double"), col("b_lng").cast("double"))
       .as[RoutedCand]
-    cands.groupByKey(_.user_id).flatMapGroups { (uid: Long, it: Iterator[RoutedCand]) =>
-      val rows = it.toArray
-      if (rows.length > maxCandidatesPerUser)
-        throw new IllegalStateException(
-          s"mapMatchRouted: user $uid has ${rows.length} candidate rows > " +
-            s"maxCandidatesPerUser=$maxCandidatesPerUser; shrink the radius " +
-            "or raise the bound")
-      val steps = rows.groupBy(r => (r.sec, r.event_id)).toArray.sortBy(_._1)
-        .map { case (k, cs) => (k._2, cs) }
-      viterbiRouted(steps, sigmaMeters, betaMeters, maxRouteMeters, distB.value)
-        .map { case (eid, pid) => (uid, eid, pid) }.iterator
-    }.toDF("user_id", "event_id", "path_id")
+    matchPerUser(cands, maxCandidatesPerUser) { steps =>
+      val dist = distB.value
+      dp(steps, sigmaMeters) { (prev, cur) =>
+        // all candidates of a step share the fix's coordinates
+        val gc = Geo.haversineMeters(prev(0).lat, prev(0).lng, cur(0).lat, cur(0).lng)
+        (p, j) => routedTransition(prev(p), cur(j), gc, betaMeters, maxRouteMeters, dist)
+      }
+    }
   }
 
-  /** The routed per-user DP — [[viterbi]]'s structure with the routed
-    * transition; op order and tie-breaks per the [[viterbiMatchRouted]]
-    * contract (golden-mirrored). */
-  private[graft] def viterbiRouted(rawSteps: Array[(Long, Array[RoutedCand])],
-                                   sigmaMeters: Double, betaMeters: Double,
-                                   maxRouteMeters: Double,
-                                   dist: Map[(Long, Long), Double])
-      : Seq[(Long, String)] = {
-    import graft.core.Geo
-    val steps = rawSteps.map { case (eid, cs) => (eid, cs.sortBy(_.path_id)) }
-    if (steps.isEmpty) return Nil
-    def emit(d: Double): Double = (d * d) / (2.0 * sigmaMeters * sigmaMeters)
-    def trans(p: RoutedCand, q: RoutedCand, gc: Double): Double = {
-      if (p.path_id == q.path_id) return 0.0
-      var route = Double.PositiveInfinity
-      var xi = 0
-      while (xi < 2) {
-        val xid = if (xi == 0) p.node_a else p.node_b
-        val xLat = if (xi == 0) p.a_lat else p.b_lat
-        val xLng = if (xi == 0) p.a_lng else p.b_lng
-        var yi = 0
-        while (yi < 2) {
-          val yid = if (yi == 0) q.node_a else q.node_b
-          val yLat = if (yi == 0) q.a_lat else q.b_lat
-          val yLng = if (yi == 0) q.a_lng else q.b_lng
-          val mid = if (xid == yid) 0.0 else dist.getOrElse((xid, yid), Double.NaN)
-          if (!mid.isNaN) {
-            val r = Geo.haversineMeters(p.lat, p.lng, xLat, xLng) + mid +
-              Geo.haversineMeters(yLat, yLng, q.lat, q.lng)
-            if (r < route) route = r
-          }
-          yi += 1
+  /** |route(p, q) - gc| / beta per the [[viterbiMatchRouted]] contract: the
+    * 4 endpoint combos scan in fixed (aa, ab, ba, bb) order with
+    * strictly-less min; no route within the cutoff costs 2*maxRouteMeters
+    * (golden-mirrored). */
+  private def routedTransition(p: RoutedCand, q: RoutedCand, gc: Double,
+                               betaMeters: Double, maxRouteMeters: Double,
+                               dist: Map[(Long, Long), Double]): Double = {
+    if (p.path_id == q.path_id) return 0.0
+    var route = Double.PositiveInfinity
+    var xi = 0
+    while (xi < 2) {
+      val xid = if (xi == 0) p.node_a else p.node_b
+      val xLat = if (xi == 0) p.a_lat else p.b_lat
+      val xLng = if (xi == 0) p.a_lng else p.b_lng
+      var yi = 0
+      while (yi < 2) {
+        val yid = if (yi == 0) q.node_a else q.node_b
+        val yLat = if (yi == 0) q.a_lat else q.b_lat
+        val yLng = if (yi == 0) q.a_lng else q.b_lng
+        val mid = if (xid == yid) 0.0 else dist.getOrElse((xid, yid), Double.NaN)
+        if (!mid.isNaN) {
+          val r = Geo.haversineMeters(p.lat, p.lng, xLat, xLng) + mid +
+            Geo.haversineMeters(yLat, yLng, q.lat, q.lng)
+          if (r < route) route = r
         }
-        xi += 1
+        yi += 1
       }
-      if (route.isInfinity) route = 2.0 * maxRouteMeters
-      math.abs(route - gc) / betaMeters
+      xi += 1
     }
-    var cost = steps(0)._2.map(c => emit(c.dist_m))
-    val back = new Array[Array[Int]](steps.length)
-    var i = 1
-    while (i < steps.length) {
-      val cur = steps(i)._2
-      val prev = steps(i - 1)._2
-      // all candidates of a step share the fix's coordinates
-      val gc = Geo.haversineMeters(prev(0).lat, prev(0).lng, cur(0).lat, cur(0).lng)
-      val nc = new Array[Double](cur.length)
-      val nb = new Array[Int](cur.length)
-      var j = 0
-      while (j < cur.length) {
-        var best = Double.MaxValue; var bestP = -1
-        var p = 0
-        while (p < prev.length) {
-          val t = cost(p) + trans(prev(p), cur(j), gc)
-          if (t < best) { best = t; bestP = p }
-          p += 1
-        }
-        nc(j) = best + emit(cur(j).dist_m)
-        nb(j) = bestP
-        j += 1
-      }
-      back(i) = nb
-      cost = nc
-      i += 1
-    }
-    var best = 0
-    var j = 1
-    while (j < cost.length) { if (cost(j) < cost(best)) best = j; j += 1 }
-    val out = new Array[(Long, String)](steps.length)
-    var k = steps.length - 1
-    var cur = best
-    while (k >= 0) {
-      out(k) = (steps(k)._1, steps(k)._2(cur).path_id)
-      if (k > 0) cur = back(k)(cur)
-      k -= 1
-    }
-    out.toSeq
+    if (route.isInfinity) route = 2.0 * maxRouteMeters
+    math.abs(route - gc) / betaMeters
   }
 }

@@ -74,48 +74,100 @@ object Polyline {
       .dropDuplicates("lat", "lng")
   }
 
+  /** Covering levels of the cell-pruned path operators. */
+  private val CrossingLevel = 14
+  private val CandidateLevel = 12
+  private val SnapLevel = 13
+
+  /** Mean edge of a level-`level` S2 cell in meters: (pi/2)·R / 2^level. */
+  private[graft] def cellEdgeMeters(level: Int): Double =
+    (math.Pi / 2.0) * Geo.EarthRadiusMeters / (1L << level)
+
+  /** Spacing of [[samplePath]]'s samples at `level`: half a cell edge. */
+  private[graft] def sampleStepMeters(level: Int): Double = cellEdgeMeters(level) / 2.0
+
+  /** The one covering walk under the cell-pruned path operators: calls
+    * `visit` on points at most [[sampleStepMeters]](level) apart along each
+    * segment, with n = max(1, ceil(length / step)) steps per segment.
+    *   - path (`closed = false`): the first vertex, then each segment's
+    *     `Geo.interpolate` samples at j/n for j = 1..n (the last one is the
+    *     segment's end vertex up to rounding);
+    *   - ring (`closed = true`): each vertex exactly, then the interior
+    *     samples j = 1..n-1 of its edge to the next vertex (the last edge
+    *     wraps to vertex 0).
+    * Every point of a segment lies within step/2 of a sample along the
+    * lat/lng-linear walk. An empty vertex list visits nothing. */
+  private[graft] def samplePath(lats: Seq[Double], lngs: Seq[Double], level: Int,
+                                closed: Boolean = false)
+                               (visit: (Double, Double) => Unit): Unit = {
+    val n = lats.length
+    if (n == 0) return
+    val stepM = sampleStepMeters(level)
+    if (!closed) visit(lats(0), lngs(0))
+    val edges = if (closed) n else n - 1
+    var i = 0
+    while (i < edges) {
+      val k = if (i + 1 == n) 0 else i + 1
+      if (closed) visit(lats(i), lngs(i))
+      val segLen = Geo.haversineMeters(lats(i), lngs(i), lats(k), lngs(k))
+      val m = math.max(1, math.ceil(segLen / stepM).toInt)
+      val segLat = Array(lats(i), lats(k)); val segLng = Array(lngs(i), lngs(k))
+      val last = if (closed) m - 1 else m
+      var j = 1
+      while (j <= last) {
+        val (la, lo) = Geo.interpolate(segLat, segLng, j.toDouble / m)
+        visit(la, lo)
+        j += 1
+      }
+      i += 1
+    }
+  }
+
+  /** Level-`level` cells of the [[samplePath]] samples, in first-seen order. */
+  private[graft] def sampleCells(lats: Seq[Double], lngs: Seq[Double], level: Int,
+                                 closed: Boolean = false): Array[Long] = {
+    val cells = scala.collection.mutable.LinkedHashSet.empty[Long]
+    samplePath(lats, lngs, level, closed)((la, lo) => cells += S2.cellAt(la, lo, level))
+    cells.toArray
+  }
+
+  /** Level-`level` cells meeting cap(sample, reachM) for every
+    * [[samplePath]] sample of the path, in first-seen order
+    * (S2.coveringAtLevel is may-intersect sound). */
+  private def capCover(lats: Seq[Double], lngs: Seq[Double], level: Int,
+                       reachM: Double): scala.collection.mutable.LinkedHashSet[Long] = {
+    val cells = scala.collection.mutable.LinkedHashSet.empty[Long]
+    val angle = reachM / Geo.EarthRadiusMeters
+    samplePath(lats, lngs, level) { (la, lo) =>
+      S2.coveringAtLevel(S2.Cap(Geo.toXYZ(la, lo), angle), level).foreach(cells += _)
+    }
+    cells
+  }
+
   /** IntersectsPolyline as a DISTRIBUTED crossing join (SURVEY §2.2;
     * reference spatial.go:425-514, deliberately keeping its documented
     * boundary-crossing approximation for areas): which paths strictly cross
     * which region SHELL boundaries.
     *
-    * Prune (sound, equi-join only): the path side samples each segment
-    * every h = cellEdge(level)/2 meters and emits, for every level-`level`
-    * cell intersecting cap(sample, h/2 + slack), the cell AND its coarser
-    * ancestors; the region side emits each covering cell clamped to
-    * `level` (deeper cells take their level-`level` parent). A crossing
-    * point lies on the path AND inside the region, so its sample's inflated
-    * covering meets the region covering at some shared cell id. Exact
-    * refine: pairwise great-circle arc crossings against the CLOSED shell.
+    * Prune (sound, equi-join only, at level L = 14): the path side samples
+    * each segment every h = cellEdge(L)/2 meters and emits, for every
+    * level-L cell intersecting cap(sample, h/2 + slack), the cell AND its
+    * coarser ancestors; the region side emits each covering cell clamped to
+    * L (deeper cells take their level-L parent) and is broadcast. A
+    * crossing point lies on the path AND inside the region, so its sample's
+    * inflated covering meets the region covering at some shared cell id.
+    * Exact refine: pairwise great-circle arc crossings against the CLOSED
+    * shell.
     *
     * @return (path_id, region_id) one row per crossing pair. */
-  def crossingJoin(paths: DataFrame, regions: DataFrame, level: Int = 14,
-                   broadcastRegions: Boolean = true): DataFrame = {
-    val edgeM = (math.Pi / 2.0) * Geo.EarthRadiusMeters / (1L << level)
-    val stepM = edgeM / 2.0
-    val reachM = stepM / 2.0 * 1.05 + 1.0
+  def crossingJoin(paths: DataFrame, regions: DataFrame): DataFrame = {
+    val level = CrossingLevel
+    val reachM = sampleStepMeters(level) / 2.0 * 1.05 + 1.0
     val pathCellsUdf = udf((lats: Seq[Double], lngs: Seq[Double]) => {
       val cells = scala.collection.mutable.LinkedHashSet.empty[Long]
-      def addCap(la: Double, lo: Double): Unit =
-        S2.coveringAtLevel(
-          S2.Cap(Geo.toXYZ(la, lo), reachM / Geo.EarthRadiusMeters), level)
-          .foreach { c =>
-            var l = level
-            while (l >= 0 && cells.add(S2.parent(c, l))) l -= 1
-          }
-      addCap(lats(0), lngs(0))
-      var i = 1
-      while (i < lats.length) {
-        val segLen = Geo.haversineMeters(lats(i - 1), lngs(i - 1), lats(i), lngs(i))
-        val n = math.max(1, math.ceil(segLen / stepM).toInt)
-        var j = 1
-        while (j <= n) {
-          val (la, lo) = Geo.interpolate(
-            Array(lats(i - 1), lats(i)), Array(lngs(i - 1), lngs(i)), j.toDouble / n)
-          addCap(la, lo)
-          j += 1
-        }
-        i += 1
+      capCover(lats, lngs, level, reachM).foreach { c =>
+        var l = level
+        while (l >= 0 && cells.add(S2.parent(c, l))) l -= 1
       }
       cells.toArray
     })
@@ -132,9 +184,7 @@ object Polyline {
         explode(col("cells")).as("rcell"))
       .withColumn("cell", clampUdf(col("rcell")))
       .dropDuplicates("region_id", "cell")
-    pathSide.join(
-        if (broadcastRegions) broadcast(regionSide)
-        else regionSide.hint("shuffle_hash"), "cell")
+    pathSide.join(broadcast(regionSide), "cell")
       .dropDuplicates("path_id", "region_id")
       .where(crossesClosed(col("lats"), col("lngs"),
         col("rings_lat")(0), col("rings_lng")(0)))
@@ -213,70 +263,52 @@ object Polyline {
 
   /** connect-to-network: for each point, the nearest path within
     * `maxDistMeters`, pruned by a SOUND shared-cell equi-join (no offset-grid
-    * heuristic — ADVICE r01): the path side emits, for every sample taken at
-    * most h = cellEdge(level)/2 meters apart along each segment, ALL level-
-    * `level` cells intersecting cap(sample, maxDist + h/2 + slack)
-    * (S2.coveringAtLevel is may-intersect sound). A point p within maxDist of
-    * the path is within maxDist + h/2 (+ slack for the lat/lng-linear sample
-    * walk) of some sample, so p's own level-`level` cell intersects that
-    * sample's cap and the equi-join keeps the pair. No segment-length
-    * precondition.
+    * heuristic — ADVICE r01): the broadcast path side emits, for every
+    * sample taken at most h = cellEdge(L)/2 meters apart along each segment
+    * (L = 12), ALL level-L cells intersecting cap(sample, maxDist + h/2 +
+    * slack) (S2.coveringAtLevel is may-intersect sound). A point p within
+    * maxDist of the path is within maxDist + h/2 (+ slack for the
+    * lat/lng-linear sample walk) of some sample, so p's own level-L cell
+    * intersects that sample's cap and the equi-join keeps the pair. No
+    * segment-length precondition.
     *
     * @param points (id, lat, lng, cell16)
     * @param paths  (path_id, lats ARRAY<DOUBLE>, lngs ARRAY<DOUBLE>)
     * @return (id, path_id, dist_m) one row per point with a match. */
   def nearestPathJoin(points: DataFrame, paths: DataFrame,
-                      maxDistMeters: Double, level: Int = 12,
-                      broadcastPaths: Boolean = true): DataFrame =
-    pathCandidates(points, paths, maxDistMeters, level, broadcastPaths)
+                      maxDistMeters: Double): DataFrame =
+    pathCandidates(points, paths, maxDistMeters)
       .withColumn("rn", row_number().over(
         Window.partitionBy("id").orderBy(col("dist_m"), col("path_id"))))
       .where(col("rn") === 1)
       .select(col("id"), col("path_id"), col("dist_m"))
 
+  /** [[pathCandidates]]' path covering: the level-12 cells within
+    * maxDist + h/2 + slack of the path's samples. */
+  private[graft] def candidateCover(lats: Seq[Double], lngs: Seq[Double],
+                                    maxDistMeters: Double): Array[Long] = {
+    val reachM = maxDistMeters + sampleStepMeters(CandidateLevel) / 2.0 +
+      0.02 * maxDistMeters + 1.0
+    capCover(lats, lngs, CandidateLevel, reachM).toArray
+  }
+
   /** ALL (point, path) pairs within `maxDistMeters` — the shared sound
     * candidate join under [[nearestPathJoin]] (min per point) and
     * [[graft.ops.MapMatch]] (full per-point candidate sets for the Viterbi
     * DP). Exactly-once per pair by construction: each probe point carries
-    * ONE level-`level` cell and each path's covering is deduplicated, so the
+    * ONE level-12 cell and each path's covering is deduplicated, so the
     * equi-join can produce at most one row per (point, path). Output: every
     * input point column plus (path_id, dist_m); points/paths beyond the
     * radius produce no row. */
   private[graft] def pathCandidates(points: DataFrame, paths: DataFrame,
-                                    maxDistMeters: Double, level: Int,
-                                    broadcastPaths: Boolean): DataFrame = {
-    val edgeM = (math.Pi / 2.0) * Geo.EarthRadiusMeters / (1L << level)
-    val stepM = edgeM / 2.0
-    val reachM = maxDistMeters + stepM / 2.0 + 0.02 * maxDistMeters + 1.0
-    val coverUdf = udf((lats: Seq[Double], lngs: Seq[Double]) => {
-      val cells = scala.collection.mutable.LinkedHashSet.empty[Long]
-      def addCap(la: Double, lo: Double): Unit =
-        S2.coveringAtLevel(
-          S2.Cap(Geo.toXYZ(la, lo), reachM / Geo.EarthRadiusMeters), level)
-          .foreach(cells += _)
-      addCap(lats(0), lngs(0))
-      var i = 1
-      while (i < lats.length) {
-        val segLen = Geo.haversineMeters(lats(i - 1), lngs(i - 1), lats(i), lngs(i))
-        val n = math.max(1, math.ceil(segLen / stepM).toInt)
-        var j = 1
-        while (j <= n) {
-          val (la, lo) = Geo.interpolate(
-            Array(lats(i - 1), lats(i)), Array(lngs(i - 1), lngs(i)), j.toDouble / n)
-          addCap(la, lo)
-          j += 1
-        }
-        i += 1
-      }
-      cells.toArray
-    })
+                                    maxDistMeters: Double): DataFrame = {
+    val coverUdf = udf((lats: Seq[Double], lngs: Seq[Double]) =>
+      candidateCover(lats, lngs, maxDistMeters))
     val pathCells = paths
       .withColumn("pcell", explode(coverUdf(col("lats"), col("lngs"))))
     val probes = points.withColumn("pcell",
-      graft.functions.S2Expressions.s2Ancestors(col("cell16"), Array(level))(0))
-    probes.join(
-        if (broadcastPaths) broadcast(pathCells)
-        else pathCells.hint("shuffle_hash"), "pcell")
+      graft.functions.S2Expressions.s2Ancestors(col("cell16"), Array(CandidateLevel))(0))
+    probes.join(broadcast(pathCells), "pcell")
       .withColumn("dist_m", distToPolyline(col("lat"), col("lng"), col("lats"), col("lngs")))
       .where(col("dist_m") <= maxDistMeters)
       .drop("pcell", "lats", "lngs")
@@ -411,13 +443,13 @@ object Polyline {
     * api/functions/geometry.go:124-167): snap each region's shell ring onto
     * nearby paths within `thresholdMeters`.
     *
-    * Prune (sound, equi-join): the path side emits every level-`level` cell
-    * within reach = threshold + sample spacing + slack of its segment
-    * samples; the region side emits the plain level-`level` cells of its
-    * ring samples. A ring point within threshold of a path is within reach
-    * of some path sample, so its cell is emitted by both sides. The
-    * reference's buffered-cap MightIntersect probe (geometry.go:130-134) is
-    * the same inflation expressed against its token index. Refinement
+    * Prune (sound, equi-join at level L = 13): the broadcast path side
+    * emits every level-L cell within reach = threshold + sample spacing +
+    * slack of its segment samples; the region side emits the plain level-L
+    * cells of its ring samples. A ring point within threshold of a path is
+    * within reach of some path sample, so its cell is emitted by both sides.
+    * The reference's buffered-cap MightIntersect probe (geometry.go:130-134)
+    * is the same inflation expressed against its token index. Refinement
     * happens inside the kernel (projections beyond the threshold never
     * replace an edge).
     *
@@ -425,56 +457,16 @@ object Polyline {
     * @param paths   (path_id, lats, lngs)
     * @return (region_id, s_lat, s_lng, n_snapped). */
   def snapAreaEdges(regions: DataFrame, paths: DataFrame, thresholdMeters: Double,
-                    joinThresholdMeters: Double = 0.1, level: Int = 13,
-                    maxCandidates: Int = 10000,
-                    broadcastPaths: Boolean = true): DataFrame = {
-    val edgeM = (math.Pi / 2.0) * Geo.EarthRadiusMeters / (1L << level)
-    val stepM = edgeM / 2.0
-    val reachM = thresholdMeters + stepM + 0.02 * thresholdMeters + 1.0
-    val pathCover = udf((lats: Seq[Double], lngs: Seq[Double]) => {
-      val cells = scala.collection.mutable.LinkedHashSet.empty[Long]
-      def addCap(la: Double, lo: Double): Unit =
-        S2.coveringAtLevel(
-          S2.Cap(Geo.toXYZ(la, lo), reachM / Geo.EarthRadiusMeters), level)
-          .foreach(cells += _)
-      addCap(lats(0), lngs(0))
-      var i = 1
-      while (i < lats.length) {
-        val segLen = Geo.haversineMeters(lats(i - 1), lngs(i - 1), lats(i), lngs(i))
-        val m = math.max(1, math.ceil(segLen / stepM).toInt)
-        var j = 1
-        while (j <= m) {
-          val (la, lo) = Geo.interpolate(
-            Array(lats(i - 1), lats(i)), Array(lngs(i - 1), lngs(i)), j.toDouble / m)
-          addCap(la, lo)
-          j += 1
-        }
-        i += 1
-      }
-      cells.toArray
-    })
-    val ringCells = udf((lats: Seq[Double], lngs: Seq[Double]) => {
-      val cells = scala.collection.mutable.LinkedHashSet.empty[Long]
-      val n = lats.length
-      var i = 0
-      while (i < n) {
-        val j = (i + 1) % n
-        cells += S2.cellAt(lats(i), lngs(i), level)
-        val segLen = Geo.haversineMeters(lats(i), lngs(i), lats(j), lngs(j))
-        val m = math.max(1, math.ceil(segLen / stepM).toInt)
-        var s = 1
-        while (s < m) {
-          val (la, lo) = Geo.interpolate(
-            Array(lats(i), lats(j)), Array(lngs(i), lngs(j)), s.toDouble / m)
-          cells += S2.cellAt(la, lo, level)
-          s += 1
-        }
-        i += 1
-      }
-      cells.toArray
-    })
+                    joinThresholdMeters: Double = 0.1,
+                    maxCandidates: Int = 10000): DataFrame = {
+    val level = SnapLevel
+    val reachM = thresholdMeters + sampleStepMeters(level) + 0.02 * thresholdMeters + 1.0
+    val pathCover = udf((lats: Seq[Double], lngs: Seq[Double]) =>
+      capCover(lats, lngs, level, reachM).toArray)
+    val ringCells = udf((lats: Seq[Double], lngs: Seq[Double]) =>
+      sampleCells(lats, lngs, level, closed = true))
     // a path with no vertices has no geometry to snap to — drop it here
-    // rather than crash in pathCover/projectToPolylineMeters (review r03)
+    // rather than crash in projectToPolylineMeters
     val pathSide = paths
       .where(size(col("lats")) > 0 && size(col("lngs")) === size(col("lats")))
       .withColumn("cell", explode(pathCover(col("lats"), col("lngs"))))
@@ -491,9 +483,7 @@ object Polyline {
     // collect_list order is partitioning-dependent, and snapRingKernel keeps
     // the FIRST of dmax-tied candidates, so an unsorted list would make the
     // snapped coordinates run-dependent (review r03b)
-    val cands = regionSide.join(
-        if (broadcastPaths) broadcast(pathSide)
-        else pathSide.hint("shuffle_hash"), "cell")
+    val cands = regionSide.join(broadcast(pathSide), "cell")
       .dropDuplicates("region_id", "path_id")
       .groupBy("region_id")
       .agg(sort_array(collect_list(

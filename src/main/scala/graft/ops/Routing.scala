@@ -115,7 +115,8 @@ object Routing {
     * Unsnappable/unroutable pairs keep their row with nulls.
     *
     * Scale shape: candidates from the sound covering equi-join
-    * ([[Polyline.pathCandidates]] — no all-pairs), ONE multi-origin flood
+    * ([[Polyline.pathCandidates]]: level-12 cells, broadcast segment side,
+    * no all-pairs), ONE multi-origin flood
     * from the <= 2x distinct-origin-segment endpoint nodes (distinct+limit
     * bounded collect, loud failure), per-pair keyed combo lookups.
     *
@@ -128,7 +129,6 @@ object Routing {
   def routeDistanceProjected(spark: SparkSession, pairs: DataFrame,
                              segments: DataFrame, edges: DataFrame,
                              snapRadiusMeters: Double, maxRouteMeters: Double,
-                             level: Int = 12,
                              maxNetworkNodes: Int = 200000): DataFrame = {
     require(snapRadiusMeters > 0 && maxRouteMeters > 0,
       "snapRadius/maxRoute must be positive")
@@ -151,8 +151,7 @@ object Routing {
       .select((col("route_id") * 2 + col("side")).as("id"), col("lat"), col("lng"))
       .withColumn("cell16",
         graft.functions.S2Expressions.s2Cell16(col("lat"), col("lng")))
-    val cands = Polyline.pathCandidates(eps, segsCost, snapRadiusMeters, level,
-      broadcastPaths = true)
+    val cands = Polyline.pathCandidates(eps, segsCost, snapRadiusMeters)
     // nearest segment: struct-min (dist, path_id) — deterministic tiebreak
     val chosen = cands.groupBy(col("id"))
       .agg(min(struct(col("dist_m"), col("path_id"), col("node_a"),

@@ -67,11 +67,9 @@ object Sightline {
     * ~2x the radius — coarse enough for few cap cells, fine enough to prune. */
   private def levelFor(radius: Double): Int = {
     var l = 0
-    while (l < 16 && edgeMeters(l) > 2.0 * radius) l += 1
+    while (l < 16 && Polyline.cellEdgeMeters(l) > 2.0 * radius) l += 1
     l
   }
-  private def edgeMeters(level: Int): Double =
-    (math.Pi / 2.0) * Geo.EarthRadiusMeters / (1L << level)
 
   /** Spark operator: for each origin (id, lat, lng), the visibility polygon
     * against barrier segments drawn from region boundary edges within
@@ -99,7 +97,7 @@ object Sightline {
                  maxBarriers: Int = 200000): DataFrame = {
     import spark.implicits._
     val level = levelFor(radius)
-    val stepM = edgeMeters(level) / 2.0
+    val stepM = Polyline.sampleStepMeters(level)
     val originDf = origins.toDF("origin_id", "o_lat", "o_lng")
     val originCells = origins.flatMap { case (id, la, lo) =>
       S2.coveringAtLevel(
@@ -117,19 +115,8 @@ object Sightline {
         col("ring_lat")(col("i")).as("a_lat"), col("ring_lng")(col("i")).as("a_lng"),
         col("ring_lat")((col("i") + 1) % size(col("ring_lat"))).as("b_lat"),
         col("ring_lng")((col("i") + 1) % size(col("ring_lng"))).as("b_lng"))
-    val segCellsUdf = udf((aLat: Double, aLng: Double, bLat: Double, bLng: Double) => {
-      val lenM = Geo.haversineMeters(aLat, aLng, bLat, bLng)
-      val n = math.max(1, math.ceil(lenM / stepM).toInt)
-      val cells = scala.collection.mutable.LinkedHashSet.empty[Long]
-      var i = 0
-      while (i <= n) {
-        val f = i.toDouble / n
-        val (la, lo) = Geo.interpolate(Array(aLat, bLat), Array(aLng, bLng), f)
-        cells += S2.cellAt(la, lo, level)
-        i += 1
-      }
-      cells.toArray
-    })
+    val segCellsUdf = udf((aLat: Double, aLng: Double, bLat: Double, bLng: Double) =>
+      Polyline.sampleCells(Seq(aLat, bLat), Seq(aLng, bLng), level))
     val segCells = segs.withColumn("cell",
       explode(segCellsUdf(col("a_lat"), col("a_lng"), col("b_lat"), col("b_lng"))))
     val withOrigin = segCells.join(broadcast(originCells), "cell")

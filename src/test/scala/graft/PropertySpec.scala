@@ -235,6 +235,85 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("path sampler: the candidate cover holds every point within maxDist; rings sample every edge") {
+    import graft.ops.Polyline
+    val rnd = new scala.util.Random(47)
+    def dest(lat: Double, lng: Double, dM: Double, b: Double): (Double, Double) = {
+      val d = dM / Geo.EarthRadiusMeters
+      val p1 = math.toRadians(lat); val l1 = math.toRadians(lng)
+      val p2 = math.asin(math.sin(p1) * math.cos(d) + math.cos(p1) * math.sin(d) * math.cos(b))
+      val l2 = l1 + math.atan2(math.sin(b) * math.sin(d) * math.cos(p1),
+        math.cos(d) - math.sin(p1) * math.sin(p2))
+      (math.toDegrees(p2), math.toDegrees(l2))
+    }
+    // a random walk of n vertices, segments up to 3 km; with `zeroSeg` the
+    // second vertex repeats the first (a zero-length segment)
+    def walk(n: Int, zeroSeg: Boolean): (Array[Double], Array[Double]) = {
+      val pts = scala.collection.mutable.ArrayBuffer(
+        (-70 + 140 * rnd.nextDouble(), -175 + 350 * rnd.nextDouble()))
+      while (pts.length < n) {
+        val (la, lo) = pts.last
+        pts += (if (zeroSeg && pts.length == 1) (la, lo)
+          else dest(la, lo, 3000 * rnd.nextDouble(), 2 * math.Pi * rnd.nextDouble()))
+      }
+      (pts.map(_._1).toArray, pts.map(_._2).toArray)
+    }
+    var checked = 0
+    (0 until 80).foreach { t =>
+      val maxDist = 20 + 800 * rnd.nextDouble()
+      val (lats, lngs) = walk(if (t == 0) 1 else 2 + rnd.nextInt(5), zeroSeg = t % 3 == 1)
+      val cover = Polyline.candidateCover(lats.toSeq, lngs.toSeq, maxDist).toSet
+      // points every 1/64 of each geodesic segment (dense enough to land
+      // between samples), each pushed up to maxDist off the path
+      for (s <- 0 until math.max(1, lats.length - 1); q <- 0 to 64) {
+        val e = math.min(s + 1, lats.length - 1)
+        val f = q / 64.0
+        val (a, b) = (Geo.toXYZ(lats(s), lngs(s)), Geo.toXYZ(lats(e), lngs(e)))
+        val m = Array.tabulate(3)(k => (1 - f) * a(k) + f * b(k))
+        val norm = math.sqrt(m.map(x => x * x).sum)
+        val (bla, blo) = Geo.toLatLng(m.map(_ / norm))
+        val (pla, plo) = dest(bla, blo, maxDist * (0.8 + 0.2 * rnd.nextDouble()),
+          2 * math.Pi * rnd.nextDouble())
+        if (Polyline.distanceToPolylineMeters(pla, plo, lats, lngs) <= maxDist) {
+          checked += 1
+          assert(cover.contains(S2.cellAt(pla, plo, 12)),
+            s"point within $maxDist m of path $t has no covering cell")
+        }
+      }
+    }
+    assert(checked > 10000, s"too few in-range points checked: $checked")
+    // ring form: each vertex exactly, and the cell of every sample along
+    // each edge (the wrapping edge included) at most a step apart
+    val level = 13
+    val step = Polyline.sampleStepMeters(level)
+    (0 until 40).foreach { t =>
+      val (lats, lngs) = walk(3 + rnd.nextInt(4), zeroSeg = t % 4 == 0)
+      val visits = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
+      Polyline.samplePath(lats.toSeq, lngs.toSeq, level, closed = true)((la, lo) => visits += ((la, lo)))
+      val cells = Polyline.sampleCells(lats.toSeq, lngs.toSeq, level, closed = true).toSet
+      lats.indices.foreach { i =>
+        val k = (i + 1) % lats.length
+        val edge = (Array(lats(i), lats(k)), Array(lngs(i), lngs(k)))
+        val n = math.max(1, math.ceil(
+          Geo.haversineMeters(lats(i), lngs(i), lats(k), lngs(k)) / step).toInt)
+        val samples = (lats(i), lngs(i)) +:
+          (1 until n).map(j => Geo.interpolate(edge._1, edge._2, j.toDouble / n)) :+
+          ((lats(k), lngs(k)))
+        samples.sliding(2).foreach { case Seq((la1, lo1), (la2, lo2)) =>
+          assert(Geo.haversineMeters(la1, lo1, la2, lo2) <= step * 1.001)
+        }
+        samples.init.foreach { case (la, lo) =>
+          assert(cells.contains(S2.cellAt(la, lo, level)),
+            s"ring $t edge $i: sample ($la, $lo) has no cell")
+        }
+      }
+      assert(visits.length == lats.indices.map { i =>
+        val k = (i + 1) % lats.length
+        math.max(1, math.ceil(Geo.haversineMeters(lats(i), lngs(i), lats(k), lngs(k)) / step).toInt)
+      }.sum, s"ring $t: one vertex plus n-1 interior samples per edge")
+    }
+  }
+
   test("CellStore bucket spans are sound: every descendant's bucket is inside the ancestor's span") {
     // the store-backed batch-kNN probe reads only the buckets in
     // [bucketOf(rangeMin), bucketOf(rangeMax)] of each covering cell — a

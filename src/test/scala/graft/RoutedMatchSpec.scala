@@ -231,6 +231,18 @@ class RoutedMatchSpec extends AnyFunSuite with BeforeAndAfterAll {
     graft.ops.EngineCaches.releaseIterationSnapshots()
   }
 
+  test("distance-table bound fails loudly, naming the bound") {
+    // 6 network nodes each reach at least themselves: > 3 table rows
+    val e = intercept[IllegalStateException] {
+      MapMatch.viterbiMatchRouted(pts(fixes), segs, edges,
+        radiusMeters = 250.0, maxRouteMeters = 2000.0,
+        maxDistTableRows = 3)
+    }
+    assert(e.getMessage.contains("MORE THAN maxDistTableRows=3"))
+    assert(e.getMessage.contains("count truncated at the bound"))
+    graft.ops.EngineCaches.releaseIterationSnapshots()
+  }
+
   test("network-node bound fails loudly") {
     val e = intercept[IllegalStateException] {
       MapMatch.viterbiMatchRouted(pts(fixes), segs, edges,

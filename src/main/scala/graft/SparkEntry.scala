@@ -469,8 +469,8 @@ object SparkEntry {
 
     // --- §1.4 store MAINTENANCE: ingest-append (monoid stats merge, no
     //     store re-read) + small-file compaction (Iceberg
-    //     rewrite_data_files analogue: one cell-sorted file per bucket,
-    //     validated against HEAD's stats before it commits). The gate builds
+    //     rewrite_data_files analogue: HEAD rewritten into cell-sorted
+    //     files, validated against HEAD's stats before it commits). The gate builds
     //     the store as create + 2 appends, compacts (telemetry must show debt
     //     paid), then answers the SAME pruned kNN as q_store_knn — the
     //     oracle proves append+compact preserved content exactly ---
@@ -569,8 +569,9 @@ object SparkEntry {
     // --- Iceberg-role CHANGELOG (CDC / incremental scan): the row-level
     //     delta between two snapshots, classified insert/delete/update —
     //     what a training run that last consumed v1 reads instead of the
-    //     whole table. Only changed buckets are read; rewritten-but-
-    //     unchanged rows are filtered by the null-safe row compare. ---
+    //     whole table. Only the removed and added files are read;
+    //     rewritten-but-unchanged rows are filtered by the null-safe row
+    //     compare. ---
     Gate("q_store_changelog", (s, dir) => {
       val store = snapshotUpsertFixture(s, dir, "cdc")
       graft.lineage.SnapshotStore.changelog(s, store, 1, 2)

@@ -2,15 +2,16 @@ package graft.lineage
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The cell store's bucket layout — the SURVEY §1.4 "index" on plain
+/** The cell store's bucket key — the SURVEY §1.4 "index" on plain
   * parquet: the compact-index role of the reference's mmap file
   * (cell-ordered feature blocks,
   * /root/reference/src/diagonal.works/b6/ingest/compact/build.go:150-628)
-  * maps to bucketing rows by their S2 cell-id PREFIX (an id prefix is
-  * exactly a cell-range predicate, so a spatial query's covering ranges
-  * become a bucket set) plus per-bucket [min, max] stats consulted before
-  * any file is opened. Storage, commits, stats and pruned reads live in
-  * [[SnapshotStore]]; the two members below forward to its HEAD.
+  * maps to cell-sorted files whose manifest entries hold [min, max, rows]
+  * per S2 cell-id PREFIX bucket (an id prefix is exactly a cell-range
+  * predicate, so a spatial query's covering ranges become a bucket set),
+  * consulted before any file is opened. Storage, commits, stats and
+  * pruned reads live in [[SnapshotStore]]; the two members below forward
+  * to its HEAD.
   */
 object CellStore {
 
@@ -24,7 +25,7 @@ object CellStore {
   def write(df: DataFrame, dir: String, cellCol: String = "cell16"): Int =
     SnapshotStore.overwrite(df.sparkSession, df, dir, cellCol)
 
-  /** HEAD's per-bucket stats, from its manifest. */
+  /** HEAD's per-bucket stats, aggregated from its manifest's file entries. */
   def stats(spark: SparkSession, dir: String): Seq[BucketStat] =
     SnapshotStore.headManifest(spark, dir).stats
 }

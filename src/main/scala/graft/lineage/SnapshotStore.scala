@@ -1,7 +1,7 @@
 package graft.lineage
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
@@ -9,47 +9,47 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
-/** The cell store: snapshot-versioned, cell-bucketed parquet — the SURVEY
-  * §1.4 compact index (the reference's cell-ordered mmap world) in the
-  * Iceberg TABLE-FORMAT role (time travel, copy-on-write MERGE,
-  * compaction, snapshot expiry). [[CellStore]] holds the bucket layout;
-  * every store in the library is one of these tables.
+/** The cell store: snapshot-versioned, cell-sorted parquet — the SURVEY
+  * §1.4 compact index (the reference's cell-ordered blocks) in the Iceberg
+  * TABLE-FORMAT role (time travel, copy-on-write MERGE, compaction,
+  * snapshot expiry). [[CellStore]] holds the bucket key; every store in
+  * the library is one of these tables.
   *
-  * Layout: every COMMIT writes its files into its own immutable directory
-  * `dir/data_v{N}/_bucket=B/part-*.parquet`; the MANIFEST
-  * `dir/_snaps/v{N}.txt` lists the dir-relative files and their sizes
-  * (old commits' files carry into later manifests BY REFERENCE), the data
-  * schema and per-bucket stats, and `dir/_snaps/HEAD` names the current
-  * version. Commit = claim → write files → write manifest (tmp + rename)
-  * → swap HEAD. A reader holding version N is unaffected by later
-  * commits, and a crash before the HEAD swap leaves the previous snapshot
-  * plus unreferenced files (cleaned by [[expireSnapshots]]). This is
-  * Iceberg's metadata-pointer model minus the catalog (COVERAGE.md
-  * Iceberg declaration). Reads never list a directory: a read is a
-  * parquet relation over exactly the manifest's files, and range/bucket
-  * reads prune by the per-bucket [min, max] cell stats first.
+  * Layout: the FILE is the storage unit, the cell-prefix bucket the
+  * logical pruning key. Every COMMIT sorts its rows by cell and cuts them
+  * into max(1, ⌈rows / [[TargetRows]]⌉) files over disjoint cell ranges,
+  * in its own immutable directory `dir/data_v{N}/part-*.parquet`; the
+  * MANIFEST `dir/_snaps/v{N}.txt` lists the dir-relative files with their
+  * sizes, per-(file, bucket) [min, max, rows] entries and one key bloom
+  * per file (old commits' files carry into later manifests BY REFERENCE),
+  * plus the data schema; `dir/_snaps/HEAD` names the current version.
+  * Commit = claim → write files → write manifest (tmp + rename) → swap
+  * HEAD. A reader holding version N is unaffected by later commits, and a
+  * crash before the HEAD swap leaves the previous snapshot plus
+  * unreferenced files (cleaned by [[expireSnapshots]]). This is Iceberg's
+  * metadata-pointer model minus the catalog (COVERAGE.md Iceberg
+  * declaration). Reads never list a directory: a read is a parquet
+  * relation over exactly the manifest's files, and range/bucket reads
+  * open only the files holding an entry that qualifies.
   *
-  * MERGE ([[upsert]]) is copy-on-write at BUCKET granularity: buckets that
-  * may hold a matched key are found from the manifest's per-bucket key
-  * BLOOMS alone (the Iceberg file-bloom role), only the touched buckets'
-  * files are read for the rewrite (they are exactly the previous
-  * version's files missing from the new manifest), and every untouched
-  * bucket's files carry over by reference — merge cost scales with touched buckets, not table size.
-  * Deletes ride the delta as a boolean column; an update that MOVES a row
-  * to another cell is correct by construction (the old bucket is a victim
-  * by id, the new row lands in its own cell's bucket).
+  * MERGE ([[upsert]]) is copy-on-write at FILE granularity: the victim
+  * files that may hold a matched key are found from the manifest's file
+  * BLOOMS alone (the Iceberg file-bloom role), only victims are read and
+  * rewritten (they are exactly the previous version's files missing from
+  * the new manifest), and every other file carries over by reference —
+  * merge cost scales with the files the delta's keys hit, not table
+  * size. Deletes ride the delta as a boolean column; an update that
+  * MOVES a row to another cell is correct by construction (its old file
+  * is a victim by id, the new row lands in the commit's new files).
   */
 object SnapshotStore {
 
-  import CellStore.{BucketStat, PrefixBits}
+  import CellStore.BucketStat
 
   private def fsOf(spark: SparkSession, dir: String) = {
     val p = new Path(dir)
     (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
   }
-
-  private def bucketed(df: DataFrame, cellCol: String): DataFrame =
-    df.withColumn("_bucket", shiftrightunsigned(col(cellCol), 64 - PrefixBits))
 
   /** Data files under one subtree, as (dir-relative path, bytes). */
   private def listFilesUnder(spark: SparkSession, dir: String,
@@ -69,85 +69,79 @@ object SnapshotStore {
     out.result()
   }
 
-  /** `lastBatch`: the highest streaming micro-batch id committed (-1 when
-    * none), [[appendBatch]]'s idempotence cursor. `blooms`: per-bucket key
-    * Bloom filters (2048 bits / 3 hashes over `bloomCol`) that [[upsert]]
-    * probes instead of head files; a bucket without one is conservatively
-    * a victim. `sizes` (bytes per file) and `schema` (nullable, as a parquet
+  /** `entries`: per data file, one [min, max, rows] stat per bucket it
+    * holds rows of. `lastBatch`: the highest streaming micro-batch id
+    * committed (-1 when none), [[appendBatch]]'s idempotence cursor.
+    * `blooms`: per-file key Bloom filters over `bloomCol` that [[upsert]]
+    * probes instead of data files; a file without one is conservatively a
+    * victim. `sizes` (bytes per file) and `schema` (nullable, as a parquet
     * read infers it) spare a read its listing and footer inference; a
     * legacy manifest without them reads through `getFileStatus` and one
     * footer. */
   final case class Manifest(version: Int, files: Seq[String],
-                            stats: Seq[BucketStat], lastBatch: Long = -1L,
-                            blooms: Map[Long, Array[Long]] = Map.empty,
+                            entries: Map[String, Seq[BucketStat]], lastBatch: Long = -1L,
+                            blooms: Map[String, Array[Long]] = Map.empty,
                             bloomCol: Option[String] = None,
                             sizes: Map[String, Long] = Map.empty,
                             schema: Option[StructType] = None) {
+    /** Per-bucket stats: exact aggregates over the files' entries. */
+    lazy val stats: Seq[BucketStat] =
+      files.flatMap(entriesOf).groupBy(_.bucket).map { case (b, es) =>
+        BucketStat(b, es.map(_.cellMin).min, es.map(_.cellMax).max, es.map(_.rows).sum)
+      }.toSeq
+
     def buckets: Set[Long] = stats.map(_.bucket).toSet
 
     /** Buckets whose [min, max] overlaps any [lo, hi] cell range (e.g.
       * S2.rangeMin/rangeMax of a covering's cells). */
     def bucketsOverlapping(ranges: Seq[(Long, Long)]): Set[Long] =
-      stats.filter(b => ranges.exists { case (lo, hi) => b.cellMin <= hi && lo <= b.cellMax })
-        .map(_.bucket).toSet
+      stats.filter(overlaps(_, ranges)).map(_.bucket).toSet
+
+    private[lineage] def entriesOf(f: String): Seq[BucketStat] = entries.getOrElse(f, Nil)
+
+    /** The files holding an entry that satisfies `p`. */
+    private[lineage] def filesWhere(p: BucketStat => Boolean): Seq[String] =
+      files.filter(f => entriesOf(f).exists(p))
   }
 
-  private val BloomBits = 2048
-  private val BloomHashes = 3
+  private def overlaps(s: BucketStat, ranges: Seq[(Long, Long)]): Boolean =
+    ranges.exists { case (lo, hi) => s.cellMin <= hi && lo <= s.cellMax }
 
-  /** The 3 bloom bit positions of an id value — Spark-side xxhash64 on the
-    * salted string form, shared by the commit writer and the upsert probe
-    * (no driver-side hash reimplementation to drift). */
-  private def bloomPositions(idc: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column =
-    array((0 until BloomHashes).map(s =>
-      pmod(xxhash64(concat(idc.cast("string"), lit("#" + s))), lit(BloomBits))
-        .cast("int")): _*)
+  /** The manifest format [[commit]] writes; [[manifest]] reads 1 and 2. */
+  private val Format = 2
 
-  private def mightContain(bits: Array[Long], ps: Seq[Int]): Boolean =
-    ps.forall(p => (bits(p >> 6) & (1L << (p & 63))) != 0)
+  /** Rows per data file: a commit of n rows writes max(1, ⌈n / TargetRows⌉)
+    * files. */
+  private[graft] val TargetRows: Long = 1L << 20
 
-  /** Per-bucket stats AND key blooms in ONE pass: positions are exploded
-    * (x3 rows; the count divides back exactly) so aggregation state stays
-    * bounded — collect_set over <= 2048 scalar positions, never over raw
-    * keys. Blooms come back empty when `idCol` is absent. */
-  private def statsAndBlooms(df: DataFrame, cellCol: String, idCol: String)
-      : (Seq[BucketStat], Map[Long, Array[Long]]) = {
-    if (!df.columns.contains(idCol)) return (statsOf(df, cellCol), Map.empty)
-    val rows = bucketed(df, cellCol)
-      .select(col("_bucket"), col(cellCol).as("_cell"),
-        explode(bloomPositions(col(idCol))).as("p"))
-      .groupBy("_bucket")
-      .agg(min(col("_cell")).as("lo"), max(col("_cell")).as("hi"),
-        (count(lit(1)) / lit(3)).cast("long").as("n"),
-        collect_set(col("p")).as("ps"))
-      .collect()
-    val stats = rows.map(r =>
-      BucketStat(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    val blooms = rows.map { r =>
-      val bits = new Array[Long](BloomBits / 64)
-      r.getSeq[Int](4).foreach(p => bits(p >> 6) |= 1L << (p & 63))
-      r.getLong(0) -> bits
-    }.toMap
-    (stats, blooms)
+  /** A file bloom: 10 bits per key and 7 hashes, about 1% false positives. */
+  private val BloomBitsPerKey = 10
+  private val BloomHashes = 7
+
+  /** The key hash the file blooms hold — Spark-side xxhash64 of the
+    * string form (an int and a long id hash alike), shared by the commit
+    * writer and the upsert probe. */
+  private def keyHash(id: Column): Column = xxhash64(id.cast("string"))
+
+  /** Bit `i` of key hash `h` in an `m`-bit bloom: double hashing over the
+    * hash's two 32-bit halves. */
+  private def bloomBit(h: Long, i: Int, m: Long): Int =
+    Math.floorMod(h.toInt + i * (h >> 32), m).toInt
+
+  private def bloomOf(hashes: Seq[Long]): Array[Long] = {
+    val bits = new Array[Long](math.max(1, (hashes.size * BloomBitsPerKey + 63) / 64))
+    hashes.foreach(h => (0 until BloomHashes).foreach { i =>
+      val p = bloomBit(h, i, bits.length * 64L)
+      bits(p >> 6) |= 1L << (p & 63)
+    })
+    bits
   }
 
-  /** Blooms for the union of two commits' data: a bucket keeps a bloom ONLY
-    * when EVERY side contributing DATA to it contributed a bloom — a bucket
-    * with data but no bloom (legacy manifest, id-less frame) must STAY
-    * bloom-less, or a delta-only bloom would hide its older rows from
-    * victim discovery. */
-  private def mergeBlooms(aBlooms: Map[Long, Array[Long]], aData: Set[Long],
-                          bBlooms: Map[Long, Array[Long]], bData: Set[Long])
-      : Map[Long, Array[Long]] =
-    (aData ++ bData).iterator.flatMap { k =>
-      val x = aBlooms.get(k); val y = bBlooms.get(k)
-      if ((aData(k) && x.isEmpty) || (bData(k) && y.isEmpty)) None
-      else Some(k -> ((x, y) match {
-        case (Some(p), Some(q)) => Array.tabulate(BloomBits / 64)(i => p(i) | q(i))
-        case _ => x.orElse(y).get
-      }))
-    }.toMap
+  private def mightContain(bits: Array[Long], h: Long): Boolean =
+    (0 until BloomHashes).forall { i =>
+      val p = bloomBit(h, i, bits.length * 64L)
+      (bits(p >> 6) & (1L << (p & 63))) != 0
+    }
 
   private def bloomEncode(bits: Array[Long]): String = {
     val bb = java.nio.ByteBuffer.allocate(bits.length * 8)
@@ -175,10 +169,20 @@ object SnapshotStore {
 
   private def manifestPath(dir: String, v: Int) = new Path(s"$dir/_snaps/v$v.txt")
 
-  private def bucketOfFile(f: String): Long =
-    f.split("/").find(_.startsWith("_bucket="))
-      .map(_.stripPrefix("_bucket=").toLong)
-      .getOrElse(sys.error(s"SnapshotStore: unbucketed data file $f"))
+  /** Format-1 entries: each `_bucket=B/` file carries its bucket's
+    * [min, max] (a conservative range), and the bucket's rows sit on its
+    * first file, so the aggregates stay exact. */
+  private def format1Entries(files: Seq[String],
+                             stats: Seq[BucketStat]): Map[String, Seq[BucketStat]] = {
+    val byBucket = stats.map(s => s.bucket -> s).toMap
+    files.groupBy(f => f.split("/").find(_.startsWith("_bucket=")).map(_.stripPrefix("_bucket=").toLong)
+        .getOrElse(sys.error(s"SnapshotStore: format-1 data file $f has no _bucket= directory")))
+      .flatMap { case (b, fs) =>
+        val s = byBucket.getOrElse(b,
+          sys.error(s"SnapshotStore: format-1 bucket $b has files but no stat line"))
+        fs.sorted.zipWithIndex.map { case (f, i) => f -> Seq(if (i == 0) s else s.copy(rows = 0)) }
+      }
+  }
 
   /** A concurrent writer lost the optimistic race for `version`: its base
     * snapshot moved underneath it. append/appendBatch/upsert re-read HEAD on
@@ -212,10 +216,13 @@ object SnapshotStore {
     co.close()
   }
 
-  /** Manifest format: `version:N`, `batch:N`, optional `bloomcol:` and
-    * `schema:<json>` lines, then `stat:bucket,min,max,rows`,
-    * `bloom:bucket,<base64>` and `file:<relative path>,<bytes>` lines (a
-    * legacy `file:` line carries no size). Plain text keeps it
+  /** Manifest format 2: `version:N`, `format:2`, `batch:N`, optional
+    * `bloomcol:` and `schema:<json>` lines, then per file
+    * `file:<relative path>,<bytes>` (a legacy `file:` line carries no
+    * size), its `entry:bucket,min,max,rows,<path>` lines and its
+    * `fbloom:<base64>,<path>` line. Format 1 (no `format:` line) has
+    * `_bucket=B/` paths with per-bucket `stat:bucket,min,max,rows` and
+    * `bloom:bucket,<base64>` lines. Plain text keeps it
     * FileSystem-API-only (works on s3a the same as local) and
     * diff-readable. */
   private[graft] def commit(spark: SparkSession, dir: String, m: Manifest,
@@ -224,14 +231,14 @@ object SnapshotStore {
     fs.mkdirs(new Path(s"$dir/_snaps"))
     // claim FIRST unless the operation already holds it: the optimistic CAS
     if (!preClaimed) acquireClaim(spark, dir, m.version)
-    val body = (Seq(s"version:${m.version}", s"batch:${m.lastBatch}") ++
+    val body = (Seq(s"version:${m.version}", s"format:$Format", s"batch:${m.lastBatch}") ++
       m.bloomCol.map(c => s"bloomcol:$c").toSeq ++
       m.schema.map(s => s"schema:${s.json}").toSeq ++
-      m.stats.sortBy(_.bucket).map(s =>
-        s"stat:${s.bucket},${s.cellMin},${s.cellMax},${s.rows}") ++
-      m.blooms.toSeq.sortBy(_._1).map { case (b, bits) =>
-        s"bloom:$b,${bloomEncode(bits)}" } ++
-      m.files.sorted.map(f => s"file:$f" + m.sizes.get(f).fold("")(n => s",$n")))
+      m.files.sorted.flatMap(f =>
+        (s"file:$f" + m.sizes.get(f).fold("")(n => s",$n")) +:
+          m.entriesOf(f).sortBy(_.bucket).map(e =>
+            s"entry:${e.bucket},${e.cellMin},${e.cellMax},${e.rows},$f") ++:
+          m.blooms.get(f).map(bits => s"fbloom:${bloomEncode(bits)},$f").toSeq))
       .mkString("\n")
     val tmp = new Path(s"$dir/_snaps/v${m.version}.txt.tmp")
     val o = fs.create(tmp, true)
@@ -338,19 +345,28 @@ object SnapshotStore {
     require(v == version, s"manifest v$version carries version $v")
     def tagged(tag: String): Vector[String] =
       lines.collect { case l if l.startsWith(tag) => l.stripPrefix(tag) }
-    val stats = tagged("stat:").map { l =>
-      val Array(b, lo, hi, n) = l.split(",")
-      BucketStat(b.toLong, lo.toLong, hi.toLong, n.toLong)
-    }
+    val format = tagged("format:").headOption.fold(1)(_.trim.toInt)
+    require(format <= Format, s"manifest v$version has format $format; this reader knows <= $Format")
     val sized = tagged("file:").map { l =>
       val i = l.lastIndexOf(',')
       if (i < 0) (l, None) else (l.take(i), Some(l.drop(i + 1).toLong))
     }
-    val blooms = tagged("bloom:").map { l =>
-      val Array(b, enc) = l.split(",", 2)
-      b.toLong -> bloomDecode(enc)
-    }.toMap
-    Manifest(v, sized.map(_._1), stats,
+    val files = sized.map(_._1)
+    // format 1 had per-bucket blooms over another hash: its files carry
+    // none, so an upsert treats them as victims and rewrites them
+    val (entries, blooms) =
+      if (format == 1) (format1Entries(files, tagged("stat:").map { l =>
+        val Array(b, lo, hi, n) = l.split(",")
+        BucketStat(b.toLong, lo.toLong, hi.toLong, n.toLong)
+      }), Map.empty[String, Array[Long]])
+      else (tagged("entry:").map { l =>
+        val Array(b, lo, hi, n, f) = l.split(",", 5)
+        f -> BucketStat(b.toLong, lo.toLong, hi.toLong, n.toLong)
+      }.groupMap(_._1)(_._2), tagged("fbloom:").map { l =>
+        val Array(enc, f) = l.split(",", 2)
+        f -> bloomDecode(enc)
+      }.toMap)
+    Manifest(v, files, entries,
       tagged("batch:").headOption.fold(-1L)(_.trim.toLong), blooms,
       tagged("bloomcol:").headOption.map(_.trim),
       sized.collect { case (f, Some(n)) => f -> n }.toMap,
@@ -360,35 +376,60 @@ object SnapshotStore {
   def headManifest(spark: SparkSession, dir: String): Manifest =
     manifest(spark, dir, headVersion(spark, dir))
 
-  private def statsOf(df: DataFrame, cellCol: String): Seq[BucketStat] =
-    bucketed(df, cellCol).groupBy("_bucket")
-      .agg(min(col(cellCol)).as("lo"), max(col(cellCol)).as("hi"),
-        count(lit(1)).as("n"))
-      .collect()
-      .map(r => BucketStat(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toSeq
-
-  /** Write `df` as version `v`'s files, returned dir-relative with sizes;
-    * `oneFilePerBucket` (of n buckets) is the [[compact]] layout. */
-  private def writeCommitFiles(spark: SparkSession, df: DataFrame, dir: String,
-                               v: Int, cellCol: String,
-                               oneFilePerBucket: Option[Int] = None)
-      : (Seq[String], Map[String, Long]) = {
-    val b = bucketed(df, cellCol)
-    val laid = oneFilePerBucket.fold(b)(n =>
-      b.repartition(n, col("_bucket")).sortWithinPartitions(col(cellCol)))
+  /** Write `df` as version `v`'s data: max(1, ⌈rows / targetRows⌉) files
+    * over disjoint cell ranges, each sorted by cell (no rows, no files).
+    * Returns the files as a manifest fragment with their sizes, entries
+    * and, when `bloomCol` is a column of `df`, blooms. The entries and
+    * blooms come from one read-back aggregate over the new files only, so
+    * the driver receives one row per file. */
+  private def writeCommit(spark: SparkSession, df: DataFrame, dir: String, v: Int,
+                          cellCol: String, bloomCol: Option[String],
+                          targetRows: Long = TargetRows): Manifest = {
+    val none = Manifest(v, Nil, Map.empty, schema = dataSchema(df))
+    val rows = df.count()
+    if (rows == 0) return none
     // ErrorIfExists: a committer that lost the race must NOT clobber the
     // winner's immutable data directory — it surfaces as a commit conflict
-    try laid.write.mode(org.apache.spark.sql.SaveMode.ErrorIfExists)
-      .partitionBy("_bucket").parquet(s"$dir/data_v$v")
+    try df.repartitionByRange(((rows + targetRows - 1) / targetRows).toInt, col(cellCol))
+      .sortWithinPartitions(col(cellCol))
+      .write.mode(org.apache.spark.sql.SaveMode.ErrorIfExists).parquet(s"$dir/data_v$v")
     catch {
       case e: org.apache.spark.sql.AnalysisException
           if Option(e.getMessage).exists(_.toLowerCase.contains("already exists")) =>
         throw new CommitConflictException(v,
           s"data_v$v already written by a concurrent committer")
     }
-    val files = listFilesUnder(spark, dir, s"data_v$v")
-    (files.map(_._1), files.toMap)
+    val listed = listFilesUnder(spark, dir, s"data_v$v")
+    val written = none.copy(files = listed.map(_._1), sizes = listed.toMap)
+    val idc = bloomCol.filter(df.columns.contains)
+    // each file's cells and key hashes meet in one group; its entries and
+    // bloom are built there, executor-side
+    val entries = udf((cells: Seq[Long]) => cells.groupBy(CellStore.bucketOf).map { case (b, cs) =>
+      BucketStat(b, cs.min, cs.max, cs.size.toLong) }.toSeq)
+    val bloom = udf((hs: Seq[Long]) => bloomOf(hs))
+    val perFile = readFiles(spark, dir, written, written.files)
+      .select(input_file_name().as("f"), col(cellCol).as("c"),
+        idc.fold(lit(null).cast("long"))(c => keyHash(col(c))).as("h"))
+      .groupBy("f").agg(collect_list("c").as("cs"), collect_list("h").as("hs"))
+      .select(col("f"), entries(col("cs")), if (idc.isDefined) bloom(col("hs")) else lit(null))
+      .collect()
+    def rel(r: org.apache.spark.sql.Row) =
+      s"data_v$v/" + new Path(new java.net.URI(r.getString(0))).getName
+    written.copy(
+      entries = perFile.map(r => rel(r) -> r.getSeq[org.apache.spark.sql.Row](1).map(e =>
+        BucketStat(e.getLong(0), e.getLong(1), e.getLong(2), e.getLong(3)))).toMap,
+      blooms = perFile.collect { case r if !r.isNullAt(2) => rel(r) -> r.getSeq[Long](2).toArray }.toMap,
+      bloomCol = idc)
+  }
+
+  /** `prev` without the files in `drop`, plus the files `w` wrote, as
+    * version `w.version`. */
+  private def replaced(prev: Manifest, drop: Set[String], w: Manifest): Manifest = {
+    val blooms = prev.blooms -- drop ++ w.blooms
+    prev.copy(version = w.version, files = prev.files.filterNot(drop) ++ w.files,
+      entries = prev.entries -- drop ++ w.entries, blooms = blooms,
+      bloomCol = if (blooms.isEmpty) None else w.bloomCol.orElse(prev.bloomCol),
+      sizes = prev.sizes -- drop ++ w.sizes, schema = prev.schema.orElse(w.schema))
   }
 
   /** The bloom column every commit over this table must share: blooms are
@@ -414,21 +455,25 @@ object SnapshotStore {
     * exactly `df`. Earlier versions stay readable until [[expireSnapshots]]
     * — the bulk (re)load of a cell store. Returns the new version. */
   def overwrite(spark: SparkSession, df: DataFrame, dir: String,
-                cellCol: String = "cell16", idCol: String = "image_id"): Int = {
+                cellCol: String = "cell16", idCol: String = "image_id"): Int =
+    overwriteBy(spark, df, dir, cellCol, idCol)
+
+  /** [[overwrite]] cutting its files at `targetRows` rows. */
+  private[graft] def overwriteBy(spark: SparkSession, df: DataFrame, dir: String,
+                                 cellCol: String = "cell16", idCol: String = "image_id",
+                                 targetRows: Long = TargetRows): Int = {
     val head = recoveryHead(spark, dir)
-    val prev = Option.when(head > 0)(manifest(spark, dir, head))
+    val lastBatch = if (head > 0) manifest(spark, dir, head).lastBatch else -1L
     val v = head + 1
     acquireClaim(spark, dir, v)
-    val (files, sizes) = writeCommitFiles(spark, df, dir, v, cellCol)
-    val (stats, blooms) = statsAndBlooms(df, cellCol, idCol)
-    commit(spark, dir, Manifest(v, files, stats, prev.fold(-1L)(_.lastBatch),
-      blooms, Option.when(blooms.nonEmpty)(idCol), sizes, dataSchema(df)), preClaimed = true)
+    val w = writeCommit(spark, df, dir, v, cellCol, Some(idCol), targetRows)
+    commit(spark, dir, w.copy(lastBatch = lastBatch), preClaimed = true)
   }
 
-  /** Append-only commit: new files + monoid-merged stats (blooms OR-merge
-    * where BOTH sides carry one); prior files carry by reference, so the
-    * table is never re-read to admit a batch. Every append adds files
-    * ([[compact]] pays that debt down). Returns the new version. */
+  /** Append-only commit: the delta's own files, entries and blooms join
+    * the manifest; prior files carry by reference, so the table is never
+    * re-read to admit a batch. Every append adds files ([[compact]] pays
+    * that debt down). Returns the new version. */
   def append(spark: SparkSession, delta: DataFrame, dir: String,
              cellCol: String = "cell16", idCol: String = "image_id"): Int =
     appendCommit(spark, delta, dir, None, cellCol, idCol).get
@@ -454,18 +499,9 @@ object SnapshotStore {
     requireBloomCol(prev, idCol, if (batchId.isEmpty) "append" else "appendBatch")
     val v = prev.version + 1
     acquireClaim(spark, dir, v)
-    val (files, sizes) = writeCommitFiles(spark, delta, dir, v, cellCol)
-    val (deltaStats, deltaBlooms) = statsAndBlooms(delta, cellCol, idCol)
-    val merged = (prev.stats ++ deltaStats).groupBy(_.bucket)
-      .map { case (b, ss) =>
-        BucketStat(b, ss.map(_.cellMin).min, ss.map(_.cellMax).max, ss.map(_.rows).sum)
-      }.toSeq
-    val blooms = mergeBlooms(prev.blooms, prev.buckets,
-      deltaBlooms, deltaStats.map(_.bucket).toSet)
-    Some(commit(spark, dir, Manifest(v, prev.files ++ files, merged,
-      batchId.getOrElse(prev.lastBatch), blooms, Option.when(blooms.nonEmpty)(idCol),
-      prev.sizes ++ sizes, prev.schema.orElse(dataSchema(delta))),
-      preClaimed = true))
+    val w = writeCommit(spark, delta, dir, v, cellCol, Some(idCol))
+    Some(commit(spark, dir, replaced(prev, Set.empty, w)
+      .copy(lastBatch = batchId.getOrElse(prev.lastBatch)), preClaimed = true))
   }
 
   /** Attach a stream to the table: every micro-batch commits one snapshot
@@ -484,10 +520,11 @@ object SnapshotStore {
   /** Copy-on-write MERGE (Iceberg `MERGE INTO` role): every store row whose
     * `idCol` matches a delta row is REPLACED (or DELETED when `deletedCol`
     * is true); non-deleted delta rows are written (matched = the
-    * replacement, unmatched = an insert); only touched buckets rewrite.
-    * The delta is an ingest-batch-sized frame (broadcast in the anti-join);
-    * a table-sized delta wants the real Iceberg MERGE. Returns the new
-    * version. */
+    * replacement, unmatched = an insert). Only the victim files are read
+    * and rewritten, together with the delta's rows, into the commit's new
+    * files. The delta is an ingest-batch-sized frame (broadcast in the
+    * anti-join); a table-sized delta wants the real Iceberg MERGE. Returns
+    * the new version. */
   def upsert(spark: SparkSession, delta: DataFrame, dir: String,
              idCol: String = "image_id", cellCol: String = "cell16",
              deletedCol: Option[String] = None): Int = {
@@ -495,75 +532,58 @@ object SnapshotStore {
     requireBloomCol(prev, idCol, "upsert")
     val v = prev.version + 1
     acquireClaim(spark, dir, v)
-    val head = readFiles(spark, dir, prev, prev.files)
-    val deltaKeys = delta.select(col(idCol)).distinct()
-    // victim buckets from the MANIFEST BLOOMS alone: each delta key's bloom
-    // positions are probed against every bucket's bitset executor-side, so
-    // the driver receives at most one row per bucket and no head file is
-    // read. A bucket with no bloom is conservatively a victim; false
-    // positives only widen the rewrite, never change content.
+    // victim files from the MANIFEST BLOOMS alone: each delta key's hash is
+    // probed against every file's bloom executor-side, so the driver
+    // receives at most one row per file and no data file is read. A file
+    // with no bloom is conservatively a victim; false positives only widen
+    // the rewrite, never change content.
     val blooms = prev.blooms
-    val probe = udf((ps: Seq[Int]) =>
-      blooms.collect { case (b, bits) if mightContain(bits, ps) => b }.toSeq)
-    val bloomHits = delta.select(explode(probe(bloomPositions(col(idCol)))).as("_b"))
-      .groupBy("_b").agg(count(lit(1))).collect().map(_.getLong(0)).toSet
-    val victims = prev.buckets.filter(b => !blooms.contains(b) || bloomHits(b))
-    val survivors0 = deletedCol match {
+    val hits =
+      if (blooms.isEmpty) Set.empty[String]
+      else {
+        val probe = udf((h: Long) =>
+          blooms.collect { case (f, bits) if mightContain(bits, h) => f }.toSeq)
+        delta.select(explode(probe(keyHash(col(idCol)))).as("f"))
+          .groupBy("f").agg(count(lit(1))).collect().map(_.getString(0)).toSet
+      }
+    val victims = prev.files.filter(f => !blooms.contains(f) || hits(f))
+    val old = readFiles(spark, dir, prev, victims)
+    val survivors = (deletedCol match {
       case Some(d) => delta.where(!coalesce(col(d), lit(false))).drop(d)
       case None => delta
-    }
-    val survivors = survivors0.select(head.columns.map(col): _*)
-    val targets = statsOf(survivors, cellCol).map(_.bucket).toSet
-    val touched = victims ++ targets
-    // the rewrite reads ONLY the touched buckets' FILES (manifest-level
-    // pruning — the head scan the blooms exist to avoid); they are the
-    // files of `prev` that the new manifest drops
-    val touchedFiles = prev.files.filter(f => touched.contains(bucketOfFile(f)))
-    val keptOld = readFiles(spark, dir, prev, touchedFiles)
-      .join(broadcast(deltaKeys), Seq(idCol), "left_anti")
-    val (newFiles, newSizes) =
-      writeCommitFiles(spark, keptOld.unionByName(survivors), dir, v, cellCol)
-    val carried = prev.files.filterNot(f => touched.contains(bucketOfFile(f)))
-    val next = prev.copy(version = v, files = carried ++ newFiles,
-      sizes = prev.sizes ++ newSizes, schema = Some(head.schema))
-    // a delete-only MERGE can empty every touched bucket: no file was
-    // written, and the read-back is an empty frame with empty stats
-    val (newStats, newBlooms) =
-      statsAndBlooms(readFiles(spark, dir, next, newFiles), cellCol, idCol)
-    val stats = prev.stats.filterNot(s => touched.contains(s.bucket)) ++ newStats
-    val keptBlooms = blooms.view.filterKeys(!touched.contains(_)).toMap ++ newBlooms
-    commit(spark, dir, next.copy(stats = stats, blooms = keptBlooms,
-      bloomCol = Option.when(keptBlooms.nonEmpty)(idCol)), preClaimed = true)
+    }).select(old.columns.map(col): _*)
+    val kept = old.join(broadcast(delta.select(col(idCol)).distinct()), Seq(idCol), "left_anti")
+    val w = writeCommit(spark, kept.unionByName(survivors), dir, v, cellCol, Some(idCol))
+    commit(spark, dir, replaced(prev, victims.toSet, w), preClaimed = true)
   }
 
   /** Small-file compaction as a commit — the Iceberg `rewrite_data_files` +
-    * sort-order pass: HEAD's content is rewritten into one cell-SORTED file
-    * per bucket (sorted data also gives parquet row-group min/max stats
-    * that prune FINER than the bucket grain) and committed as the next
-    * version; earlier versions keep their own files until
-    * [[expireSnapshots]]. The rewrite's recomputed stats (rows, min and max
-    * per bucket) must equal HEAD's before the commit: on a mismatch the
-    * claim and data directory are released, HEAD is untouched, and the call
-    * fails. Returns per-bucket telemetry (bucket, files_before, files_after,
-    * rows) from the two manifests. */
+    * sort-order pass: HEAD's content is rewritten through the commit
+    * writer, into max(1, ⌈rows / TargetRows⌉) cell-sorted files, and
+    * committed as the next version; earlier versions keep their own files
+    * until [[expireSnapshots]]. The rewrite's stats (rows, min and max per
+    * bucket, from its read-back) must equal HEAD's before the commit: on a
+    * mismatch the claim and data directory are released, HEAD is
+    * untouched, and the call fails. Returns per-bucket telemetry (bucket,
+    * files_before, files_after, rows) from the two manifests, a file
+    * counting in every bucket it holds an entry for. */
   def compact(spark: SparkSession, dir: String, cellCol: String = "cell16"): DataFrame = {
     val prev = headManifest(spark, dir)
     val v = prev.version + 1
     acquireClaim(spark, dir, v)
-    val (files, sizes) = writeCommitFiles(spark, readFiles(spark, dir, prev, prev.files), dir, v,
-      cellCol, oneFilePerBucket = Some(math.max(1, prev.stats.size)))
-    val next = prev.copy(version = v, files = files, sizes = sizes)
-    val got = statsOf(readFiles(spark, dir, next, files), cellCol).toSet
+    val w = writeCommit(spark, readFiles(spark, dir, prev, prev.files), dir, v, cellCol,
+      prev.bloomCol)
+    val next = replaced(prev, prev.files.toSet, w)
+    val got = next.stats.toSet
     if (got != prev.stats.toSet) {
       releaseFailedCommit(spark, dir, v)
       throw new IllegalStateException(s"compact: rewrite stats ${got -- prev.stats} differ " +
         s"from HEAD's ${prev.stats.toSet -- got}; HEAD left at v${prev.version}")
     }
     commit(spark, dir, next, preClaimed = true)
-    def nFiles(ls: Seq[String], b: Long) = ls.count(bucketOfFile(_) == b).toLong
+    def nFiles(m: Manifest, b: Long) = m.filesWhere(_.bucket == b).size.toLong
     import spark.implicits._
-    prev.stats.sortBy(_.bucket).map(s =>
-      (s.bucket, nFiles(prev.files, s.bucket), nFiles(files, s.bucket), s.rows))
+    prev.stats.sortBy(_.bucket).map(s => (s.bucket, nFiles(prev, s.bucket), nFiles(next, s.bucket), s.rows))
       .toDF("bucket", "files_before", "files_after", "rows")
   }
 
@@ -614,45 +634,42 @@ object SnapshotStore {
   def read(spark: SparkSession, dir: String): DataFrame =
     readVersion(spark, dir, headVersion(spark, dir))
 
-  /** The listed buckets of snapshot `m` (those it holds): an iterative
-    * reader pins one manifest per call and reads every round through it.
-    * Returns (frame, buckets read). */
+  /** The files of snapshot `m` holding an entry in `buckets`: an
+    * iterative reader pins one manifest per call and reads every round
+    * through it. Returns (frame, buckets read). */
   def readBuckets(spark: SparkSession, dir: String, m: Manifest,
                   buckets: Set[Long]): (DataFrame, Int) = {
     val keep = m.buckets.filter(buckets)
-    (readFiles(spark, dir, m, m.files.filter(f => keep(bucketOfFile(f)))), keep.size)
+    (readFiles(spark, dir, m, m.filesWhere(e => keep(e.bucket))), keep.size)
   }
 
-  /** Snapshot-scoped range pruning: the buckets of `version` whose stats
-    * overlap any [lo, hi] cell range. Returns (frame, buckets read). */
+  /** Snapshot-scoped range pruning: the files of `version` holding an
+    * entry whose [min, max] overlaps any [lo, hi] cell range. Returns
+    * (frame, buckets whose stats overlap a range). */
   def readRanges(spark: SparkSession, dir: String, version: Int,
                  ranges: Seq[(Long, Long)]): (DataFrame, Int) = {
     val m = manifest(spark, dir, version)
-    readBuckets(spark, dir, m, m.bucketsOverlapping(ranges))
+    (readFiles(spark, dir, m, m.filesWhere(overlaps(_, ranges))),
+      m.bucketsOverlapping(ranges).size)
   }
 
   /** Changelog between two snapshots — the Iceberg CDC / incremental-scan
     * role: the row-level delta a downstream consumer (a training run that
     * last saw `fromV`) needs, classified as insert / delete / update
     * (update emits the NEW row). Cost scales with CHANGED DATA, not table
-    * size: buckets whose file sets are identical in both manifests cannot
-    * contain a change (files are immutable, CoW rewrites whole buckets),
-    * so only differing buckets' files are read and key-joined; unchanged
-    * rows inside a rewritten bucket are filtered by a null-safe full-row
-    * compare. Appends surface as pure inserts (their buckets gain files).
-    * Output: every data column of the surviving side + `op` STRING. */
+    * size: a file in both manifests cannot contain a change (files are
+    * immutable), so only the files `fromV` holds and `toV` does not are
+    * key-joined against the files `toV` added; rows a copy-on-write commit
+    * rewrote unchanged are filtered by a null-safe full-row compare.
+    * Appends surface as pure inserts (they only add files). Output: every
+    * data column of the surviving side + `op` STRING. */
   def changelog(spark: SparkSession, dir: String, fromV: Int, toV: Int,
                 idCol: String = "image_id"): DataFrame = {
     require(fromV < toV, s"changelog: fromV=$fromV must precede toV=$toV")
     val mA = manifest(spark, dir, fromV)
     val mB = manifest(spark, dir, toV)
-    val changed = (mA.files.toSet union mB.files.toSet) --
-      (mA.files.toSet intersect mB.files.toSet)
-    val buckets = changed.map(bucketOfFile)
-    def side(m: Manifest): DataFrame =
-      readFiles(spark, dir, m, m.files.filter(f => buckets.contains(bucketOfFile(f))))
-    val oldS = side(mA)
-    val newS = side(mB)
+    val oldS = readFiles(spark, dir, mA, mA.files.filterNot(mB.files.toSet))
+    val newS = readFiles(spark, dir, mB, mB.files.filterNot(mA.files.toSet))
     val dataCols = newS.columns.toSeq
     val o = oldS.select(dataCols.map(c => col(c).as(s"_o_$c")): _*)
     val n = newS.select(dataCols.map(c => col(c).as(s"_n_$c")): _*)

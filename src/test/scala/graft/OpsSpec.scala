@@ -764,6 +764,28 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got == want && got.nonEmpty)
   }
 
+  test("cell store: a regional range read over a multi-file store opens strictly fewer files") {
+    import graft.core.{Geo, S2}
+    import graft.lineage.SnapshotStore
+    val dir = java.nio.file.Files.createTempDirectory("cellstore_files").toString
+    val images = Tables.images(spark, "/root/testdata/sf0.01").select("image_id", "lat", "lng", "cell16")
+    // a small cut: at the default one the fixture is a single file
+    SnapshotStore.overwriteBy(spark, images, dir, targetRows = math.max(1L, images.count() / 16))
+    val head = SnapshotStore.headManifest(spark, dir)
+    assert(head.files.size >= 8, s"fixture must span several files, has ${head.files.size}")
+    val (cLat, cLng) = Synth.hotCenters(0)
+    val cov = S2.covering(S2.Cap(Geo.toXYZ(cLat, cLng), 100000.0 / Geo.EarthRadiusMeters))
+    val ranges = cov.map(c => (S2.rangeMin(c), S2.rangeMax(c))).toSeq
+    val (pruned, _) = SnapshotStore.readRanges(spark, dir, head.version, ranges)
+    val read = pruned.inputFiles.length
+    assert(read > 0 && read < head.files.size, s"pruning must skip files ($read of ${head.files.size})")
+    val inCap = graft.functions.Udfs.haversineMeters(
+      col("lat"), col("lng"), lit(cLat), lit(cLng)) <= 100000.0
+    val got = pruned.where(inCap).select("image_id").collect().map(_.getLong(0)).toSet
+    val want = images.where(inCap).select("image_id").collect().map(_.getLong(0)).toSet
+    assert(got == want && got.nonEmpty)
+  }
+
   test("cell store: append merges stats; compact pays file debt, preserves content + pruning") {
     import graft.core.{Geo, S2}
     import graft.lineage.{CellStore, SnapshotStore}

@@ -5,10 +5,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
+import scala.jdk.CollectionConverters._
 
 /** Snapshot-versioned store (Iceberg table-format role): time-travel
-  * isolation, bucket-granular copy-on-write (untouched files carried BY
-  * REFERENCE), snapshot-scoped pruning, expiry, loud contracts. */
+  * isolation, file-granular copy-on-write (untouched files carried BY
+  * REFERENCE), the cell-sorted file cut and its blooms, format-1 reads,
+  * snapshot-scoped pruning, expiry, loud contracts. */
 class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -26,6 +28,30 @@ class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (fs.exists(p)) fs.delete(p, true)
     d
+  }
+
+  /** `n` rows, ids 0 until n, spread over the globe by two golden-ratio
+    * sequences: many buckets, distinct cells. */
+  private def spread(n: Long): DataFrame =
+    spark.range(n).select(col("id").as("image_id"), lit("a").as("status"),
+      (lit(-80.0) + lit(160.0) * ((col("id") * 0.6180339887) % 1.0)).as("lat"),
+      (lit(-180.0) + lit(360.0) * ((col("id") * 0.7548776662) % 1.0)).as("lng"))
+      .withColumn("cell16", graft.functions.S2Expressions.s2Cell16(col("lat"), col("lng")))
+
+  /** The store's key hash restated: xxhash64 of the id's string form. */
+  private def keyHashes(ids: Seq[Long]): Seq[Long] = {
+    import spark.implicits._
+    ids.toDF("id").select(xxhash64(col("id").cast("string"))).collect().map(_.getLong(0)).toSeq
+  }
+
+  /** The file bloom's probe restated: 7 bits by double hashing over the
+    * hash's 32-bit halves, in a bitset of 64 x its word count. */
+  private def admits(bits: Array[Long], h: Long): Boolean = {
+    val m = bits.length * 64L
+    (0 until 7).forall { i =>
+      val p = Math.floorMod(h.toInt + i * (h >> 32), m)
+      ((bits((p >> 6).toInt) >>> (p & 63)) & 1L) == 1L
+    }
   }
 
   // rows spread across two far-apart buckets: London-ish and Sydney-ish
@@ -104,7 +130,9 @@ class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("copy-on-write is bucket-granular: untouched files carry by reference") {
     val dir = freshDir("cow")
-    SnapshotStore.create(spark, rows(1L to 20L, "a"), dir)
+    // cut at 10 rows: the 10 London and the 10 Sydney rows in their own files
+    SnapshotStore.overwriteBy(spark, rows(1L to 20L, "a"), dir, targetRows = 10)
+    assert(SnapshotStore.manifest(spark, dir, 1).files.size == 2)
     // delta touches ONLY the London bucket (even ids)
     val delta = rows(Seq(2L), "u").withColumn("_deleted", lit(false))
     SnapshotStore.upsert(spark, delta, dir, deletedCol = Some("_deleted"))
@@ -112,7 +140,7 @@ class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     val m2 = SnapshotStore.manifest(spark, dir, 2)
     val carried = m2.files.toSet intersect m1.files.toSet
     assert(carried.nonEmpty, "no v1 file carried by reference into v2")
-    // the touched bucket's files must differ (rewritten)
+    // the touched file must differ (rewritten)
     assert(m2.files.toSet != m1.files.toSet)
     // row content is the CoW result
     assert(content(SnapshotStore.read(spark, dir)) ==
@@ -281,8 +309,8 @@ class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       m1.copy(version = 2, blooms = Map.empty, bloomCol = None))
     SnapshotStore.append(spark, rows(Seq(12L), "b"), dir)
     val m3 = SnapshotStore.manifest(spark, dir, 3)
-    assert(m3.blooms.isEmpty,
-      "buckets with pre-bloom data must carry no bloom after the merge")
+    assert(m3.blooms.nonEmpty && m1.files.forall(f => !m3.blooms.contains(f)),
+      "files with pre-bloom data must carry no bloom after the append")
     // the behavioral stake: deleting a pre-bloom row must still land
     val delta = rows(Seq(2L), "x").withColumn("_deleted", lit(true))
     SnapshotStore.upsert(spark, delta, dir, deletedCol = Some("_deleted"))
@@ -392,7 +420,8 @@ class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     // Discovery.threshold (32) with a job of one task per path; a manifest
     // read must plan from the manifest alone at any file count
     val many = freshDir("manyfiles")
-    SnapshotStore.create(spark, rows(1L to 200L, "a").repartition(24), many)
+    // ids 1..200 at distinct cells, cut at 5 rows: 40 files
+    SnapshotStore.overwriteBy(spark, spread(201).where(col("image_id") > 0), many, targetRows = 5)
     val m = SnapshotStore.manifest(spark, many, 1)
     assert(m.files.size > 32, s"fixture must exceed 32 files, has ${m.files.size}")
     val one = freshDir("onefile")
@@ -424,9 +453,9 @@ class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     val summary = SnapshotStore.compact(spark, dir).collect()
     val post = SnapshotStore.headManifest(spark, dir)
     assert(post.version == pre.version + 1)
-    assert(post.files.groupBy(_.split("/")(1)).values.forall(_.size == 1))
-    assert(post.files.size == post.stats.size && post.stats.toSet == pre.stats.toSet)
-    assert(summary.map(_.getLong(1)).sum == pre.files.size.toLong)
+    // 30 rows: one cell-sorted file holding every bucket
+    assert(post.files.size == 1 && post.stats.toSet == pre.stats.toSet)
+    assert(summary.map(_.getLong(1)).sum == pre.entries.values.map(_.size).sum.toLong)
     assert(summary.forall(_.getLong(2) == 1L))
     assert(content(SnapshotStore.read(spark, dir)) == want)
     // the pre-compact snapshot still reads exactly its own files
@@ -439,9 +468,9 @@ class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = freshDir("compactbad")
     SnapshotStore.create(spark, rows(1L to 10L, "a"), dir)
     val m1 = SnapshotStore.manifest(spark, dir, 1)
-    // a v2 whose stats claim one row more per bucket than its files hold
-    SnapshotStore.commit(spark, dir,
-      m1.copy(version = 2, stats = m1.stats.map(b => b.copy(rows = b.rows + 1))))
+    // a v2 whose entries claim one row more per bucket than its files hold
+    SnapshotStore.commit(spark, dir, m1.copy(version = 2,
+      entries = m1.entries.map { case (f, es) => f -> es.map(b => b.copy(rows = b.rows + 1)) }))
     val e = intercept[IllegalStateException](SnapshotStore.compact(spark, dir))
     assert(e.getMessage.contains("HEAD left at v2"))
     assert(SnapshotStore.headVersion(spark, dir) == 2)
@@ -480,10 +509,12 @@ class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("bloom prune: a targeted delta reads fewer head files than the snapshot holds") {
     // VERDICT r04 #6: victim discovery is manifest-bloom-only and the
-    // rewrite reads ONLY touched buckets' files — on a one-bucket delta the
+    // rewrite reads ONLY the victim files — on a one-bucket delta the
     // manifest diff must show a strict subset
     val dir = freshDir("bloom")
-    SnapshotStore.create(spark, rows(1L to 20L, "a"), dir) // two buckets
+    // two buckets in two commits' files: London (even ids), Sydney (odd)
+    SnapshotStore.create(spark, rows((1L to 20L).filter(_ % 2 == 0), "a"), dir)
+    SnapshotStore.append(spark, rows((1L to 20L).filter(_ % 2 == 1), "a"), dir)
     val delta = rows(Seq(2L), "u").withColumn("_deleted", lit(false))
     val v = SnapshotStore.upsert(spark, delta, dir, deletedCol = Some("_deleted"))
     // the files of v-1 missing from v are exactly the touched files read
@@ -510,5 +541,117 @@ class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the emptied bucket's stats are gone from the manifest
     val m = SnapshotStore.manifest(spark, dir, v)
     assert(m.stats.map(_.rows).sum == 1L)
+  }
+
+  test("a commit cut at T rows writes ceil(rows / T) cell-sorted files over disjoint ranges") {
+    import CellStore.BucketStat
+    val dir = freshDir("cut")
+    val df = spread(1000)
+    SnapshotStore.overwriteBy(spark, df, dir, targetRows = 128)
+    val m = SnapshotStore.manifest(spark, dir, 1)
+    assert(m.files.size == 8, s"1000 rows cut at 128 wrote ${m.files.size} files")
+    // each file, read alone, is sorted by cell and its entries are its own
+    // per-bucket recompute
+    val ranges = m.files.map { f =>
+      val cells = spark.read.parquet(s"$dir/$f").select("cell16").collect().map(_.getLong(0)).toSeq
+      assert(cells.nonEmpty && cells == cells.sorted, s"$f is not cell-sorted")
+      assert(m.entries(f).toSet == cells.groupBy(CellStore.bucketOf).map { case (b, cs) =>
+        BucketStat(b, cs.min, cs.max, cs.size.toLong) }.toSet, s"$f entries")
+      (cells.head, cells.last)
+    }.sortBy(_._1)
+    assert(ranges.sliding(2).forall { case Seq(a, b) => a._2 < b._1 }, s"ranges overlap: $ranges")
+    // stats equal a one-shot recompute over the frame
+    val oneShot = df.groupBy(shiftrightunsigned(col("cell16"), 64 - CellStore.PrefixBits))
+      .agg(min("cell16"), max("cell16"), count(lit(1))).collect()
+      .map(r => BucketStat(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    assert(oneShot.size > 8 && m.stats.toSet == oneShot)
+    assert(content(SnapshotStore.read(spark, dir)) == (0L until 1000L).map(i => (i, "a")).toSet)
+  }
+
+  test("file blooms from 1k and 10k keys show <= 2% false positives over 10k absent keys") {
+    val absent = keyHashes(1000000L until 1010000L)
+    Seq(1000L, 10000L).foreach { n =>
+      val dir = freshDir(s"fpp$n")
+      SnapshotStore.create(spark, spread(n), dir)
+      val m = SnapshotStore.manifest(spark, dir, 1)
+      assert(m.files.size == 1 && m.bloomCol.contains("image_id"))
+      val bits = m.blooms(m.files.head)
+      // sized from the file's own row count: 10 bits per key
+      assert(bits.length == (10 * n + 63) / 64, s"${bits.length} words for $n keys")
+      assert(keyHashes(0L until n).forall(admits(bits, _)), s"a present key missed at $n keys")
+      val fp = absent.count(admits(bits, _))
+      assert(fp <= 200, s"$fp false positives of 10000 at $n keys")
+    }
+  }
+
+  test("a 20-key upsert into a 50k-row, 8-file table rewrites exactly the files whose blooms admit a key") {
+    val dir = freshDir("upsert50k")
+    val base = spread(50000)
+    SnapshotStore.overwriteBy(spark, base, dir, targetRows = 6250)
+    val m1 = SnapshotStore.manifest(spark, dir, 1)
+    assert(m1.files.size == 8 && m1.blooms.keySet == m1.files.toSet)
+    // 20 keys from one place: the 20 smallest cells
+    val keys = base.orderBy("cell16").limit(20).select("image_id").collect().map(_.getLong(0)).toSeq
+    val delta = base.where(col("image_id").isin(keys: _*)).withColumn("status", lit("u"))
+    val v = SnapshotStore.upsert(spark, delta, dir)
+    val rewritten = m1.files.toSet -- SnapshotStore.manifest(spark, dir, v).files
+    // the set the manifest blooms admit, probed here over the restated hash
+    val hs = keyHashes(keys)
+    val admitted = m1.files.filter(f => hs.exists(admits(m1.blooms(f), _))).toSet
+    assert(rewritten == admitted)
+    assert(rewritten.size < m1.files.size, s"rewrote ${rewritten.size} of ${m1.files.size} files")
+    // every file that holds a key is among them
+    val holding = spark.read.parquet(m1.files.map(f => s"$dir/$f"): _*)
+      .where(col("image_id").isin(keys: _*)).select(input_file_name()).distinct().collect()
+      .map(r => new org.apache.hadoop.fs.Path(new java.net.URI(r.getString(0))).getName).toSet
+    assert(holding.nonEmpty && holding.subsetOf(rewritten.map(_.split("/").last)))
+    assert(content(SnapshotStore.read(spark, dir)) ==
+      (0L until 50000L).map(i => (i, if (keys.contains(i)) "u" else "a")).toSet)
+  }
+
+  test("a format-1 table (per-bucket directories, stats and blooms) reads, appends and upserts") {
+    import CellStore.BucketStat
+    val dir = freshDir("format1")
+    val base = rows(1L to 10L, "a")
+    val bucket = shiftrightunsigned(col("cell16"), 64 - CellStore.PrefixBits)
+    base.withColumn("_bucket", bucket).write.partitionBy("_bucket").parquet(s"$dir/data_v1")
+    val root = java.nio.file.Paths.get(dir)
+    val files = {
+      val walk = java.nio.file.Files.walk(root.resolve("data_v1"))
+      try walk.iterator().asScala.map(root.relativize(_).toString)
+        .filter(_.endsWith(".parquet")).toVector.sorted
+      finally walk.close()
+    }
+    val stats = base.groupBy(bucket).agg(min("cell16"), max("cell16"), count(lit(1))).collect()
+      .map(r => BucketStat(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+    assert(stats.size == 2 && files.forall(_.contains("/_bucket=")))
+    // the format-1 text: no format line, stat/bloom lines per bucket, file
+    // lines without sizes or schema. Each bucket's bloom is all zero bits:
+    // a reader that probed it would find no victim and skip the delete.
+    val zeroBloom = java.util.Base64.getEncoder.encodeToString(new Array[Byte](256))
+    val text = (Seq("version:1", "batch:-1", "bloomcol:image_id") ++
+      stats.map(s => s"stat:${s.bucket},${s.cellMin},${s.cellMax},${s.rows}") ++
+      stats.map(s => s"bloom:${s.bucket},$zeroBloom") ++ files.map(f => s"file:$f")).mkString("\n")
+    java.nio.file.Files.createDirectories(root.resolve("_snaps"))
+    java.nio.file.Files.write(root.resolve("_snaps/v1.txt"), text.getBytes("UTF-8"))
+    java.nio.file.Files.write(root.resolve("_snaps/HEAD"), "1".getBytes("UTF-8"))
+    val want = (1L to 10L).map(i => (i, "a")).toSet
+    assert(content(SnapshotStore.read(spark, dir)) == want)
+    assert(SnapshotStore.manifest(spark, dir, 1).stats.toSet == stats.toSet)
+    // a range read of one bucket opens only that bucket's directory
+    val b0 = stats.minBy(_.bucket)
+    val (one, nRead) = SnapshotStore.readRanges(spark, dir, 1, Seq((b0.cellMin, b0.cellMax)))
+    assert(nRead == 1 && one.inputFiles.forall(_.contains(s"_bucket=${b0.bucket}/")))
+    assert(one.count() == b0.rows)
+    SnapshotStore.append(spark, rows(Seq(11L, 12L), "b"), dir)
+    val appended = want ++ Set((11L, "b"), (12L, "b"))
+    assert(content(SnapshotStore.read(spark, dir)) == appended)
+    assert(SnapshotStore.manifest(spark, dir, 2).stats.map(_.rows).sum == 12L)
+    // deleting a pre-existing row: every format-1 file is a victim
+    val v = SnapshotStore.upsert(spark, rows(Seq(2L), "x").withColumn("_deleted", lit(true)), dir,
+      deletedCol = Some("_deleted"))
+    assert(content(SnapshotStore.read(spark, dir)) == appended - ((2L, "a")))
+    assert(SnapshotStore.manifest(spark, dir, v).files.forall(!_.contains("_bucket=")))
+    assert(content(SnapshotStore.readVersion(spark, dir, 1)) == want)
   }
 }

@@ -107,8 +107,7 @@ object SparkEntry {
       .withColumn("_deleted", lit(true))
     val ins = imgs.where(col("image_id") % 4 === 2 && col("image_id") % 9 === 0)
       .withColumn("_deleted", lit(false))
-    SnapshotStore.upsert(s, upd.unionByName(del).unionByName(ins), store,
-      deletedCol = Some("_deleted"))
+    SnapshotStore.upsert(s, upd.unionByName(del).unionByName(ins), store)
     store
   }
 

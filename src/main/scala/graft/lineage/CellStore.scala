@@ -9,7 +9,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * maps to cell-sorted files whose manifest entries hold [min, max, rows]
   * per S2 cell-id PREFIX bucket (an id prefix is exactly a cell-range
   * predicate, so a spatial query's covering ranges become a bucket set),
-  * consulted before any file is opened. Storage, commits, stats and
+  * consulted before any file is opened. Storage (one manifest format,
+  * one `image_id` key, one `cell16` cell column), commits, stats and
   * pruned reads live in [[SnapshotStore]]; the two members below forward
   * to its HEAD.
   */
@@ -21,9 +22,10 @@ object CellStore {
 
   final case class BucketStat(bucket: Long, cellMin: Long, cellMax: Long, rows: Long)
 
-  /** [[SnapshotStore.overwrite]]: the next version holds exactly `df`. */
-  def write(df: DataFrame, dir: String, cellCol: String = "cell16"): Int =
-    SnapshotStore.overwrite(df.sparkSession, df, dir, cellCol)
+  /** [[SnapshotStore.overwrite]]: the next version holds exactly `df`,
+    * which has the store's `image_id` and `cell16` columns. */
+  def write(df: DataFrame, dir: String): Int =
+    SnapshotStore.overwrite(df.sparkSession, df, dir)
 
   /** HEAD's per-bucket stats, aggregated from its manifest's file entries. */
   def stats(spark: SparkSession, dir: String): Seq[BucketStat] =

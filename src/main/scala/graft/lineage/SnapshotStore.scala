@@ -13,24 +13,28 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * §1.4 compact index (the reference's cell-ordered blocks) in the Iceberg
   * TABLE-FORMAT role (time travel, copy-on-write MERGE, compaction,
   * snapshot expiry). [[CellStore]] holds the bucket key; every store in
-  * the library is one of these tables.
+  * the library is one of these tables, keyed by `image_id` and sorted by
+  * the S2 level-16 cell `cell16`; every commit checks that its frame has
+  * both before it claims a version.
   *
   * Layout: the FILE is the storage unit, the cell-prefix bucket the
   * logical pruning key. Every COMMIT sorts its rows by cell and cuts them
   * into max(1, ⌈rows / [[TargetRows]]⌉) files over disjoint cell ranges,
   * in its own immutable directory `dir/data_v{N}/part-*.parquet`; the
-  * MANIFEST `dir/_snaps/v{N}.txt` lists the dir-relative files with their
-  * sizes, per-(file, bucket) [min, max, rows] entries and one key bloom
-  * per file (old commits' files carry into later manifests BY REFERENCE),
-  * plus the data schema; `dir/_snaps/HEAD` names the current version.
-  * Commit = claim → write files → write manifest (tmp + rename) → swap
-  * HEAD. A reader holding version N is unaffected by later commits, and a
-  * crash before the HEAD swap leaves the previous snapshot plus
-  * unreferenced files (cleaned by [[expireSnapshots]]). This is Iceberg's
-  * metadata-pointer model minus the catalog (COVERAGE.md Iceberg
-  * declaration). Reads never list a directory: a read is a parquet
-  * relation over exactly the manifest's files, and range/bucket reads
-  * open only the files holding an entry that qualifies.
+  * MANIFEST `dir/_snaps/v{N}.txt` (one format, see [[commit]]) lists the
+  * dir-relative files, each with its size, its per-(file, bucket)
+  * [min, max, rows] entries and its key bloom (old commits' files carry
+  * into later manifests BY REFERENCE), plus the data schema;
+  * `dir/_snaps/HEAD` names the current version. Commit = claim → write
+  * files → write manifest (tmp + rename) → swap HEAD. A reader holding
+  * version N is unaffected by later commits. A crash before the HEAD swap
+  * leaves the previous snapshot plus the attempt's claim and files, which
+  * [[releaseFailedCommit]] removes; [[expireSnapshots]] deletes only
+  * files of committed versions that no kept snapshot lists. This is
+  * Iceberg's metadata-pointer model minus the catalog (COVERAGE.md
+  * Iceberg declaration). Reads never list a directory: a read is a
+  * parquet relation over exactly the manifest's files, and range/bucket
+  * reads open only the files holding an entry that qualifies.
   *
   * MERGE ([[upsert]]) is copy-on-write at FILE granularity: the victim
   * files that may hold a matched key are found from the manifest's file
@@ -38,13 +42,20 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * rewritten (they are exactly the previous version's files missing from
   * the new manifest), and every other file carries over by reference —
   * merge cost scales with the files the delta's keys hit, not table
-  * size. Deletes ride the delta as a boolean column; an update that
-  * MOVES a row to another cell is correct by construction (its old file
-  * is a victim by id, the new row lands in the commit's new files).
+  * size. Deletes ride the delta as a boolean `_deleted` column; an update
+  * that MOVES a row to another cell is correct by construction (its old
+  * file is a victim by id, the new row lands in the commit's new files).
   */
 object SnapshotStore {
 
   import CellStore.BucketStat
+
+  /** The key every table's rows are merged, bloomed and diffed by. */
+  private val Key = "image_id"
+  /** The S2 level-16 cell every table is sorted, cut and bucketed by. */
+  private val Cell = "cell16"
+  /** A delta column that marks the row's key as deleted when true. */
+  private val Deleted = "_deleted"
 
   private def fsOf(spark: SparkSession, dir: String) = {
     val p = new Path(dir)
@@ -69,24 +80,18 @@ object SnapshotStore {
     out.result()
   }
 
-  /** `entries`: per data file, one [min, max, rows] stat per bucket it
-    * holds rows of. `lastBatch`: the highest streaming micro-batch id
-    * committed (-1 when none), [[appendBatch]]'s idempotence cursor.
-    * `blooms`: per-file key Bloom filters over `bloomCol` that [[upsert]]
-    * probes instead of data files; a file without one is conservatively a
-    * victim. `sizes` (bytes per file) and `schema` (nullable, as a parquet
-    * read infers it) spare a read its listing and footer inference; a
-    * legacy manifest without them reads through `getFileStatus` and one
-    * footer. */
-  final case class Manifest(version: Int, files: Seq[String],
-                            entries: Map[String, Seq[BucketStat]], lastBatch: Long = -1L,
-                            blooms: Map[String, Array[Long]] = Map.empty,
-                            bloomCol: Option[String] = None,
-                            sizes: Map[String, Long] = Map.empty,
-                            schema: Option[StructType] = None) {
+  /** Every listed data file has its bytes (`sizes`), one [min, max, rows]
+    * stat per bucket it holds rows of (`entries`) and its key Bloom filter
+    * over the id as base64 text (`blooms`: only [[upsert]] decodes them).
+    * `schema` (nullable, as a parquet read infers it) spares a read its
+    * footer inference. `lastBatch`: the highest streaming micro-batch id
+    * committed (-1 when none), [[appendBatch]]'s idempotence cursor. */
+  final case class Manifest(version: Int, files: Seq[String], sizes: Map[String, Long],
+                            entries: Map[String, Seq[BucketStat]], blooms: Map[String, String],
+                            schema: StructType, lastBatch: Long = -1L) {
     /** Per-bucket stats: exact aggregates over the files' entries. */
     lazy val stats: Seq[BucketStat] =
-      files.flatMap(entriesOf).groupBy(_.bucket).map { case (b, es) =>
+      files.flatMap(entries).groupBy(_.bucket).map { case (b, es) =>
         BucketStat(b, es.map(_.cellMin).min, es.map(_.cellMax).max, es.map(_.rows).sum)
       }.toSeq
 
@@ -97,17 +102,16 @@ object SnapshotStore {
     def bucketsOverlapping(ranges: Seq[(Long, Long)]): Set[Long] =
       stats.filter(overlaps(_, ranges)).map(_.bucket).toSet
 
-    private[lineage] def entriesOf(f: String): Seq[BucketStat] = entries.getOrElse(f, Nil)
-
     /** The files holding an entry that satisfies `p`. */
     private[lineage] def filesWhere(p: BucketStat => Boolean): Seq[String] =
-      files.filter(f => entriesOf(f).exists(p))
+      files.filter(f => entries(f).exists(p))
   }
 
   private def overlaps(s: BucketStat, ranges: Seq[(Long, Long)]): Boolean =
     ranges.exists { case (lo, hi) => s.cellMin <= hi && lo <= s.cellMax }
 
-  /** The manifest format [[commit]] writes; [[manifest]] reads 1 and 2. */
+  /** The one manifest format: [[commit]] writes it, [[manifest]] reads
+    * nothing else. */
   private val Format = 2
 
   /** Rows per data file: a commit of n rows writes max(1, ⌈n / TargetRows⌉)
@@ -149,7 +153,8 @@ object SnapshotStore {
     java.util.Base64.getEncoder.encodeToString(bb.array())
   }
 
-  private def bloomDecode(s: String): Array[Long] = {
+  /** A manifest bloom's bit words, from its base64 text. */
+  private[graft] def bloomDecode(s: String): Array[Long] = {
     val bb = java.nio.ByteBuffer.wrap(java.util.Base64.getDecoder.decode(s))
     Array.fill(bb.remaining() / 8)(bb.getLong)
   }
@@ -164,24 +169,13 @@ object SnapshotStore {
     case other => other
   }
 
-  private def dataSchema(df: DataFrame): Option[StructType] =
-    Some(nullable(df.schema).asInstanceOf[StructType])
-
   private def manifestPath(dir: String, v: Int) = new Path(s"$dir/_snaps/v$v.txt")
 
-  /** Format-1 entries: each `_bucket=B/` file carries its bucket's
-    * [min, max] (a conservative range), and the bucket's rows sit on its
-    * first file, so the aggregates stay exact. */
-  private def format1Entries(files: Seq[String],
-                             stats: Seq[BucketStat]): Map[String, Seq[BucketStat]] = {
-    val byBucket = stats.map(s => s.bucket -> s).toMap
-    files.groupBy(f => f.split("/").find(_.startsWith("_bucket=")).map(_.stripPrefix("_bucket=").toLong)
-        .getOrElse(sys.error(s"SnapshotStore: format-1 data file $f has no _bucket= directory")))
-      .flatMap { case (b, fs) =>
-        val s = byBucket.getOrElse(b,
-          sys.error(s"SnapshotStore: format-1 bucket $b has files but no stat line"))
-        fs.sorted.zipWithIndex.map { case (f, i) => f -> Seq(if (i == 0) s else s.copy(rows = 0)) }
-      }
+  /** Fails naming the key or cell column `df` lacks: called before a
+    * commit claims its version, so a malformed frame leaves no claim. */
+  private def requireKeyed(df: DataFrame, op: String): Unit = {
+    val missing = Seq(Key, Cell).filterNot(df.columns.contains)
+    require(missing.isEmpty, s"SnapshotStore.$op: the frame has no ${missing.mkString(" or ")} column")
   }
 
   /** A concurrent writer lost the optimistic race for `version`: its base
@@ -216,29 +210,25 @@ object SnapshotStore {
     co.close()
   }
 
-  /** Manifest format 2: `version:N`, `format:2`, `batch:N`, optional
-    * `bloomcol:` and `schema:<json>` lines, then per file
-    * `file:<relative path>,<bytes>` (a legacy `file:` line carries no
-    * size), its `entry:bucket,min,max,rows,<path>` lines and its
-    * `fbloom:<base64>,<path>` line. Format 1 (no `format:` line) has
-    * `_bucket=B/` paths with per-bucket `stat:bucket,min,max,rows` and
-    * `bloom:bucket,<base64>` lines. Plain text keeps it
-    * FileSystem-API-only (works on s3a the same as local) and
-    * diff-readable. */
+  /** The manifest format: `version:N`, `format:2`, `batch:N` and
+    * `schema:<json>` lines, then per file `file:<relative path>,<bytes>`,
+    * its `entry:bucket,min,max,rows,<path>` lines and its
+    * `fbloom:<base64>,<path>` line. A reader skips lines with other tags.
+    * Plain text keeps it FileSystem-API-only (works on s3a the same as
+    * local) and diff-readable. */
   private[graft] def commit(spark: SparkSession, dir: String, m: Manifest,
                             preClaimed: Boolean = false): Int = {
     val (fs, _) = fsOf(spark, dir)
     fs.mkdirs(new Path(s"$dir/_snaps"))
     // claim FIRST unless the operation already holds it: the optimistic CAS
     if (!preClaimed) acquireClaim(spark, dir, m.version)
-    val body = (Seq(s"version:${m.version}", s"format:$Format", s"batch:${m.lastBatch}") ++
-      m.bloomCol.map(c => s"bloomcol:$c").toSeq ++
-      m.schema.map(s => s"schema:${s.json}").toSeq ++
+    val body = (Seq(s"version:${m.version}", s"format:$Format", s"batch:${m.lastBatch}",
+      s"schema:${m.schema.json}") ++
       m.files.sorted.flatMap(f =>
-        (s"file:$f" + m.sizes.get(f).fold("")(n => s",$n")) +:
-          m.entriesOf(f).sortBy(_.bucket).map(e =>
-            s"entry:${e.bucket},${e.cellMin},${e.cellMax},${e.rows},$f") ++:
-          m.blooms.get(f).map(bits => s"fbloom:${bloomEncode(bits)},$f").toSeq))
+        s"file:$f,${m.sizes(f)}" +:
+          m.entries(f).sortBy(_.bucket).map(e =>
+            s"entry:${e.bucket},${e.cellMin},${e.cellMax},${e.rows},$f") :+
+          s"fbloom:${m.blooms(f)},$f"))
       .mkString("\n")
     val tmp = new Path(s"$dir/_snaps/v${m.version}.txt.tmp")
     val o = fs.create(tmp, true)
@@ -345,32 +335,29 @@ object SnapshotStore {
     require(v == version, s"manifest v$version carries version $v")
     def tagged(tag: String): Vector[String] =
       lines.collect { case l if l.startsWith(tag) => l.stripPrefix(tag) }
+    // a manifest without a format line is format 1
     val format = tagged("format:").headOption.fold(1)(_.trim.toInt)
-    require(format <= Format, s"manifest v$version has format $format; this reader knows <= $Format")
+    require(format == Format, s"manifest v$version has format $format; this reader reads only format $Format")
+    val schema = tagged("schema:").headOption
+    require(schema.isDefined, s"manifest v$version has no schema")
     val sized = tagged("file:").map { l =>
       val i = l.lastIndexOf(',')
-      if (i < 0) (l, None) else (l.take(i), Some(l.drop(i + 1).toLong))
+      require(i >= 0, s"manifest v$version: file $l has no size")
+      l.take(i) -> l.drop(i + 1).toLong
     }
-    val files = sized.map(_._1)
-    // format 1 had per-bucket blooms over another hash: its files carry
-    // none, so an upsert treats them as victims and rewrites them
-    val (entries, blooms) =
-      if (format == 1) (format1Entries(files, tagged("stat:").map { l =>
-        val Array(b, lo, hi, n) = l.split(",")
-        BucketStat(b.toLong, lo.toLong, hi.toLong, n.toLong)
-      }), Map.empty[String, Array[Long]])
-      else (tagged("entry:").map { l =>
-        val Array(b, lo, hi, n, f) = l.split(",", 5)
-        f -> BucketStat(b.toLong, lo.toLong, hi.toLong, n.toLong)
-      }.groupMap(_._1)(_._2), tagged("fbloom:").map { l =>
-        val Array(enc, f) = l.split(",", 2)
-        f -> bloomDecode(enc)
-      }.toMap)
-    Manifest(v, files, entries,
-      tagged("batch:").headOption.fold(-1L)(_.trim.toLong), blooms,
-      tagged("bloomcol:").headOption.map(_.trim),
-      sized.collect { case (f, Some(n)) => f -> n }.toMap,
-      tagged("schema:").headOption.map(DataType.fromJson(_).asInstanceOf[StructType]))
+    val entries = tagged("entry:").map { l =>
+      val Array(b, lo, hi, n, f) = l.split(",", 5)
+      f -> BucketStat(b.toLong, lo.toLong, hi.toLong, n.toLong)
+    }.groupMap(_._1)(_._2)
+    val blooms = tagged("fbloom:").map { l =>
+      val Array(enc, f) = l.split(",", 2)
+      f -> enc
+    }.toMap
+    for ((f, _) <- sized; (what, has) <- Seq("entries" -> entries.contains(f), "bloom" -> blooms.contains(f)))
+      require(has, s"manifest v$version: file $f has no $what")
+    Manifest(v, sized.map(_._1), sized.toMap, entries, blooms,
+      DataType.fromJson(schema.get).asInstanceOf[StructType],
+      tagged("batch:").headOption.fold(-1L)(_.trim.toLong))
   }
 
   def headManifest(spark: SparkSession, dir: String): Manifest =
@@ -378,20 +365,21 @@ object SnapshotStore {
 
   /** Write `df` as version `v`'s data: max(1, ⌈rows / targetRows⌉) files
     * over disjoint cell ranges, each sorted by cell (no rows, no files).
-    * Returns the files as a manifest fragment with their sizes, entries
-    * and, when `bloomCol` is a column of `df`, blooms. The entries and
-    * blooms come from one read-back aggregate over the new files only, so
-    * the driver receives one row per file. */
+    * Returns the files as a manifest fragment with their sizes (from the
+    * listing), entries and blooms. The entries and blooms come from one
+    * read-back aggregate over the new files only, so the driver receives
+    * one row per file, and the fragment lists exactly the files it
+    * returns. */
   private def writeCommit(spark: SparkSession, df: DataFrame, dir: String, v: Int,
-                          cellCol: String, bloomCol: Option[String],
                           targetRows: Long = TargetRows): Manifest = {
-    val none = Manifest(v, Nil, Map.empty, schema = dataSchema(df))
+    val none = Manifest(v, Nil, Map.empty, Map.empty, Map.empty,
+      nullable(df.schema).asInstanceOf[StructType])
     val rows = df.count()
     if (rows == 0) return none
     // ErrorIfExists: a committer that lost the race must NOT clobber the
     // winner's immutable data directory — it surfaces as a commit conflict
-    try df.repartitionByRange(((rows + targetRows - 1) / targetRows).toInt, col(cellCol))
-      .sortWithinPartitions(col(cellCol))
+    try df.repartitionByRange(((rows + targetRows - 1) / targetRows).toInt, col(Cell))
+      .sortWithinPartitions(col(Cell))
       .write.mode(org.apache.spark.sql.SaveMode.ErrorIfExists).parquet(s"$dir/data_v$v")
     catch {
       case e: org.apache.spark.sql.AnalysisException
@@ -399,74 +387,53 @@ object SnapshotStore {
         throw new CommitConflictException(v,
           s"data_v$v already written by a concurrent committer")
     }
-    val listed = listFilesUnder(spark, dir, s"data_v$v")
-    val written = none.copy(files = listed.map(_._1), sizes = listed.toMap)
-    val idc = bloomCol.filter(df.columns.contains)
+    val sizes = listFilesUnder(spark, dir, s"data_v$v").toMap
     // each file's cells and key hashes meet in one group; its entries and
     // bloom are built there, executor-side
     val entries = udf((cells: Seq[Long]) => cells.groupBy(CellStore.bucketOf).map { case (b, cs) =>
       BucketStat(b, cs.min, cs.max, cs.size.toLong) }.toSeq)
-    val bloom = udf((hs: Seq[Long]) => bloomOf(hs))
-    val perFile = readFiles(spark, dir, written, written.files)
-      .select(input_file_name().as("f"), col(cellCol).as("c"),
-        idc.fold(lit(null).cast("long"))(c => keyHash(col(c))).as("h"))
+    val bloom = udf((hs: Seq[Long]) => bloomEncode(bloomOf(hs)))
+    val perFile = readFiles(spark, dir, none.copy(sizes = sizes), sizes.keys.toSeq)
+      .select(input_file_name().as("f"), col(Cell).as("c"), keyHash(col(Key)).as("h"))
       .groupBy("f").agg(collect_list("c").as("cs"), collect_list("h").as("hs"))
-      .select(col("f"), entries(col("cs")), if (idc.isDefined) bloom(col("hs")) else lit(null))
+      .select(col("f"), entries(col("cs")), bloom(col("hs")))
       .collect()
-    def rel(r: org.apache.spark.sql.Row) =
-      s"data_v$v/" + new Path(new java.net.URI(r.getString(0))).getName
-    written.copy(
-      entries = perFile.map(r => rel(r) -> r.getSeq[org.apache.spark.sql.Row](1).map(e =>
-        BucketStat(e.getLong(0), e.getLong(1), e.getLong(2), e.getLong(3)))).toMap,
-      blooms = perFile.collect { case r if !r.isNullAt(2) => rel(r) -> r.getSeq[Long](2).toArray }.toMap,
-      bloomCol = idc)
+      .map(r => (s"data_v$v/" + new Path(new java.net.URI(r.getString(0))).getName, r))
+    none.copy(files = perFile.map(_._1).toSeq, sizes = perFile.map { case (f, _) => f -> sizes(f) }.toMap,
+      entries = perFile.map { case (f, r) => f -> r.getSeq[org.apache.spark.sql.Row](1).map(e =>
+        BucketStat(e.getLong(0), e.getLong(1), e.getLong(2), e.getLong(3))) }.toMap,
+      blooms = perFile.map { case (f, r) => f -> r.getString(2) }.toMap)
   }
 
   /** `prev` without the files in `drop`, plus the files `w` wrote, as
     * version `w.version`. */
-  private def replaced(prev: Manifest, drop: Set[String], w: Manifest): Manifest = {
-    val blooms = prev.blooms -- drop ++ w.blooms
+  private def replaced(prev: Manifest, drop: Set[String], w: Manifest): Manifest =
     prev.copy(version = w.version, files = prev.files.filterNot(drop) ++ w.files,
-      entries = prev.entries -- drop ++ w.entries, blooms = blooms,
-      bloomCol = if (blooms.isEmpty) None else w.bloomCol.orElse(prev.bloomCol),
-      sizes = prev.sizes -- drop ++ w.sizes, schema = prev.schema.orElse(w.schema))
-  }
-
-  /** The bloom column every commit over this table must share: blooms are
-    * probed by VALUE, so mixing id columns (or a table whose manifest
-    * predates the bloomcol tag while carrying blooms) must fail loudly, not
-    * silently miss victims. */
-  private def requireBloomCol(m: Manifest, idCol: String, op: String): Unit =
-    require(m.blooms.isEmpty || m.bloomCol.contains(idCol),
-      s"SnapshotStore.$op: manifest blooms were built over " +
-        s"${m.bloomCol.getOrElse("<untagged>")} but this operation uses " +
-        s"id column '$idCol' — a value probe would silently miss victims; " +
-        "use one id column per table")
+      sizes = prev.sizes -- drop ++ w.sizes, entries = prev.entries -- drop ++ w.entries,
+      blooms = prev.blooms -- drop ++ w.blooms)
 
   /** Create the table: snapshot v1. Fails on an existing table. */
-  def create(spark: SparkSession, df: DataFrame, dir: String,
-             cellCol: String = "cell16", idCol: String = "image_id"): Int = {
+  def create(spark: SparkSession, df: DataFrame, dir: String): Int = {
     require(recoveryHead(spark, dir) == 0,
       s"SnapshotStore.create: $dir already has a HEAD; use append/upsert/overwrite")
-    overwrite(spark, df, dir, cellCol, idCol)
+    overwrite(spark, df, dir)
   }
 
   /** Content-replacing commit: the next version (v1 on a new table) holds
     * exactly `df`. Earlier versions stay readable until [[expireSnapshots]]
     * — the bulk (re)load of a cell store. Returns the new version. */
-  def overwrite(spark: SparkSession, df: DataFrame, dir: String,
-                cellCol: String = "cell16", idCol: String = "image_id"): Int =
-    overwriteBy(spark, df, dir, cellCol, idCol)
+  def overwrite(spark: SparkSession, df: DataFrame, dir: String): Int =
+    overwriteBy(spark, df, dir)
 
   /** [[overwrite]] cutting its files at `targetRows` rows. */
   private[graft] def overwriteBy(spark: SparkSession, df: DataFrame, dir: String,
-                                 cellCol: String = "cell16", idCol: String = "image_id",
                                  targetRows: Long = TargetRows): Int = {
+    requireKeyed(df, "overwrite")
     val head = recoveryHead(spark, dir)
     val lastBatch = if (head > 0) manifest(spark, dir, head).lastBatch else -1L
     val v = head + 1
     acquireClaim(spark, dir, v)
-    val w = writeCommit(spark, df, dir, v, cellCol, Some(idCol), targetRows)
+    val w = writeCommit(spark, df, dir, v, targetRows)
     commit(spark, dir, w.copy(lastBatch = lastBatch), preClaimed = true)
   }
 
@@ -474,9 +441,8 @@ object SnapshotStore {
     * the manifest; prior files carry by reference, so the table is never
     * re-read to admit a batch. Every append adds files ([[compact]] pays
     * that debt down). Returns the new version. */
-  def append(spark: SparkSession, delta: DataFrame, dir: String,
-             cellCol: String = "cell16", idCol: String = "image_id"): Int =
-    appendCommit(spark, delta, dir, None, cellCol, idCol).get
+  def append(spark: SparkSession, delta: DataFrame, dir: String): Int =
+    appendCommit(spark, delta, dir, None).get
 
   /** Streaming ingest commit — ONE append snapshot per micro-batch,
     * IDEMPOTENT under foreachBatch's at-least-once replay (the Iceberg
@@ -487,19 +453,17 @@ object SnapshotStore {
     * increasing batch ids — exactly what Structured Streaming's
     * foreachBatch supplies. */
   def appendBatch(spark: SparkSession, batch: DataFrame, dir: String,
-                  batchId: Long, cellCol: String = "cell16",
-                  idCol: String = "image_id"): Option[Int] =
-    appendCommit(spark, batch, dir, Some(batchId), cellCol, idCol)
+                  batchId: Long): Option[Int] =
+    appendCommit(spark, batch, dir, Some(batchId))
 
   private def appendCommit(spark: SparkSession, delta: DataFrame, dir: String,
-                           batchId: Option[Long], cellCol: String,
-                           idCol: String): Option[Int] = {
+                           batchId: Option[Long]): Option[Int] = {
+    requireKeyed(delta, if (batchId.isEmpty) "append" else "appendBatch")
     val prev = headManifest(spark, dir)
     if (batchId.exists(_ <= prev.lastBatch)) return None
-    requireBloomCol(prev, idCol, if (batchId.isEmpty) "append" else "appendBatch")
     val v = prev.version + 1
     acquireClaim(spark, dir, v)
-    val w = writeCommit(spark, delta, dir, v, cellCol, Some(idCol))
+    val w = writeCommit(spark, delta, dir, v)
     Some(commit(spark, dir, replaced(prev, Set.empty, w)
       .copy(lastBatch = batchId.getOrElse(prev.lastBatch)), preClaimed = true))
   }
@@ -507,53 +471,44 @@ object SnapshotStore {
   /** Attach a stream to the table: every micro-batch commits one snapshot
     * through [[appendBatch]] (skips replayed ids). Caller starts/awaits the
     * returned writer. */
-  def ingestStream(stream: DataFrame, dir: String,
-                   checkpoint: String, cellCol: String = "cell16")
+  def ingestStream(stream: DataFrame, dir: String, checkpoint: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        appendBatch(batch.sparkSession, batch.toDF(), dir, id, cellCol)
+        appendBatch(batch.sparkSession, batch.toDF(), dir, id)
         ()
       }
 
   /** Copy-on-write MERGE (Iceberg `MERGE INTO` role): every store row whose
-    * `idCol` matches a delta row is REPLACED (or DELETED when `deletedCol`
-    * is true); non-deleted delta rows are written (matched = the
-    * replacement, unmatched = an insert). Only the victim files are read
-    * and rewritten, together with the delta's rows, into the commit's new
-    * files. The delta is an ingest-batch-sized frame (broadcast in the
-    * anti-join); a table-sized delta wants the real Iceberg MERGE. Returns
-    * the new version. */
-  def upsert(spark: SparkSession, delta: DataFrame, dir: String,
-             idCol: String = "image_id", cellCol: String = "cell16",
-             deletedCol: Option[String] = None): Int = {
+    * `image_id` matches a delta row is REPLACED, or DELETED when the delta
+    * has a `_deleted` column and it is true there; non-deleted delta rows
+    * are written (matched = the replacement, unmatched = an insert). Only
+    * the victim files are read and rewritten, together with the delta's
+    * rows, into the commit's new files. The delta is an ingest-batch-sized
+    * frame (broadcast in the anti-join); a table-sized delta wants the
+    * real Iceberg MERGE. Returns the new version. */
+  def upsert(spark: SparkSession, delta: DataFrame, dir: String): Int = {
+    requireKeyed(delta, "upsert")
     val prev = headManifest(spark, dir)
-    requireBloomCol(prev, idCol, "upsert")
     val v = prev.version + 1
     acquireClaim(spark, dir, v)
     // victim files from the MANIFEST BLOOMS alone: each delta key's hash is
     // probed against every file's bloom executor-side, so the driver
-    // receives at most one row per file and no data file is read. A file
-    // with no bloom is conservatively a victim; false positives only widen
-    // the rewrite, never change content.
-    val blooms = prev.blooms
-    val hits =
-      if (blooms.isEmpty) Set.empty[String]
-      else {
-        val probe = udf((h: Long) =>
-          blooms.collect { case (f, bits) if mightContain(bits, h) => f }.toSeq)
-        delta.select(explode(probe(keyHash(col(idCol)))).as("f"))
-          .groupBy("f").agg(count(lit(1))).collect().map(_.getString(0)).toSet
-      }
-    val victims = prev.files.filter(f => !blooms.contains(f) || hits(f))
+    // receives at most one row per file and no data file is read. False
+    // positives only widen the rewrite, never change content.
+    val blooms = prev.blooms.map { case (f, enc) => f -> bloomDecode(enc) }
+    val probe = udf((h: Long) =>
+      blooms.collect { case (f, bits) if mightContain(bits, h) => f }.toSeq)
+    val hits = delta.select(explode(probe(keyHash(col(Key)))).as("f"))
+      .groupBy("f").agg(count(lit(1))).collect().map(_.getString(0)).toSet
+    val victims = prev.files.filter(hits)
     val old = readFiles(spark, dir, prev, victims)
-    val survivors = (deletedCol match {
-      case Some(d) => delta.where(!coalesce(col(d), lit(false))).drop(d)
-      case None => delta
-    }).select(old.columns.map(col): _*)
-    val kept = old.join(broadcast(delta.select(col(idCol)).distinct()), Seq(idCol), "left_anti")
-    val w = writeCommit(spark, kept.unionByName(survivors), dir, v, cellCol, Some(idCol))
+    val survivors = (if (delta.columns.contains(Deleted))
+      delta.where(!coalesce(col(Deleted), lit(false))).drop(Deleted)
+    else delta).select(old.columns.map(col): _*)
+    val kept = old.join(broadcast(delta.select(col(Key)).distinct()), Seq(Key), "left_anti")
+    val w = writeCommit(spark, kept.unionByName(survivors), dir, v)
     commit(spark, dir, replaced(prev, victims.toSet, w), preClaimed = true)
   }
 
@@ -567,12 +522,11 @@ object SnapshotStore {
     * untouched, and the call fails. Returns per-bucket telemetry (bucket,
     * files_before, files_after, rows) from the two manifests, a file
     * counting in every bucket it holds an entry for. */
-  def compact(spark: SparkSession, dir: String, cellCol: String = "cell16"): DataFrame = {
+  def compact(spark: SparkSession, dir: String): DataFrame = {
     val prev = headManifest(spark, dir)
     val v = prev.version + 1
     acquireClaim(spark, dir, v)
-    val w = writeCommit(spark, readFiles(spark, dir, prev, prev.files), dir, v, cellCol,
-      prev.bloomCol)
+    val w = writeCommit(spark, readFiles(spark, dir, prev, prev.files), dir, v)
     val next = replaced(prev, prev.files.toSet, w)
     val got = next.stats.toSet
     if (got != prev.stats.toSet) {
@@ -600,25 +554,17 @@ object SnapshotStore {
     def partitionSchema: StructType = new StructType()
   }
 
-  /** `files` of snapshot `m` as one parquet relation: sizes
-    * and schema come from the manifest (a legacy manifest falls back to
-    * `getFileStatus` per file and one footer), so the read runs no listing
-    * or schema-inference job whatever its file count. `_bucket` is a
-    * directory name only, never a column. No files = an empty frame. */
+  /** `files` of snapshot `m` as one parquet relation: sizes and schema
+    * come from the manifest, so the read runs no listing or
+    * schema-inference job whatever its file count. No files = an empty
+    * frame. */
   private def readFiles(spark: SparkSession, dir: String, m: Manifest,
                         files: Seq[String]): DataFrame = {
     val (fs, root) = fsOf(spark, dir)
-    val statuses = files.map { f =>
-      val p = fs.makeQualified(new Path(s"$dir/$f"))
-      m.sizes.get(f).fold(fs.getFileStatus(p))(n => new FileStatus(n, false, 0, 0, 0, p))
-    }
-    val schema = m.schema.getOrElse {
-      require(m.files.nonEmpty,
-        s"SnapshotStore: v${m.version} has no data files and no recorded schema")
-      spark.read.parquet(s"$dir/${m.files.head}").schema
-    }
+    val statuses = files.map(f =>
+      new FileStatus(m.sizes(f), false, 0, 0, 0, fs.makeQualified(new Path(s"$dir/$f"))))
     spark.baseRelationToDataFrame(HadoopFsRelation(
-      new ManifestFileIndex(fs.makeQualified(root), statuses), new StructType(), schema,
+      new ManifestFileIndex(fs.makeQualified(root), statuses), new StructType(), m.schema,
       None, new ParquetFileFormat, Map.empty)(spark))
   }
 
@@ -663,8 +609,7 @@ object SnapshotStore {
     * rewrote unchanged are filtered by a null-safe full-row compare.
     * Appends surface as pure inserts (they only add files). Output: every
     * data column of the surviving side + `op` STRING. */
-  def changelog(spark: SparkSession, dir: String, fromV: Int, toV: Int,
-                idCol: String = "image_id"): DataFrame = {
+  def changelog(spark: SparkSession, dir: String, fromV: Int, toV: Int): DataFrame = {
     require(fromV < toV, s"changelog: fromV=$fromV must precede toV=$toV")
     val mA = manifest(spark, dir, fromV)
     val mB = manifest(spark, dir, toV)
@@ -673,12 +618,12 @@ object SnapshotStore {
     val dataCols = newS.columns.toSeq
     val o = oldS.select(dataCols.map(c => col(c).as(s"_o_$c")): _*)
     val n = newS.select(dataCols.map(c => col(c).as(s"_n_$c")): _*)
-    val joined = o.join(n, col(s"_o_$idCol") <=> col(s"_n_$idCol"), "full_outer")
+    val joined = o.join(n, col(s"_o_$Key") <=> col(s"_n_$Key"), "full_outer")
     val rowSame = dataCols.map(c => col(s"_o_$c") <=> col(s"_n_$c")).reduce(_ && _)
     joined
       .withColumn("op",
-        when(col(s"_o_$idCol").isNull, lit("insert"))
-          .when(col(s"_n_$idCol").isNull, lit("delete"))
+        when(col(s"_o_$Key").isNull, lit("insert"))
+          .when(col(s"_n_$Key").isNull, lit("delete"))
           .when(rowSame, lit(null))
           .otherwise(lit("update")))
       .where(col("op").isNotNull)
@@ -686,9 +631,12 @@ object SnapshotStore {
         coalesce(col(s"_n_$c"), col(s"_o_$c")).as(c)) :+ col("op"): _*)
   }
 
-  /** Drop snapshots before `keepFrom` and DELETE files no surviving
-    * manifest references (Iceberg's expire_snapshots maintenance pass).
-    * Returns the number of data files deleted. */
+  /** Drop snapshots before `keepFrom` and DELETE the files of committed
+    * versions (`data_v{N}`, N <= HEAD) that no surviving manifest
+    * references (Iceberg's expire_snapshots maintenance pass). A directory
+    * above HEAD may be a concurrent commit's, written but not yet swapped
+    * in: it is left to [[releaseFailedCommit]]. Returns the number of data
+    * files deleted. */
   def expireSnapshots(spark: SparkSession, dir: String, keepFrom: Int): Int = {
     val (fs, dirP) = fsOf(spark, dir)
     val headV = headVersion(spark, dir)
@@ -697,7 +645,7 @@ object SnapshotStore {
     val live = (keepFrom to headV)
       .flatMap(v => manifest(spark, dir, v).files).toSet
     val onDisk = fs.listStatus(dirP).map(_.getPath.getName)
-      .filter(_.startsWith("data_v"))
+      .filter(n => n.startsWith("data_v") && n.stripPrefix("data_v").toIntOption.exists(_ <= headV))
       .flatMap(sub => listFilesUnder(spark, dir, sub).map(_._1))
     val orphans = onDisk.filterNot(live.contains)
     orphans.foreach(f => fs.delete(new Path(s"$dir/$f"), false))

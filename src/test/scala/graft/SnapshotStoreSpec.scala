@@ -9,8 +9,8 @@ import scala.jdk.CollectionConverters._
 
 /** Snapshot-versioned store (Iceberg table-format role): time-travel
   * isolation, file-granular copy-on-write (untouched files carried BY
-  * REFERENCE), the cell-sorted file cut and its blooms, format-1 reads,
-  * snapshot-scoped pruning, expiry, loud contracts. */
+  * REFERENCE), the cell-sorted file cut and its blooms, the one manifest
+  * format, snapshot-scoped pruning, expiry, loud contracts. */
 class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -114,7 +114,7 @@ class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(SnapshotStore.append(spark, rows(11L to 14L, "b"), dir) == 2)
     val delta = rows(Seq(2L, 4L), "u").withColumn("_deleted", lit(false))
       .unionByName(rows(Seq(3L), "x").withColumn("_deleted", lit(true)))
-    assert(SnapshotStore.upsert(spark, delta, dir, deletedCol = Some("_deleted")) == 3)
+    assert(SnapshotStore.upsert(spark, delta, dir) == 3)
     assert(SnapshotStore.headVersion(spark, dir) == 3)
     // v1 is bit-identical to the original base
     assert(content(SnapshotStore.readVersion(spark, dir, 1)) ==
@@ -135,7 +135,7 @@ class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(SnapshotStore.manifest(spark, dir, 1).files.size == 2)
     // delta touches ONLY the London bucket (even ids)
     val delta = rows(Seq(2L), "u").withColumn("_deleted", lit(false))
-    SnapshotStore.upsert(spark, delta, dir, deletedCol = Some("_deleted"))
+    SnapshotStore.upsert(spark, delta, dir)
     val m1 = SnapshotStore.manifest(spark, dir, 1)
     val m2 = SnapshotStore.manifest(spark, dir, 2)
     val carried = m2.files.toSet intersect m1.files.toSet
@@ -164,7 +164,7 @@ class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = freshDir("expire")
     SnapshotStore.create(spark, rows(1L to 10L, "a"), dir)
     val delta = rows(Seq(2L), "u").withColumn("_deleted", lit(false))
-    SnapshotStore.upsert(spark, delta, dir, deletedCol = Some("_deleted"))
+    SnapshotStore.upsert(spark, delta, dir)
     val headBefore = content(SnapshotStore.read(spark, dir))
     val deleted = SnapshotStore.expireSnapshots(spark, dir, keepFrom = 2)
     assert(deleted > 0, "the rewritten v1 bucket's old file should be orphaned")
@@ -178,7 +178,7 @@ class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     val delta = rows(Seq(2L), "u").withColumn("_deleted", lit(false))
       .unionByName(rows(Seq(3L), "x").withColumn("_deleted", lit(true)))
       .unionByName(rows(Seq(21L), "b").withColumn("_deleted", lit(false)))
-    SnapshotStore.upsert(spark, delta, dir, deletedCol = Some("_deleted"))
+    SnapshotStore.upsert(spark, delta, dir)
     val got = SnapshotStore.changelog(spark, dir, 1, 2)
       .select("image_id", "op").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
@@ -263,7 +263,7 @@ class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
         val delta = rows(ups, s"up$step").withColumn("_deleted", lit(false))
           .unionByName(rows(Seq(d1), "x").withColumn("_deleted", lit(true)))
           .unionByName(rows(Seq(ins), s"in$step").withColumn("_deleted", lit(false)))
-        SnapshotStore.upsert(spark, delta, dir, deletedCol = Some("_deleted"))
+        SnapshotStore.upsert(spark, delta, dir)
         model = (model -- (ups :+ d1)) ++ ups.map(_ -> s"up$step") + (ins -> s"in$step")
       }
       history += model
@@ -296,38 +296,13 @@ class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e.getMessage.contains("HEAD"))
   }
 
-  test("bloom merge stays conservative: pre-bloom data never acquires a delta-only bloom") {
-    // review r05: a bucket holding data from a bloom-less (legacy) commit
-    // must STAY bloom-less after an append, or victim discovery would
-    // probe a bloom that only covers the delta's keys and silently skip
-    // deletes/updates of the older rows
-    val dir = freshDir("legacy")
-    SnapshotStore.create(spark, rows(1L to 10L, "a"), dir)
-    val m1 = SnapshotStore.manifest(spark, dir, 1)
-    // simulate a legacy v2: same files, no bloom lines in the manifest
-    SnapshotStore.commit(spark, dir,
-      m1.copy(version = 2, blooms = Map.empty, bloomCol = None))
-    SnapshotStore.append(spark, rows(Seq(12L), "b"), dir)
-    val m3 = SnapshotStore.manifest(spark, dir, 3)
-    assert(m3.blooms.nonEmpty && m1.files.forall(f => !m3.blooms.contains(f)),
-      "files with pre-bloom data must carry no bloom after the append")
-    // the behavioral stake: deleting a pre-bloom row must still land
-    val delta = rows(Seq(2L), "x").withColumn("_deleted", lit(true))
-    SnapshotStore.upsert(spark, delta, dir, deletedCol = Some("_deleted"))
-    assert(!content(SnapshotStore.read(spark, dir)).exists(_._1 == 2L),
-      "delete of a pre-bloom row was silently skipped")
-  }
-
-  test("bloom column mismatch fails loudly instead of probing wrong values") {
-    val dir = freshDir("bloomcol")
-    SnapshotStore.create(spark, rows(1L to 4L, "a"), dir) // blooms over image_id
-    val delta = rows(Seq(2L), "u").withColumnRenamed("image_id", "other_id")
-      .withColumn("_deleted", lit(false))
-    val e = intercept[IllegalArgumentException] {
-      SnapshotStore.upsert(spark, delta, dir, idCol = "other_id",
-        deletedCol = Some("_deleted"))
-    }
-    assert(e.getMessage.contains("bloom"))
+  test("a create missing cell16 fails naming it; a valid create then succeeds") {
+    val dir = freshDir("nocell")
+    val e = intercept[IllegalArgumentException](
+      SnapshotStore.create(spark, rows(1L to 4L, "a").drop("cell16"), dir))
+    assert(e.getMessage.contains("cell16"))
+    assert(SnapshotStore.create(spark, rows(1L to 4L, "a"), dir) == 1)
+    assert(content(SnapshotStore.read(spark, dir)) == (1L to 4L).map(i => (i, "a")).toSet)
   }
 
   test("optimistic arbitration: a stale writer's commit conflicts; content survives") {
@@ -479,17 +454,37 @@ class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/data_v3")))
   }
 
-  test("a legacy manifest (no file sizes, no schema) reads the same rows") {
+  /** Writes v2 of `dir` as v1's manifest text passed through `strip`. */
+  private def writeStrippedV2(dir: String, strip: Seq[String] => Seq[String]): Unit = {
+    val v1 = java.nio.file.Paths.get(s"$dir/_snaps/v1.txt")
+    val text = new String(java.nio.file.Files.readAllBytes(v1), "UTF-8").split("\n").toSeq
+    val v2 = strip(text).map(l => if (l.startsWith("version:")) "version:2" else l)
+    java.nio.file.Files.write(v1.resolveSibling("v2.txt"), v2.mkString("\n").getBytes("UTF-8"))
+  }
+
+  test("a manifest missing sizes, entries or schema fails naming what is missing") {
     val dir = freshDir("legacyread")
     SnapshotStore.create(spark, rows(1L to 10L, "a"), dir)
     val m1 = SnapshotStore.manifest(spark, dir, 1)
-    assert(m1.sizes.keySet == m1.files.toSet && m1.schema.isDefined)
-    SnapshotStore.commit(spark, dir, m1.copy(version = 2, sizes = Map.empty, schema = None))
-    val m2 = SnapshotStore.manifest(spark, dir, 2)
-    assert(m2.sizes.isEmpty && m2.schema.isEmpty)
-    assert(content(SnapshotStore.readVersion(spark, dir, 2)) ==
-      content(SnapshotStore.readVersion(spark, dir, 1)))
-    assert(SnapshotStore.readVersion(spark, dir, 2).count() == 10L)
+    assert(m1.files.size == 1 && m1.sizes.keySet == m1.files.toSet)
+    val f = m1.files.head
+    Seq[(String, String, Seq[String] => Seq[String])](
+      ("size", f, _.map(l => if (l.startsWith("file:")) s"file:$f" else l)),
+      ("entries", f, _.filterNot(_.startsWith("entry:"))),
+      ("schema", "v2", _.filterNot(_.startsWith("schema:")))).foreach { case (part, names, strip) =>
+      writeStrippedV2(dir, strip)
+      val e = intercept[IllegalArgumentException](SnapshotStore.manifest(spark, dir, 2))
+      assert(e.getMessage.contains(names) && e.getMessage.contains(part), e.getMessage)
+    }
+  }
+
+  test("a manifest file line without its bloom fails naming the file") {
+    val dir = freshDir("bloomless")
+    SnapshotStore.create(spark, rows(1L to 10L, "a"), dir)
+    val f = SnapshotStore.manifest(spark, dir, 1).files.head
+    writeStrippedV2(dir, _.filterNot(_.startsWith("fbloom:")))
+    val e = intercept[IllegalArgumentException](SnapshotStore.manifest(spark, dir, 2))
+    assert(e.getMessage.contains(f) && e.getMessage.contains("bloom"), e.getMessage)
   }
 
   test("withCommitRetries: lost races retry; exhaustion rethrows") {
@@ -516,7 +511,7 @@ class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     SnapshotStore.create(spark, rows((1L to 20L).filter(_ % 2 == 0), "a"), dir)
     SnapshotStore.append(spark, rows((1L to 20L).filter(_ % 2 == 1), "a"), dir)
     val delta = rows(Seq(2L), "u").withColumn("_deleted", lit(false))
-    val v = SnapshotStore.upsert(spark, delta, dir, deletedCol = Some("_deleted"))
+    val v = SnapshotStore.upsert(spark, delta, dir)
     // the files of v-1 missing from v are exactly the touched files read
     val before = SnapshotStore.manifest(spark, dir, v - 1).files
     val after = SnapshotStore.manifest(spark, dir, v).files.toSet
@@ -536,7 +531,7 @@ class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     // two buckets: Sydney {1}, London {2, 4}
     SnapshotStore.create(spark, rows(Seq(1L, 2L, 4L), "a"), dir)
     val delta = rows(Seq(2L, 4L), "x").withColumn("_deleted", lit(true))
-    val v = SnapshotStore.upsert(spark, delta, dir, deletedCol = Some("_deleted"))
+    val v = SnapshotStore.upsert(spark, delta, dir)
     assert(content(SnapshotStore.read(spark, dir)) == Set((1L, "a")))
     // the emptied bucket's stats are gone from the manifest
     val m = SnapshotStore.manifest(spark, dir, v)
@@ -574,8 +569,8 @@ class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       val dir = freshDir(s"fpp$n")
       SnapshotStore.create(spark, spread(n), dir)
       val m = SnapshotStore.manifest(spark, dir, 1)
-      assert(m.files.size == 1 && m.bloomCol.contains("image_id"))
-      val bits = m.blooms(m.files.head)
+      assert(m.files.size == 1)
+      val bits = SnapshotStore.bloomDecode(m.blooms(m.files.head))
       // sized from the file's own row count: 10 bits per key
       assert(bits.length == (10 * n + 63) / 64, s"${bits.length} words for $n keys")
       assert(keyHashes(0L until n).forall(admits(bits, _)), s"a present key missed at $n keys")
@@ -597,7 +592,7 @@ class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rewritten = m1.files.toSet -- SnapshotStore.manifest(spark, dir, v).files
     // the set the manifest blooms admit, probed here over the restated hash
     val hs = keyHashes(keys)
-    val admitted = m1.files.filter(f => hs.exists(admits(m1.blooms(f), _))).toSet
+    val admitted = m1.files.filter(f => hs.exists(admits(SnapshotStore.bloomDecode(m1.blooms(f)), _))).toSet
     assert(rewritten == admitted)
     assert(rewritten.size < m1.files.size, s"rewrote ${rewritten.size} of ${m1.files.size} files")
     // every file that holds a key is among them
@@ -609,7 +604,7 @@ class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       (0L until 50000L).map(i => (i, if (keys.contains(i)) "u" else "a")).toSet)
   }
 
-  test("a format-1 table (per-bucket directories, stats and blooms) reads, appends and upserts") {
+  test("a non-format-2 manifest fails loudly naming version and format") {
     import CellStore.BucketStat
     val dir = freshDir("format1")
     val base = rows(1L to 10L, "a")
@@ -626,8 +621,7 @@ class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(r => BucketStat(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
     assert(stats.size == 2 && files.forall(_.contains("/_bucket=")))
     // the format-1 text: no format line, stat/bloom lines per bucket, file
-    // lines without sizes or schema. Each bucket's bloom is all zero bits:
-    // a reader that probed it would find no victim and skip the delete.
+    // lines without sizes or schema
     val zeroBloom = java.util.Base64.getEncoder.encodeToString(new Array[Byte](256))
     val text = (Seq("version:1", "batch:-1", "bloomcol:image_id") ++
       stats.map(s => s"stat:${s.bucket},${s.cellMin},${s.cellMax},${s.rows}") ++
@@ -635,23 +629,30 @@ class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     java.nio.file.Files.createDirectories(root.resolve("_snaps"))
     java.nio.file.Files.write(root.resolve("_snaps/v1.txt"), text.getBytes("UTF-8"))
     java.nio.file.Files.write(root.resolve("_snaps/HEAD"), "1".getBytes("UTF-8"))
-    val want = (1L to 10L).map(i => (i, "a")).toSet
-    assert(content(SnapshotStore.read(spark, dir)) == want)
-    assert(SnapshotStore.manifest(spark, dir, 1).stats.toSet == stats.toSet)
-    // a range read of one bucket opens only that bucket's directory
-    val b0 = stats.minBy(_.bucket)
-    val (one, nRead) = SnapshotStore.readRanges(spark, dir, 1, Seq((b0.cellMin, b0.cellMax)))
-    assert(nRead == 1 && one.inputFiles.forall(_.contains(s"_bucket=${b0.bucket}/")))
-    assert(one.count() == b0.rows)
-    SnapshotStore.append(spark, rows(Seq(11L, 12L), "b"), dir)
-    val appended = want ++ Set((11L, "b"), (12L, "b"))
-    assert(content(SnapshotStore.read(spark, dir)) == appended)
-    assert(SnapshotStore.manifest(spark, dir, 2).stats.map(_.rows).sum == 12L)
-    // deleting a pre-existing row: every format-1 file is a victim
-    val v = SnapshotStore.upsert(spark, rows(Seq(2L), "x").withColumn("_deleted", lit(true)), dir,
-      deletedCol = Some("_deleted"))
-    assert(content(SnapshotStore.read(spark, dir)) == appended - ((2L, "a")))
-    assert(SnapshotStore.manifest(spark, dir, v).files.forall(!_.contains("_bucket=")))
-    assert(content(SnapshotStore.readVersion(spark, dir, 1)) == want)
+    Seq[() => Any](() => SnapshotStore.read(spark, dir),
+      () => SnapshotStore.append(spark, rows(Seq(11L, 12L), "b"), dir)).foreach { op =>
+      val e = intercept[IllegalArgumentException](op())
+      assert(e.getMessage.contains("v1 has format 1"), e.getMessage)
+    }
+    assert(SnapshotStore.headVersion(spark, dir) == 1)
+  }
+
+  test("expireSnapshots leaves an in-flight commit's files above HEAD") {
+    val dir = freshDir("inflight")
+    SnapshotStore.create(spark, rows(1L to 4L, "a"), dir)
+    SnapshotStore.append(spark, rows(Seq(5L), "b"), dir)
+    // a concurrent committer has claimed v3 and written its data, not yet
+    // its manifest or HEAD
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+    assert(fs.createNewFile(new org.apache.hadoop.fs.Path(s"$dir/_snaps/v3.claim")))
+    rows(Seq(6L), "c").write.parquet(s"$dir/data_v3")
+    val inflight = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/data_v3"))
+      .map(_.getPath).filter(_.getName.endsWith(".parquet"))
+    assert(inflight.nonEmpty)
+    SnapshotStore.expireSnapshots(spark, dir, keepFrom = 2)
+    assert(inflight.forall(fs.exists), "expireSnapshots deleted an in-flight commit's file")
+    assert(content(SnapshotStore.read(spark, dir)) == ((1L to 4L).map(i => (i, "a")) :+ ((5L, "b"))).toSet)
+    SnapshotStore.releaseFailedCommit(spark, dir, 3)
+    assert(!inflight.exists(fs.exists))
   }
 }

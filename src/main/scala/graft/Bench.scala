@@ -35,7 +35,11 @@ object Bench {
     * Everything before the final (tiny) aggregation is map-side — no
     * shuffle of the image table. Shared with ClusterBench (the
     * executor-process N-vs-4N evidence). */
-  private[graft] def pipeline(spark: SparkSession, n: Long): Long = {
+  private[graft] def pipeline(spark: SparkSession, n: Long): Long = pipelineFrame(spark, n).count()
+
+  /** The flagship frame `pipeline` counts: the tile manifest of the matched
+    * images. */
+  private[graft] def pipelineFrame(spark: SparkSession, n: Long): DataFrame = {
     import org.apache.spark.sql.functions.col
     import graft.functions.S2Expressions
     // the h3 validity filter keeps the per-row dual-index assignment in the
@@ -46,7 +50,7 @@ object Bench {
       .where(col("hex7_9") =!= 0L)
       .select("image_id", "lat", "lng", "cell16")
     val matched = Containment.containmentProbe(images, Synth.regions)
-    Tiling.pointManifest(matched, 10, 14).count()
+    Tiling.pointManifest(matched, 10, 14)
   }
 
   def main(args: Array[String]): Unit = {

@@ -687,7 +687,7 @@ object SparkEntry {
     //     (S2 level 16 <-> H3 res 9); rows-only (hex math not ANSI-SQL) ---
     Gate("q_hex7_cells", (s, dir) =>
       images(s, dir)
-        .withColumn("hex7_9", Udfs.hex7At(9)(col("lat"), col("lng")))
+        .withColumn("hex7_9", graft.functions.S2Expressions.hex7Cell(col("lat"), col("lng"), 9))
         .withColumn("hex7_5", Udfs.hex7Parent(col("hex7_9"), lit(5)))
         .groupBy("hex7_5").agg(count(lit(1)).as("n"))
         .orderBy("hex7_5"),

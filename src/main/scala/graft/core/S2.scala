@@ -103,11 +103,16 @@ object S2 {
     }
 
   // ---- cell id construction ----
-  def fromFaceIJ(face: Int, i: Int, j: Int): Long = {
+  def fromFaceIJ(face: Int, i: Int, j: Int): Long = fromFaceIJDownTo(face, i, j, 0)
+
+  /** `fromFaceIJ` with the Hilbert lookup loop stopped after step `kMin`:
+    * step k writes only id bits k * 8 + 1 .. k * 8 + 8, so the result agrees
+    * with the leaf on every bit above them. */
+  private def fromFaceIJDownTo(face: Int, i: Int, j: Int, kMin: Int): Long = {
     var n = face.toLong << (PosBits - 1)
     var bits = face & SwapMask
     var k = 7
-    while (k >= 0) {
+    while (k >= kMin) {
       val mask = (1 << LookupBits) - 1
       bits += ((i >> (k * LookupBits)) & mask) << (LookupBits + 2)
       bits += ((j >> (k * LookupBits)) & mask) << 2
@@ -132,19 +137,18 @@ object S2 {
     fromFaceIJ(face, stToIJ(uvToST(u)), stToIJ(uvToST(v)))
   }
 
-  def cellAt(latDeg: Double, lngDeg: Double, level: Int): Long =
-    parent(fromLatLngDegreesFast(latDeg, lngDeg), level)
-
-  /** Allocation-free leaf-cell path (no tuples/arrays) — the write-time hot
-    * kernel behind the S2CellAt16 codegen expression; equals
-    * fromLatLngDegrees bit-for-bit (PropertySpec). */
-  def fromLatLngDegreesFast(latDeg: Double, lngDeg: Double): Long = {
+  /** The cell at `level` holding a point: equals
+    * `parent(fromLatLngDegrees(lat, lng), level)` bit for bit (PropertySpec). */
+  def cellAt(latDeg: Double, lngDeg: Double, level: Int): Long = {
     val lat = math.toRadians(latDeg)
     val lng = math.toRadians(lngDeg)
     val cosLat = math.cos(lat)
-    val x = cosLat * math.cos(lng)
-    val y = cosLat * math.sin(lng)
-    val z = math.sin(lat)
+    cellAtXyz(cosLat * math.cos(lng), cosLat * math.sin(lng), math.sin(lat), level)
+  }
+
+  /** `cellAt` from the point's unit vector as `Geo.toXYZ` computes it — the
+    * kernel behind the S2CellAt16 codegen expression. Allocation-free. */
+  def cellAtXyz(x: Double, y: Double, z: Double, level: Int): Long = {
     val face = xyzToFace(x, y, z)
     var u = 0.0; var v = 0.0
     face match {
@@ -155,8 +159,16 @@ object S2 {
       case 4 => u = z / y; v = -x / y
       case _ => u = -y / z; v = -x / z
     }
-    fromFaceIJ(face, stToIJ(uvToST(u)), stToIJ(uvToST(v)))
+    // the lookup steps below (30 - level) / 4 write only bits that `parent`
+    // clears or sets: 5 of the 8 steps run at level 16
+    val kMin = if (level >= 0 && level <= MaxLevel) (MaxLevel - level) >> 2 else 0
+    parent(fromFaceIJDownTo(face, stToIJ(uvToST(u)), stToIJ(uvToST(v)), kMin), level)
   }
+
+  /** The leaf cell: `cellAt` at level 30. Equals fromLatLngDegrees
+    * bit-for-bit (PropertySpec). */
+  def fromLatLngDegreesFast(latDeg: Double, lngDeg: Double): Long =
+    cellAt(latDeg, lngDeg, MaxLevel)
 
   // ---- navigation ----
   @inline def lsb(id: Long): Long = id & -id

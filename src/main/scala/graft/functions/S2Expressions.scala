@@ -2,7 +2,7 @@ package graft.functions
 
 import graft.core.S2
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
@@ -11,9 +11,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * level-16 cell (SURVEY.md §4.3 "custom expressions (optional, perf)").
   *
   * Unlike a Scala UDF, this stays inside whole-stage codegen: the generated
-  * code calls the static kernel directly — no ScalaUDF wrapper, no
+  * code calls the kernel directly — no ScalaUDF wrapper, no
   * encoder/converter round-trip, no extra closure dispatch per row, and the
   * expression reports its null-intolerance so Catalyst can reason about it.
+  * Generated code encodes through the generated class's one `XyzMemo`, which
+  * it shares with Hex7CellAt; interpreted evaluation calls `S2.cellAt`.
   */
 case class S2CellAt16(left: Expression, right: Expression)
     extends BinaryExpression with Serializable {
@@ -24,9 +26,10 @@ case class S2CellAt16(left: Expression, right: Expression)
   override protected def nullSafeEval(lat: Any, lng: Any): Any =
     S2.cellAt(lat.asInstanceOf[Double], lng.asInstanceOf[Double], 16)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (lat, lng) =>
-      s"${ev.value} = graft.core.S2.cellAt($lat, $lng, 16);")
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val memo = S2Expressions.xyzMemo(ctx)
+    nullSafeCodeGen(ctx, ev, (lat, lng) => s"${ev.value} = $memo.s2CellAt($lat, $lng, 16);")
+  }
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): S2CellAt16 =
     copy(left = newLeft, right = newRight)
@@ -35,7 +38,8 @@ case class S2CellAt16(left: Expression, right: Expression)
 /** Native containment probe: region ordinals containing the point, via a
   * ProbeIndex shipped in the expression's reference array (ctx.addReferenceObj
   * — the standard pattern for constant side data in generated code). Unboxed
-  * inputs, shared-empty result on the no-match path. */
+  * inputs; generated code returns one shared empty array on the no-match
+  * path instead of allocating one per row. */
 case class ContainmentProbeExpr(first: Expression, second: Expression, third: Expression,
                                 index: graft.ops.PointProbe)
     extends TernaryExpression with Serializable {
@@ -48,9 +52,14 @@ case class ContainmentProbeExpr(first: Expression, second: Expression, third: Ex
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val idxRef = ctx.addReferenceObj("probeIndex", index, classOf[graft.ops.PointProbe].getName)
-    nullSafeCodeGen(ctx, ev, (cell, lat, lng) =>
-      s"""${ev.value} = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
-         |  $idxRef.probe($cell, $lat, $lng));""".stripMargin)
+    val emptyRef = ctx.addReferenceObj("noRegions",
+      UnsafeArrayData.fromPrimitiveArray(Array.emptyIntArray), classOf[UnsafeArrayData].getName)
+    nullSafeCodeGen(ctx, ev, (cell, lat, lng) => {
+      val hits = ctx.freshName("hits")
+      s"""int[] $hits = $idxRef.probe($cell, $lat, $lng);
+         |${ev.value} = $hits.length == 0 ? $emptyRef
+         |  : org.apache.spark.sql.catalyst.util.ArrayData.toArrayData($hits);""".stripMargin
+    })
   }
 
   override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): ContainmentProbeExpr =
@@ -103,7 +112,7 @@ case class S2AncestorsExpr(child: Expression, levels: Array[Int])
 }
 
 /** Native H3 cell assignment (north-rule dual index) — same codegen shape as
-  * S2CellAt16. */
+  * S2CellAt16, sharing its unit vector when both encode the same row. */
 case class Hex7CellAt(left: Expression, right: Expression, res: Int)
     extends BinaryExpression with Serializable {
   override def dataType: DataType = LongType
@@ -112,9 +121,10 @@ case class Hex7CellAt(left: Expression, right: Expression, res: Int)
   override protected def nullSafeEval(lat: Any, lng: Any): Any =
     graft.core.Hex7.fromLatLngDegreesFast(lat.asInstanceOf[Double], lng.asInstanceOf[Double], res)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (lat, lng) =>
-      s"${ev.value} = graft.core.Hex7.fromLatLngDegreesFast($lat, $lng, $res);")
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val memo = S2Expressions.xyzMemo(ctx)
+    nullSafeCodeGen(ctx, ev, (lat, lng) => s"${ev.value} = $memo.hex7CellAt($lat, $lng, $res);")
+  }
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Hex7CellAt =
     copy(left = l, right = r)
@@ -180,6 +190,14 @@ case class ContainsRingsExpr(first: Expression, second: Expression,
 }
 
 object S2Expressions {
+  /** The generated class's one `XyzMemo`: every S2CellAt16 and Hex7CellAt of
+    * a codegen stage encodes through it. */
+  private[functions] def xyzMemo(ctx: CodegenContext): String = {
+    val cls = classOf[graft.core.XyzMemo].getName
+    ctx.addImmutableStateIfNotExists(cls, "graftXyzMemo", v => s"$v = new $cls();")
+    "graftXyzMemo"
+  }
+
   /** Column-level entry point: `s2Cell16($"lat", $"lng")`. */
   def s2Cell16(lat: Column, lng: Column): Column =
     Bridge.column(S2CellAt16(Bridge.expression(lat), Bridge.expression(lng)))

@@ -93,13 +93,6 @@ object Udfs {
       Tiles.coverCellUnionAcrossZooms(cells.toArray, zMin, zMax, robust = true)
         .map { case (x, y, z) => (z, x, y) })
 
-  /** H3-style aperture-7 cell at a resolution (north-rule dual index; see
-    * graft.core.Hex7 scaladoc for the construction + documented divergences).
-    * b6's level-16 S2 cell (~300 m) pairs with H3 res 9 (~350 m hex edge in
-    * this construction) as the matched resolution. */
-  def hex7At(res: Int): UserDefinedFunction =
-    udf((lat: Double, lng: Double) => graft.core.Hex7.fromLatLngDegrees(lat, lng, res))
-
   val hex7Parent: UserDefinedFunction =
     udf((id: Long, res: Int) => graft.core.Hex7.parent(id, res))
 

@@ -5,6 +5,7 @@ import graft.functions.S2Expressions
 import graft.model.Synth.Region
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 /** Point-in-polygon containment join — the canonical cell-pruned prune+refine
   * join of the north star (SURVEY.md §2.4, b6 `containing-areas`,
@@ -171,11 +172,17 @@ object Containment {
       new Hex7ProbeIndex(regions, Hex7ImageRes))
 
   /** Both probes share the native codegen probe expression: `key` is the
-    * image's cell in the index's id space. */
-  private def probeWith(images: DataFrame, key: Column, index: PointProbe): DataFrame =
-    images
-      .withColumn("ridx", explode(S2Expressions.containmentProbe(
-        key, col("lat"), col("lng"), index)))
-      .withColumn("region_id", element_at(lit(index.regionIds), col("ridx") + 1))
-      .drop("ridx")
+    * image's cell in the index's id space. Two projections: the exploded
+    * region ordinals, then the images' columns with `region_id` in place of
+    * one they already carry, else appended (withColumn's semantics). */
+  private def probeWith(images: DataFrame, key: Column, index: PointProbe): DataFrame = {
+    val probed = images.withColumn("ridx", explode(S2Expressions.containmentProbe(
+      key, col("lat"), col("lng"), index)))
+    val resolver = SQLConf.get.resolver
+    val regionId = element_at(lit(index.regionIds), col("ridx") + 1).as("region_id")
+    val kept = probed.columns.toSeq.filterNot(resolver(_, "ridx")).map(c =>
+      if (resolver(c, "region_id")) regionId else col(s"`${c.replace("`", "``")}`"))
+    probed.select(
+      (if (images.columns.exists(resolver(_, "region_id"))) kept else kept :+ regionId): _*)
+  }
 }

@@ -21,14 +21,16 @@ object Tiling {
     * the UDF boundary carries one primitive array per row. Valid for
     * zMax <= 15 (packed z occupies the top 5 bits; zooms >= 16 set the sign
     * bit, which the unsigned decode below would still handle). */
-  def pointManifest(images: DataFrame, zMin: Int, zMax: Int): DataFrame =
+  def pointManifest(images: DataFrame, zMin: Int, zMax: Int): DataFrame = {
+    val tid = col("tid")
+    val z = shiftrightunsigned(tid, 59).cast("int")
+    val mask = call_function("shiftleft", lit(1L), z) - 1
     images
-      .withColumn("tid", explode(graft.functions.S2Expressions.tileChain(
-        col("lat"), col("lng"), zMin, zMax)))
-      .withColumn("z", expr("CAST(shiftrightunsigned(tid, 59) AS INT)"))
-      .select(col("image_id"), col("z"),
-        expr("tid & (shiftleft(1L, z) - 1)").as("x"),
-        expr("shiftrightunsigned(tid, z) & (shiftleft(1L, z) - 1)").as("y"))
+      .select(col("image_id"), explode(graft.functions.S2Expressions.tileChain(
+        col("lat"), col("lng"), zMin, zMax)).as("tid"))
+      .select(col("image_id"), z.as("z"), tid.bitwiseAND(mask).as("x"),
+        call_function("shiftrightunsigned", tid, z).bitwiseAND(mask).as("y"))
+  }
 
   /** Rule-driven per-zoom basemap LAYER manifest — the reference's
     * RenderRules (renderer/renderer.go:68-130: per-rule tag query + zoom

@@ -5,9 +5,10 @@ import graft.model.Synth
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Seeded differential check of the per-row Hex7 encode against its
-  * rounding reference: `fromLatLngDegreesFast` (octant-pruned face search,
-  * per-resolution tables, integer up-walk) must equal `fromLatLngDegrees`
-  * (full face scan, floating-point `upAp7` walk) bit for bit, and the
+  * rounding reference: `fromLatLngDegreesFast` (face search over the
+  * candidates of a 2° grid cell, per-resolution tables, integer up-walk)
+  * must equal `fromLatLngDegrees` (full face scan, floating-point `upAp7`
+  * walk) bit for bit, and the
   * integer walk `fromFaceHexExact` must equal `fromFaceHex` hex for hex. */
 class Hex7FastSpec extends AnyFunSuite {
 
@@ -82,7 +83,7 @@ class Hex7FastSpec extends AnyFunSuite {
         jitters.foreach(j => d.checkAllRes(lat + j, lng - j))
       }
     }
-    // the antimeridian, latitude ±84.9 and the octant planes (x, y or z = 0)
+    // the antimeridian, latitude ±84.9 and the planes x, y or z = 0
     i = 0
     while (i < 1000) {
       val lat = uniformLat(); val lng = uniformLng()
@@ -97,6 +98,41 @@ class Hex7FastSpec extends AnyFunSuite {
       i += 1
     }
     assert(d.points >= 1000000L)
+    assert(d.misses == 0, s"${d.misses} of ${d.points} points differ: ${d.examples.mkString("; ")}")
+  }
+
+  test("face-grid lines, poles, ±180°, NaN and out-of-range inputs equal fromLatLngDegrees bit for bit") {
+    val d = new Diff
+    val offsets = Array(0.0, 1e-13, -1e-13, 1e-10, -1e-10, 1e-7, -1e-7)
+    // every node of the 2° grid, offset along both axes
+    var lat = -90
+    while (lat <= 90) {
+      var lng = -180
+      while (lng <= 180) {
+        offsets.foreach(a => offsets.foreach(b => d.check(lat + a, lng + b, if (((lat ^ lng) & 2) == 0) 9 else 15)))
+        lng += 2
+      }
+      lat += 2
+    }
+    // along each grid line, offset across it
+    (0 until 40).foreach { _ =>
+      val atLat = uniformLat(); val atLng = uniformLng()
+      (-90 to 90 by 2).foreach(l => offsets.foreach { o => d.check(l + o, atLng, 9); d.check(l + o, atLng, 15) })
+      (-180 to 180 by 2).foreach(l => offsets.foreach { o => d.check(atLat, l + o, 9); d.check(atLat, l + o, 15) })
+    }
+    // the poles and the antimeridian at every resolution
+    (0 until 500).foreach { _ =>
+      d.checkAllRes(90.0, uniformLng()); d.checkAllRes(-90.0, uniformLng())
+      d.checkAllRes(uniformLat(), 180.0); d.checkAllRes(uniformLat(), -180.0)
+    }
+    // NaN, infinities and coordinates outside [-90, 90] x [-180, 180]
+    val odd = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, 90.0 + 1e-13,
+      -90.0 - 1e-13, 91.0, -135.0, 180.0 + 1e-13, -180.0 - 1e-13, 270.0, -400.0, 1e6)
+    odd.foreach { a =>
+      d.checkAllRes(a, 10.0); d.checkAllRes(10.0, a)
+      odd.foreach(b => d.checkAllRes(a, b))
+    }
+    assert(d.points >= 800000L)
     assert(d.misses == 0, s"${d.misses} of ${d.points} points differ: ${d.examples.mkString("; ")}")
   }
 

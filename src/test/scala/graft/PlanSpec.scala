@@ -330,4 +330,32 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       .queryExecution.executedPlan.toString
     assert(!ex.contains("Join"), "bucket assignment must be join-free:\n" + ex)
   }
+
+  test("flagship frame is one codegen stage under its partial aggregate, JIT-sized") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    import org.apache.spark.sql.execution.{InputAdapter, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val p = try Bench.pipelineFrame(spark, 10000).groupBy().count().queryExecution.executedPlan
+      finally spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
+    val stages = p.collect { case w: WholeStageCodegenExec => w }.filter(_.child match {
+      case a: HashAggregateExec => a.aggregateExpressions.exists(_.mode == Partial)
+      case _ => false
+    })
+    assert(stages.length == 1, s"expected one stage holding the partial aggregate:\n$p")
+    val stage = stages.head
+    // every kernel runs in it, fused down to the range: no stage boundary
+    assert(stage.child.collectFirst { case i: InputAdapter => i }.isEmpty,
+      s"the flagship frame must not cross a codegen stage boundary:\n$stage")
+    Seq("s2_cell16", "hex7_cell9", "containment_probe", "tile_chain").foreach(k =>
+      assert(stage.toString.contains(k), s"$k is not in the fused stage:\n$stage"))
+    // HotSpot does not JIT-compile a method over 8,000 bytes of bytecode
+    // (DontCompileHugeMethods is on by default): the stage would run
+    // interpreted, silently
+    val (_, stats) = CodeGenerator.compile(stage.doCodeGen()._2)
+    assert(stats.maxMethodCodeSize < 8000,
+      s"largest generated method is ${stats.maxMethodCodeSize} bytes")
+  }
 }

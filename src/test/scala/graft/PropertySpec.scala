@@ -101,6 +101,23 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("S2: cellAt's level-bounded walk equals the leaf's parent at every level 0-30") {
+    val rnd = new java.util.SplittableRandom(20261019L)
+    // cube-face edges and corners, the poles and the antimeridian, then
+    // uniform points on the sphere
+    val cornerLat = math.toDegrees(math.atan(1 / math.sqrt(2.0)))
+    val edges = for (lat <- Seq(-90.0, -cornerLat, -45.0, 0.0, 45.0, cornerLat, 90.0);
+                     lng <- Seq(-180.0, -135.0, -90.0, -45.0, 0.0, 45.0, 90.0, 135.0, 180.0))
+      yield (lat, lng)
+    val points = edges ++ Seq.fill(100000)(
+      (math.toDegrees(math.asin(rnd.nextDouble(-1.0, 1.0))), rnd.nextDouble(-180.0, 180.0)))
+    val misses = points.flatMap { case (lat, lng) =>
+      val leaf = S2.fromLatLngDegrees(lat, lng)
+      (0 to S2.MaxLevel).filter(l => S2.cellAt(lat, lng, l) != S2.parent(leaf, l)).map((lat, lng, _))
+    }
+    assert(misses.isEmpty, s"${misses.length} (point, level) pairs differ: ${misses.take(5)}")
+  }
+
   test("H3: resolution and digit ranges hold for random points") {
     forAll(genLat, genLng, Gen.choose(1, 15)) { (lat, lng, res) =>
       val id = Hex7.fromLatLngDegrees(lat, lng, res)

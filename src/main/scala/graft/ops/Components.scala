@@ -34,9 +34,10 @@ import org.apache.spark.sql.functions._
   * the edge count is non-increasing after round one. No collect_list of
   * neighborhoods (a cluster hub's degree = its component size — a
   * list-valued group would funnel that into one task); hub-keyed join skew
-  * falls to AQE splitting like every hot-key join in the engine. Rounds are
-  * snapshotted through the shared Tracker (flat LogicalRDD scans — constant
-  * planning cost), one materializing job per round.
+  * falls to AQE splitting like every hot-key join in the engine. Rounds run
+  * on the shared round driver (Tracker.rounds: flat LogicalRDD scans —
+  * constant planning cost): one snapshot job per round, whose left join to
+  * the previous edge set also counts the new edges the stop rule needs.
   */
 object Components {
 
@@ -51,8 +52,9 @@ object Components {
     *
     * @param pairs exactly two LONG-castable columns (the undirected edge
     *              list); self-pairs and duplicates are tolerated.
-    * @param maxIters loud-failure bound (the flood policy,
-    *              Reachability.scala): the algorithm needs O(log^2 n)
+    * @param maxIters loud-failure bound (the shared Tracker.rounds rule:
+    *              maxIters rounds may change the edge set, plus one
+    *              confirming round): the algorithm needs O(log^2 n)
     *              rounds, so 50 covers any physical n — hitting it means a
     *              genuinely pathological input, not a big one. */
   def connectedComponents(pairs: DataFrame, maxIters: Int = 50): DataFrame =
@@ -99,42 +101,33 @@ object Components {
         .unionByName(sm.select(col("u").as("x"), col("m").as("y"))))
     }
 
-    val tracker = new Tracker
-    try {
-      var (e, n, _) = tracker.materialize(
-        canonical(pairs.select(cA.cast("long"), cB.cast("long"))))
-      var rounds = 0
-      var done = n == 0
-      while (!done && rounds < maxIters) {
-        // one full alternation per materializing job: small-star over the
-        // lazy large-star subtree
-        val (e2, n2, _) = tracker.materialize(smallStar(largeStar(e)))
-        // fixpoint of the composition == both phases are identity == star
-        // forests centered at component minima (SoCC'14): sizes equal AND
-        // no new edge outside the old set (both are canonical SETS)
-        done = n2 == n &&
-          e2.join(e, Seq("lo", "hi"), "left_anti").limit(1).count() == 0
-        e = e2; n = n2
-        rounds += 1
-      }
-      if (!done)
-        throw new IllegalStateException(
-          s"connectedComponents: no fixpoint after maxIters=$maxIters rounds " +
-            "(the algorithm needs O(log^2 n); this input is pathological); " +
-            "raise maxIters")
+    var rounds = 0
+    val frame = Tracker.run(pairs.sparkSession) { t =>
+      val first = t.snapshot(canonical(pairs.select(cA.cast("long"), cB.cast("long"))))
+      var e = first.df
+      var n = first.rows
+      // fixpoint of the composition == both phases are identity == star
+      // forests centered at component minima (SoCC'14): sizes equal AND no
+      // edge outside the old set (both are canonical SETS). One snapshot
+      // per round: small-star over the lazy large-star subtree, left-joined
+      // to the previous set so the same job counts the `new` edges.
+      if (n > 0)
+        rounds = Tracker.rounds(pairs.sparkSession, "connectedComponents", maxIters) { _ =>
+          val next = t.snapshot(smallStar(largeStar(e))
+            .join(e.withColumn("old", lit(true)), Seq("lo", "hi"), "left")
+            .select(col("lo"), col("hi"), col("old").isNull.as("new")),
+            _.getBoolean(2))
+          val pending = if (next.rows == n && next.matched == 0) 0L else 1L
+          e = next.df.select("lo", "hi")
+          n = next.rows
+          pending
+        }
       // converged state is a star forest: leaves point at their component's
       // minimum; centers map to themselves
-      val comp = e.select(col("hi").as("id"), col("lo").as("component"))
+      t.snapshot(e.select(col("hi").as("id"), col("lo").as("component"))
         .unionByName(e.select(col("lo").as("id"), col("lo").as("component")))
-        .distinct()
-      val (frame, _, finalRdd) = tracker.materialize(comp)
-      tracker.releaseExcept(finalRdd)
-      Tracker.registerSurvivor(finalRdd) // EngineCaches releases it later
-      (frame, rounds)
-    } catch {
-      case t: Throwable =>
-        tracker.releaseAll()
-        throw t
+        .distinct())
     }
+    (frame, rounds)
   }
 }

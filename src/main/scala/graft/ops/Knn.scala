@@ -229,8 +229,8 @@ object Knn {
       .orderBy("query_id", "rank")
   }
 
-  /** The cached probe projection, widened to the session's parallelism when
-    * the source partitioning is BELOW it. Small single-row-group parquet
+  /** The probe projection (callers cache it), widened to the session's
+    * parallelism when the source partitioning is BELOW it. Small single-row-group parquet
     * (the local test tables) scans as ONE task, and every probe round would
     * otherwise run on one core; at design scale source partitions >> cores
     * so the branch is a no-op and the projection keeps the scan layout —
@@ -238,14 +238,14 @@ object Knn {
   private def probeProjection(images: DataFrame): DataFrame = {
     val proj = images.select(col("image_id"), col("lat"), col("lng"), col("cell16"))
     val par = proj.sparkSession.sparkContext.defaultParallelism
-    (if (proj.rdd.getNumPartitions < par) proj.repartition(par) else proj).cache()
+    if (proj.rdd.getNumPartitions < par) proj.repartition(par) else proj
   }
 
   def knn(spark: SparkSession, images: DataFrame, queries: Seq[KnnQuery],
           k: Int = 10, initialRadiusDeg: Double = 2.0): DataFrame = {
     // cache the probe projection: every expansion round re-probes it, and
     // without the cache the upstream cell-assignment UDF re-runs per round
-    val imgs = probeProjection(images)
+    val imgs = probeProjection(images).cache()
     try knnRounds(spark, queries, k, initialRadiusDeg, meters = false, (_, _) => imgs)
       .select("query_id", "image_id", "rank")
     finally imgs.unpersist()
@@ -274,7 +274,7 @@ object Knn {
     * is <= r the result is complete. Same loop as `knn` (meters=true). */
   def knnHaversine(spark: SparkSession, images: DataFrame, queries: Seq[KnnQuery],
                    k: Int = 10, initialRadiusMeters: Double = 200000.0): DataFrame = {
-    val imgs = probeProjection(images)
+    val imgs = probeProjection(images).cache()
     try knnRounds(spark, queries, k, initialRadiusMeters, meters = true, (_, _) => imgs)
       .withColumnRenamed("dist", "dist_m")
     finally imgs.unpersist()
@@ -362,35 +362,33 @@ object Knn {
     // (no global projection to cache); the direct form caches the projected
     // image side once for all rounds. The store's HEAD manifest is read
     // ONCE per call and pins every round to that version.
-    val imgs = images.map(probeProjection)
     val storeHead = storeDir.map(d => graft.lineage.SnapshotStore.headManifest(spark, d))
-    // initialRadius <= 0 -> auto from density: aim for ~48*k candidates per
-    // round-1 cap so virtually every query resolves immediately — the d2
-    // stop rule needs kth * (1 + 1/cos) <= r, i.e. ~(1+1/cos)^2 * k ~ 6-8k
-    // candidates even at high latitudes. 16k resolved 98% of the uniform
-    // batch in round 1 but left the low-density tail (~1.7k of 10^4 at
-    // sf0.01) paying a second full round whose cost is mostly fixed (job
-    // launch + covering + window) — 48k resolves the tail too and measures
-    // FASTER end-to-end (2 rounds 1.2+0.9 s -> 1 round ~1.3 s warm): per-
-    // query candidates stay tiny (~150 rows at k=3) and the top-k partial
-    // aggregate absorbs the 3x fan-in map-side. The count is one cheap job
-    // over the cached projection (for the store, a pure metadata read of
-    // the bucket stats); correctness is radius-invariant (OpsSpec), this
-    // only tunes round counts across densities (a fixed 2 deg was right at
-    // sf0.1 but cost an extra full round at sf0.01).
-    val initialRadius =
-      if (initialRadius0 > 0) initialRadius0
-      else {
-        val n = math.max(1L, storeHead match {
-          case Some(m) => m.stats.map(_.rows).sum
-          case None => imgs.get.count()
-        })
-        val deg = math.min(60.0, math.sqrt(48.0 * k * 41253.0 / (math.Pi * n)))
-        if (meters) deg * 111320.0 else deg
-      }
-    val tracker = new Tracker
-    import tracker.materialize
-    try {
+    Tracker.run(spark) { t =>
+      val imgs = images.map(i => t.cache(probeProjection(i)))
+      // initialRadius <= 0 -> auto from density: aim for ~48*k candidates per
+      // round-1 cap so virtually every query resolves immediately — the d2
+      // stop rule needs kth * (1 + 1/cos) <= r, i.e. ~(1+1/cos)^2 * k ~ 6-8k
+      // candidates even at high latitudes. 16k resolved 98% of the uniform
+      // batch in round 1 but left the low-density tail (~1.7k of 10^4 at
+      // sf0.01) paying a second full round whose cost is mostly fixed (job
+      // launch + covering + window) — 48k resolves the tail too and measures
+      // FASTER end-to-end (2 rounds 1.2+0.9 s -> 1 round ~1.3 s warm): per-
+      // query candidates stay tiny (~150 rows at k=3) and the top-k partial
+      // aggregate absorbs the 3x fan-in map-side. The count is one cheap job
+      // over the cached projection (for the store, a pure metadata read of
+      // the bucket stats); correctness is radius-invariant (OpsSpec), this
+      // only tunes round counts across densities (a fixed 2 deg was right at
+      // sf0.1 but cost an extra full round at sf0.01).
+      val initialRadius =
+        if (initialRadius0 > 0) initialRadius0
+        else {
+          val n = math.max(1L, storeHead match {
+            case Some(m) => m.stats.map(_.rows).sum
+            case None => imgs.get.count()
+          })
+          val deg = math.min(60.0, math.sqrt(48.0 * k * 41253.0 / (math.Pi * n)))
+          if (meters) deg * 111320.0 else deg
+        }
       var results: DataFrame = null
       // round-invariant expressions hoisted OUT of the loop: re-creating a
       // udf/udaf per round gives each round distinct closure identities, so
@@ -434,7 +432,7 @@ object Knn {
       // snapshot job ALSO computes each query's covering (array column) and
       // reports its levels through the accumulator, so the round loop never
       // re-runs the covering kernel or pays a separate levels job.
-      val (snap, nTotal, _) = materialize(
+      val snap = t.snapshot(
         queries.select(col("query_id").cast("int"),
           col("qlat").cast("double"), col("qlng").cast("double"))
           .dropDuplicates("query_id")
@@ -450,11 +448,13 @@ object Knn {
         * snapshot job, so a chunk must derive its round-1 buckets from its
         * OWN covering rows (the straggler-round path) or it would re-read
         * every bucket any chunk touches. */
-      def runLoop(remaining0: DataFrame, n0: Long, chunkLocalBuckets: Boolean): Unit = {
+      def runLoop(remaining0: DataFrame, n0: Long, chunkLocalBuckets: Boolean): Unit =
+      if (n0 > 0) {
       var remaining = remaining0
       var nRemaining = n0
-      var round = 0
-      while (nRemaining > 0) {
+      // no loud bound: every query resolves once its radius reaches the
+      // full sphere
+      Tracker.rounds(spark, "knnBatch", Int.MaxValue) { round =>
         // levels come from the accumulator the SNAPSHOT job already filled —
         // across rounds the mask only accumulates (radii grow -> coarser
         // levels join the set), so it is exact for round 1 and a sound
@@ -498,7 +498,7 @@ object Knn {
           case None => imgs.get
           case Some(d) =>
             val bucketSet: Set[Long] =
-              if (round == 0 && !chunkLocalBuckets) bucketAcc.get.buckets
+              if (round == 1 && !chunkLocalBuckets) bucketAcc.get.buckets
               else {
                 val c = col("c")
                 // (lsb - 1) FIRST: the naive c + lsb - 1 overflows its
@@ -515,8 +515,8 @@ object Knn {
               }
             val (df, nRead) = graft.lineage.SnapshotStore.readBuckets(
               spark, d, storeHead.get, bucketSet)
-            val t = storeReadTelemetry.get()
-            if (t != null) t += nRead
+            val telemetry = storeReadTelemetry.get()
+            if (telemetry != null) telemetry += nRead
             df.select(col("image_id"), col("lat"), col("lng"), col("cell16"))
         }
         // one row per PROBED query: bounded top-k via PARTIAL aggregation —
@@ -535,8 +535,8 @@ object Knn {
         // the left join brings each query's bounded top-k (null if its cap
         // matched nothing), and the resolution predicate, the adaptive next
         // radius AND the next round's covering are plain columns over it.
-        // The materializing pass doubles as the unresolved count
-        // (materializeCounting), so each round's barrier is a single job.
+        // The snapshot job doubles as the unresolved count, so each round's
+        // barrier is a single job.
         val kd2 = element_at(col("top.d2s"), -1)
         // sound radius bound of the k-th candidate in the metric's unit:
         // haversine IS the great-circle distance; d2 needs the equirect ->
@@ -571,19 +571,17 @@ object Knn {
           .withColumn("cov", when(!col("resolved"),
             coveringUdf(col("qlat"), col("qlng"), col("qradius"))))
         val resolvedIdx = statusDf.schema.fieldIndex("resolved")
-        val (status, nRem, _) =
-          tracker.materializeCounting(statusDf)(r => !r.getBoolean(resolvedIdx))
-        val res = status.where(col("resolved") && col("top").isNotNull)
+        val status = t.snapshot(statusDf, !_.getBoolean(resolvedIdx))
+        val res = status.df.where(col("resolved") && col("top").isNotNull)
           .select(col("query_id"), posexplode(col("top.ids")).as(Seq("pos", "image_id")))
           .select(col("query_id"), col("image_id"), (col("pos") + 1).cast("int").as("rank"))
         results = if (results == null) res else results.unionByName(res)
         // next round's input: a lazy projection of the persisted status
         // snapshot — plan depth stays constant (scan -> filter -> project)
-        val rem = status.where(!col("resolved"))
+        remaining = status.df.where(!col("resolved"))
           .select("query_id", "qlat", "qlng", "qcos", "qradius", "cov")
-        remaining = rem
-        nRemaining = nRem
-        round += 1
+        nRemaining = status.matched
+        nRemaining
       }
       } // runLoop
       // ---- dispatch (VERDICT r03 #4): one pass while the exploded query
@@ -602,12 +600,12 @@ object Knn {
       val chunkQueries =
         if (broadcastQueryRowLimit > 0) math.max(1L, broadcastQueryRowLimit / 12)
         else Long.MaxValue
-      if (broadcastQueryRowLimit <= 0 || nTotal <= chunkQueries) {
-        runLoop(snap, nTotal, chunkLocalBuckets = false)
+      if (broadcastQueryRowLimit <= 0 || snap.rows <= chunkQueries) {
+        runLoop(snap.df, snap.rows, chunkLocalBuckets = false)
       } else {
         val qpfx = shiftrightunsigned(
           graft.functions.S2Expressions.s2Cell16(col("qlat"), col("qlng")), 48)
-        val counts = snap.groupBy(qpfx.as("qpfx")).agg(count(lit(1)).as("n"))
+        val counts = snap.df.groupBy(qpfx.as("qpfx")).agg(count(lit(1)).as("n"))
           .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
         val ranges = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
         var lo = -1L; var hi = -1L; var tot = 0L
@@ -619,34 +617,20 @@ object Knn {
         if (tot > 0) ranges += ((lo, hi, tot))
         System.err.println(s"[knnBatch] query side beyond broadcast limit: " +
           s"${ranges.size} regional chunks (<= $chunkQueries queries each)")
-        ranges.foreach { case (l, h, t) =>
-          if (t > chunkQueries)
-            System.err.println(s"[knnBatch] heavy prefix chunk [$l,$h]: $t queries " +
+        ranges.foreach { case (l, h, nq) =>
+          if (nq > chunkQueries)
+            System.err.println(s"[knnBatch] heavy prefix chunk [$l,$h]: $nq queries " +
               "exceed the broadcast limit alone - shuffle-hash fallback for this chunk")
-          runLoop(snap.where(qpfx.between(l, h)), t, chunkLocalBuckets = true)
+          runLoop(snap.df.where(qpfx.between(l, h)), nq, chunkLocalBuckets = true)
         }
       }
-      // snapshot the FINAL ordered result into ONE persisted RDD and release
-      // every intermediate (incl. the per-round result pieces): exactly one
-      // persisted RDD outlives the call, the Tracker.releaseExcept contract
-      if (results == null) {
-        tracker.releaseAll()
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], resultSchema)
-      } else {
-        // snapshot UNSORTED and return the sort lazily over the persisted
-        // RDD: count-style consumers get the sort eliminated outright
-        // (EliminateSorts), write-style consumers pay it exactly once — and
-        // the snapshot job skips the range-sampling pass a sorted .rdd
-        // would have added
-        val (frame, _, finalRdd) = materialize(results)
-        tracker.releaseExcept(finalRdd)
-        Tracker.registerSurvivor(finalRdd) // EngineCaches releases it later
-        frame.orderBy("query_id", "rank")
-      }
-    } catch {
-      case e: Throwable =>
-        tracker.releaseAll()
-        throw e
-    } finally imgs.foreach(_.unpersist())
+      // snapshot the result UNSORTED and return the sort lazily over the
+      // persisted RDD: count-style consumers get the sort eliminated
+      // outright (EliminateSorts), write-style consumers pay it exactly once
+      // — and the snapshot job skips the range-sampling pass a sorted .rdd
+      // would have added
+      t.snapshot(Option(results).getOrElse(
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], resultSchema)))
+    }.orderBy("query_id", "rank")
   }
 }

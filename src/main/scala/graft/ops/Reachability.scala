@@ -9,94 +9,70 @@ import org.apache.spark.sql.functions._
   *
   *   frontier_{i+1} = min_dist( frontier_i JOIN edges ON src ) under cutoff
   *
-  * Each iteration is one distributed join + aggregation; bounded-radius
-  * queries converge in ~10-30 iterations (SURVEY.md §2.4). The distance
-  * table accumulates the per-node minimum. Deterministic: pure min-plus
-  * algebra, no tie-dependent state.
+  * Each round is one distributed join + aggregation, merged with the
+  * distance table in the same aggregate and job; bounded-radius queries
+  * converge in ~10-30 rounds (SURVEY.md §2.4), plus the round that improves
+  * nothing and so confirms the fixpoint. The distance table accumulates
+  * the per-node minimum. Deterministic: pure min-plus algebra, no
+  * tie-dependent state.
   *
   * Scale notes: edges should be pre-partitioned by `src` so the iterated
   * join co-locates (at design scale: bucketed Iceberg table); the frontier
-  * is usually small — broadcast it when it fits. Every per-round table is
-  * rebuilt from a persisted RDD (Tracker.materialize): without lineage
-  * truncation the plan (and Catalyst's planning time) grows with the
-  * iteration count — the classic iterative-Spark trap; intermediates are
-  * released when the call returns (only the result stays persisted).
+  * is usually small — broadcast it when it fits. Every round is ONE
+  * snapshot job (Tracker.rounds): without lineage truncation the plan (and
+  * Catalyst's planning time) grows with the iteration count — the classic
+  * iterative-Spark trap; intermediates are released when the call returns
+  * (only the result stays persisted).
   */
 object Reachability {
 
-  // iteration-table materialization lives in the shared ops.Tracker
-  // (lineage truncation; see its scaladoc)
+  // private bounds of pathsToReach's climb: 64 pending hop rounds plus the
+  // confirming one (Tracker.rounds), and the pred-map size up to which the
+  // climb broadcasts it
+  private val ClimbRounds = 64
+  private val BroadcastNodeLimit = 5000000L
 
   /** The shared min-plus fixpoint: `init` carries `keyCols :+ "dist"` where
-    * the last key column is the frontier node. Returns the settled table. */
-  private def flood(spark: SparkSession, edges: DataFrame, init: DataFrame,
-                    keyCols: Seq[String], cutoff: Double, maxIters: Int,
-                    tracker: Tracker, cacheEdges: Boolean = true): (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
-    // cacheEdges=false for a data-sized edge table (the bucketed design-
-    // scale deployment): materializing the FULL table into executor storage
-    // per query evicts other cached state, while the iterated join only
-    // probes the frontier's keys each round (r03c audit) — let the bucketed
-    // source scans serve each round instead.
-    val eProj = edges.select(col("src"), col("dst"), col("cost").cast("double"))
-    val e = if (cacheEdges) eProj.cache() else eProj
-    var (dist, _, distRdd) = tracker.materialize(init)
-    var frontier = dist
-    var i = 0
-    var done = false
+    * the last key column is the frontier node. Each round is ONE snapshot:
+    * the frontier's expansion and the settled table in one keyed min
+    * aggregate, keeping the `least` distance and flagging `improved` rows
+    * (new, or strictly shorter); the snapshot counts them, and the next
+    * frontier is a lazy filter of it. (A union, not a full outer join: the
+    * join's coalesced keys would turn a non-null `origin` nullable.) The
+    * round that improves nothing confirms the fixpoint, so a run settling in
+    * EXACTLY maxIters improving rounds is accepted and one still improving
+    * after them throws — the downstream consumers (pathsToReach pred
+    * derivation, closest argmin) must never see unsettled distances.
+    * Returns the settled snapshot. */
+  private def flood(t: Tracker, edges: DataFrame, init: DataFrame,
+                    keyCols: Seq[String], cutoff: Double, maxIters: Int): Tracker.Snap = {
+    val e = t.cache(edges.select(col("src"), col("dst"), col("cost").cast("double")))
     val carry = keyCols.filterNot(_ == "node")
-    while (i < maxIters && !done) {
+    val distCols = keyCols.map(col) :+ col("dist")
+    var dist = init
+    var frontier = init
+    var settled: Tracker.Snap = null
+    Tracker.rounds(init.sparkSession, "flood", maxIters) { _ =>
       val expanded = frontier
         .withColumnRenamed("node", "fnode").withColumnRenamed("dist", "fdist")
         .join(e, col("fnode") === col("src"))
         .select(carry.map(col) ++ Seq(col("dst").as("node"),
-          (col("fdist") + col("cost")).as("dist")): _*)
-        .where(col("dist") <= cutoff)
-        .groupBy(keyCols.map(col): _*).agg(min("dist").as("dist"))
-      // keep only genuine improvements over the settled table
-      val (improved, nImproved, _) = tracker.materialize(expanded.as("x")
-        .join(dist.as("s"),
-          keyCols.map(c => col(s"x.$c") === col(s"s.$c")).reduce(_ && _), "left")
-        .where(col("s.dist").isNull || col("x.dist") < col("s.dist"))
-        .select(keyCols.map(c => col(s"x.$c").as(c)) :+ col("x.dist").as("dist"): _*))
-      if (nImproved == 0) done = true
-      else {
-        val (d, _, r) = tracker.materialize(dist.unionByName(improved)
-          .groupBy(keyCols.map(col): _*).agg(min("dist").as("dist")))
-        dist = d; distRdd = r
-        frontier = improved
-      }
-      i += 1
+          (col("fdist") + col("cost")).as("xdist"), lit(null).cast("double").as("dist")): _*)
+        .where(col("xdist") <= cutoff)
+      val merged = expanded
+        .unionByName(dist.withColumn("xdist", lit(null).cast("double")))
+        .groupBy(keyCols.map(col): _*)
+        .agg(min("xdist").as("xdist"), min("dist").as("dist"))
+        .select(keyCols.map(col) ++ Seq(least(col("xdist"), col("dist")).as("dist"),
+          (col("xdist").isNotNull &&
+            (col("dist").isNull || col("xdist") < col("dist"))).as("improved")): _*)
+      val improvedIdx = keyCols.size + 1
+      settled = t.snapshot(merged, _.getBoolean(improvedIdx))
+      dist = settled.df.select(distCols: _*)
+      frontier = settled.df.where(col("improved")).select(distCols: _*)
+      settled.matched
     }
-    // LOUD truncation (ADVICE r02): exiting at maxIters without a proven
-    // fixpoint means `dist` MAY not be settled — downstream consumers
-    // (pathsToReach pred derivation, closest argmin) would silently compute
-    // from non-settled distances. A run that converges in EXACTLY maxIters
-    // improving rounds is still correct, so run one read-only confirmation
-    // expansion before deciding (review r03): only a genuinely pending
-    // improvement throws. Same policy as the pathsToReach maxDepth guard;
-    // callers' catch blocks release the tracked RDDs.
-    if (!done) {
-      val pending = frontier
-        .withColumnRenamed("node", "fnode").withColumnRenamed("dist", "fdist")
-        .join(e, col("fnode") === col("src"))
-        .select(carry.map(col) ++ Seq(col("dst").as("node"),
-          (col("fdist") + col("cost")).as("dist")): _*)
-        .where(col("dist") <= cutoff)
-        .groupBy(keyCols.map(col): _*).agg(min("dist").as("dist"))
-        .as("x")
-        .join(dist.as("s"),
-          keyCols.map(c => col(s"x.$c") === col(s"s.$c")).reduce(_ && _), "left")
-        .where(col("s.dist").isNull || col("x.dist") < col("s.dist"))
-        .limit(1).count()
-      if (pending > 0) {
-        e.unpersist()
-        throw new IllegalStateException(
-          s"flood: no fixpoint after maxIters=$maxIters iterations " +
-            "(improvements still pending); raise maxIters")
-      }
-    }
-    e.unpersist()
-    (dist, distRdd)
+    settled.copy(df = dist)
   }
 
   /** All nodes within `cutoff` cost of the origin set.
@@ -104,34 +80,20 @@ object Reachability {
     *              graphs pass both directions.
     * @return (node LONG, dist DOUBLE) minimal cost per reached node. */
   def reachable(spark: SparkSession, edges: DataFrame, origins: Seq[Long],
-                cutoff: Double, maxIters: Int = 50,
-                cacheEdges: Boolean = true): DataFrame = {
+                cutoff: Double, maxIters: Int = 50): DataFrame = {
     import spark.implicits._
     val init = origins.distinct.map(o => (o, 0.0)).toDF("node", "dist")
-    val t = new Tracker
-    try {
-      val (dist, distRdd) = flood(spark, edges, init, Seq("node"), cutoff, maxIters, t, cacheEdges)
-      t.releaseExcept(distRdd)
-      Tracker.registerSurvivor(distRdd) // EngineCaches releases it later
-      dist
-    } catch { case e: Throwable => t.releaseAll(); throw e }
+    Tracker.run(spark)(flood(_, edges, init, Seq("node"), cutoff, maxIters))
   }
 
   /** Per-origin distances: same min-plus loop keyed by (origin, node) —
     * the substrate for `closest` and `building-access`.
     * @return (origin LONG, node LONG, dist DOUBLE). */
   def reachableMulti(spark: SparkSession, edges: DataFrame, origins: Seq[Long],
-                     cutoff: Double, maxIters: Int = 50,
-                     cacheEdges: Boolean = true): DataFrame = {
+                     cutoff: Double, maxIters: Int = 50): DataFrame = {
     import spark.implicits._
     val init = origins.distinct.map(o => (o, o, 0.0)).toDF("origin", "node", "dist")
-    val t = new Tracker
-    try {
-      val (dist, distRdd) = flood(spark, edges, init, Seq("origin", "node"), cutoff, maxIters, t, cacheEdges)
-      t.releaseExcept(distRdd)
-      Tracker.registerSurvivor(distRdd) // EngineCaches releases it later
-      dist
-    } catch { case e: Throwable => t.releaseAll(); throw e }
+    Tracker.run(spark)(flood(_, edges, init, Seq("origin", "node"), cutoff, maxIters))
   }
 
   /** `connect` (reference api/functions/graph.go:218-239: add a path
@@ -211,67 +173,47 @@ object Reachability {
     *
     * @return (src, dst, uses LONG) tree edges with their usage counts. */
   def pathsToReach(spark: SparkSession, edges: DataFrame, origin: Long,
-                   cutoff: Double, maxDepth: Int = 64,
-                   broadcastNodeLimit: Long = 5000000L): DataFrame = {
+                   cutoff: Double): DataFrame = {
     import spark.implicits._
-    val t = new Tracker
-    try {
-    val e = edges.select(col("src"), col("dst"), col("cost").cast("double"))
-    val (dist, _) = flood(spark, edges,
-      Seq((origin, 0.0)).toDF("node", "dist"), Seq("node"), cutoff, 50, t)
-    // pred(v): min src among edges attaining dist(v) = dist(src) + cost
-    val (pred, nPred, _) = t.materialize(
-      dist.select(col("node").as("dst"), col("dist").as("ddst"))
-        .where(col("dst") =!= origin)
-        .join(e, Seq("dst"))
-        .join(dist.select(col("node").as("src"), col("dist").as("dsrc")), Seq("src"))
-        .where(col("dsrc") + col("cost") === col("ddst"))
-        .groupBy("dst").agg(min("src").as("pred")))
-    // pred has one row per reached node — data-sized for a large cutoff on
-    // a big graph. Broadcast it only while it fits (the count is free from
-    // the snapshot); beyond the limit the climb joins shuffle-hash, which
-    // repartitions the (same-sized) frontier instead of pushing a
-    // multi-GB broadcast to every executor each hop (r03c audit).
-    val predSide =
-      if (nPred <= broadcastNodeLimit) broadcast(pred) else pred.hint("shuffle_hash")
-    // climb: frontier (leaf = every non-origin node, cur); one use per hop
-    var (frontier, nFrontier, _) = t.materialize(dist.where(col("node") =!= origin)
-      .select(col("node").as("leaf"), col("node").as("cur")))
-    val rounds = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var depth = 0
-    while (depth < maxDepth && nFrontier > 0) {
-      val (hop, _, _) = t.materialize(
-        frontier.join(predSide, frontier("cur") === pred("dst"))
-          .select(col("leaf"), col("pred"), col("cur")))
-      rounds += hop.groupBy(col("pred").as("src"), col("cur").as("dst"))
-        .agg(count(lit(1)).as("uses"))
-      val (next, nNext, _) = t.materialize(hop.where(col("pred") =!= origin)
-        .select(col("leaf"), col("pred").as("cur")))
-      frontier = next
-      nFrontier = nNext
-      depth += 1
-    }
-    // LOUD truncation (review r02): silently capping the climb would return
-    // undercounted uses for trees deeper than maxDepth
-    if (nFrontier > 0)
-      throw new IllegalStateException(
-        s"pathsToReach: shortest-path tree deeper than maxDepth=$maxDepth; raise maxDepth")
-    val out = rounds.reduceOption(_ unionByName _)
-      .map(_.groupBy("src", "dst").agg(sum("uses").as("uses")))
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("src", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("dst", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("uses", org.apache.spark.sql.types.LongType)))))
-    val (outM, _, outRdd) = t.materialize(out)
-    t.releaseExcept(outRdd)
-    Tracker.registerSurvivor(outRdd) // EngineCaches releases it later
-    outM
-    } catch {
-      // release EVERYTHING on failure — the maxDepth throw (and any Spark
-      // error mid-climb) must not leak the per-round persisted RDDs
-      case e: Throwable => t.releaseAll(); throw e
+    Tracker.run(spark) { t =>
+      val e = edges.select(col("src"), col("dst"), col("cost").cast("double"))
+      val dist = flood(t, edges, Seq((origin, 0.0)).toDF("node", "dist"),
+        Seq("node"), cutoff, 50).df
+      // pred(v): min src among edges attaining dist(v) = dist(src) + cost
+      val pred = t.snapshot(
+        dist.select(col("node").as("dst"), col("dist").as("ddst"))
+          .where(col("dst") =!= origin)
+          .join(e, Seq("dst"))
+          .join(dist.select(col("node").as("src"), col("dist").as("dsrc")), Seq("src"))
+          .where(col("dsrc") + col("cost") === col("ddst"))
+          .groupBy("dst").agg(min("src").as("pred")))
+      // pred has one row per reached node — data-sized for a large cutoff on
+      // a big graph. Broadcast it only while it fits (the count is free from
+      // the snapshot); beyond the limit the climb joins shuffle-hash, which
+      // repartitions the (same-sized) frontier instead of pushing a
+      // multi-GB broadcast to every executor each hop (r03c audit).
+      val predSide =
+        if (pred.rows <= BroadcastNodeLimit) broadcast(pred.df) else pred.df.hint("shuffle_hash")
+      // climb: frontier (leaf = every non-origin node, cur); one use per hop.
+      // Each hop is ONE snapshot counting the rows still below the origin;
+      // the next frontier is a lazy projection of it. A tree deeper than
+      // the bound fails loudly: capping the climb would undercount uses.
+      var frontier = dist.where(col("node") =!= origin)
+        .select(col("node").as("leaf"), col("node").as("cur"))
+      val hops = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      Tracker.rounds(spark, "pathsToReach", ClimbRounds) { _ =>
+        val hop = t.snapshot(
+          frontier.join(predSide, frontier("cur") === pred.df("dst"))
+            .select(col("leaf"), col("pred"), col("cur")),
+          _.getLong(1) != origin)
+        hops += hop.df.groupBy(col("pred").as("src"), col("cur").as("dst"))
+          .agg(count(lit(1)).as("uses"))
+        frontier = hop.df.where(col("pred") =!= origin)
+          .select(col("leaf"), col("pred").as("cur"))
+        hop.matched
+      }
+      t.snapshot(hops.reduce(_ unionByName _)
+        .groupBy("src", "dst").agg(sum("uses").as("uses")))
     }
   }
 }

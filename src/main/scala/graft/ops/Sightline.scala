@@ -90,8 +90,9 @@ object Sightline {
     * `maxBarriers` bounds the per-origin sweep input (VERDICT r02 #3): the
     * one-task sweep is inherently O(n^2) in the barrier count (the reference
     * sweeps in-process over the same set, sightline.go:578-700), so a
-    * pathological scene density FAILS LOUDLY — the pathsToReach maxDepth
-    * pattern — instead of grinding/OOMing inside the sweep task. */
+    * pathological scene density FAILS LOUDLY — the loud-bound pattern of
+    * the iterative operators (Tracker.rounds) — instead of grinding/OOMing
+    * inside the sweep task. */
   def sightlines(spark: SparkSession, origins: Seq[(Long, Double, Double)],
                  regions: DataFrame, radius: Double,
                  maxBarriers: Int = 200000): DataFrame = {

@@ -343,18 +343,19 @@ object TextOps {
   def scoreWithNgramModel(df: DataFrame, idCol: String, textCol: String,
                           model: NgramModel): DataFrame = {
     val tracker = new Tracker
-    val (uni, nUni, uniRdd) = tracker.materialize(model.uni)
+    val uniSnap = tracker.snapshot(model.uni)
     // loud empty-model contract: with zero unigrams t_total is NULL and
     // every backoff logp would null out, coalescing into plausible-looking
     // all-zero scores (and diverging from the golden's -Infinity)
-    if (nUni == 0) {
+    if (uniSnap.rows == 0) {
       tracker.releaseAll()
       throw new IllegalArgumentException(
         "scoreWithNgramModel: the trained model is empty (no unigrams); " +
           "train on a non-empty slice")
     }
-    val (bi, _, biRdd) = tracker.materialize(model.bi)
-    Seq(uniRdd, biRdd).foreach(Tracker.registerSurvivor)
+    val biSnap = tracker.snapshot(model.bi)
+    Seq(uniSnap, biSnap).foreach(m => Tracker.registerSurvivor(model.uni.sparkSession, m.rdd))
+    val (uni, bi) = (uniSnap.df, biSnap.df)
     // token total = sum of unigram counts, read from the vocab-sized
     // snapshot — a visible keyless aggregate (the stats-attach plan
     // contract), zero extra corpus scans

@@ -227,9 +227,7 @@ object Tiling {
     * aggregations read memory, not the corpus. */
   private[ops] def rollUpSums(base: DataFrame, zMin: Int, zMax: Int,
                               sumCols: Seq[String]): DataFrame = {
-    val tracker = new Tracker
-    val (baseSnap, _, baseRdd) = tracker.materialize(base)
-    Tracker.registerSurvivor(baseRdd)
+    val baseSnap = Tracker.run(base.sparkSession)(_.snapshot(base))
     val out = Seq(col("z"), col("x"), col("y")) ++ sumCols.map(col)
     (zMin to zMax).map { z =>
       val s = zMax - z

@@ -1,24 +1,31 @@
 package graft.ops
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
-/** Iteration-loop lineage truncation, shared by every iterative operator
-  * (Reachability's flood/climb, Knn.knnBatch — review r03 deduplicated the
-  * two copies).
+/** The round machinery of every iterative operator — Reachability's flood
+  * and pathsToReach climb, Components' star rewriting and Knn.knnBatch —
+  * plus the one-snapshot helpers of Tiling and TextOps.
   *
-  * Materialize a (small) iteration table and REBUILD it from the persisted
-  * RDD: the returned frame's logical plan is a flat LogicalRDD scan, so the
-  * per-round analysis/optimization cost stays CONSTANT across iterations.
-  * Plain cache() is not enough — the Dataset's LOGICAL plan still grows each
-  * round and Catalyst re-walks (and re-canonicalizes) the whole accumulated
-  * tree, which turned quadratic-plus in practice (round 4 of a 5-round flood
-  * spent 15 s planning 3 rows). (`localCheckpoint` would do the same but
-  * trips a constraint-rewrite bug under unionByName in Spark 4.1.) */
+  * Snapshot (`Tracker#snapshot`): materialize a (small) iteration table and
+  * REBUILD it from the persisted RDD: the returned frame's logical plan is a
+  * flat LogicalRDD scan, so the per-round analysis/optimization cost stays
+  * CONSTANT across iterations. Plain cache() is not enough — the Dataset's
+  * LOGICAL plan still grows each round and Catalyst re-walks (and
+  * re-canonicalizes) the whole accumulated tree, which turned
+  * quadratic-plus in practice (round 4 of a 5-round flood spent 15 s
+  * planning 3 rows). (`localCheckpoint` would do the same but trips a
+  * constraint-rewrite bug under unionByName in Spark 4.1.)
+  *
+  * Round (`Tracker.rounds`): one snapshot job per round, tagged
+  * `graft:<op>:<round>`, one stop rule and one loud bound. Call
+  * (`Tracker.run`): the result snapshot survives, everything else the call
+  * tracked is released, on success and on failure. Survivors are kept per
+  * SparkSession. */
 private[graft] object Tracker {
   /** Test-only plan capture: materialized frames execute through raw RDD
     * actions, invisible to QueryExecutionListener — a plan-shape spec sets a
-    * buffer here and every materialize on the SAME THREAD appends its
+    * buffer here and every snapshot on the SAME THREAD appends its
     * executed-plan string. Null (the default) costs nothing. */
   private[graft] val capturePlans =
     new ThreadLocal[scala.collection.mutable.Buffer[String]]
@@ -28,16 +35,50 @@ private[graft] object Tracker {
     if (buf != null) buf += df.queryExecution.executedPlan.toString
   }
 
-  /** Surviving-snapshot registry. Every iterative operator deliberately
-    * leaves exactly ONE persisted RDD alive under the frame it returns
-    * (the frame is a flat scan of it); a long-lived session issuing many
-    * such calls accumulates dead snapshots once the results are consumed,
-    * with no handle to free them (review r03g). Callers that keep a session
-    * open call `EngineCaches.releaseIterationSnapshots()` between requests:
-    * results already computed stay correct — an unpersisted snapshot
-    * recomputes through its RDD lineage if re-read, just slower. Same
-    * single-owner caveat as Search.releasePercentileCaches: don't release
-    * while another thread's returned frame is mid-action. */
+  /** A snapshot: `df` is a flat scan of the persisted `rdd`; `rows` counts
+    * its rows and `matched` the rows satisfying the snapshot's predicate. */
+  private[ops] final case class Snap(df: DataFrame, rows: Long, matched: Long, rdd: RDD[Row])
+
+  /** Runs `step(round)` (rounds count from 1) until it reports 0 pending
+    * rows, and returns the number of rounds run. The bound: `max` rounds may
+    * report pending work, plus ONE confirming round that must report none —
+    * a run converging in exactly `max` improving rounds is still correct,
+    * anything still pending after that throws, because exiting would hand
+    * out an unsettled result. Each round's jobs carry the job tag
+    * `graft:<op>:<round>`. A tag, not a job group: the caller's group (a
+    * profiler attributing spans through setJobGroup) stays in force. */
+  private[ops] def rounds(spark: SparkSession, op: String, max: Int)(step: Int => Long): Int = {
+    val sc = spark.sparkContext
+    var round = 0
+    var pending = 1L
+    while (pending > 0) {
+      if (round > max)
+        throw new IllegalStateException(
+          s"$op: no fixpoint after maxIters=$max rounds and a confirming " +
+            "round (work still pending); raise the bound")
+      round += 1
+      val tag = s"graft:$op:$round"
+      sc.addJobTag(tag)
+      try pending = step(round) finally sc.removeJobTag(tag)
+    }
+    round
+  }
+
+  /** One iterative call: `body` computes through a fresh tracker and returns
+    * its RESULT snapshot. Every other snapshot and every cached frame the
+    * call tracked is released, and the result registers as a survivor of
+    * `spark`. On failure everything the call tracked is released. */
+  private[ops] def run(spark: SparkSession)(body: Tracker => Snap): DataFrame = {
+    val t = new Tracker
+    try {
+      val out = body(t)
+      t.releaseExcept(out.rdd)
+      registerSurvivor(spark, out.rdd)
+      out.df
+    } catch { case e: Throwable => t.releaseAll(); throw e }
+    finally t.uncache()
+  }
+
   /** Best-effort unpersist for EVERY release path: an RDD whose
     * SparkContext has been stopped died WITH the context (its blocks are
     * already gone); unpersist would reach into the dead BlockManagerMaster
@@ -53,63 +94,96 @@ private[graft] object Tracker {
       try r.unpersist(blocking = false)
       catch { case scala.util.control.NonFatal(_) => () }
 
-  private val survivors = scala.collection.mutable.ArrayBuffer.empty[RDD[Row]]
-  private[graft] def registerSurvivor(r: RDD[Row]): Unit =
-    Tracker.synchronized { survivors += r }
-  private[graft] def releaseSurvivors(): Unit = Tracker.synchronized {
-    survivors.foreach(safeUnpersist)
-    survivors.clear()
+  /** Surviving-snapshot registry, per session. Every iterative operator
+    * deliberately leaves exactly ONE persisted RDD alive under the frame it
+    * returns (the frame is a flat scan of it); a long-lived session issuing
+    * many such calls accumulates dead snapshots once the results are
+    * consumed, with no handle to free them. Callers that keep a session open
+    * call `EngineCaches.releaseIterationSnapshots()` between requests:
+    * results already computed stay correct — an unpersisted snapshot
+    * recomputes through its RDD lineage if re-read, just slower. Keyed by
+    * session, so one session's release never touches another's results;
+    * sessions whose context has stopped are dropped (their blocks died with
+    * the context). Within one session the single-owner caveat of
+    * Search.releasePercentileCaches stays: don't release while another
+    * thread's returned frame is mid-action. */
+  private val survivors =
+    scala.collection.mutable.Map.empty[SparkSession, scala.collection.mutable.ArrayBuffer[RDD[Row]]]
+
+  private def dropStopped(): Unit =
+    survivors.filterInPlace((s, _) => !s.sparkContext.isStopped)
+
+  private[graft] def registerSurvivor(spark: SparkSession, r: RDD[Row]): Unit =
+    Tracker.synchronized {
+      dropStopped()
+      survivors.getOrElseUpdate(spark, scala.collection.mutable.ArrayBuffer.empty) += r
+    }
+
+  private[graft] def releaseSurvivors(spark: SparkSession): Unit = Tracker.synchronized {
+    survivors.remove(spark).foreach(_.foreach(safeUnpersist))
+    dropStopped()
   }
-  private[graft] def survivorCount: Int = Tracker.synchronized(survivors.size)
+
+  private[graft] def survivorCount(spark: SparkSession): Int =
+    Tracker.synchronized(survivors.get(spark).fold(0)(_.size))
 }
 
 /** Cache-hygiene surface for long-lived sessions (the library-boundary
   * face of the snapshot registry above). */
 object EngineCaches {
-  /** Unpersist every iteration snapshot left alive by completed
-    * kNN-batch / reachability calls (one per call by design). */
-  def releaseIterationSnapshots(): Unit = Tracker.releaseSurvivors()
+  /** Unpersist every iteration snapshot left alive by completed calls of
+    * the ACTIVE session (one per call by design); other sessions' results
+    * stay cached. */
+  def releaseIterationSnapshots(): Unit =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .foreach(Tracker.releaseSurvivors)
 }
 
 private[ops] final class Tracker {
   private val rdds = scala.collection.mutable.ArrayBuffer.empty[RDD[Row]]
+  private val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
 
-  def materialize(df: DataFrame): (DataFrame, Long, RDD[Row]) = {
+  /** Snapshot `df` in ONE job: persist it, count its rows and the rows
+    * satisfying `pred` (the caller's "how many rows need another round"
+    * question rides the snapshot instead of a separate count job). Exact —
+    * the fold runs over the freshly-persisted partitions, no accumulator
+    * retry ambiguity. */
+  def snapshot(df: DataFrame, pred: Row => Boolean = _ => false): Tracker.Snap = {
     Tracker.capture(df)
     val rdd = df.rdd
     rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // register BEFORE the materializing count: if the count's job fails, the
-    // caller's releaseAll() must still see (and unpersist) this RDD —
-    // registering after would leak whatever partitions were already cached
-    // (review r03)
+    // register BEFORE the materializing job: if it fails, releaseAll() must
+    // still see (and unpersist) this RDD — registering after would leak
+    // whatever partitions were already cached
     rdds += rdd
-    val n = rdd.count()
-    (df.sparkSession.createDataFrame(rdd, df.schema), n, rdd)
-  }
-
-  /** Like `materialize`, but the materializing pass ALSO counts the rows
-    * satisfying `pred` (and returns THAT count instead of the total): the
-    * caller's "how many rows need another round" question rides the same
-    * job as the snapshot instead of paying a separate count job per
-    * iteration. Exact — the fold runs over the freshly-persisted partitions,
-    * no accumulator retry ambiguity. */
-  def materializeCounting(df: DataFrame)(pred: Row => Boolean): (DataFrame, Long, RDD[Row]) = {
-    Tracker.capture(df)
-    val rdd = df.rdd
-    rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    rdds += rdd
-    val n = rdd.mapPartitions { it =>
+    val (n, m) = rdd.mapPartitions { it =>
+      var n = 0L
       var m = 0L
-      while (it.hasNext) { if (pred(it.next())) m += 1 }
-      Iterator.single(m)
-    }.fold(0L)(_ + _)
-    (df.sparkSession.createDataFrame(rdd, df.schema), n, rdd)
+      while (it.hasNext) {
+        val r = it.next()
+        n += 1
+        if (pred(r)) m += 1
+      }
+      Iterator.single((n, m))
+    }.fold((0L, 0L))((a, b) => (a._1 + b._1, a._2 + b._2))
+    Tracker.Snap(df.sparkSession.createDataFrame(rdd, df.schema), n, m, rdd)
   }
+
+  /** `df.cache()`, unpersisted when the call ends (Tracker.run), on every
+    * path: a projection re-read each round, not a result. */
+  def cache(df: DataFrame): DataFrame = {
+    val c = df.cache()
+    cached += c
+    c
+  }
+
+  private def uncache(): Unit =
+    cached.foreach(c => if (!c.sparkSession.sparkContext.isStopped) c.unpersist())
 
   /** Unpersist every tracked intermediate except the result the caller
     * hands out — without this, each round leaks one persisted RDD for the
     * session's lifetime. */
-  def releaseExcept(keep: RDD[Row]): Unit =
+  private def releaseExcept(keep: RDD[Row]): Unit =
     rdds.foreach(r => if (r ne keep) Tracker.safeUnpersist(r))
 
   def releaseAll(): Unit = rdds.foreach(Tracker.safeUnpersist)

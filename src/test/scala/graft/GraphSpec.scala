@@ -105,6 +105,27 @@ class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got == Map(1L -> 0.0, 2L -> 1.0, 3L -> 2.0, 4L -> 3.0))
   }
 
+  test("a flood failing mid-round leaves no snapshot and no cached edges behind") {
+    // one edge's cost raises at runtime: the first round's job fails after
+    // the flood cached its edge projection and registered its snapshot. The
+    // edges come from an RDD, not a local relation, so the optimizer cannot
+    // fold the raise into the plan before anything runs.
+    val sc = spark.sparkContext
+    val cacheManager = spark.sharedState.cacheManager
+    assert(cacheManager.isEmpty, "fixture precondition: nothing cached")
+    val before = sc.getPersistentRDDs.keySet
+    val bad = spark.createDataFrame(edges.rdd, edges.schema).withColumn("cost",
+      when(col("src") === 3L, raise_error(lit("bad edge cost"))).otherwise(col("cost")))
+    val e = intercept[Exception] {
+      Reachability.reachable(spark, bad, Seq(1L), cutoff = 10.0)
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("bad edge cost")))
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+      s"persisted RDDs left behind: ${sc.getPersistentRDDs.keySet -- before}")
+    assert(cacheManager.isEmpty, "the flood's cached edge projection leaked")
+  }
+
   test("connect adds an edge usable by the next reachability query") {
     // without the edge, node 9 is unreachable; connect(4, 9) bridges it
     val bridged = Reachability.connect(edges, 4L, 9L, 1.0)

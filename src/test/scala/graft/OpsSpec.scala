@@ -264,18 +264,19 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     val frame = Knn.knnBatch(spark, images, qdf, k = 5)
     val before = frame.collect().map(r => (r.getInt(0), r.getLong(1), r.getInt(2))).toSet
-    assert(graft.ops.Tracker.survivorCount >= 1,
+    assert(graft.ops.Tracker.survivorCount(spark) >= 1,
       "a completed knnBatch must register its one surviving snapshot")
-    // registry counts are process-global and suites share the JVM, so the
-    // release is asserted through a probe RDD's storage level (race-safe),
-    // not through count-goes-to-zero
+    // the registry is per session: a probe RDD registered under this
+    // session is released with the knnBatch snapshot, and the session's
+    // count drops to zero
     val probe: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] =
       spark.sparkContext.parallelize(Seq(org.apache.spark.sql.Row(1)))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.ops.Tracker.registerSurvivor(probe)
+    graft.ops.Tracker.registerSurvivor(spark, probe)
     graft.ops.EngineCaches.releaseIterationSnapshots()
     assert(probe.getStorageLevel == org.apache.spark.storage.StorageLevel.NONE,
       "release must unpersist every registered survivor")
+    assert(graft.ops.Tracker.survivorCount(spark) == 0)
     // the already-returned frame recomputes through lineage — same rows
     val after = frame.collect().map(r => (r.getInt(0), r.getLong(1), r.getInt(2))).toSet
     assert(after == before)
@@ -478,12 +479,12 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("tile-count pyramid equals the explode-per-zoom uncapped recount") {
     val imgs = Tables.images(spark, sfDir)
-    val before = graft.ops.Tracker.survivorCount
+    val before = graft.ops.Tracker.survivorCount(spark)
     val got = Tiling.pyramidCounts(imgs, 8, 12)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     // the zMax histogram persists as exactly one iteration snapshot,
     // released by the engine-wide hook
-    assert(graft.ops.Tracker.survivorCount == before + 1)
+    assert(graft.ops.Tracker.survivorCount(spark) == before + 1)
     graft.ops.EngineCaches.releaseIterationSnapshots()
     val want = Tiling.pointManifest(imgs, 8, 12)
       .groupBy("z", "x", "y").agg(org.apache.spark.sql.functions.count(

@@ -1,14 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Survivor snapshots outliving their SparkSession: the global registry
-  * (Tracker.survivors / EngineCaches) spans sessions by design, so a
-  * release issued from a LATER session must treat earlier sessions' dead
-  * snapshots as already-freed — not reach into their stopped contexts and
-  * NPE (the exact full-suite failure mode: one suite registers survivors,
-  * stops its session in afterAll, the next suite calls
+/** The survivor registry (Tracker.survivors / EngineCaches) is kept per
+  * SparkSession: a release frees the active session's snapshots only, and
+  * sessions whose context has stopped are dropped without reaching into
+  * their dead contexts (the full-suite failure mode this guards: one suite
+  * registers survivors, stops its session in afterAll, the next suite calls
   * releaseIterationSnapshots). */
 class TrackerReleaseSpec extends AnyFunSuite {
 
@@ -22,26 +22,70 @@ class TrackerReleaseSpec extends AnyFunSuite {
     s
   }
 
-  test("release survives survivors from a stopped session; live ones still free") {
+  private def chain(s: SparkSession): DataFrame = {
     import org.apache.spark.sql.functions.col
+    s.range(4).select(col("id").as("a"), (col("id") + 1).as("b"))
+  }
+
+  /** `body`'s result and the one RDD it left persisted (its snapshot). */
+  private def withSnapshot(s: SparkSession)(body: => DataFrame)
+      : (DataFrame, org.apache.spark.rdd.RDD[_]) = {
+    val before = s.sparkContext.getPersistentRDDs.keySet
+    val df = body
+    val added = s.sparkContext.getPersistentRDDs -- before
+    assert(added.size == 1, s"expected one surviving snapshot, got ${added.keys}")
+    (df, added.values.head)
+  }
+
+  test("release survives survivors from a stopped session; live ones still free") {
     // session 1: leave one survivor behind (connectedComponents registers
     // exactly one persisted snapshot under its returned frame), then stop
     val s1 = session("tracker-rel-1")
-    val pairs1 = s1.range(4).select(col("id").as("a"), (col("id") + 1).as("b"))
-    ops.Components.connectedComponents(pairs1).collect()
-    assert(ops.Tracker.survivorCount >= 1)
+    ops.Components.connectedComponents(chain(s1)).collect()
+    assert(ops.Tracker.survivorCount(s1) >= 1)
     s1.stop()
 
-    // session 2: register a LIVE survivor on top of the dead one, then
-    // release — must not throw, must clear the registry, and the live
-    // frame must stay readable (unpersist only drops cache)
+    // session 2: register a LIVE survivor, then release — must not throw,
+    // must clear the session's survivors and drop the dead session's, and
+    // the live frame must stay readable (unpersist only drops cache)
     val s2 = session("tracker-rel-2")
-    val pairs2 = s2.range(4).select(col("id").as("a"), (col("id") + 1).as("b"))
-    val comp = ops.Components.connectedComponents(pairs2)
+    val (comp, snap) = withSnapshot(s2)(ops.Components.connectedComponents(chain(s2)))
     assert(comp.count() == 5)
     ops.EngineCaches.releaseIterationSnapshots()
-    assert(ops.Tracker.survivorCount == 0)
+    assert(ops.Tracker.survivorCount(s2) == 0)
+    assert(ops.Tracker.survivorCount(s1) == 0)
+    assert(snap.getStorageLevel == StorageLevel.NONE,
+      "release must unpersist every survivor of its session")
     assert(comp.count() == 5) // recomputes through lineage after release
     s2.stop()
+  }
+
+  test("one session's release leaves another session's results cached") {
+    val s1 = session("tracker-rel-3")
+    val s2 = s1.newSession()
+    try {
+      val (own, ownSnap) = withSnapshot(s1)(ops.Components.connectedComponents(chain(s1)))
+      val (other, otherSnap) = withSnapshot(s2)(ops.Components.connectedComponents(chain(s2)))
+      val otherRows = other.collect().toSet
+      val level = otherSnap.getStorageLevel
+      assert(level != StorageLevel.NONE)
+
+      SparkSession.setActiveSession(s1)
+      ops.EngineCaches.releaseIterationSnapshots()
+      assert(ownSnap.getStorageLevel == StorageLevel.NONE)
+      assert(own.count() == 5)
+      assert(otherSnap.getStorageLevel == level,
+        "a release in one session unpersisted another session's result")
+      assert(ops.Tracker.survivorCount(s2) == 1)
+      assert(other.collect().toSet == otherRows)
+
+      SparkSession.setActiveSession(s2)
+      ops.EngineCaches.releaseIterationSnapshots()
+      assert(otherSnap.getStorageLevel == StorageLevel.NONE)
+      assert(other.collect().toSet == otherRows)
+    } finally {
+      SparkSession.setActiveSession(s1)
+      s1.stop()
+    }
   }
 }

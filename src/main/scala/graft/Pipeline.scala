@@ -17,9 +17,12 @@ import org.apache.spark.sql.functions._
   *                     table, again bucket-committed
   *
   * Killing the job between bucket commits and re-running resumes from the
-  * last committed bucket (PipelineSpec). Each bucket is one distributed job;
-  * at design scale buckets are coarse cell ranges over a sorted Iceberg
-  * table, so a resume re-reads only uncommitted ranges. */
+  * last committed bucket (PipelineSpec). Each bucket is one distributed job.
+  * Both stages use `runStage`'s default hash units (`rangeBuckets =
+  * false`): a unit is a hash bucket of the key, so every unit rescans its
+  * whole stage input, and a resume skips the committed units' writes, not
+  * the reads of the units it runs. (`rangeBuckets = true`, contiguous cell
+  * ranges that prune at the parquet scan, is not used here.) */
 object Pipeline {
 
   def run(spark: SparkSession, sfDir: String, outDir: String,

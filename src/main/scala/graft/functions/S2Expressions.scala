@@ -1,9 +1,10 @@
 package graft.functions
 
-import graft.core.S2
+import graft.core.{S2, Tiles}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.functions.{call_function, lit, shiftrightunsigned}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
@@ -220,4 +221,15 @@ object S2Expressions {
 
   def tileChain(lat: Column, lng: Column, zMin: Int, zMax: Int): Column =
     Bridge.column(TileChainExpr(Bridge.expression(lat), Bridge.expression(lng), zMin, zMax))
+
+  /** (z, x, y) of a packed TileID column — `Tiles.tileId`'s layout: z in
+    * the top `Tiles.ZBits`, then y << z, then x. Plain Column bit
+    * arithmetic, so the decode fuses into the codegen stage of the chain
+    * that packs the ids; the one place outside `Tiles` that knows the
+    * layout. Unsigned shifts keep zooms >= 16 (sign bit set) exact. */
+  def tileXYZ(tid: Column): (Column, Column, Column) = {
+    val z = shiftrightunsigned(tid, 64 - Tiles.ZBits).cast("int")
+    val mask = call_function("shiftleft", lit(1L), z) - 1
+    (z, tid.bitwiseAND(mask), call_function("shiftrightunsigned", tid, z).bitwiseAND(mask))
+  }
 }

@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
 /** Batched Scala UDFs over the pure kernels (SURVEY.md §7.3: "plain Scala
   * funcs + batched UDFs (v1); optional codegen Expression later").
   *
-  * The hot paths (cell assignment, containment probe, tile chains, H3) have
-  * native codegen Expression counterparts in S2Expressions — these UDF forms
+  * The hot paths (cell assignment, containment probe, H3) have native
+  * codegen Expression counterparts in S2Expressions — these UDF forms
   * remain the general-purpose surface and the reference implementations the
   * expressions are tested against.
   */
@@ -64,21 +64,6 @@ object Udfs {
     val a = pow(sin(dp), 2) + cos(radians(lat1)) * cos(radians(lat2)) * pow(sin(dl), 2)
     lit(2.0 * Geo.EarthRadiusMeters) * asin(least(lit(1.0), sqrt(a)))
   }
-
-  /** (z,x,y) rows from zMax down to zMin for a point: tile at zMax via the
-    * reference projection (tiles.go:198-253), parents by halving
-    * (tiles.go:301-339). */
-  def tileChain(zMin: Int, zMax: Int): UserDefinedFunction =
-    udf((lat: Double, lng: Double) => {
-      var (x, y) = Tiles.tileFromLatLng(lat, lng, zMax)
-      val out = new Array[(Int, Long, Long)](zMax - zMin + 1)
-      var z = zMax
-      while (z >= zMin) {
-        out(zMax - z) = (z, x, y)
-        x /= 2; y /= 2; z -= 1
-      }
-      out
-    })
 
   /** Tiles covering an S2 cell covering at one zoom (robust variant for
     * engine use; exact reference port retained for parity tests —

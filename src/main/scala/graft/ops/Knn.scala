@@ -290,7 +290,7 @@ object Knn {
     *      only driver traffic besides counts) and explode each image's
     *      cell16 ancestors at exactly those levels;
     *   3. equi-join on the cell id — ALWAYS a broadcast of the exploded
-    *      query side: a query set beyond `broadcastQueryRowLimit` is split
+    *      query side: a query set beyond `BroadcastQueryRowLimit` is split
     *      into REGIONAL chunks (contiguous S2-prefix spans) each under the
     *      limit, so the huge probe side is never exchanged (VERDICT r03 #4;
     *      a single over-limit prefix falls back to shuffle-hash, loudly);
@@ -316,8 +316,18 @@ object Knn {
     * density (see knnBatchCore) — the right default for density-varying
     * inputs; correctness is radius-invariant either way. */
   def knnBatch(spark: SparkSession, images: DataFrame, queries: DataFrame,
-               k: Int = 10, initialRadiusDeg: Double = 2.0,
-               broadcastQueryRowLimit: Long = 2000000L): DataFrame =
+               k: Int = 10, initialRadiusDeg: Double = 2.0): DataFrame =
+    knnBatchBy(spark, images, queries, k, initialRadiusDeg)
+
+  /** The exploded query side's broadcast row limit (about 12 covering
+    * cells per query): a larger query set is split into regional chunks. */
+  private val BroadcastQueryRowLimit = 2000000L
+
+  /** `knnBatch` under a given query-side broadcast limit: specs force the
+    * shuffle (0) and chunked routes through it. */
+  private[graft] def knnBatchBy(spark: SparkSession, images: DataFrame, queries: DataFrame,
+                                k: Int, initialRadiusDeg: Double,
+                                broadcastQueryRowLimit: Long = BroadcastQueryRowLimit): DataFrame =
     knnBatchCore(spark, Some(images), queries, k, initialRadiusDeg,
       broadcastQueryRowLimit, meters = false)
 
@@ -325,10 +335,9 @@ object Knn {
     * semantics): radii in meters, the stop rule direct (k-th haversine
     * distance <= probed cap radius). Same adaptive loop, same plan shape. */
   def knnBatchHaversine(spark: SparkSession, images: DataFrame, queries: DataFrame,
-                        k: Int = 10, initialRadiusMeters: Double = 300000.0,
-                        broadcastQueryRowLimit: Long = 2000000L): DataFrame =
+                        k: Int = 10, initialRadiusMeters: Double = 300000.0): DataFrame =
     knnBatchCore(spark, Some(images), queries, k, initialRadiusMeters,
-      broadcastQueryRowLimit, meters = true)
+      BroadcastQueryRowLimit, meters = true)
 
   /** `knnBatch` THROUGH the cell-bucketed store: each round reads ONLY the
     * buckets under the remaining queries' coverings
@@ -339,10 +348,9 @@ object Knn {
     * and every round's files. Same adaptive loop, same results as
     * `knnBatch` over the store's content (OpsSpec-asserted). */
   def knnBatchFromStore(spark: SparkSession, storeDir: String, queries: DataFrame,
-                        k: Int = 10, initialRadiusDeg: Double = 2.0,
-                        broadcastQueryRowLimit: Long = 2000000L): DataFrame =
+                        k: Int = 10, initialRadiusDeg: Double = 2.0): DataFrame =
     knnBatchCore(spark, None, queries, k, initialRadiusDeg,
-      broadcastQueryRowLimit, meters = false, storeDir = Some(storeDir))
+      BroadcastQueryRowLimit, meters = false, storeDir = Some(storeDir))
 
   /** Exactly one probe source: a direct image frame OR a store directory
     * (review r03c: an Option pair instead of a null DataFrame, so a future

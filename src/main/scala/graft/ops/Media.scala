@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.core.Hashes
+import graft.functions.S2Expressions
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -313,12 +314,12 @@ object Media {
       }
       (r, g, b)
     })
+    val (_, x, y) = S2Expressions.tileXYZ(col("tid"))
     val base = withBytes
-      .withColumn("tid", element_at(graft.functions.S2Expressions.tileChain(
+      .withColumn("tid", element_at(S2Expressions.tileChain(
         col("lat"), col("lng"), zMax, zMax), 1))
       .withColumn("s", sums(col("bytes")))
-      .select(expr(s"tid & (shiftleft(1L, $zMax) - 1)").as("x"),
-        expr(s"shiftrightunsigned(tid, $zMax) & (shiftleft(1L, $zMax) - 1)").as("y"),
+      .select(x.as("x"), y.as("y"),
         col("s._1").as("r"), col("s._2").as("g"), col("s._3").as("b"))
       .groupBy("x", "y")
       .agg(count(lit(1)).as("n_images"), sum("r").as("sum_r"),

@@ -74,7 +74,7 @@ object Search {
     * range-partitioned sort of the distinct values. */
   def percentiles(df: DataFrame, valueCol: String): DataFrame = {
     val (frame, release) = percentilesScoped(df, valueCol)
-    Search.synchronized { percentileCaches += release }
+    percentileCaches.register(df.sparkSession, release)
     frame
   }
 
@@ -126,18 +126,15 @@ object Search {
     (frame, release)
   }
 
-  private val percentileCaches =
-    scala.collection.mutable.ArrayBuffer.empty[() => Unit]
+  private val percentileCaches = new SessionRegistry[() => Unit](_.apply())
 
-  /** Release every determinism-anchor cache accumulated by `percentiles`.
-    * SINGLE-OWNER convenience (the gate driver, a test suite): it releases
-    * ALL registered anchors process-wide, so it must only run when no other
-    * thread holds a live un-consumed `percentiles` frame — an evicted
-    * anchor's frame RE-executes with fresh range samples against the
-    * already-collected offsets (silently wrong ranks). Concurrent callers
-    * use `percentilesScoped` and release their own handle instead. */
-  def releasePercentileCaches(): Unit = Search.synchronized {
-    percentileCaches.foreach(_.apply())
-    percentileCaches.clear()
-  }
+  /** Release every determinism-anchor cache accumulated by `percentiles`
+    * in the ACTIVE session; other sessions' anchors stay. SINGLE-OWNER
+    * within the session (the gate driver, a test suite): it must only run
+    * when no other thread of the session holds a live un-consumed
+    * `percentiles` frame — an evicted anchor's frame RE-executes with fresh
+    * range samples against the already-collected offsets (silently wrong
+    * ranks). Concurrent callers use `percentilesScoped` and release their
+    * own handle instead. */
+  def releasePercentileCaches(): Unit = percentileCaches.releaseActive()
 }

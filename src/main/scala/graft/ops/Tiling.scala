@@ -1,7 +1,10 @@
 package graft.ops
 
-import graft.functions.Udfs
-import org.apache.spark.sql.DataFrame
+import graft.core.{Geo, Tiles}
+import graft.functions.{S2Expressions, Udfs}
+import graft.sources.Mvt
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Raster<->vector tile assignment — deterministic (zoom, x, y) manifest rows
@@ -17,19 +20,17 @@ object Tiling {
     * Output: one row per (image, zoom).
     *
     * The generator emits PACKED TileIDs (primitive long[], no boxing) and
-    * z/x/y decode as Column bit arithmetic inside whole-stage codegen —
-    * the UDF boundary carries one primitive array per row. Valid for
-    * zMax <= 15 (packed z occupies the top 5 bits; zooms >= 16 set the sign
-    * bit, which the unsigned decode below would still handle). */
+    * z/x/y decode as Column bit arithmetic (`S2Expressions.tileXYZ`)
+    * inside whole-stage codegen — the generator boundary carries one
+    * primitive array per row. Valid for zMax <= 15 (packed z occupies the
+    * top 5 bits; zooms >= 16 set the sign bit, which the unsigned decode
+    * still handles). */
   def pointManifest(images: DataFrame, zMin: Int, zMax: Int): DataFrame = {
-    val tid = col("tid")
-    val z = shiftrightunsigned(tid, 59).cast("int")
-    val mask = call_function("shiftleft", lit(1L), z) - 1
+    val (z, x, y) = S2Expressions.tileXYZ(col("tid"))
     images
-      .select(col("image_id"), explode(graft.functions.S2Expressions.tileChain(
+      .select(col("image_id"), explode(S2Expressions.tileChain(
         col("lat"), col("lng"), zMin, zMax)).as("tid"))
-      .select(col("image_id"), z.as("z"), tid.bitwiseAND(mask).as("x"),
-        call_function("shiftrightunsigned", tid, z).bitwiseAND(mask).as("y"))
+      .select(col("image_id"), z.as("z"), x.as("x"), y.as("y"))
   }
 
   /** Rule-driven per-zoom basemap LAYER manifest — the reference's
@@ -61,6 +62,7 @@ object Tiling {
     // feature_id) so the tile id comes from the SAME scan — the zoom-z tile
     // is picked from the feature's tile chain inline, no second read of the
     // feature table and no (feature, z) re-join
+    val (_, tx, ty) = S2Expressions.tileXYZ(col("tid"))
     tagged
       .join(broadcast(r), col("tag_key") === col("r_key") &&
         (col("r_val").isNull || col("r_val") === col("tag_value")))
@@ -69,13 +71,12 @@ object Tiling {
         (col("max_zoom") === 0 || col("z") <= col("max_zoom")))
       .groupBy(col("feature_id"), col("lat"), col("lng"), col("z"))
       .agg(min(struct(col("rule_idx"), col("layer"))).as("s"))
-      .withColumn("tid", element_at(graft.functions.S2Expressions.tileChain(
+      .withColumn("tid", element_at(S2Expressions.tileChain(
         col("lat"), col("lng"), zMin, zMax),
         // the chain is DESCENDING by zoom (head = zMax)
         lit(zMax) - col("z") + lit(1)))
       .select(col("feature_id"), col("z"), col("s.layer").as("layer"),
-        expr("tid & (shiftleft(1L, z) - 1)").as("x"),
-        expr("shiftrightunsigned(tid, z) & (shiftleft(1L, z) - 1)").as("y"))
+        tx.as("x"), ty.as("y"))
       .groupBy(col("z"), col("x"), col("y"), col("layer"))
       .agg(count(lit(1)).as("n_features"), min(col("feature_id")).as("first_id"))
   }
@@ -180,7 +181,7 @@ object Tiling {
     require(res >= 1 && res <= 15, s"hex res $res outside [1, 15]")
     require(k >= 0, "disk radius must be >= 0")
     val counts = images
-      .withColumn("cell", graft.functions.S2Expressions.hex7Cell(
+      .withColumn("cell", S2Expressions.hex7Cell(
         col("lat"), col("lng"), res))
       .groupBy("cell").agg(count(lit(1)).as("n"))
     val disk = udf((cell: Long) =>
@@ -320,15 +321,25 @@ object Tiling {
       .select(lit(zoom).as("z"), col("x"), col("y"), expr(GiStarZSql).as("gi_z"))
   }
 
-  /** MVT sink: encode each tile's point features as a Mapbox Vector Tile
-    * blob (graft.sources.Mvt) — the reference's HTTP serving path re-shaped
-    * as a batch job (SURVEY.md §3.3): features -> tile assignment ->
-    * groupBy(z,x,y) -> encoded bytes, with id-ordered determinism and the
-    * 10k/tile cap. Output: (z, x, y, n_features, mvt BINARY). */
-  /** One-pixel-ish simplification tolerance in degrees longitude at a zoom:
-    * the tile spans 360/2^z degrees across Mvt.Extent pixels. */
-  def pixelTolDeg(zoom: Int): Double =
-    360.0 / ((1L << zoom).toDouble * graft.sources.Mvt.Extent)
+  /** MVT POINT layer: encode each tile's point features as a Mapbox Vector
+    * Tile blob (graft.sources.Mvt) — the reference's HTTP serving path
+    * re-shaped as a batch job (SURVEY.md §3.3): features -> tile assignment
+    * (the codegen tile chain of [[pointManifest]]) -> groupBy(z,x,y) ->
+    * encoded bytes, with id-ordered determinism and the 10k/tile cap.
+    * Output: (z, x, y, n_features, mvt BINARY). */
+  def mvtPointTiles(images: DataFrame, zoom: Int, layerName: String): DataFrame = {
+    val (z, x, y) = S2Expressions.tileXYZ(col("tid"))
+    val assigned = images
+      .withColumn("tid", element_at(S2Expressions.tileChain(
+        col("lat"), col("lng"), zoom, zoom), 1))
+      .select(z.as("z"), x.as("x"), y.as("y"),
+        col("image_id"), col("lat"), col("lng"))
+    mvtLayer(assigned, "image_id", layerName) { (f, z, x, y) =>
+      val (px, py) = Mvt.tileLocal(f.getDouble(2), f.getDouble(3), z, x, y)
+      Mvt.Feature(Mvt.featureId(0L, "graft/image", f.getLong(1)), 1,
+        Mvt.lineGeometry(Array(px), Array(py)))
+    }
+  }
 
   /** MVT LINESTRING layer: assign each path to EVERY tile its projected
     * chords cross (supercover traversal, Tiles.tilesOnSegment — exact
@@ -338,8 +349,6 @@ object Tiling {
     * reference's line rendering path (renderer/encoder.go:77-143 +
     * simplify.go) as a batch sink. Output: (z, x, y, n_features, mvt). */
   def mvtPathTiles(paths: DataFrame, zoom: Int, layerName: String): DataFrame = {
-    import graft.core.{Geo, Tiles}
-    import graft.sources.Mvt
     val tilesUdf = udf((lats: Seq[Double], lngs: Seq[Double]) => {
       val out = scala.collection.mutable.LinkedHashSet.empty[(Long, Long)]
       var i = 1
@@ -351,115 +360,76 @@ object Tiling {
       }
       out.toSeq
     })
-    val tol = pixelTolDeg(zoom)
-    val encode = udf((x: Long, y: Long,
-                      ids: Seq[String], lats: Seq[Seq[Double]], lngs: Seq[Seq[Double]]) => {
-      val order = ids.indices.sortBy(ids(_))
-      val feats = order.map { i =>
-        val la = lats(i).toArray; val lo = lngs(i).toArray
-        val keep = Geo.simplify(la, lo, tol)
-        val xs = new Array[Int](keep.length); val ys = new Array[Int](keep.length)
-        var k = 0
-        while (k < keep.length) {
-          val (px, py) = Mvt.tileLocal(la(keep(k)), lo(keep(k)), zoom, x, y)
-          xs(k) = px; ys(k) = py
-          k += 1
-        }
-        (Mvt.featureId(1L, "graft/path", ids(i).split("-").last.toLong), 2,
-          Mvt.lineGeometry(xs, ys))
-      }
-      Mvt.encodeGeomLayer(layerName, feats)
-    })
-    import org.apache.spark.sql.expressions.Window
-    paths
+    val assigned = paths
       .withColumn("t", explode(tilesUdf(col("lats"), col("lngs"))))
-      .select(col("path_id"), col("lats"), col("lngs"),
-        col("t._1").as("x"), col("t._2").as("y"))
-      // same pre-collect cap discipline as the point sink (reference 10k)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("x", "y").orderBy(col("path_id"))))
-      .where(col("rn") <= 10000)
-      .groupBy("x", "y")
-      .agg(collect_list("path_id").as("ids"),
-        collect_list("lats").as("las"), collect_list("lngs").as("los"))
-      .select(lit(zoom).as("z"), col("x"), col("y"),
-        size(col("ids")).cast("long").as("n_features"),
-        encode(col("x"), col("y"), col("ids"), col("las"), col("los")).as("mvt"))
+      .select(lit(zoom).as("z"), col("t._1").as("x"), col("t._2").as("y"),
+        col("path_id"), col("lats"), col("lngs"))
+    mvtLayer(assigned, "path_id", layerName) { (f, z, x, y) =>
+      val (xs, ys) = pixels(f.getSeq[Double](2), f.getSeq[Double](3), z, x, y)
+      Mvt.Feature(Mvt.featureId(1L, "graft/path", f.getString(1).split("-").last.toLong), 2,
+        Mvt.lineGeometry(xs, ys))
+    }
   }
 
   /** MVT POLYGON layer: regions assigned to tiles via their S2 covering
     * (the serving path's MightIntersect prune, SURVEY §3.3), rings encoded
     * with MoveTo/LineTo/ClosePath and one-pixel simplification. */
   def mvtRegionTiles(regions: DataFrame, zoom: Int, layerName: String): DataFrame = {
-    import graft.core.Geo
-    import graft.sources.Mvt
-    val tol = pixelTolDeg(zoom)
-    val encode = udf((x: Long, y: Long, ids: Seq[String],
-                      ringsLat: Seq[Seq[Seq[Double]]], ringsLng: Seq[Seq[Seq[Double]]]) => {
-      val order = ids.indices.sortBy(ids(_))
-      val feats = order.map { i =>
-        val rings = ringsLat(i).indices.map { r =>
-          val la = ringsLat(i)(r).toArray; val lo = ringsLng(i)(r).toArray
-          val keep = Geo.simplify(la, lo, tol)
-          val xs = new Array[Int](keep.length); val ys = new Array[Int](keep.length)
-          var k = 0
-          while (k < keep.length) {
-            val (px, py) = Mvt.tileLocal(la(keep(k)), lo(keep(k)), zoom, x, y)
-            xs(k) = px; ys(k) = py
-            k += 1
-          }
-          (xs, ys)
-        }
-        (Mvt.featureId(2L, "graft/region", ids(i).split("-").last.toLong), 3,
-          Mvt.polygonGeometry(rings))
-      }
-      Mvt.encodeGeomLayer(layerName, feats)
-    })
-    import org.apache.spark.sql.expressions.Window
-    regions
+    val assigned = regions
       .withColumn("t", explode(Udfs.tilesForCovering(zoom)(col("cells"))))
-      .select(col("region_id"), col("rings_lat"), col("rings_lng"),
-        col("t._2").as("x"), col("t._3").as("y"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("x", "y").orderBy(col("region_id"))))
-      .where(col("rn") <= 10000)
-      .groupBy("x", "y")
-      .agg(collect_list("region_id").as("ids"),
-        collect_list("rings_lat").as("rlas"), collect_list("rings_lng").as("rlos"))
-      .select(lit(zoom).as("z"), col("x"), col("y"),
-        size(col("ids")).cast("long").as("n_features"),
-        encode(col("x"), col("y"), col("ids"), col("rlas"), col("rlos")).as("mvt"))
+      .select(lit(zoom).as("z"), col("t._2").as("x"), col("t._3").as("y"),
+        col("region_id"), col("rings_lat"), col("rings_lng"))
+    mvtLayer(assigned, "region_id", layerName) { (f, z, x, y) =>
+      val ringsLat = f.getSeq[Seq[Double]](2); val ringsLng = f.getSeq[Seq[Double]](3)
+      val rings = ringsLat.indices.map(r => pixels(ringsLat(r), ringsLng(r), z, x, y))
+      Mvt.Feature(Mvt.featureId(2L, "graft/region", f.getString(1).split("-").last.toLong), 3,
+        Mvt.polygonGeometry(rings))
+    }
   }
 
-  def mvtPointTiles(images: DataFrame, zoom: Int, layerName: String,
-                    cap: Int = 10000): DataFrame = {
-    import graft.sources.Mvt
-    import org.apache.spark.sql.expressions.Window
-    val assigned = images
-      .withColumn("t", explode(graft.functions.Udfs.tileChain(zoom, zoom)(col("lat"), col("lng"))))
-      .select(col("image_id"), col("lat"), col("lng"),
-        col("t._1").as("z"), col("t._2").as("x"), col("t._3").as("y"))
-      // cap BEFORE the per-tile collect (VERDICT r01): rank in deterministic
-      // id order inside each tile and drop rows past the reference's 10k cap
-      // (renderer/query.go:34,104-106), so a dense urban tile at scale never
-      // materializes more than `cap` rows into the encode buffer.
+  /** The MVT sinks' per-tile feature cap: the reference's 10k
+    * (renderer/query.go:34,104-106). */
+  private val MvtTileCap = 10000
+
+  /** The one MVT layer sink. `assigned` holds one row per (feature, tile):
+    * z, x, y, then the feature's id column `id` and its payload columns.
+    * Features rank by id inside each tile and rows past `MvtTileCap` drop
+    * BEFORE the per-tile collect (VERDICT r01), so a dense tile never
+    * materializes more than the cap into the encode buffer. Each tile's
+    * features encode in rank order through `feature(f, z, x, y)`, where
+    * `f` is (rank, id, payload...) — collect_list order is
+    * nondeterministic, the rank restores id order. Output: (z, x, y,
+    * n_features, mvt). */
+  private def mvtLayer(assigned: DataFrame, id: String, layerName: String)(
+      feature: (Row, Int, Long, Long) => Mvt.Feature): DataFrame = {
+    val fields = assigned.columns.drop(3).map(col)
+    val encode = udf((z: Int, x: Long, y: Long, feats: Seq[Row]) =>
+      Mvt.encodeLayer(layerName, feats.sortBy(_.getInt(0)).map(feature(_, z, x, y))))
+    assigned
       .withColumn("rn", row_number().over(
-        Window.partitionBy("z", "x", "y").orderBy(col("image_id"))))
-      .where(col("rn") <= cap)
-    val encode = udf((z: Int, x: Long, y: Long,
-                      ids: Seq[Long], lats: Seq[Double], lngs: Seq[Double]) => {
-      // collect_list order is nondeterministic — restore id order here
-      val feats = ids.indices.sortBy(ids(_)).map { i =>
-        val (px, py) = Mvt.tileLocal(lats(i), lngs(i), z, x, y)
-        Mvt.PointFeature(Mvt.featureId(0L, "graft/image", ids(i)), px, py)
-      }
-      Mvt.encodePointLayer(layerName, feats)
-    })
-    assigned.groupBy("z", "x", "y")
-      .agg(collect_list("image_id").as("ids"),
-        collect_list("lat").as("lats"), collect_list("lng").as("lngs"))
+        Window.partitionBy("z", "x", "y").orderBy(col(id))))
+      .where(col("rn") <= MvtTileCap)
+      .groupBy("z", "x", "y")
+      .agg(collect_list(struct(col("rn") +: fields: _*)).as("feats"))
       .select(col("z"), col("x"), col("y"),
-        size(col("ids")).cast("long").as("n_features"),
-        encode(col("z"), col("x"), col("y"), col("ids"), col("lats"), col("lngs")).as("mvt"))
+        size(col("feats")).cast("long").as("n_features"),
+        encode(col("z"), col("x"), col("y"), col("feats")).as("mvt"))
+  }
+
+  /** One-pixel Douglas-Peucker simplification, then tile-local pixels in
+    * tile (z, x, y); the tolerance is one pixel in degrees longitude (the
+    * tile spans 360/2^z degrees across Mvt.Extent pixels). */
+  private def pixels(lats: Seq[Double], lngs: Seq[Double],
+                     z: Int, x: Long, y: Long): (Array[Int], Array[Int]) = {
+    val la = lats.toArray; val lo = lngs.toArray
+    val keep = Geo.simplify(la, lo, 360.0 / ((1L << z).toDouble * Mvt.Extent))
+    val xs = new Array[Int](keep.length); val ys = new Array[Int](keep.length)
+    var k = 0
+    while (k < keep.length) {
+      val (px, py) = Mvt.tileLocal(la(keep(k)), lo(keep(k)), z, x, y)
+      xs(k) = px; ys(k) = py
+      k += 1
+    }
+    (xs, ys)
   }
 }

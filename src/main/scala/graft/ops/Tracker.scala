@@ -94,38 +94,50 @@ private[graft] object Tracker {
       try r.unpersist(blocking = false)
       catch { case scala.util.control.NonFatal(_) => () }
 
-  /** Surviving-snapshot registry, per session. Every iterative operator
-    * deliberately leaves exactly ONE persisted RDD alive under the frame it
-    * returns (the frame is a flat scan of it); a long-lived session issuing
-    * many such calls accumulates dead snapshots once the results are
-    * consumed, with no handle to free them. Callers that keep a session open
-    * call `EngineCaches.releaseIterationSnapshots()` between requests:
-    * results already computed stay correct — an unpersisted snapshot
-    * recomputes through its RDD lineage if re-read, just slower. Keyed by
-    * session, so one session's release never touches another's results;
-    * sessions whose context has stopped are dropped (their blocks died with
-    * the context). Within one session the single-owner caveat of
-    * Search.releasePercentileCaches stays: don't release while another
-    * thread's returned frame is mid-action. */
-  private val survivors =
-    scala.collection.mutable.Map.empty[SparkSession, scala.collection.mutable.ArrayBuffer[RDD[Row]]]
-
-  private def dropStopped(): Unit =
-    survivors.filterInPlace((s, _) => !s.sparkContext.isStopped)
+  /** Surviving-snapshot registry. Every iterative operator deliberately
+    * leaves exactly ONE persisted RDD alive under the frame it returns (the
+    * frame is a flat scan of it); a long-lived session issuing many such
+    * calls accumulates dead snapshots once the results are consumed, with
+    * no handle to free them. Callers that keep a session open call
+    * `EngineCaches.releaseIterationSnapshots()` between requests: results
+    * already computed stay correct — an unpersisted snapshot recomputes
+    * through its RDD lineage if re-read, just slower. Within one session
+    * the single-owner caveat of Search.releasePercentileCaches stays: don't
+    * release while another thread's returned frame is mid-action. */
+  private[ops] val survivors = new SessionRegistry[RDD[Row]](safeUnpersist)
 
   private[graft] def registerSurvivor(spark: SparkSession, r: RDD[Row]): Unit =
-    Tracker.synchronized {
-      dropStopped()
-      survivors.getOrElseUpdate(spark, scala.collection.mutable.ArrayBuffer.empty) += r
-    }
+    survivors.register(spark, r)
 
-  private[graft] def releaseSurvivors(spark: SparkSession): Unit = Tracker.synchronized {
-    survivors.remove(spark).foreach(_.foreach(safeUnpersist))
+  private[graft] def survivorCount(spark: SparkSession): Int = survivors.count(spark)
+}
+
+/** Per-session registry of cache handles that outlive the call that made
+  * them, each freed by `free`. Keyed by session, so one session's release
+  * never touches another's entries; sessions whose context has stopped are
+  * dropped without `free` (their blocks died with the context). */
+private[ops] final class SessionRegistry[A](free: A => Unit) {
+  private val entries =
+    scala.collection.mutable.Map.empty[SparkSession, scala.collection.mutable.ArrayBuffer[A]]
+
+  private def dropStopped(): Unit =
+    entries.filterInPlace((s, _) => !s.sparkContext.isStopped)
+
+  def register(spark: SparkSession, a: A): Unit = synchronized {
     dropStopped()
+    entries.getOrElseUpdate(spark, scala.collection.mutable.ArrayBuffer.empty) += a
   }
 
-  private[graft] def survivorCount(spark: SparkSession): Int =
-    Tracker.synchronized(survivors.get(spark).fold(0)(_.size))
+  def count(spark: SparkSession): Int = synchronized(entries.get(spark).fold(0)(_.size))
+
+  /** Frees every entry of the ACTIVE session (else the default session). */
+  def releaseActive(): Unit =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).foreach { s =>
+      synchronized {
+        entries.remove(s).foreach(_.foreach(free))
+        dropStopped()
+      }
+    }
 }
 
 /** Cache-hygiene surface for long-lived sessions (the library-boundary
@@ -134,9 +146,7 @@ object EngineCaches {
   /** Unpersist every iteration snapshot left alive by completed calls of
     * the ACTIVE session (one per call by design); other sessions' results
     * stay cached. */
-  def releaseIterationSnapshots(): Unit =
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .foreach(Tracker.releaseSurvivors)
+  def releaseIterationSnapshots(): Unit = Tracker.survivors.releaseActive()
 }
 
 private[ops] final class Tracker {

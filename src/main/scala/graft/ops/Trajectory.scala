@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.core.Geo
+import graft.functions.S2Expressions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -159,12 +160,11 @@ object Trajectory {
     require(zoom >= 1 && zoom <= 15, s"zoom $zoom outside [1, 15]")
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("user_id").orderBy("sec", "event_id")
+    val (_, x, y) = S2Expressions.tileXYZ(col("tid"))
     points
       .withColumn("tid", element_at(
-        graft.functions.S2Expressions.tileChain(col("lat"), col("lng"), zoom, zoom), 1))
-      .select(col("user_id"), col("sec"), col("event_id"),
-        expr(s"tid & (shiftleft(1L, $zoom) - 1)").as("x"),
-        expr(s"shiftrightunsigned(tid, $zoom) & (shiftleft(1L, $zoom) - 1)").as("y"))
+        S2Expressions.tileChain(col("lat"), col("lng"), zoom, zoom), 1))
+      .select(col("user_id"), col("sec"), col("event_id"), x.as("x"), y.as("y"))
       .withColumn("from_x", lag("x", 1).over(w))
       .withColumn("from_y", lag("y", 1).over(w))
       .where(col("from_x").isNotNull &&

@@ -51,9 +51,15 @@ object Mvt {
     (math.round((px - x) * Extent).toInt, math.round((py - y) * Extent).toInt)
   }
 
-  /** Encode one layer of point features as a complete MVT blob. */
-  def encodePointLayer(layerName: String, features: Seq[PointFeature]): Array[Byte] = {
-    // dictionaries
+  /** One layer feature: its id, geometry type (1 POINT, 2 LINESTRING,
+    * 3 POLYGON), encoded geometry commands and tags. */
+  final case class Feature(id: Long, geomType: Int, geom: Array[Byte],
+                           tags: Seq[(String, String)] = Nil)
+
+  /** Encode one layer as a complete MVT blob: version, name, the features
+    * in the given order, the key/value dictionaries of their tags (none
+    * when no feature has tags), extent, wrapped in the tile message. */
+  def encodeLayer(layerName: String, features: Seq[Feature]): Array[Byte] = {
     val keys = scala.collection.mutable.LinkedHashMap.empty[String, Int]
     val values = scala.collection.mutable.LinkedHashMap.empty[String, Int]
     features.foreach(_.tags.foreach { case (k, v) =>
@@ -71,11 +77,8 @@ object Mvt {
         f.tags.foreach { case (k, v) => t.varint(keys(k)); t.varint(values(v)) }
         feat.bytes(2, t.result())
       }
-      feat.uint(3, 1)               // GeomType POINT
-      val g = new Buf                // geometry: MoveTo(1) count 1, then dx,dy
-      g.varint((1 << 3) | 1)
-      g.varint(zigzag(f.px)); g.varint(zigzag(f.py))
-      feat.bytes(4, g.result())
+      feat.uint(3, f.geomType)
+      feat.bytes(4, f.geom)
       layer.bytes(2, feat.result())
     }
     keys.keys.foreach(layer.string(3, _))
@@ -88,34 +91,35 @@ object Mvt {
     tile.result()
   }
 
+  /** Encode one layer of point features: a point's geometry is the line
+    * geometry of its one vertex (MoveTo(1) then dx, dy). */
+  def encodePointLayer(layerName: String, features: Seq[PointFeature]): Array[Byte] =
+    encodeLayer(layerName, features.map(f =>
+      Feature(f.id, 1, lineGeometry(Array(f.px), Array(f.py)), f.tags)))
+
+  /** Encode one tag-less layer of pre-built feature geometries.
+    * @param feats (featureId, geomType 2=LINESTRING 3=POLYGON, geomBytes). */
+  def encodeGeomLayer(layerName: String, feats: Seq[(Long, Int, Array[Byte])]): Array[Byte] =
+    encodeLayer(layerName, feats.map { case (id, gt, geom) => Feature(id, gt, geom) })
+
   /** LINESTRING geometry commands (MVT 2.1 §4.3, matching the shapes of the
     * reference's renderer/encoder.go:77-143): MoveTo(1) then LineTo(n-1),
     * cursor-relative zigzag deltas; the cursor starts at (0,0) per feature. */
-  def lineGeometry(xs: Array[Int], ys: Array[Int]): Array[Byte] = {
-    val g = new Buf
-    var cx = 0; var cy = 0
-    g.varint((1L << 3) | 1) // MoveTo, count 1
-    g.varint(zigzag(xs(0) - cx)); g.varint(zigzag(ys(0) - cy))
-    cx = xs(0); cy = ys(0)
-    if (xs.length > 1) {
-      g.varint(((xs.length - 1).toLong << 3) | 2) // LineTo, count n-1
-      var i = 1
-      while (i < xs.length) {
-        g.varint(zigzag(xs(i) - cx)); g.varint(zigzag(ys(i) - cy))
-        cx = xs(i); cy = ys(i)
-        i += 1
-      }
-    }
-    g.result()
-  }
+  def lineGeometry(xs: Array[Int], ys: Array[Int]): Array[Byte] =
+    commands(Seq((xs, ys)), close = false)
 
   /** POLYGON geometry commands: per ring MoveTo(1) + LineTo(n-1) +
     * ClosePath(1); the closing vertex is NOT repeated; the cursor persists
     * across rings within one feature (MVT 2.1 §4.3.4.4). */
-  def polygonGeometry(rings: Seq[(Array[Int], Array[Int])]): Array[Byte] = {
+  def polygonGeometry(rings: Seq[(Array[Int], Array[Int])]): Array[Byte] =
+    commands(rings, close = true)
+
+  /** The one MoveTo/LineTo emitter: per vertex run MoveTo(1) then
+    * LineTo(n-1), with ClosePath(1) after each run when `close`. */
+  private def commands(runs: Seq[(Array[Int], Array[Int])], close: Boolean): Array[Byte] = {
     val g = new Buf
     var cx = 0; var cy = 0
-    rings.foreach { case (xs, ys) =>
+    runs.foreach { case (xs, ys) =>
       g.varint((1L << 3) | 1) // MoveTo, count 1
       g.varint(zigzag(xs(0) - cx)); g.varint(zigzag(ys(0) - cy))
       cx = xs(0); cy = ys(0)
@@ -128,28 +132,9 @@ object Mvt {
           i += 1
         }
       }
-      g.varint((1L << 3) | 7) // ClosePath, count 1
+      if (close) g.varint((1L << 3) | 7) // ClosePath, count 1
     }
     g.result()
-  }
-
-  /** Encode one tag-less layer of pre-built feature geometries.
-    * @param feats (featureId, geomType 2=LINESTRING 3=POLYGON, geomBytes). */
-  def encodeGeomLayer(layerName: String, feats: Seq[(Long, Int, Array[Byte])]): Array[Byte] = {
-    val layer = new Buf
-    layer.uint(15, 2)          // version
-    layer.string(1, layerName) // name
-    feats.foreach { case (id, gt, geom) =>
-      val feat = new Buf
-      feat.uint(1, id)
-      feat.uint(3, gt)
-      feat.bytes(4, geom)
-      layer.bytes(2, feat.result())
-    }
-    layer.uint(5, Extent)
-    val tile = new Buf
-    tile.bytes(3, layer.result())
-    tile.result()
   }
 
   /** Feature id exactly as the reference: FNV-64 of (type, ns, value)

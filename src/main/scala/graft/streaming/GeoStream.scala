@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.S2Expressions
 import graft.model.Synth
 import graft.ops.Containment
 import org.apache.spark.sql.DataFrame
@@ -80,18 +81,18 @@ object GeoStream {
     * state; a serving layer caps at read time instead. */
   def tileWindowCounts(images: DataFrame, zMin: Int, zMax: Int,
                        tsCol: String, windowDur: String,
-                       delay: String): DataFrame =
+                       delay: String): DataFrame = {
+    val (z, x, y) = S2Expressions.tileXYZ(col("tid"))
     images
-      .withColumn("tid", explode(graft.functions.S2Expressions.tileChain(
+      .withColumn("tid", explode(S2Expressions.tileChain(
         col("lat"), col("lng"), zMin, zMax)))
-      .withColumn("z", expr("CAST(shiftrightunsigned(tid, 59) AS INT)"))
-      .withColumn("x", expr("tid & (shiftleft(1L, z) - 1)"))
-      .withColumn("y", expr("shiftrightunsigned(tid, z) & (shiftleft(1L, z) - 1)"))
+      .withColumns(Map("z" -> z, "x" -> x, "y" -> y))
       .withWatermark(tsCol, delay)
       .groupBy(window(col(tsCol), windowDur), col("z"), col("x"), col("y"))
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("win_start"),
         col("z"), col("x"), col("y"), col("n"))
+  }
 
   // ---- stateful: streaming geofence ENTER/EXIT transitions ----------------
 

@@ -299,8 +299,8 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the at-scale join path: broadcastQueryRowLimit=0 forces the exploded
     // query side through the shuffle join instead of the broadcast — results
     // must be identical
-    val shuffled = Knn.knnBatch(spark, images, qdf25, k = 10,
-        broadcastQueryRowLimit = 0L).collect()
+    val shuffled = Knn.knnBatchBy(spark, images, qdf25, k = 10,
+        initialRadiusDeg = 2.0, broadcastQueryRowLimit = 0L).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getInt(2))).toSet
     assert(shuffled == resident)
     // dirty input: duplicated query_id rows must NOT duplicate results

@@ -169,8 +169,9 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     val buf = scala.collection.mutable.Buffer.empty[String]
     graft.ops.Tracker.capturePlans.set(buf)
     try {
-      graft.ops.Knn.knnBatch(spark, Tables.images(spark, sfDir),
-        Synth.batchQueryDf(spark, 50), k = 3, broadcastQueryRowLimit = 0L).count()
+      graft.ops.Knn.knnBatchBy(spark, Tables.images(spark, sfDir),
+        Synth.batchQueryDf(spark, 50), k = 3, initialRadiusDeg = 2.0,
+        broadcastQueryRowLimit = 0L).count()
     } finally graft.ops.Tracker.capturePlans.remove()
     val rounds = buf.filter(_.contains("topkagg"))
     assert(rounds.nonEmpty, "no round plan captured")
@@ -193,8 +194,9 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     val buf = scala.collection.mutable.Buffer.empty[String]
     graft.ops.Tracker.capturePlans.set(buf)
     val got = try {
-      graft.ops.Knn.knnBatch(spark, Tables.images(spark, sfDir),
-        Synth.batchQueryDf(spark, 50), k = 3, broadcastQueryRowLimit = 120L)
+      graft.ops.Knn.knnBatchBy(spark, Tables.images(spark, sfDir),
+        Synth.batchQueryDf(spark, 50), k = 3, initialRadiusDeg = 2.0,
+        broadcastQueryRowLimit = 120L)
         .collect().map(r => (r.getInt(0), r.getLong(1), r.getInt(2))).toSet
     } finally graft.ops.Tracker.capturePlans.remove()
     val rounds = buf.filter(_.contains("topkagg"))
@@ -243,6 +245,27 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(lineage.nonEmpty)
     assert(offenders.isEmpty, offenders.mkString("unbounded collect:\n", "\n", ""))
+  }
+
+  test("the packed TileID layout is decoded in one place (source lint)") {
+    // z sits in the top Tiles.ZBits of a TileID, then y << z, then x: only
+    // core/Tiles.scala and the shared Column decode (S2Expressions.tileXYZ)
+    // may extract a field — a `tid` shifted by 59 (64 - ZBits) or masked
+    // with shiftleft(1L, …)
+    val field = """shiftrightunsigned\(tid,\s*59\)|shiftleft(\(|",\s*lit\()1L""".r
+    def sources(dir: java.io.File): Seq[java.io.File] = dir.listFiles().toSeq.flatMap(f =>
+      if (f.isDirectory) sources(f) else Seq(f).filter(_.getName.endsWith(".scala")))
+    val allowed = Set("src/main/scala/graft/core/Tiles.scala",
+      "src/main/scala/graft/functions/S2Expressions.scala")
+    val files = sources(new java.io.File("src/main/scala")).map(_.getPath).sorted
+    val offenders = files.filterNot(allowed).flatMap { path =>
+      val src = scala.io.Source.fromFile(path, "UTF-8")
+      val lines = try src.getLines().toVector finally src.close()
+      lines.zipWithIndex.filter(l => field.findFirstIn(l._1).isDefined)
+        .map { case (l, i) => s"$path:${i + 1}: ${l.trim}" }
+    }
+    assert(files.exists(allowed))
+    assert(offenders.isEmpty, offenders.mkString("TileID field decoded outside its home:\n", "\n", ""))
   }
 
   test("per-group top-k and dedup grouping aggregate — no data-sized window") {

@@ -88,4 +88,37 @@ class TrackerReleaseSpec extends AnyFunSuite {
       s1.stop()
     }
   }
+
+  test("one session's percentile release leaves another session's anchors") {
+    import org.apache.spark.sql.functions.col
+    def values(s: SparkSession, m: Int): DataFrame =
+      s.range(3000).select(col("id"), (col("id") * 7919 % m).as("v"))
+    def ranks(df: DataFrame, pct: String): Map[Long, Double] =
+      df.select(col("id"), col(pct)).collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
+    val a = session("tracker-rel-4")
+    val b = a.newSession()
+    try {
+      // each session holds a live percentiles frame over its own input (the
+      // anchor is the one RDD a call leaves persisted)
+      val (_, anchorA) = withSnapshot(a)(ops.Search.percentiles(values(a, 101), "v"))
+      val (fb, anchorB) = withSnapshot(b)(ops.Search.percentiles(values(b, 97), "v"))
+      val level = anchorB.getStorageLevel
+      assert(level != StorageLevel.NONE)
+
+      SparkSession.setActiveSession(a)
+      ops.Search.releasePercentileCaches()
+      assert(anchorA.getStorageLevel == StorageLevel.NONE)
+      assert(anchorB.getStorageLevel == level,
+        "a release in one session evicted another session's percentile anchor")
+      assert(ranks(fb, "pct") ==
+        ranks(values(b, 97).selectExpr("id", "PERCENT_RANK() OVER (ORDER BY v) AS pct"), "pct"))
+
+      SparkSession.setActiveSession(b)
+      ops.Search.releasePercentileCaches()
+      assert(anchorB.getStorageLevel == StorageLevel.NONE)
+    } finally {
+      SparkSession.setActiveSession(a)
+      a.stop()
+    }
+  }
 }

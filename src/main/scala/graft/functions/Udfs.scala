@@ -65,6 +65,16 @@ object Udfs {
     lit(2.0 * Geo.EarthRadiusMeters) * asin(least(lit(1.0), sqrt(a)))
   }
 
+  /** The Column `haversineMeters` on one pair of points: the same
+    * operations in the same order, so both give the same bits. */
+  private[graft] def haversineMeters(lat1: Double, lng1: Double, lat2: Double, lng2: Double): Double = {
+    val dp = math.toRadians(lat2 - lat1) / 2
+    val dl = math.toRadians(lng2 - lng1) / 2
+    val a = math.pow(math.sin(dp), 2) +
+      math.cos(math.toRadians(lat1)) * math.cos(math.toRadians(lat2)) * math.pow(math.sin(dl), 2)
+    2.0 * Geo.EarthRadiusMeters * math.asin(math.min(1.0, math.sqrt(a)))
+  }
+
   /** Tiles covering an S2 cell covering at one zoom (robust variant for
     * engine use; exact reference port retained for parity tests —
     * Tiles.scala). */

@@ -3,6 +3,7 @@ package graft.ops
 import graft.core.{Geo, S2}
 import graft.functions.Udfs
 import graft.model.Synth.KnnQuery
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -14,26 +15,30 @@ import org.apache.spark.sql.types._
   *
   * Round r: cover cap(q, radius_r) with S2 cells, probe the image table
   * map-side (no shuffle of the big side), rank candidates per query with a
-  * distance-bounded top-k window. A query resolves when it has >= k
-  * candidates whose k-th distance, converted to a sound great-circle bound,
-  * fits inside the probed radius; unresolved queries expand the radius
+  * distance-bounded top-k. A query resolves when it has >= k candidates
+  * whose k-th distance, converted to a sound great-circle bound, fits
+  * inside the probed radius; unresolved queries expand the radius
   * (terminates at the full sphere).
   *
-  * Two query-side contracts:
-  *   - `knn` / `knnHaversine` / `knnFromStore`: a small driver-resident
-  *     query Seq (the reference's per-origin `closest` shape). The probe is
-  *     an ANCESTOR-HASH stab: covering cells keyed by id in a broadcast-able
-  *     hash map; an image matches query q iff one of cell16's ancestors IS
-  *     one of q's covering cells. Coverings are normalized (the coverer
-  *     splits cells, so no covering cell contains another), hence at most
-  *     one ancestor level hits per query — O(#levels) map lookups per row,
-  *     not O(|queries|) (VERDICT r02 #2).
-  *   - `knnBatch`: BOTH sides are DataFrames (VERDICT r02 "missing #1") —
-  *     the 10^5-query "nearest landmark for every city" workload. The same
-  *     stab becomes a distributed equi-join: explode query coverings to
-  *     (cov_cell, query_id), explode image ancestors at the round's covering
-  *     levels only, join on the cell id. Resolution is a distributed
-  *     aggregate + anti-join; the driver sees only per-round counts.
+  * Every entry — the Seq forms `knn` / `knnHaversine` / `knnFromStore` and
+  * the DataFrame forms `knnBatch*` — runs `knnBatchCore`, which picks its
+  * route from the size of the deduplicated query set:
+  *   - it fits the broadcast bound (`BroadcastQueryRowLimit / 12` queries,
+  *     about 12 covering cells each): the DRIVER route. Query state stays on
+  *     the driver, and each round is ONE Spark job over the probe rows: a
+  *     broadcast ANCESTOR-HASH stab (covering cell id -> query ordinals; an
+  *     image matches query q iff one of its cell16's ancestors IS one of q's
+  *     covering cells — coverings are normalized, so at most one level hits
+  *     per query, O(#levels) lookups per row) feeding a per-partition
+  *     bounded top-k, merged on the driver. The result is a local frame.
+  *   - it does not (or the limit is 0): the DISTRIBUTED route — the
+  *     10^5-query "nearest landmark for every city" workload. The same stab
+  *     becomes an equi-join of exploded query coverings with exploded image
+  *     ancestors; resolution is a distributed aggregate + status join, and
+  *     the driver sees only per-round counts. Over-bound query sets run in
+  *     regional chunks that each fit the broadcast.
+  * Both routes apply one status rule in one metric arithmetic, so their
+  * results are identical (OpsSpec).
   *
   * Metrics: squared equirectangular degrees (exact arithmetic shared with
   * the oracle, Synth.KnnQuery.d2Sql) or great-circle meters. Soundness of
@@ -44,8 +49,8 @@ import org.apache.spark.sql.types._
 object Knn {
 
   /** The 6 face cells — the full-sphere "covering". */
-  private def faceCells: Seq[Long] =
-    (0 until 6).map(f => S2.parent(f.toLong << S2.PosBits | (1L << (S2.PosBits - 1)), 0))
+  private val FaceCells: Array[Long] =
+    (0 until 6).map(f => S2.parent(f.toLong << S2.PosBits | (1L << (S2.PosBits - 1)), 0)).toArray
 
   // Bounded top-k aggregation (TopK / TopKAgg) lives in ops/TopK.scala —
   // shared with the ANN/similarity family (r03c audit: the row_number
@@ -70,163 +75,60 @@ object Knn {
     def value: Long = mask
   }
 
-  /** THE candidate distance metric — one definition shared by the
-    * driver-resident rounds (`knnRounds`) and the distributed batch core
-    * (`knnBatchCore`), because the cross-path equality gates (OpsSpec:
-    * knnBatch == knn; the DuckDB bit-exact compares) require the two paths'
-    * arithmetic to stay operation-for-operation identical; a private copy
-    * in each would be a silent drift surface (review r03g — the same
-    * one-definition discipline as the materialized `bound` column). */
+  /** THE candidate distance metric of the distributed route. `dist` is the
+    * same arithmetic for the driver route, operation for operation: the
+    * cross-route equality gates (OpsSpec: driver route == limit-0 route;
+    * the DuckDB bit-exact compares) require it (the same one-definition
+    * discipline as the `bound` of the status rule). */
   private def distExpr(meters: Boolean): Column =
     if (meters) Udfs.haversineMeters(col("lat"), col("lng"), col("qlat"), col("qlng"))
     else (col("lat") - col("qlat")) * (col("lat") - col("qlat")) +
       ((col("lng") - col("qlng")) * col("qcos")) * ((col("lng") - col("qlng")) * col("qcos"))
 
+  /** `distExpr` on one (image, query) pair. */
+  private def dist(meters: Boolean, lat: Double, lng: Double,
+                   qlat: Double, qlng: Double, qcos: Double): Double =
+    if (meters) Udfs.haversineMeters(lat, lng, qlat, qlng)
+    else {
+      val dy = lat - qlat
+      val dx = (lng - qlng) * qcos
+      dy * dy + dx * dx
+    }
+
   private def maskLevels(mask: Long): Array[Int] =
     (0 to 30).filter(l => (mask & (1L << l)) != 0L).toArray
 
-  /** Fixed-size bucket-set accumulator (2^PrefixBits bits): the store-backed
-    * batch probe learns WHICH CellStore buckets the round's coverings touch
-    * from the same job that computes the coverings — no per-round
-    * distinct+collect job, and the payload is 2^PrefixBits/64 longs
-    * regardless of query count. Same soundness argument as LevelMaskAcc:
-    * bits only OR in, and a completed job has reported every partition's
-    * bits (across rounds the set is a superset — extra buckets cost IO,
-    * never correctness). */
-  private final class BucketMaskAcc(nBits: Int)
-      extends org.apache.spark.util.AccumulatorV2[(Int, Int), Array[Long]] {
-    private val mask = new Array[Long]((nBits + 63) / 64)
-    def isZero: Boolean = mask.forall(_ == 0L)
-    def copy(): BucketMaskAcc = {
-      val a = new BucketMaskAcc(nBits); System.arraycopy(mask, 0, a.mask, 0, mask.length); a
-    }
-    def reset(): Unit = java.util.Arrays.fill(mask, 0L)
-    /** Set every bucket bit in the inclusive span [lo, hi]. */
-    def add(v: (Int, Int)): Unit = {
-      var b = v._1
-      while (b <= v._2) { mask(b >> 6) |= 1L << (b & 63); b += 1 }
-    }
-    def merge(o: org.apache.spark.util.AccumulatorV2[(Int, Int), Array[Long]]): Unit = {
-      val ov = o.value
-      var i = 0
-      while (i < mask.length) { mask(i) |= ov(i); i += 1 }
-    }
-    def value: Array[Long] = mask.clone()
-    def buckets: Set[Long] =
-      (0 until nBits).filter(b => (mask(b >> 6) & (1L << (b & 63))) != 0L)
-        .map(_.toLong).toSet
-  }
+  /** The full-sphere radius in the metric's own unit. */
+  private def fullSphere(meters: Boolean): Double =
+    if (meters) math.Pi * Geo.EarthRadiusMeters else 180.0
 
-  private val resultSchema = StructType(Seq(
-    StructField("query_id", IntegerType, nullable = false),
-    StructField("image_id", LongType, nullable = false),
-    StructField("rank", IntegerType, nullable = false)))
+  /** A query's cap covering at `radius` (the metric's unit): the face
+    * cells once the radius reaches the full sphere. */
+  private def coveringOf(meters: Boolean, lat: Double, lng: Double, radius: Double): Array[Long] =
+    if (radius >= fullSphere(meters)) FaceCells
+    else S2.covering(S2.Cap(Geo.toXYZ(lat, lng),
+      if (meters) radius / Geo.EarthRadiusMeters else math.toRadians(radius)),
+      maxCells = 12, maxLevel = 16)
+
+  /** A cell id's store bucket is its top PrefixBits. */
+  private val BucketShift = 64 - graft.lineage.CellStore.PrefixBits
 
   /** Store-probe telemetry: when a caller (the q_store_knn_batch gate, a
-    * spec) sets a buffer here, `knnBatchFromStore` appends the number of
+    * spec) sets a buffer here, the store-backed calls append the number of
     * buckets each round actually read — the pruning evidence, observable
     * without widening the operator's return type. Null by default, zero
     * cost. */
   private[graft] val storeReadTelemetry =
     new ThreadLocal[scala.collection.mutable.Buffer[Int]]
 
-  /** Shared expansion loop for BOTH metrics (review r03: the haversine path
-    * now runs through the same loop as the d2 forms — one loop, no drift).
-    * `meters` selects metric, stop rule and growth; `imagesForRound` selects
-    * where each round's probe rows come from (cached projection vs cell-store
-    * range read). */
-  private def knnRounds(spark: SparkSession, queries: Seq[KnnQuery], k: Int,
-                        initialRadius: Double, meters: Boolean,
-                        imagesForRound: (Boolean, Seq[(Long, Long)]) => DataFrame): DataFrame = {
-    var remaining = queries
-    var radius = initialRadius
-    val resolved = scala.collection.mutable.ArrayBuffer.empty[Row]
-    val topkUdaf = TopKAgg.udafFor(k)
-    while (remaining.nonEmpty) {
-      val angleRad =
-        if (meters) radius / Geo.EarthRadiusMeters else math.toRadians(radius)
-      val full = angleRad >= math.Pi
-      val qRows: Seq[(KnnQuery, Seq[Long])] = remaining.map { q =>
-        val covering: Seq[Long] =
-          if (full) faceCells
-          else S2.covering(S2.Cap(Geo.toXYZ(q.lat, q.lng), angleRad),
-            maxCells = 12, maxLevel = 16).toSeq
-        (q, covering)
-      }
-      val qDf = spark.createDataFrame(
-          qRows.map { case (q, _) => (q.queryId, q.lat, q.lng, q.cosLat) })
-        .toDF("query_id", "qlat", "qlng", "qcos")
-      // ancestor-hash stab: covering cell id -> query ids. Built via
-      // ArrayBuffer, finalized to Array once: `prev :+ qid` copies the whole
-      // array per addition, and a full-sphere escalation round puts EVERY
-      // remaining query on the same 6 face cells — quadratic on the driver
-      // at batch query counts (review r03g)
-      val byCellBuf =
-        new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[Int]]()
-      qRows.foreach { case (q, cov) =>
-        cov.foreach { c =>
-          var buf = byCellBuf.get(c)
-          if (buf == null) {
-            buf = new scala.collection.mutable.ArrayBuffer[Int](4)
-            byCellBuf.put(c, buf)
-          }
-          buf += q.queryId
-        }
-      }
-      val byCell = new java.util.HashMap[Long, Array[Int]](byCellBuf.size())
-      byCellBuf.forEach((c, buf) => byCell.put(c, buf.toArray))
-      val levels: Array[Int] =
-        qRows.flatMap(_._2).map(S2.level).distinct.sorted.toArray
-      val stab = udf((cell: Long) => {
-        val out = Array.newBuilder[Int]
-        var i = 0
-        while (i < levels.length) {
-          val hit = byCell.get(S2.parent(cell, levels(i)))
-          if (hit != null) out ++= hit
-          i += 1
-        }
-        out.result()
-      })
-      val ranges = qRows.flatMap(_._2).map(c => (S2.rangeMin(c), S2.rangeMax(c)))
-      val imgs = imagesForRound(full, ranges)
-      val dist: Column = distExpr(meters)
-      val cands = imgs
-        .withColumn("query_id", explode(stab(col("cell16"))))
-        .join(broadcast(qDf), "query_id")
-        .withColumn("dist", dist)
-        // bounded partial aggregation, not a row_number window: a
-        // full-sphere escalation round probes the ENTIRE table, and the
-        // window would funnel every stabbed row into <= |queries|
-        // partitions — single tasks sorting the whole probe at data scale
-        // (r03c audit). The combiners cut each partition to <= k rows per
-        // query before the exchange; tie order (dist, image_id) identical.
-        .groupBy("query_id")
-        .agg(topkUdaf(col("image_id"), col("dist")).as("top"))
-        .select(col("query_id"),
-          posexplode(arrays_zip(col("top.ids"), col("top.d2s"))).as(Seq("pos", "z")))
-        .select(col("query_id"), col("z.ids").as("image_id"),
-          (col("pos") + 1).cast("int").as("rank"), col("z.d2s").as("dist"))
-        .collect() // <= |queries| * k tiny rows; heavy filter+topk ran distributed
-      val byQuery = cands.groupBy(_.getInt(0))
-      val still = scala.collection.mutable.ArrayBuffer.empty[KnnQuery]
-      remaining.foreach { q =>
-        val rows = byQuery.getOrElse(q.queryId, Array.empty)
-        val complete = full || (rows.length >= k && {
-          val kth = rows.map(_.getDouble(3)).max
-          if (meters) kth <= radius
-          else math.sqrt(kth) * (1.0 + 1.0 / q.cosLat) <= radius
-        })
-        if (complete) rows.foreach(r =>
-          resolved += Row(r.getInt(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
-        else still += q
-      }
-      remaining = still.toSeq
-      radius *= (if (meters) 4 else 8)
-    }
-    val schema = StructType(resultSchema.fields :+ StructField("dist", DoubleType, nullable = false))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(resolved.toSeq, 1), schema)
-      .orderBy("query_id", "rank")
+  /** `buckets` of the store at manifest `m`, counted into
+    * `storeReadTelemetry`. */
+  private def readStore(spark: SparkSession, dir: String,
+                        m: graft.lineage.SnapshotStore.Manifest, buckets: Set[Long]): DataFrame = {
+    val (df, nRead) = graft.lineage.SnapshotStore.readBuckets(spark, dir, m, buckets)
+    val telemetry = storeReadTelemetry.get()
+    if (telemetry != null) telemetry += nRead
+    df
   }
 
   /** The probe projection (callers cache it), widened to the session's
@@ -241,15 +143,16 @@ object Knn {
     if (proj.rdd.getNumPartitions < par) proj.repartition(par) else proj
   }
 
+  /** The query Seq as the batch entries' query frame (a local relation). */
+  private def queryFrame(spark: SparkSession, queries: Seq[KnnQuery]): DataFrame =
+    spark.createDataFrame(queries.map(q => (q.queryId, q.lat, q.lng)))
+      .toDF("query_id", "qlat", "qlng")
+
   def knn(spark: SparkSession, images: DataFrame, queries: Seq[KnnQuery],
-          k: Int = 10, initialRadiusDeg: Double = 2.0): DataFrame = {
-    // cache the probe projection: every expansion round re-probes it, and
-    // without the cache the upstream cell-assignment UDF re-runs per round
-    val imgs = probeProjection(images).cache()
-    try knnRounds(spark, queries, k, initialRadiusDeg, meters = false, (_, _) => imgs)
+          k: Int = 10, initialRadiusDeg: Double = 2.0): DataFrame =
+    knnBatchCore(spark, Some(images), queryFrame(spark, queries), k, initialRadiusDeg,
+      BroadcastQueryRowLimit, meters = false)
       .select("query_id", "image_id", "rank")
-    finally imgs.unpersist()
-  }
 
   /** Cell-store-backed kNN: identical semantics and results to `knn`, but
     * each expansion round READS ONLY the store buckets overlapping the
@@ -259,30 +162,26 @@ object Knn {
     * to the caps, not the table. Every round reads through the ONE HEAD
     * manifest taken at the call's start. */
   def knnFromStore(spark: SparkSession, storeDir: String, queries: Seq[KnnQuery],
-                   k: Int = 10, initialRadiusDeg: Double = 2.0): DataFrame = {
-    import graft.lineage.SnapshotStore
-    val m = SnapshotStore.headManifest(spark, storeDir)
-    knnRounds(spark, queries, k, initialRadiusDeg, meters = false, (full, ranges) =>
-      SnapshotStore.readBuckets(spark, storeDir, m,
-        if (full) m.buckets else m.bucketsOverlapping(ranges))._1)
+                   k: Int = 10, initialRadiusDeg: Double = 2.0): DataFrame =
+    knnBatchCore(spark, None, queryFrame(spark, queries), k, initialRadiusDeg,
+      BroadcastQueryRowLimit, meters = false, storeDir = Some(storeDir))
       .select("query_id", "image_id", "rank")
-  }
 
   /** Great-circle kNN — the production metric (b6 distance semantics,
     * units/units.go). The stop rule is direct: the probed cap has
     * great-circle radius r, so once the k-th candidate's haversine distance
-    * is <= r the result is complete. Same loop as `knn` (meters=true). */
+    * is <= r the result is complete. Each row carries its distance
+    * (`dist_m`). */
   def knnHaversine(spark: SparkSession, images: DataFrame, queries: Seq[KnnQuery],
-                   k: Int = 10, initialRadiusMeters: Double = 200000.0): DataFrame = {
-    val imgs = probeProjection(images).cache()
-    try knnRounds(spark, queries, k, initialRadiusMeters, meters = true, (_, _) => imgs)
+                   k: Int = 10, initialRadiusMeters: Double = 200000.0): DataFrame =
+    knnBatchCore(spark, Some(images), queryFrame(spark, queries), k, initialRadiusMeters,
+      BroadcastQueryRowLimit, meters = true)
       .withColumnRenamed("dist", "dist_m")
-    finally imgs.unpersist()
-  }
 
-  /** Fully distributed batch kNN (d2 metric): the query side is a DataFrame
-    * `(query_id INT, qlat DOUBLE, qlng DOUBLE)` of arbitrary cardinality —
-    * no driver-resident query state, no per-query collect. Per round:
+  /** Batch kNN (d2 metric): the query side is a DataFrame
+    * `(query_id INT, qlat DOUBLE, qlng DOUBLE)` of arbitrary cardinality;
+    * duplicated query ids answer once. The route (object doc) follows the
+    * query count. On the distributed route, per round:
     *
     *   1. explode each unresolved query's cap covering at the query's OWN
     *      current radius to (cov_cell, qid) — executor-side S2 math;
@@ -297,20 +196,20 @@ object Knn {
     *   4. resolution as a distributed aggregate: cnt >= k and the k-th d2's
     *      sound great-circle bound within the query's probed radius.
     *
-    * Radii are PER-QUERY ADAPTIVE (round 3 — measured 2-4x over a shared
-    * ladder): a query that saw >= k candidates re-probes at exactly its k-th
-    * distance bound — the NEXT round is then guaranteed to resolve it (the
-    * true top-k all lie inside that cap, and the bound can only shrink) —
-    * while a query with < k candidates grows 8x. Shared-ladder rounds
-    * instead drag every unresolved query up the same 8^i radii, and one
-    * straggler round at 64 degrees costs more than all tight rounds
+    * Radii are PER-QUERY ADAPTIVE on both routes (measured 2-4x over a
+    * shared ladder): a query that saw >= k candidates re-probes at
+    * exactly its k-th distance bound — the NEXT round is then guaranteed to
+    * resolve it (the true top-k all lie inside that cap, and the bound can
+    * only shrink) — while a query with < k candidates grows 8x. Shared-ladder
+    * rounds instead drag every unresolved query up the same 8^i radii, and
+    * one straggler round at 64 degrees costs more than all tight rounds
     * together. A query whose probed radius reached the full sphere resolves
     * unconditionally (covers tables smaller than k).
     *
-    * Per-round tables are snapshotted to persisted RDDs (the shared
-    * ops.Tracker) so planning cost stays constant across
-    * rounds. At 100 TB the image side never shuffles: only candidate rows
-    * (bounded per query per round) enter the window exchange.
+    * Distributed per-round tables are snapshotted to persisted RDDs (the
+    * shared ops.Tracker) so planning cost stays constant across rounds. At
+    * 100 TB the image side never shuffles: only candidate rows (bounded per
+    * query per round) enter the exchange.
     *
     * `initialRadiusDeg <= 0` auto-derives the round-1 radius from the table
     * density (see knnBatchCore) — the right default for density-varying
@@ -320,7 +219,8 @@ object Knn {
     knnBatchBy(spark, images, queries, k, initialRadiusDeg)
 
   /** The exploded query side's broadcast row limit (about 12 covering
-    * cells per query): a larger query set is split into regional chunks. */
+    * cells per query): a larger query set takes the distributed route in
+    * regional chunks. */
   private val BroadcastQueryRowLimit = 2000000L
 
   /** `knnBatch` under a given query-side broadcast limit: specs force the
@@ -330,73 +230,292 @@ object Knn {
                                 broadcastQueryRowLimit: Long = BroadcastQueryRowLimit): DataFrame =
     knnBatchCore(spark, Some(images), queries, k, initialRadiusDeg,
       broadcastQueryRowLimit, meters = false)
+      .select("query_id", "image_id", "rank")
 
   /** `knnBatch` under the production great-circle metric (b6 distance
     * semantics): radii in meters, the stop rule direct (k-th haversine
-    * distance <= probed cap radius). Same adaptive loop, same plan shape. */
+    * distance <= probed cap radius). Same adaptive loop, same routes. */
   def knnBatchHaversine(spark: SparkSession, images: DataFrame, queries: DataFrame,
                         k: Int = 10, initialRadiusMeters: Double = 300000.0): DataFrame =
     knnBatchCore(spark, Some(images), queries, k, initialRadiusMeters,
       BroadcastQueryRowLimit, meters = true)
+      .select("query_id", "image_id", "rank")
 
   /** `knnBatch` THROUGH the cell-bucketed store: each round reads ONLY the
     * buckets under the remaining queries' coverings
     * (SnapshotStore.readBuckets), so a regional query batch touches a
-    * fraction of the table's files — the IO half of the store story for the
-    * DISTRIBUTED query side (the Seq form is `knnFromStore`). One HEAD
-    * manifest, read at the call's start, gives the auto radius's row count
-    * and every round's files. Same adaptive loop, same results as
-    * `knnBatch` over the store's content (OpsSpec-asserted). */
+    * fraction of the table's files — the IO half of the store story for a
+    * query FRAME (the Seq form is `knnFromStore`). One HEAD manifest, read at
+    * the call's start, gives the auto radius's row count and every round's
+    * files. Same adaptive loop, same results as `knnBatch` over the store's
+    * content (OpsSpec-asserted). */
   def knnBatchFromStore(spark: SparkSession, storeDir: String, queries: DataFrame,
                         k: Int = 10, initialRadiusDeg: Double = 2.0): DataFrame =
     knnBatchCore(spark, None, queries, k, initialRadiusDeg,
       BroadcastQueryRowLimit, meters = false, storeDir = Some(storeDir))
+      .select("query_id", "image_id", "rank")
+
+  /** One partition's probe rows as columns: the driver route's probe unit
+    * (a cached block is 32 bytes a row). */
+  private final class ProbeBlock(val ids: Array[Long], val lat: Array[Double],
+                                 val lng: Array[Double], val cell: Array[Long]) extends Serializable
+
+  /** `df`'s (image_id, lat, lng, cell16) as one block per partition, read
+    * through `queryExecution.toRdd`: an RDD-level pipeline, so the round's
+    * action is its only job. `spread` widens a source with fewer partitions
+    * than the session's parallelism (as `probeProjection` does) with an
+    * RDD shuffle, a stage of the same job. A row with a null field matches
+    * no query, as on the distributed route. */
+  private def probeBlocks(df: DataFrame, spread: Boolean): RDD[ProbeBlock] = {
+    val rows = df.select(col("image_id").cast("long"), col("lat").cast("double"),
+      col("lng").cast("double"), col("cell16").cast("long")).queryExecution.toRdd
+    val par = df.sparkSession.sparkContext.defaultParallelism
+    val src = if (spread && rows.getNumPartitions < par) rows.map(_.copy()).repartition(par) else rows
+    src.mapPartitions { it =>
+      val ids = Array.newBuilder[Long]; val lat = Array.newBuilder[Double]
+      val lng = Array.newBuilder[Double]; val cell = Array.newBuilder[Long]
+      it.foreach { r =>
+        if (!r.anyNull) {
+          ids += r.getLong(0); lat += r.getDouble(1); lng += r.getDouble(2); cell += r.getLong(3)
+        }
+      }
+      Iterator.single(new ProbeBlock(ids.result(), lat.result(), lng.result(), cell.result()))
+    }
+  }
+
+  /** One driver-route round's queries, broadcast once per round: covering
+    * cell -> query ordinals as an open-addressing table over flat arrays
+    * (`keys`; 0 marks an empty slot, and no S2 id is 0), the ordinals of
+    * slot s at `ords(start(s)) until ords(start(s + 1))`, the coverings'
+    * level set, and each query's point. */
+  private final class RoundIndex(covs: Array[Array[Long]], val qlat: Array[Double],
+                                 val qlng: Array[Double], val qcos: Array[Double]) extends Serializable {
+    val levels: Array[Int] = covs.flatten.map(S2.level).distinct.sorted
+    private val nCells = covs.map(_.length).sum
+    private val mask = (Integer.highestOneBit(math.max(2, 2 * nCells) - 1) << 1) - 1
+    private val keys = new Array[Long](mask + 1)
+    val start = new Array[Int](mask + 2)
+    val ords = new Array[Int](nCells)
+
+    /** The slot holding `c`, or -1. */
+    def slotOf(c: Long): Int = {
+      val s = find(c)
+      if (keys(s) == c) s else -1
+    }
+
+    /** The slot holding `c`, else the empty slot that would. */
+    private def find(c: Long): Int = {
+      var s = ((c * 0x9E3779B97F4A7C15L) >>> 32).toInt & mask
+      while (keys(s) != 0L && keys(s) != c) s = (s + 1) & mask
+      s
+    }
+
+    covs.foreach(_.foreach { c => val s = find(c); keys(s) = c; start(s + 1) += 1 })
+    (1 until start.length).foreach(s => start(s) += start(s - 1))
+    private val fill = start.clone()
+    covs.indices.foreach(o => covs(o).foreach { c =>
+      val s = find(c); ords(fill(s)) = o; fill(s) += 1
+    })
+  }
+
+  /** Merges per-partition top-k arrays (one entry per round query, null
+    * for none) into `a`, through `TopKAgg.merge`. */
+  private def mergeTops(agg: TopKAgg)(a: Array[List[(Double, Long)]],
+                                      b: Array[List[(Double, Long)]]): Array[List[(Double, Long)]] =
+    if (a.isEmpty) b
+    else {
+      var i = 0
+      while (i < b.length) {
+        if (b(i) != null) a(i) = if (a(i) == null) b(i) else agg.merge(a(i), b(i))
+        i += 1
+      }
+      a
+    }
 
   /** Exactly one probe source: a direct image frame OR a store directory
     * (review r03c: an Option pair instead of a null DataFrame, so a future
-    * edit can't dereference the absent side). */
-  private def knnBatchCore(spark: SparkSession, images: Option[DataFrame],
-                           queries: DataFrame,
-                           k: Int, initialRadius0: Double,
-                           broadcastQueryRowLimit: Long, meters: Boolean,
-                           storeDir: Option[String] = None): DataFrame = {
+    * edit can't dereference the absent side). Returns
+    * (query_id, image_id, rank, dist) sorted by (query_id, rank). */
+  private[graft] def knnBatchCore(spark: SparkSession, images: Option[DataFrame],
+                                  queries: DataFrame,
+                                  k: Int, initialRadius0: Double,
+                                  broadcastQueryRowLimit: Long, meters: Boolean,
+                                  storeDir: Option[String] = None): DataFrame = {
     require(images.isDefined != storeDir.isDefined,
       "knnBatchCore: exactly one of images / storeDir")
-    // "full sphere" threshold in the metric's own radius unit
-    val FullDeg = if (meters) math.Pi * Geo.EarthRadiusMeters else 180.0
+    val FullDeg = fullSphere(meters)
     val growth = if (meters) 4.0 else 8.0
     val absEps = if (meters) 1e-6 else 1e-12
-    // store-backed probes read only the buckets under the round's coverings
-    // (no global projection to cache); the direct form caches the projected
-    // image side once for all rounds. The store's HEAD manifest is read
-    // ONCE per call and pins every round to that version.
+    // the store's HEAD manifest is read ONCE per call and pins every round
+    // to that version
     val storeHead = storeDir.map(d => graft.lineage.SnapshotStore.headManifest(spark, d))
-    Tracker.run(spark) { t =>
-      val imgs = images.map(i => t.cache(probeProjection(i)))
-      // initialRadius <= 0 -> auto from density: aim for ~48*k candidates per
-      // round-1 cap so virtually every query resolves immediately — the d2
-      // stop rule needs kth * (1 + 1/cos) <= r, i.e. ~(1+1/cos)^2 * k ~ 6-8k
-      // candidates even at high latitudes. 16k resolved 98% of the uniform
-      // batch in round 1 but left the low-density tail (~1.7k of 10^4 at
-      // sf0.01) paying a second full round whose cost is mostly fixed (job
-      // launch + covering + window) — 48k resolves the tail too and measures
-      // FASTER end-to-end (2 rounds 1.2+0.9 s -> 1 round ~1.3 s warm): per-
-      // query candidates stay tiny (~150 rows at k=3) and the top-k partial
-      // aggregate absorbs the 3x fan-in map-side. The count is one cheap job
-      // over the cached projection (for the store, a pure metadata read of
-      // the bucket stats); correctness is radius-invariant (OpsSpec), this
-      // only tunes round counts across densities (a fixed 2 deg was right at
-      // sf0.1 but cost an extra full round at sf0.01).
-      val initialRadius =
-        if (initialRadius0 > 0) initialRadius0
-        else {
-          val n = math.max(1L, storeHead match {
-            case Some(m) => m.stats.map(_.rows).sum
-            case None => imgs.get.count()
-          })
-          val deg = math.min(60.0, math.sqrt(48.0 * k * 41253.0 / (math.Pi * n)))
-          if (meters) deg * 111320.0 else deg
+    // initialRadius <= 0 -> auto from density: aim for ~48*k candidates per
+    // round-1 cap so virtually every query resolves immediately — the d2
+    // stop rule needs kth * (1 + 1/cos) <= r, i.e. ~(1+1/cos)^2 * k ~ 6-8k
+    // candidates even at high latitudes. 16k resolved 98% of the uniform
+    // batch in round 1 but left the low-density tail (~1.7k of 10^4 at
+    // sf0.01) paying a second full round whose cost is mostly fixed (job
+    // launch + covering + window) — 48k resolves the tail too and measures
+    // FASTER end-to-end (2 rounds 1.2+0.9 s -> 1 round ~1.3 s warm): per-
+    // query candidates stay tiny (~150 rows at k=3) and the top-k partial
+    // aggregate absorbs the 3x fan-in map-side. The count is one cheap job
+    // over the probe rows (for the store, a pure metadata read of the
+    // bucket stats); correctness is radius-invariant (OpsSpec), this only
+    // tunes round counts across densities (a fixed 2 deg was right at sf0.1
+    // but cost an extra full round at sf0.01).
+    def initialRadius(count: => Long): Double =
+      if (initialRadius0 > 0) initialRadius0
+      else {
+        val n = math.max(1L, storeHead match {
+          case Some(m) => m.stats.map(_.rows).sum
+          case None => count
+        })
+        val deg = math.min(60.0, math.sqrt(48.0 * k * 41253.0 / (math.Pi * n)))
+        if (meters) deg * 111320.0 else deg
+      }
+    val q = queries.select(col("query_id").cast("int"),
+      col("qlat").cast("double"), col("qlng").cast("double"))
+    val chunkQueries =
+      if (broadcastQueryRowLimit > 0) math.max(1L, broadcastQueryRowLimit / 12)
+      else Long.MaxValue
+    // the route test: one bounded collect of at most chunkQueries + 1 rows,
+    // ONE job. Over several partitions a limit collect is Spark's incremental
+    // take, a job for the first partition and another for the rest; one
+    // partition reads them all in one task that stops at the bound
+    val fits: Option[Array[Row]] =
+      if (broadcastQueryRowLimit <= 0) None
+      else {
+        val rows = q.coalesce(1).limit(math.min(chunkQueries, Int.MaxValue - 1L).toInt + 1).collect()
+        if (rows.length <= chunkQueries) Some(rows) else None
+      }
+    fits match {
+      case Some(rows) =>
+        val schema = StructType(Seq(q.schema("query_id"),
+          StructField("image_id", LongType, nullable = false),
+          StructField("rank", IntegerType, nullable = false),
+          StructField("dist", DoubleType, nullable = false)))
+        // the driver route holds at most chunkQueries queries, their
+        // coverings and queries x k result rows: the same order as the
+        // exploded query side a broadcast round collects
+        val blocks = images.map(i => probeBlocks(i, spread = true)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        try {
+          val r0 = initialRadius(blocks.get.map(_.ids.length.toLong).fold(0L)(_ + _))
+          val out = driverRounds(spark, rows, k, r0, meters, FullDeg, growth, absEps,
+            covs => blocks.getOrElse {
+              // the buckets of each covering cell's id span [rangeMin,
+              // rangeMax]: descendant ids at any level stay inside the
+              // ancestor's id range, so every image row the cell matches
+              // lives in them
+              probeBlocks(readStore(spark, storeDir.get, storeHead.get,
+                covs.iterator.flatten.flatMap(c =>
+                  (S2.rangeMin(c) >>> BucketShift) to (S2.rangeMax(c) >>> BucketShift)).toSet),
+                spread = false)
+            })
+          spark.createDataFrame(java.util.Arrays.asList(out: _*), schema)
+        } finally blocks.foreach(_.unpersist(blocking = false))
+      case None =>
+        distributedRounds(spark, images, q, k, broadcastQueryRowLimit, chunkQueries, meters,
+          FullDeg, growth, absEps, storeDir, storeHead, initialRadius)
+    }
+  }
+
+  /** The driver route (object doc): each round covers every unresolved
+    * query on the driver, broadcasts the round's `RoundIndex` and runs ONE
+    * job over `probeFor(coverings)` — a per-partition stab plus bounded
+    * top-k per query (`TopKAgg.reduce`), merged by `treeAggregate`
+    * (`TopKAgg.merge`) into at most queries x k entries. The driver then
+    * applies the distributed route's status rule to them. Returns the rows
+    * (query_id, image_id, rank, dist) sorted by (query_id, rank). */
+  private def driverRounds(spark: SparkSession, rows: Array[Row], k: Int, radius0: Double,
+                           meters: Boolean, FullDeg: Double, growth: Double, absEps: Double,
+                           probeFor: Array[Array[Long]] => RDD[ProbeBlock]): Array[Row] = {
+    // query_id must identify ONE query point: keep the first row of each id
+    // (the dropDuplicates contract); a null field matches nothing
+    val seen = scala.collection.mutable.HashSet.empty[Int]
+    val qs = rows.filter(r => !r.anyNull && seen.add(r.getInt(0)))
+    val qid = qs.map(_.getInt(0))
+    val qlat = qs.map(_.getDouble(1))
+    val qlng = qs.map(_.getDouble(2))
+    val qcos = qlat.map(l => math.cos(math.toRadians(l)))
+    val radius = Array.fill(qs.length)(radius0)
+    val out = scala.collection.mutable.ArrayBuffer.empty[Row]
+    val agg = new TopKAgg(k)
+    var pending = qs.indices.toArray
+    // no loud bound: every query resolves once its radius reaches the full
+    // sphere
+    if (pending.nonEmpty) Tracker.rounds(spark, "knnBatch", Int.MaxValue) { _ =>
+      val covs = pending.map(o => coveringOf(meters, qlat(o), qlng(o), radius(o)))
+      val probe = probeFor(covs)
+      val bc = spark.sparkContext.broadcast(
+        new RoundIndex(covs, pending.map(qlat), pending.map(qlng), pending.map(qcos)))
+      val tops = try probe.mapPartitions { blocks =>
+        val ix = bc.value
+        val top = new Array[List[(Double, Long)]](ix.qlat.length)
+        blocks.foreach { b =>
+          var i = 0
+          while (i < b.ids.length) {
+            var l = 0
+            while (l < ix.levels.length) {
+              val s = ix.slotOf(S2.parent(b.cell(i), ix.levels(l)))
+              if (s >= 0) {
+                var j = ix.start(s)
+                while (j < ix.start(s + 1)) {
+                  val o = ix.ords(j)
+                  val d = dist(meters, b.lat(i), b.lng(i), ix.qlat(o), ix.qlng(o), ix.qcos(o))
+                  top(o) = agg.reduce(if (top(o) == null) Nil else top(o), (b.ids(i), d))
+                  j += 1
+                }
+              }
+              l += 1
+            }
+            i += 1
+          }
         }
+        Iterator.single(top)
+      }.treeAggregate(Array.empty[List[(Double, Long)]])(mergeTops(agg), mergeTops(agg))
+      finally bc.destroy()
+      // the distributed route's status rule, per query: resolve on >= k
+      // candidates whose k-th bound fits the probed radius, or on the full
+      // sphere; else re-probe at the k-th bound (resolution guaranteed next
+      // round) or grow, clamped past the full sphere
+      val still = scala.collection.mutable.ArrayBuffer.empty[Int]
+      pending.indices.foreach { i =>
+        val o = pending(i)
+        val top = if (i < tops.length && tops(i) != null) tops(i) else Nil
+        val cnt = top.length
+        val bound =
+          if (cnt < k) Double.NaN
+          else if (meters) top.last._1
+          else math.sqrt(top.last._1) * (1.0 + 1.0 / qcos(o))
+        if ((cnt >= k && bound <= radius(o)) || radius(o) >= FullDeg)
+          top.iterator.zipWithIndex.foreach { case ((d, id), r) => out += Row(qid(o), id, r + 1, d) }
+        else {
+          radius(o) = math.min(FullDeg + 1.0,
+            if (cnt >= k) bound * (1.0 + 1e-9) + absEps else radius(o) * growth)
+          still += o
+        }
+      }
+      pending = still.toArray
+      pending.length.toLong
+    }
+    out.sortBy(r => (r.getInt(0), r.getInt(2))).toArray
+  }
+
+  /** The distributed route (object doc): the query snapshot, the regional
+    * chunk dispatch and the status-join round loop. */
+  private def distributedRounds(spark: SparkSession, images: Option[DataFrame], q: DataFrame,
+                                k: Int, broadcastQueryRowLimit: Long, chunkQueries: Long,
+                                meters: Boolean, FullDeg: Double, growth: Double, absEps: Double,
+                                storeDir: Option[String],
+                                storeHead: Option[graft.lineage.SnapshotStore.Manifest],
+                                initialRadius: (=> Long) => Double): DataFrame =
+    Tracker.run(spark) { t =>
+      // store-backed probes read only the buckets under the round's
+      // coverings (no global projection to cache); the direct form caches
+      // the projected image side once for all rounds
+      val imgs = images.map(i => t.cache(probeProjection(i)))
+      val radius0 = initialRadius(imgs.get.count())
       var results: DataFrame = null
       // round-invariant expressions hoisted OUT of the loop: re-creating a
       // udf/udaf per round gives each round distinct closure identities, so
@@ -405,33 +524,10 @@ object Knn {
       // executor time)
       val levelsAcc = new LevelMaskAcc
       spark.sparkContext.register(levelsAcc, "knnBatchLevels")
-      // store mode: the initial snapshot job ALSO reports which store
-      // buckets the round-1 coverings touch, so the COMMON single-round
-      // path needs no distinct+collect job. The accumulator keeps updating
-      // on straggler rounds (a per-cell shift+OR — negligible) but is only
-      // READ for round 1: its mask is cumulative, and straggler rounds
-      // must prune by the REMAINING queries' coverings, which they derive
-      // with one tiny distinct-collect in the loop (review r03d).
-      val bucketAcc = storeDir.map { _ =>
-        val a = new BucketMaskAcc(1 << graft.lineage.CellStore.PrefixBits)
-        spark.sparkContext.register(a, "knnBatchBuckets")
-        a
-      }
-      val bucketShift = 64 - graft.lineage.CellStore.PrefixBits
       val coveringUdf = udf((lat: Double, lng: Double, radius: Double) => {
-        val angle =
-          if (meters) radius / Geo.EarthRadiusMeters else math.toRadians(radius)
-        val cells =
-          if (radius >= FullDeg) faceCells
-          else S2.covering(S2.Cap(Geo.toXYZ(lat, lng), angle),
-            maxCells = 12, maxLevel = 16).toSeq
-        cells.foreach { c =>
-          levelsAcc.add(S2.level(c))
-          bucketAcc.foreach(a => a.add((
-            (S2.rangeMin(c) >>> bucketShift).toInt,
-            (S2.rangeMax(c) >>> bucketShift).toInt)))
-        }
-        cells
+        val cells = coveringOf(meters, lat, lng, radius)
+        cells.foreach(c => levelsAcc.add(S2.level(c)))
+        cells.toSeq
       })
       // query_id must identify ONE query point: the status join emits each
       // resolved top-k once per matching input row, so duplicated ids would
@@ -441,28 +537,22 @@ object Knn {
       // reports its levels through the accumulator, so the round loop never
       // re-runs the covering kernel or pays a separate levels job.
       val snap = t.snapshot(
-        queries.select(col("query_id").cast("int"),
-          col("qlat").cast("double"), col("qlng").cast("double"))
-          .dropDuplicates("query_id")
+        q.dropDuplicates("query_id")
           .withColumn("qcos", cos(radians(col("qlat"))))
-          .withColumn("qradius", lit(initialRadius))
+          .withColumn("qradius", lit(radius0))
           .withColumn("cov", coveringUdf(col("qlat"), col("qlng"), col("qradius"))))
       val distCol = distExpr(meters)
       val topkUdaf = TopKAgg.udafFor(k)
       /** The adaptive round loop over ONE query set (the whole snapshot, or
         * one regional chunk of it — see the dispatch below). Appends each
-        * round's resolved top-k to `results`. `chunkLocalBuckets`: the
-        * store-bucket accumulator mask is cumulative over EVERY query in the
-        * snapshot job, so a chunk must derive its round-1 buckets from its
-        * OWN covering rows (the straggler-round path) or it would re-read
-        * every bucket any chunk touches. */
-      def runLoop(remaining0: DataFrame, n0: Long, chunkLocalBuckets: Boolean): Unit =
+        * round's resolved top-k to `results`. */
+      def runLoop(remaining0: DataFrame, n0: Long): Unit =
       if (n0 > 0) {
       var remaining = remaining0
       var nRemaining = n0
       // no loud bound: every query resolves once its radius reaches the
       // full sphere
-      Tracker.rounds(spark, "knnBatch", Int.MaxValue) { round =>
+      Tracker.rounds(spark, "knnBatch", Int.MaxValue) { _ =>
         // levels come from the accumulator the SNAPSHOT job already filled —
         // across rounds the mask only accumulates (radii grow -> coarser
         // levels join the set), so it is exact for round 1 and a sound
@@ -491,41 +581,31 @@ object Knn {
           if (nRemaining * 12 <= broadcastQueryRowLimit) broadcast(qcov)
           else qcov.hint("shuffle_hash")
         // probe frame: the cached projection, or — store-backed — ONLY the
-        // buckets under THIS round's coverings. Each covering cell's
+        // buckets under THIS round's coverings: each covering cell's
         // [rangeMin, rangeMax] id span maps to a bucket span by its top
-        // PrefixBits (descendant ids at any level stay inside the
-        // ancestor's id range, so every matching image row lives in those
-        // buckets — sound, PropertySpec-pinned). Round 1's set rides the
-        // BucketMaskAcc out of the snapshot job (one job per round holds on
-        // the common single-round path); straggler rounds pay ONE tiny
-        // distinct-collect over the remaining snapshot instead of reusing
-        // the cumulative mask — the mask only grows, and a 95%-resolved
-        // round must not re-read every bucket round 1 touched (review
-        // r03d). The manifest was read once before the loop.
+        // PrefixBits (descendant ids at any level stay inside the ancestor's
+        // id range, so every matching image row lives in those buckets —
+        // sound, PropertySpec-pinned), from ONE tiny distinct-collect over
+        // the remaining queries' coverings per round. The
+        // manifest was read once before the loop.
         val probe = storeDir match {
           case None => imgs.get
           case Some(d) =>
-            val bucketSet: Set[Long] =
-              if (round == 1 && !chunkLocalBuckets) bucketAcc.get.buckets
-              else {
-                val c = col("c")
-                // (lsb - 1) FIRST: the naive c + lsb - 1 overflows its
-                // intermediate for a face-3 range-end cell (0x70.. + 2^60 =
-                // 2^63) and Spark 4's default ANSI mode turns that into an
-                // ArithmeticException; c +/- (lsb - 1) never overflows for
-                // valid S2 ids (review r03d2, same form as S2.rangeMax)
-                val lsbM1 = c.bitwiseAND(-c) - lit(1L)
-                remaining.select(explode(col("cov")).as("c"))
-                  .select(shiftrightunsigned(c - lsbM1, bucketShift).as("lo"),
-                    shiftrightunsigned(c + lsbM1, bucketShift).as("hi"))
-                  .distinct().collect()
-                  .flatMap(r => r.getLong(0) to r.getLong(1)).toSet
-              }
-            val (df, nRead) = graft.lineage.SnapshotStore.readBuckets(
-              spark, d, storeHead.get, bucketSet)
-            val telemetry = storeReadTelemetry.get()
-            if (telemetry != null) telemetry += nRead
-            df.select(col("image_id"), col("lat"), col("lng"), col("cell16"))
+            val c = col("c")
+            // (lsb - 1) FIRST: the naive c + lsb - 1 overflows its
+            // intermediate for a face-3 range-end cell (0x70.. + 2^60 =
+            // 2^63) and Spark 4's default ANSI mode turns that into an
+            // ArithmeticException; c +/- (lsb - 1) never overflows for
+            // valid S2 ids (same form as S2.rangeMax)
+            val lsbM1 = c.bitwiseAND(-c) - lit(1L)
+            // at most 2^PrefixBits x 2^PrefixBits distinct (lo, hi) spans
+            val bucketSet: Set[Long] = remaining.select(explode(col("cov")).as("c"))
+              .select(shiftrightunsigned(c - lsbM1, BucketShift).as("lo"),
+                shiftrightunsigned(c + lsbM1, BucketShift).as("hi"))
+              .distinct().limit(1 << (2 * graft.lineage.CellStore.PrefixBits)).collect()
+              .flatMap(r => r.getLong(0) to r.getLong(1)).toSet
+            readStore(spark, d, storeHead.get, bucketSet)
+              .select(col("image_id"), col("lat"), col("lng"), col("cell16"))
         }
         // one row per PROBED query: bounded top-k via PARTIAL aggregation —
         // map-side combiners cut each partition to <= k rows per query, so
@@ -581,8 +661,10 @@ object Knn {
         val resolvedIdx = statusDf.schema.fieldIndex("resolved")
         val status = t.snapshot(statusDf, !_.getBoolean(resolvedIdx))
         val res = status.df.where(col("resolved") && col("top").isNotNull)
-          .select(col("query_id"), posexplode(col("top.ids")).as(Seq("pos", "image_id")))
-          .select(col("query_id"), col("image_id"), (col("pos") + 1).cast("int").as("rank"))
+          .select(col("query_id"),
+            posexplode(arrays_zip(col("top.ids"), col("top.d2s"))).as(Seq("pos", "z")))
+          .select(col("query_id"), col("z.ids").as("image_id"),
+            (col("pos") + 1).cast("int").as("rank"), col("z.d2s").as("dist"))
         results = if (results == null) res else results.unionByName(res)
         // next round's input: a lazy projection of the persisted status
         // snapshot — plan depth stays constant (scan -> filter -> project)
@@ -605,16 +687,14 @@ object Knn {
       // per-round shuffle-hash join (loud stderr note) — the pre-r4 behavior,
       // still sort-free. broadcastQueryRowLimit <= 0 keeps the global
       // shuffle-hash path (the plan-shape test knob).
-      val chunkQueries =
-        if (broadcastQueryRowLimit > 0) math.max(1L, broadcastQueryRowLimit / 12)
-        else Long.MaxValue
       if (broadcastQueryRowLimit <= 0 || snap.rows <= chunkQueries) {
-        runLoop(snap.df, snap.rows, chunkLocalBuckets = false)
+        runLoop(snap.df, snap.rows)
       } else {
         val qpfx = shiftrightunsigned(
           graft.functions.S2Expressions.s2Cell16(col("qlat"), col("qlng")), 48)
+        // one row per 16-bit prefix: at most 2^16 rows
         val counts = snap.df.groupBy(qpfx.as("qpfx")).agg(count(lit(1)).as("n"))
-          .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
+          .limit(1 << 16).collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
         val ranges = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
         var lo = -1L; var hi = -1L; var tot = 0L
         counts.foreach { case (p, c) =>
@@ -629,7 +709,7 @@ object Knn {
           if (nq > chunkQueries)
             System.err.println(s"[knnBatch] heavy prefix chunk [$l,$h]: $nq queries " +
               "exceed the broadcast limit alone - shuffle-hash fallback for this chunk")
-          runLoop(snap.df.where(qpfx.between(l, h)), nq, chunkLocalBuckets = true)
+          runLoop(snap.df.where(qpfx.between(l, h)), nq)
         }
       }
       // snapshot the result UNSORTED and return the sort lazily over the
@@ -637,8 +717,9 @@ object Knn {
       // outright (EliminateSorts), write-style consumers pay it exactly once
       // — and the snapshot job skips the range-sampling pass a sorted .rdd
       // would have added
-      t.snapshot(Option(results).getOrElse(
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], resultSchema)))
+      t.snapshot(Option(results).getOrElse(spark.createDataFrame(
+        spark.sparkContext.emptyRDD[Row], StructType(Seq(q.schema("query_id"),
+          StructField("image_id", LongType), StructField("rank", IntegerType),
+          StructField("dist", DoubleType))))))
     }.orderBy("query_id", "rank")
-  }
 }

@@ -87,42 +87,40 @@ object Search {
   def percentilesScoped(df: DataFrame, valueCol: String): (DataFrame, () => Unit) = {
     val spark = df.sparkSession
     val n = df.count()
-    // cache pins the (sampled, hence per-run) range boundaries so both
-    // passes see identical partitions
+    // the persisted RDD pins the (sampled, hence per-run) range boundaries
+    // so both passes see identical partitions. A per-call RDD, not
+    // `cache()`: two calls over one input plan would share one
+    // CacheManager entry, and the first call's release would evict the
+    // second call's live anchor (as Tracker#snapshot persists per call)
     val counts = df.groupBy(valueCol).agg(count(lit(1)).as("_cnt"))
       .repartitionByRange(col(valueCol))
       .sortWithinPartitions(valueCol)
-      .cache()
-    val totals = counts
-      .select(spark_partition_id().as("_pid"), col("_cnt"))
-      .groupBy("_pid").agg(sum("_cnt").as("_t"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
-    val nParts = counts.rdd.getNumPartitions
-    val offsets = Array.tabulate(nParts)(identity)
+    val anchor = counts.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // one total per partition
+    val totals = anchor.mapPartitionsWithIndex((pid, it) =>
+      Iterator.single((pid, it.map(_.getLong(1)).sum))).collect().toMap
+    val offsets = Array.tabulate(anchor.getNumPartitions)(identity)
       .scanLeft(0L)((acc, pid) => acc + totals.getOrElse(pid, 0L))
     val schema = counts.schema.add("_cum", org.apache.spark.sql.types.LongType)
-    val cumRdd = counts.rdd.mapPartitionsWithIndex { (pid, it) =>
+    val cumRdd = anchor.mapPartitionsWithIndex { (pid, it) =>
       var acc = offsets(pid)
       it.map { r => acc += r.getLong(1); org.apache.spark.sql.Row.fromSeq(r.toSeq :+ acc) }
     }
-    // The counts cache stays alive for the returned frame's lifetime BY
-    // DESIGN: range-partition boundaries are sampled, so recomputing counts
-    // could repartition differently and invalidate the collected offsets;
-    // the cache is the determinism anchor AND stays recomputable on block
-    // loss (unlike a checkpoint). It is bounded by the distinct-value count.
-    // One-shot callers use the scoped handle (percentilesScoped) or, in
-    // single-owner contexts, `releasePercentileCaches()` (VERDICT r02 #7).
+    // The anchor stays alive for the returned frame's lifetime BY DESIGN:
+    // range-partition boundaries are sampled, so recomputing counts could
+    // repartition differently and invalidate the collected offsets; the
+    // persisted RDD is the determinism anchor AND stays recomputable on
+    // block loss (unlike a checkpoint). It is bounded by the distinct-value
+    // count. One-shot callers use the scoped handle (percentilesScoped) or,
+    // in single-owner contexts, `releasePercentileCaches()`.
     val pct = spark.createDataFrame(cumRdd, schema)
       .withColumn("pct",
         (col("_cum") - col("_cnt")).cast("double") / lit(math.max(1L, n - 1)).cast("double"))
       .select(col(valueCol).as("_v"), col("pct"))
     val frame = df.join(pct, df(valueCol) === col("_v")).drop("_v")
-    val release: () => Unit = () => {
-      // a frame may belong to an already-stopped session (e.g. a previous
-      // test suite) — dropping the reference is then all there is to do
-      try counts.unpersist(blocking = true)
-      catch { case _: Exception => () }
-    }
+    // a frame may belong to an already-stopped session (e.g. a previous
+    // test suite): Tracker.safeUnpersist then has nothing to do
+    val release: () => Unit = () => Tracker.safeUnpersist(anchor)
     (frame, release)
   }
 

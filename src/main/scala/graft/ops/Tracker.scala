@@ -17,8 +17,9 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * planning 3 rows). (`localCheckpoint` would do the same but trips a
   * constraint-rewrite bug under unionByName in Spark 4.1.)
   *
-  * Round (`Tracker.rounds`): one snapshot job per round, tagged
-  * `graft:<op>:<round>`, one stop rule and one loud bound. Call
+  * Round (`Tracker.rounds`): one job per round (a snapshot, or the kNN
+  * driver route's aggregate), tagged `graft:<op>:<round>`, one stop rule
+  * and one loud bound. Call
   * (`Tracker.run`): the result snapshot survives, everything else the call
   * tracked is released, on success and on failure. Survivors are kept per
   * SparkSession. */
@@ -94,9 +95,9 @@ private[graft] object Tracker {
       try r.unpersist(blocking = false)
       catch { case scala.util.control.NonFatal(_) => () }
 
-  /** Surviving-snapshot registry. Every iterative operator deliberately
-    * leaves exactly ONE persisted RDD alive under the frame it returns (the
-    * frame is a flat scan of it); a long-lived session issuing many such
+  /** Surviving-snapshot registry. Every `run` call deliberately leaves
+    * exactly ONE persisted RDD alive under the frame it returns (the frame
+    * is a flat scan of it); a long-lived session issuing many such
     * calls accumulates dead snapshots once the results are consumed, with
     * no handle to free them. Callers that keep a session open call
     * `EngineCaches.releaseIterationSnapshots()` between requests: results

@@ -256,19 +256,15 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("EngineCaches releases iteration snapshots; released results stay correct") {
-    val images = Tables.images(spark, sfDir)
-    val qdf = {
-      import spark.implicits._
-      Synth.knnQueries.toSeq.take(3).map(q => (q.queryId, q.lat, q.lng))
-        .toDF("query_id", "qlat", "qlng")
-    }
-    val frame = Knn.knnBatch(spark, images, qdf, k = 5)
-    val before = frame.collect().map(r => (r.getInt(0), r.getLong(1), r.getInt(2))).toSet
+    import spark.implicits._
+    val edges = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("a", "b")
+    val frame = graft.ops.Components.connectedComponents(edges)
+    val before = frame.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(graft.ops.Tracker.survivorCount(spark) >= 1,
-      "a completed knnBatch must register its one surviving snapshot")
+      "a completed connectedComponents must register its one surviving snapshot")
     // the registry is per session: a probe RDD registered under this
-    // session is released with the knnBatch snapshot, and the session's
-    // count drops to zero
+    // session is released with the connectedComponents snapshot, and the
+    // session's count drops to zero
     val probe: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] =
       spark.sparkContext.parallelize(Seq(org.apache.spark.sql.Row(1)))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -278,8 +274,15 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "release must unpersist every registered survivor")
     assert(graft.ops.Tracker.survivorCount(spark) == 0)
     // the already-returned frame recomputes through lineage — same rows
-    val after = frame.collect().map(r => (r.getInt(0), r.getLong(1), r.getInt(2))).toSet
+    val after = frame.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(after == before)
+    // a driver-route kNN call leaves nothing persisted behind
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val qdf = Synth.knnQueries.toSeq.take(3).map(q => (q.queryId, q.lat, q.lng))
+      .toDF("query_id", "qlat", "qlng")
+    assert(Knn.knnBatch(spark, Tables.images(spark, sfDir), qdf, k = 5).collect().length == 15)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persisted)
+    assert(graft.ops.Tracker.survivorCount(spark) == 0)
   }
 
   test("distributed batch kNN equals brute force AND the driver-resident path") {
@@ -412,6 +415,14 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     val full = Knn.knnBatchFromStore(spark, store2, qdf1, k = 8, initialRadiusDeg = 2.0)
     assert(full.count() == 5)
+    // the distributed route through the store (limit 0): the same rows, and
+    // its per-round span expression survives the full-sphere escalation
+    def distributed(dir: String, q: org.apache.spark.sql.DataFrame, k: Int) =
+      Knn.knnBatchCore(spark, None, q, k, 2.0, 0L, meters = false, Some(dir))
+        .collect().map(r => (r.getInt(0), r.getLong(1), r.getInt(2))).toSet
+    assert(distributed(store, qdf, 5) == direct)
+    assert(distributed(store2, qdf1, 8) ==
+      full.collect().map(r => (r.getInt(0), r.getLong(1), r.getInt(2))).toSet)
   }
 
   test("batch kNN full-sphere termination: k larger than the table") {
@@ -462,6 +473,30 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
     }.toSet
     assert(got == want)
+  }
+
+  test("the scalar haversine kernel equals the Column form bit for bit") {
+    import org.apache.spark.sql.functions.col
+    val rnd = new scala.util.Random(11)
+    val pairs = Seq((0.0, 0.0, 0.0, 0.0), (51.5, -0.12, 51.5, -0.12), (90.0, 0.0, -90.0, 0.0),
+      (0.0, 180.0, 0.0, -180.0), (10.0, 10.0, -10.0, -170.0)) ++
+      Seq.fill(500)((rnd.nextDouble() * 180 - 90, rnd.nextDouble() * 360 - 180,
+        rnd.nextDouble() * 180 - 90, rnd.nextDouble() * 360 - 180))
+    val got = {
+      import spark.implicits._
+      // an RDD source: the Column form runs through whole-stage codegen
+      spark.sparkContext.parallelize(pairs, 2).toDF("a", "b", "c", "d")
+        .select(col("a"), col("b"), col("c"), col("d"), graft.functions.Udfs.haversineMeters(
+          col("a"), col("b"), col("c"), col("d")).as("m"))
+        .collect()
+    }
+    assert(got.length == pairs.length)
+    got.foreach { r =>
+      val want = graft.functions.Udfs.haversineMeters(
+        r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3))
+      assert(java.lang.Double.doubleToRawLongBits(r.getDouble(4)) ==
+        java.lang.Double.doubleToRawLongBits(want), s"$r vs $want")
+    }
   }
 
   test("point tile manifest: each zoom is the halved parent of the next") {

@@ -110,6 +110,49 @@ class RoundJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rounds >= 2 && rounds <= 12)
   }
 
+  /** Runs `call` and checks the kNN driver route's job budget: every
+    * `graft:knnBatch:<n>` round runs exactly ONE job in all, at most one
+    * job (the route test's bounded collect) runs outside the rounds, and
+    * collecting the returned frame starts none. Returns the rows. */
+  private def oneJobPerKnnRound(call: => DataFrame): Array[org.apache.spark.sql.Row] = {
+    var frame: DataFrame = null
+    val jobs = jobsOf { frame = call }
+    val prefix = "graft:knnBatch:"
+    val byRound = jobs.flatMap(j => j.tags.filter(_.startsWith(prefix))
+      .map(t => t.stripPrefix(prefix).toInt -> j)).groupBy(_._1)
+    assert(byRound.nonEmpty && byRound.keySet == (1 to byRound.keys.max).toSet,
+      s"knnBatch rounds ${byRound.keys}")
+    byRound.foreach { case (r, js) =>
+      assert(js.size == 1, s"knnBatch round $r ran ${js.size} jobs")
+    }
+    val outside = jobs.count(!_.tags.exists(_.startsWith(prefix)))
+    assert(outside <= 1, s"$outside jobs outside the rounds")
+    var rows: Array[org.apache.spark.sql.Row] = null
+    val collectJobs = jobsOf { rows = frame.collect() }
+    assert(collectJobs.isEmpty, s"collecting the result ran ${collectJobs.size} jobs")
+    rows
+  }
+
+  test("knn driver route: one job per round for knnBatch, knnFromStore and the store batch") {
+    val images = graft.model.Tables.images(spark, sfDir)
+    val batch = oneJobPerKnnRound(
+      Knn.knnBatch(spark, images, graft.model.Synth.batchQueryDf(spark, 50), k = 3))
+    assert(batch.length == 150)
+    val store = java.nio.file.Files.createTempDirectory("roundjobs-store").toString
+    graft.lineage.CellStore.write(images.select("image_id", "lat", "lng", "cell16"), store)
+    val qs = graft.model.Synth.knnQueries.toSeq
+    val fromStore = oneJobPerKnnRound(Knn.knnFromStore(spark, store, qs, k = 10))
+    assert(fromStore.toSeq == Knn.knn(spark, images, qs, k = 10).collect().toSeq)
+    // a cached query frame over several partitions, as a caller that reuses
+    // its queries holds them: the route test still runs one job
+    val regional = graft.model.Synth.regionalBatchQueryDf(spark, 50).cache()
+    try {
+      assert(regional.count() == 50 && regional.rdd.getNumPartitions > 1)
+      val storeBatch = oneJobPerKnnRound(Knn.knnBatchFromStore(spark, store, regional, k = 5))
+      assert(storeBatch.toSeq == Knn.knnBatch(spark, images, regional, k = 5).collect().toSeq)
+    } finally regional.unpersist()
+  }
+
   test("knnBatch: one snapshot job per round over 50 queries") {
     val rounds = oneSnapshotPerRound("knnBatch")(
       Knn.knnBatch(spark, graft.model.Tables.images(spark, sfDir),

@@ -89,6 +89,33 @@ class TrackerReleaseSpec extends AnyFunSuite {
     }
   }
 
+  test("two scoped percentile calls over one input each keep their own anchor") {
+    import org.apache.spark.sql.functions.col
+    val s = session("tracker-rel-5")
+    try {
+      val df = s.range(3000).select(col("id"), (col("id") * 7919 % 101).as("v"))
+      val (_, release1) = ops.Search.percentilesScoped(df, "v")
+      val before = s.sparkContext.getPersistentRDDs.keySet
+      val ((f2, release2), anchor2) = {
+        val call = ops.Search.percentilesScoped(df, "v")
+        val added = s.sparkContext.getPersistentRDDs -- before
+        assert(added.size == 1, s"the second call pinned ${added.keys}, not its own anchor")
+        (call, added.values.head)
+      }
+      val level = anchor2.getStorageLevel
+      assert(level != StorageLevel.NONE)
+      release1()
+      assert(anchor2.getStorageLevel == level,
+        "the first call's release evicted the second call's live anchor")
+      val want = df.selectExpr("id", "PERCENT_RANK() OVER (ORDER BY v) AS pct")
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
+      assert(f2.select(col("id"), col("pct")).collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toMap == want)
+      release2()
+      assert(anchor2.getStorageLevel == StorageLevel.NONE)
+    } finally s.stop()
+  }
+
   test("one session's percentile release leaves another session's anchors") {
     import org.apache.spark.sql.functions.col
     def values(s: SparkSession, m: Int): DataFrame =

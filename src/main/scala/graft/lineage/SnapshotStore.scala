@@ -7,7 +7,10 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+import org.apache.spark.util.CollectionAccumulator
+import scala.jdk.CollectionConverters._
 
 /** The cell store: snapshot-versioned, cell-sorted parquet — the SURVEY
   * §1.4 compact index (the reference's cell-ordered blocks) in the Iceberg
@@ -24,7 +27,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * MANIFEST `dir/_snaps/v{N}.txt` (one format, see [[commit]]) lists the
   * dir-relative files, each with its size, its per-(file, bucket)
   * [min, max, rows] entries and its key bloom (old commits' files carry
-  * into later manifests BY REFERENCE), plus the data schema;
+  * into later manifests BY REFERENCE), plus the data schema. A file's
+  * entries and bloom are gathered by the task that writes it, from the
+  * rows it writes, as the reference builds its compact index while it
+  * writes the cell-ordered blocks: no commit reads its files back;
   * `dir/_snaps/HEAD` names the current version. Commit = claim → write
   * files → write manifest (tmp + rename) → swap HEAD. A reader holding
   * version N is unaffected by later commits. A crash before the HEAD swap
@@ -90,10 +96,7 @@ object SnapshotStore {
                             entries: Map[String, Seq[BucketStat]], blooms: Map[String, String],
                             schema: StructType, lastBatch: Long = -1L) {
     /** Per-bucket stats: exact aggregates over the files' entries. */
-    lazy val stats: Seq[BucketStat] =
-      files.flatMap(entries).groupBy(_.bucket).map { case (b, es) =>
-        BucketStat(b, es.map(_.cellMin).min, es.map(_.cellMax).max, es.map(_.rows).sum)
-      }.toSeq
+    lazy val stats: Seq[BucketStat] = merged(files.flatMap(entries))
 
     def buckets: Set[Long] = stats.map(_.bucket).toSet
 
@@ -106,6 +109,12 @@ object SnapshotStore {
     private[lineage] def filesWhere(p: BucketStat => Boolean): Seq[String] =
       files.filter(f => entries(f).exists(p))
   }
+
+  /** One stat per bucket: the exact aggregate of `es`'s stats of it. */
+  private def merged(es: Seq[BucketStat]): Seq[BucketStat] =
+    es.groupBy(_.bucket).map { case (b, bs) =>
+      BucketStat(b, bs.map(_.cellMin).min, bs.map(_.cellMax).max, bs.map(_.rows).sum)
+    }.toSeq
 
   private def overlaps(s: BucketStat, ranges: Seq[(Long, Long)]): Boolean =
     ranges.exists { case (lo, hi) => s.cellMin <= hi && lo <= s.cellMax }
@@ -171,11 +180,14 @@ object SnapshotStore {
 
   private def manifestPath(dir: String, v: Int) = new Path(s"$dir/_snaps/v$v.txt")
 
-  /** Fails naming the key or cell column `df` lacks: called before a
-    * commit claims its version, so a malformed frame leaves no claim. */
+  /** Fails naming the key or cell column `df` lacks, or the writer's
+    * [[HashCol]] it carries: called before a commit claims its version, so
+    * a malformed frame leaves no claim. */
   private def requireKeyed(df: DataFrame, op: String): Unit = {
     val missing = Seq(Key, Cell).filterNot(df.columns.contains)
     require(missing.isEmpty, s"SnapshotStore.$op: the frame has no ${missing.mkString(" or ")} column")
+    require(!df.columns.exists(_.equalsIgnoreCase(HashCol)),
+      s"SnapshotStore.$op: the frame has a $HashCol column, which the commit writer reserves")
   }
 
   /** A concurrent writer lost the optimistic race for `version`: its base
@@ -363,46 +375,110 @@ object SnapshotStore {
   def headManifest(spark: SparkSession, dir: String): Manifest =
     manifest(spark, dir, headVersion(spark, dir))
 
+  /** The [[keyHash]] column the commit writer adds for its write tasks
+    * and drops before the files are written. */
+  private val HashCol = "_key_hash"
+
+  /** What one write task saw: its rows, its [min, max, rows] per bucket
+    * and its key bloom as base64 text. */
+  private final case class TaskStats(task: Int, rows: Long, entries: Seq[BucketStat], bloom: String)
+
+  /** Passes one write task's cell-sorted rows through unchanged, keeping
+    * a running stat per bucket (in cell order a bucket is one contiguous
+    * run) and the key hash of every row, 8 B each; when the rows run out
+    * it adds the task's [[TaskStats]] to `out`. */
+  private final class Gather(task: Int, in: Iterator[InternalRow], cellAt: Int, hashAt: Int,
+                             out: CollectionAccumulator[TaskStats]) extends Iterator[InternalRow] {
+    private val hashes = new scala.collection.mutable.ArrayBuilder.ofLong
+    private val runs = Seq.newBuilder[BucketStat]
+    // the open run; none while n == 0
+    private var bucket, lo, hi, n = 0L
+    private var done = false
+
+    def hasNext: Boolean = in.hasNext || { if (!done) { done = true; finish() }; false }
+
+    def next(): InternalRow = {
+      val r = in.next()
+      hashes += r.getLong(hashAt)
+      if (!r.isNullAt(cellAt)) {
+        val c = r.getLong(cellAt)
+        val b = CellStore.bucketOf(c)
+        if (n > 0 && b == bucket) { lo = math.min(lo, c); hi = math.max(hi, c); n += 1 }
+        else { closeRun(); bucket = b; lo = c; hi = c; n = 1 }
+      }
+      r
+    }
+
+    private def closeRun(): Unit = if (n > 0) runs += BucketStat(bucket, lo, hi, n)
+
+    private def finish(): Unit = {
+      closeRun()
+      val hs = hashes.result()
+      out.add(TaskStats(task, hs.length, merged(runs.result()),
+        bloomEncode(bloomOf(scala.collection.immutable.ArraySeq.unsafeWrapArray(hs)))))
+    }
+  }
+
+  /** The task number Spark writes into a data file's name (`part-NNNNN-…`). */
+  private def taskOf(file: String): Option[Int] =
+    Some(new Path(file).getName).filter(_.startsWith("part-"))
+      .flatMap(_.stripPrefix("part-").takeWhile(_.isDigit).toIntOption)
+
   /** Write `df` as version `v`'s data: max(1, ⌈rows / targetRows⌉) files
     * over disjoint cell ranges, each sorted by cell (no rows, no files).
-    * Returns the files as a manifest fragment with their sizes (from the
-    * listing), entries and blooms. The entries and blooms come from one
-    * read-back aggregate over the new files only, so the driver receives
-    * one row per file, and the fragment lists exactly the files it
-    * returns. */
+    * One job counts the rows; a one-file commit is then written by one
+    * task (`coalesce(1)`, no exchange), a larger one range-partitioned by
+    * cell. Each write task gathers its file's entries and key bloom from
+    * the rows it writes and hands them to the driver through an
+    * accumulator holding one entry per write task: at most max(1,
+    * ⌈rows / targetRows⌉), one per file the commit plans. No file is read
+    * back. A file is matched to its task's stats by the task number in its
+    * name: a listed file without stats, or a task whose rows left no
+    * file, fails the commit before its manifest is written. Returns the
+    * files as a manifest fragment with their sizes (from the listing),
+    * entries and blooms. */
   private def writeCommit(spark: SparkSession, df: DataFrame, dir: String, v: Int,
                           targetRows: Long = TargetRows): Manifest = {
     val none = Manifest(v, Nil, Map.empty, Map.empty, Map.empty,
       nullable(df.schema).asInstanceOf[StructType])
-    val rows = df.count()
+    val rows = df.queryExecution.toRdd.count()
     if (rows == 0) return none
-    // ErrorIfExists: a committer that lost the race must NOT clobber the
-    // winner's immutable data directory — it surfaces as a commit conflict
-    try df.repartitionByRange(((rows + targetRows - 1) / targetRows).toInt, col(Cell))
+    val n = ((rows + targetRows - 1) / targetRows).toInt
+    val sorted = (if (n == 1) df.coalesce(1) else df.repartitionByRange(n, col(Cell)))
       .sortWithinPartitions(col(Cell))
-      .write.mode(org.apache.spark.sql.SaveMode.ErrorIfExists).parquet(s"$dir/data_v$v")
+      .select(col("*"), keyHash(col(Key)).as(HashCol))
+    val cellAt = sorted.schema.fieldIndex(Cell)
+    val hashAt = sorted.schema.fieldIndex(HashCol)
+    val acc = spark.sparkContext.collectionAccumulator[TaskStats](s"snapshot commit v$v")
+    val gathered = sorted.queryExecution.toRdd.mapPartitionsWithIndex((task, it) =>
+      new Gather(task, it, cellAt, hashAt, acc))
+    // ErrorIfExists: a committer that lost the race must NOT clobber the
+    // winner's immutable data directory — it surfaces as a commit conflict.
+    // One file per task: the task number names the file's stats.
+    try Bridge.internalFrame(spark, gathered, sorted.schema).drop(HashCol)
+      .write.mode(org.apache.spark.sql.SaveMode.ErrorIfExists).option("maxRecordsPerFile", 0L)
+      .parquet(s"$dir/data_v$v")
     catch {
       case e: org.apache.spark.sql.AnalysisException
           if Option(e.getMessage).exists(_.toLowerCase.contains("already exists")) =>
         throw new CommitConflictException(v,
           s"data_v$v already written by a concurrent committer")
     }
-    val sizes = listFilesUnder(spark, dir, s"data_v$v").toMap
-    // each file's cells and key hashes meet in one group; its entries and
-    // bloom are built there, executor-side
-    val entries = udf((cells: Seq[Long]) => cells.groupBy(CellStore.bucketOf).map { case (b, cs) =>
-      BucketStat(b, cs.min, cs.max, cs.size.toLong) }.toSeq)
-    val bloom = udf((hs: Seq[Long]) => bloomEncode(bloomOf(hs)))
-    val perFile = readFiles(spark, dir, none.copy(sizes = sizes), sizes.keys.toSeq)
-      .select(input_file_name().as("f"), col(Cell).as("c"), keyHash(col(Key)).as("h"))
-      .groupBy("f").agg(collect_list("c").as("cs"), collect_list("h").as("hs"))
-      .select(col("f"), entries(col("cs")), bloom(col("hs")))
-      .collect()
-      .map(r => (s"data_v$v/" + new Path(new java.net.URI(r.getString(0))).getName, r))
-    none.copy(files = perFile.map(_._1).toSeq, sizes = perFile.map { case (f, _) => f -> sizes(f) }.toMap,
-      entries = perFile.map { case (f, r) => f -> r.getSeq[org.apache.spark.sql.Row](1).map(e =>
-        BucketStat(e.getLong(0), e.getLong(1), e.getLong(2), e.getLong(3))) }.toMap,
-      blooms = perFile.map { case (f, r) => f -> r.getString(2) }.toMap)
+    // a re-run task replaces its partition's entry
+    val stats = acc.value.asScala.map(s => s.task -> s).toMap
+    val files = listFilesUnder(spark, dir, s"data_v$v").map { case (f, bytes) =>
+      (f, bytes, taskOf(f).flatMap(stats.get).getOrElse(throw new IllegalStateException(
+        s"snapshot commit v$v: data file $f has no write-task stats; no manifest written")))
+    }
+    val unwritten = stats.values.filter(_.rows > 0).map(_.task).toSet -- files.map(_._3.task)
+    if (unwritten.nonEmpty) throw new IllegalStateException(s"snapshot commit v$v: the rows of " +
+      s"write tasks ${unwritten.toSeq.sorted.mkString(", ")} have no data file under data_v$v; no manifest written")
+    // Spark's first write task writes a file even with no rows; the
+    // manifest leaves such a file out
+    val live = files.filter(_._3.rows > 0)
+    none.copy(files = live.map(_._1), sizes = live.map(f => f._1 -> f._2).toMap,
+      entries = live.map(f => f._1 -> f._3.entries).toMap,
+      blooms = live.map(f => f._1 -> f._3.bloom).toMap)
   }
 
   /** `prev` without the files in `drop`, plus the files `w` wrote, as
@@ -516,10 +592,11 @@ object SnapshotStore {
     * sort-order pass: HEAD's content is rewritten through the commit
     * writer, into max(1, ⌈rows / TargetRows⌉) cell-sorted files, and
     * committed as the next version; earlier versions keep their own files
-    * until [[expireSnapshots]]. The rewrite's stats (rows, min and max per
-    * bucket, from its read-back) must equal HEAD's before the commit: on a
-    * mismatch the claim and data directory are released, HEAD is
-    * untouched, and the call fails. Returns per-bucket telemetry (bucket,
+    * until [[expireSnapshots]]. Before the commit one aggregate over only
+    * the new files recomputes their stats (rows, min and max per bucket):
+    * they must equal HEAD's and the new manifest's. On a mismatch the
+    * claim and data directory are released, HEAD is untouched, and the
+    * call fails. Returns per-bucket telemetry (bucket,
     * files_before, files_after, rows) from the two manifests, a file
     * counting in every bucket it holds an entry for. */
   def compact(spark: SparkSession, dir: String): DataFrame = {
@@ -528,11 +605,16 @@ object SnapshotStore {
     acquireClaim(spark, dir, v)
     val w = writeCommit(spark, readFiles(spark, dir, prev, prev.files), dir, v)
     val next = replaced(prev, prev.files.toSet, w)
-    val got = next.stats.toSet
-    if (got != prev.stats.toSet) {
+    // the writer's stats come from the rows it wrote: the new files on disk
+    // must show HEAD's stats, and the new manifest must say what they show
+    val got = readFiles(spark, dir, w, w.files).where(col(Cell).isNotNull)
+      .groupBy(shiftrightunsigned(col(Cell), 64 - CellStore.PrefixBits))
+      .agg(min(Cell), max(Cell), count(lit(1))).collect()
+      .map(r => BucketStat(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    if (got != prev.stats.toSet || next.stats.toSet != got) {
       releaseFailedCommit(spark, dir, v)
       throw new IllegalStateException(s"compact: rewrite stats ${got -- prev.stats} differ " +
-        s"from HEAD's ${prev.stats.toSet -- got}; HEAD left at v${prev.version}")
+        s"from HEAD's ${prev.stats.toSet -- got} (manifest ${next.stats.toSet}); HEAD left at v${prev.version}")
     }
     commit(spark, dir, next, preClaimed = true)
     def nFiles(m: Manifest, b: Long) = m.filesWhere(_.bucket == b).size.toLong

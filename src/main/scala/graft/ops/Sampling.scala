@@ -181,6 +181,7 @@ object Sampling {
       s"importanceResample: threshold must be a non-negative rational, got $thresholdNum/$thresholdDen")
     def grams(c: Column): Column =
       concat(graft.ops.TextOps.wordNgrams(c, 1), graft.ops.TextOps.wordNgrams(c, 2))
+    // at most 256 rows: one per [[gramBucket]]
     def bucketCounts(d: DataFrame): Map[String, Long] =
       d.select(explode(grams(col(textCol))).as("g"))
         .groupBy(gramBucket(col("g")).as("bk")).agg(count(lit(1)).as("c"))

@@ -96,7 +96,7 @@ object Search {
       .repartitionByRange(col(valueCol))
       .sortWithinPartitions(valueCol)
     val anchor = counts.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // one total per partition
+    // one total per partition: at most spark.sql.shuffle.partitions rows
     val totals = anchor.mapPartitionsWithIndex((pid, it) =>
       Iterator.single((pid, it.map(_.getLong(1)).sum))).collect().toMap
     val offsets = Array.tabulate(anchor.getNumPartitions)(identity)

@@ -218,33 +218,32 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("no gate closure collects an unbounded table (source lint)") {
-    // VERDICT r03 #2 guard: a `.collect()` inside SparkEntry, Containment,
-    // Knn, the path operators (Polyline, MapMatch, Routing) or the lineage
-    // stores must be one of the bounded shapes — an aggregate (one row per
-    // key of a bounded key set, e.g. <= 2^PrefixBits buckets, or
-    // Containment's one-row region list, collected only once its size
-    // estimate fits the probe budget), a `.limit(bound + 1)` checked
-    // against its bound after the collect, the 24-row regions fixture
-    // serialization, or a helper that bounds internally
-    // (Similarity.quantizerSample = orderBy+limit). Anything else is a
-    // driver OOM at 10^12 rows and must go through a bounded helper.
-    val lineage = new java.io.File("src/main/scala/graft/lineage").listFiles()
+    // VERDICT r03 #2 guard: a `.collect()` inside SparkEntry, the
+    // operators (`ops/`) or the lineage stores must be one of the bounded
+    // shapes — an aggregate (one row per key of a bounded key set, e.g.
+    // <= 2^PrefixBits buckets, Sampling's gram buckets, or Containment's
+    // one-row region list, collected only once its size estimate fits the
+    // probe budget), a `.limit(bound + 1)` checked against its bound after
+    // the collect (Similarity.quantizerSample's orderBy + limit), one row
+    // per partition (`Iterator.single`, Search's per-partition totals),
+    // the 24-row regions fixture serialization, or a helper that bounds
+    // internally. Anything else is a driver OOM at 10^12 rows and must go
+    // through a bounded helper.
+    def sources(dir: String): Seq[String] = new java.io.File(dir).listFiles()
       .filter(_.getName.endsWith(".scala")).map(_.getPath).sorted.toSeq
-    val paths = Seq("Polyline", "MapMatch", "Routing")
-      .map(n => s"src/main/scala/graft/ops/$n.scala")
-    val offenders = (Seq("src/main/scala/graft/SparkEntry.scala",
-        "src/main/scala/graft/ops/Containment.scala",
-        "src/main/scala/graft/ops/Knn.scala") ++ paths ++ lineage).flatMap { path =>
+    val lineage = sources("src/main/scala/graft/lineage")
+    val ops = sources("src/main/scala/graft/ops")
+    val offenders = ("src/main/scala/graft/SparkEntry.scala" +: (ops ++ lineage)).flatMap { path =>
       val src = scala.io.Source.fromFile(path, "UTF-8")
       val lines = try src.getLines().toVector finally src.close()
       lines.zipWithIndex.filter(_._1.contains(".collect()")).filterNot {
         case (_, i) =>
           val ctx = lines.slice(math.max(0, i - 3), i + 1).mkString(" ")
           ctx.contains(".agg(") || ctx.contains(".limit(") ||
-            ctx.contains("regionsToGeoJson")
+            ctx.contains("Iterator.single(") || ctx.contains("regionsToGeoJson")
       }.map { case (l, i) => s"$path:${i + 1}: $l" }
     }
-    assert(lineage.nonEmpty)
+    assert(lineage.nonEmpty && ops.nonEmpty)
     assert(offenders.isEmpty, offenders.mkString("unbounded collect:\n", "\n", ""))
   }
 

@@ -305,6 +305,14 @@ class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(content(SnapshotStore.read(spark, dir)) == (1L to 4L).map(i => (i, "a")).toSet)
   }
 
+  test("a frame carrying the writer's key-hash column fails before its claim") {
+    val dir = freshDir("reserved")
+    val e = intercept[IllegalArgumentException](
+      SnapshotStore.create(spark, rows(1L to 4L, "a").withColumn("_key_hash", lit(1L)), dir))
+    assert(e.getMessage.contains("_key_hash"))
+    assert(!new java.io.File(s"$dir/_snaps/v1.claim").exists())
+  }
+
   test("optimistic arbitration: a stale writer's commit conflicts; content survives") {
     // Iceberg catalog-CAS role (round 5): two writers race for v2 — the
     // loser must get CommitConflictException, never clobber the winner
@@ -560,6 +568,63 @@ class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       .agg(min("cell16"), max("cell16"), count(lit(1))).collect()
       .map(r => BucketStat(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     assert(oneShot.size > 8 && m.stats.toSet == oneShot)
+    assert(content(SnapshotStore.read(spark, dir)) == (0L until 1000L).map(i => (i, "a")).toSet)
+  }
+
+  test("a create or an append starts 2 jobs, an upsert 8; a multi-file commit reads nothing back") {
+    def cached(df: DataFrame): DataFrame = { val c = df.repartition(4).cache(); c.count(); c }
+    val base = cached(spread(2000))
+    val first = cached(base.where(col("image_id") < 1000))
+    val second = cached(base.where(col("image_id") >= 1000))
+    val dir = freshDir("jobs")
+    // one count job, then one write task: no exchange, no read-back
+    assert(jobsDuring(SnapshotStore.create(spark, first, dir)) == 2)
+    assert(jobsDuring(SnapshotStore.append(spark, second, dir)) == 2)
+    // 12 before the writer gathered its own stats: its count took 2 jobs,
+    // its one-partition range exchange 1 more and its read-back 2
+    val delta = cached(base.where(col("image_id") % 100 === 7).withColumn("status", lit("u")))
+    assert(jobsDuring(SnapshotStore.upsert(spark, delta, dir)) == 8)
+    assert(content(SnapshotStore.read(spark, dir)) ==
+      (0L until 2000L).map(i => (i, if (i % 100 == 7) "u" else "a")).toSet)
+    // cut at 500 rows: the count, the range bounds' sample, the exchange's
+    // map stage and the write; 7 before, with the 2-job count and the
+    // 2-job read-back
+    val multi = freshDir("jobsmulti")
+    assert(jobsDuring(SnapshotStore.overwriteBy(spark, first, multi, targetRows = 500)) == 4)
+    assert(SnapshotStore.manifest(spark, multi, 1).files.size == 2)
+    Seq(base, first, second, delta).foreach(_.unpersist())
+  }
+
+  test("each file's entries and bloom come from the rows that file received") {
+    import CellStore.BucketStat
+    val dir = freshDir("fewcells")
+    // 1,000 rows in 3 distinct cells, cut at 128 rows: 8 range partitions
+    // planned, at most 3 of them with rows
+    val places = Seq((51.5, -0.12), (-33.8, 151.2), (40.7, -74.0))
+    val lat = places.indices.foldLeft(lit(null).cast("double")) { (c, i) =>
+      when(col("id") % 3 === i, lit(places(i)._1)).otherwise(c) }
+    val lng = places.indices.foldLeft(lit(null).cast("double")) { (c, i) =>
+      when(col("id") % 3 === i, lit(places(i)._2)).otherwise(c) }
+    val df = spark.range(1000).select(col("id").as("image_id"), lit("a").as("status"),
+      lat.as("lat"), lng.as("lng"))
+      .withColumn("cell16", graft.functions.S2Expressions.s2Cell16(col("lat"), col("lng")))
+    assert(df.select("cell16").distinct().count() == 3)
+    SnapshotStore.overwriteBy(spark, df, dir, targetRows = 128)
+    val m = SnapshotStore.manifest(spark, dir, 1)
+    // the manifest lists exactly the files on disk
+    val onDisk = new java.io.File(s"$dir/data_v1").listFiles().map(_.getName)
+      .filter(n => !n.startsWith("_") && !n.startsWith(".")).map(n => s"data_v1/$n").toSet
+    assert(m.files.toSet == onDisk, s"manifest ${m.files} vs on disk $onDisk")
+    m.files.foreach { f =>
+      val rs = spark.read.parquet(s"$dir/$f").select("image_id", "cell16").collect()
+      val cells = rs.map(_.getLong(1)).toSeq
+      assert(m.entries(f).toSet == cells.groupBy(CellStore.bucketOf).map { case (b, cs) =>
+        BucketStat(b, cs.min, cs.max, cs.size.toLong) }.toSet, s"$f entries")
+      // no false negatives: the file's bloom admits every key it holds
+      val bits = SnapshotStore.bloomDecode(m.blooms(f))
+      assert(keyHashes(rs.map(_.getLong(0)).toSeq).forall(admits(bits, _)), s"$f bloom misses a key")
+    }
+    assert(m.stats.map(_.rows).sum == 1000L)
     assert(content(SnapshotStore.read(spark, dir)) == (0L until 1000L).map(i => (i, "a")).toSet)
   }
 

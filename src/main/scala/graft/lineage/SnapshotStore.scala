@@ -449,7 +449,11 @@ object SnapshotStore {
       .select(col("*"), keyHash(col(Key)).as(HashCol))
     val cellAt = sorted.schema.fieldIndex(Cell)
     val hashAt = sorted.schema.fieldIndex(HashCol)
-    val acc = spark.sparkContext.collectionAccumulator[TaskStats](s"snapshot commit v$v")
+    // unnamed: Spark copies a named accumulator's update and running value
+    // into every task's and stage's info, the status store and the event
+    // log, which for a bloom per task grows with the square of the files
+    val acc = new CollectionAccumulator[TaskStats]
+    spark.sparkContext.register(acc)
     val gathered = sorted.queryExecution.toRdd.mapPartitionsWithIndex((task, it) =>
       new Gather(task, it, cellAt, hashAt, acc))
     // ErrorIfExists: a committer that lost the race must NOT clobber the

@@ -1,6 +1,7 @@
 package graft
 
 import graft.lineage.{CellStore, SnapshotStore}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -69,28 +70,36 @@ class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     df.select("image_id", "status").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
 
-  /** Spark jobs started while `body` runs. The listener bus is
-    * asynchronous, so a marker job closes the window: once its start event
-    * arrives, every earlier job's start has been delivered. */
-  private def jobsDuring(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val marker = "snapspec-marker"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
+  private val Marker = "snapspec-marker"
+  private def isMarker(j: SparkListenerJobStart): Boolean =
+    Option(j.properties).exists(_.getProperty("spark.job.description") == Marker)
+
+  /** Runs `body` while `l` listens. The listener bus is asynchronous, so
+    * a marker job closes the window: once its start event arrives, every
+    * earlier event has been delivered. */
+  private def listening(l: SparkListener)(body: => Unit): Unit = {
     val markerSeen = new java.util.concurrent.CountDownLatch(1)
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (Option(j.properties).exists(_.getProperty("spark.job.description") == marker))
-          markerSeen.countDown()
-        else { jobs.incrementAndGet(); () }
+    val m = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = if (isMarker(j)) markerSeen.countDown()
     }
     val sc = spark.sparkContext
     sc.addSparkListener(l)
+    sc.addSparkListener(m)
     try {
       body
-      sc.setJobDescription(marker)
+      sc.setJobDescription(Marker)
       try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
       assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally sc.removeSparkListener(l)
+    } finally { sc.removeSparkListener(m); sc.removeSparkListener(l) }
+  }
+
+  /** Spark jobs started while `body` runs, the marker job left out. */
+  private def jobsDuring(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    listening(new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (!isMarker(j)) { jobs.incrementAndGet(); () }
+    })(body)
     jobs.get()
   }
 
@@ -593,6 +602,25 @@ class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(jobsDuring(SnapshotStore.overwriteBy(spark, first, multi, targetRows = 500)) == 4)
     assert(SnapshotStore.manifest(spark, multi, 1).files.size == 2)
     Seq(base, first, second, delta).foreach(_.unpersist())
+  }
+
+  test("a commit's write-task stats stay out of task and stage accumulables") {
+    // what AppStatusListener keeps in the status store and the event log
+    // writes: a named accumulator's update and running value per task
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        e.taskInfo.accumulables.foreach(a => seen.add(s"${a.name} ${a.update} ${a.value}"))
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        e.stageInfo.accumulables.values.foreach(a => seen.add(s"${a.name} ${a.update} ${a.value}"))
+    }
+    val dir = freshDir("accums")
+    listening(l)(SnapshotStore.overwriteBy(spark, spread(2000), dir, targetRows = 500))
+    val m = SnapshotStore.manifest(spark, dir, 1)
+    assert(m.files.size == 4)
+    // the listener heard Spark's own task metrics, but no file's bloom
+    assert(seen.asScala.exists(_.contains("internal.metrics")))
+    m.files.foreach(f => assert(!seen.asScala.exists(_.contains(m.blooms(f))), s"$f bloom in accumulables"))
   }
 
   test("each file's entries and bloom come from the rows that file received") {
